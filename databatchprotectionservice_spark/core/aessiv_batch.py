@@ -3,7 +3,7 @@
 ``cryptography``'s ``AESSIV`` has no batch API, so the naive per-value
 path pays one Python round-trip per element — the one known 100 TB
 trade-off called out in SCALE.md. This module closes it by evaluating
-RFC 5297 directly with numpy + AES-ECB, which IS batchable:
+RFC 5297 directly over AES-ECB, which IS batchable:
 
 * **S2V / CMAC**: CBC-MAC chains are sequential per element but
   independent ACROSS elements, so round ``j`` encrypts block ``j`` of
@@ -13,7 +13,10 @@ RFC 5297 directly with numpy + AES-ECB, which IS batchable:
   all counter blocks of all elements concatenate into a single ECB
   call.
 
-Two data layouts, because the numpy bookkeeping (not AES) dominates:
+The byte layout around those AES calls (padded S2V blocks, each
+round's gather and scatter, counter blocks, writing IV and body into
+the output) runs in the C helper (``core/_native.py``) whenever it is
+loaded. Without a compiler the numpy layout below does the same work:
 
 * **uniform width** (every element the same length — all fixed-width
   types, and same-length string batches): pure 2D reshapes, no ragged
@@ -22,10 +25,14 @@ Two data layouts, because the numpy bookkeeping (not AES) dominates:
   batch and shared between S2V and CTR (their per-element block counts
   coincide for non-empty elements).
 
+In both layouts an element of more than ``MAX_BATCH_BLOCKS`` blocks
+takes one scalar ``AESSIV`` call instead, so the number of CBC rounds
+per batch stays bounded however skewed the lengths are.
+
 Output is byte-identical to
 ``cryptography.hazmat.primitives.ciphers.aead.AESSIV`` (pinned by
-tests/test_aessiv_batch.py against random vectors), because RFC 5297
-is fully deterministic.
+tests/test_aessiv_batch.py against random vectors on both layouts),
+because RFC 5297 is fully deterministic.
 
 Scalar reference: mirrors the semantics of the reference's pluggable
 encryptor slot (``dbps_encryptor.h:87-109``); the keystream/XOR twin
@@ -36,9 +43,15 @@ from __future__ import annotations
 
 import numpy as np
 
+from . import _native
 from .errors import DBPSInvalidInputError
 
 _BS = 16  # AES block size
+#: elements with more body blocks than this take the scalar AESSIV call:
+#: each block is one CBC round for the whole batch, while one scalar
+#: call costs about as much as a round
+MAX_BATCH_BLOCKS = 64
+_MAX_BODY = MAX_BATCH_BLOCKS * _BS
 
 
 def _dbl(block: bytes) -> bytes:
@@ -114,7 +127,10 @@ class BatchSIV:
             algorithms,
             modes,
         )
+        from cryptography.hazmat.primitives.ciphers.aead import AESSIV
 
+        self._ad = ad
+        self._aead = AESSIV(key)  # elements past MAX_BATCH_BLOCKS
         # RFC 5297: first half is the S2V (CMAC) key, second the CTR key
         self._mac = Cipher(algorithms.AES(key[:_BS]), modes.ECB()).encryptor()
         self._ctr = Cipher(algorithms.AES(key[_BS:]), modes.ECB()).encryptor()
@@ -129,6 +145,10 @@ class BatchSIV:
             dtype=np.uint8,
         )
         self._d_ad_dbl = np.frombuffer(_dbl(self._d_ad.tobytes()), np.uint8)
+        # the native layout's S2V constants, in dbps_siv_s2v_blocks order
+        self._consts = np.concatenate(
+            [self._d_ad, self._d_ad_dbl, self._k1, self._k2]
+        )
 
     # -- scalar CMAC (setup constants only; data path is batched) ------
     def _cmac_scalar(self, msg: bytes) -> bytes:
@@ -311,6 +331,76 @@ class BatchSIV:
         sivs = self._s2v_ragged(flat, offsets, *maps)
         return sivs, self._ctr_xor_ragged(sivs, flat, *maps)
 
+    # -- native layout -------------------------------------------------
+    def _native_batch(
+        self, flat: np.ndarray, offsets: np.ndarray, encrypt: bool
+    ) -> tuple[np.ndarray, np.ndarray]:
+        flat = np.ascontiguousarray(flat, dtype=np.uint8)
+        offsets = np.ascontiguousarray(offsets, dtype=np.int64)
+        skip = 0 if encrypt else _BS
+        err, idx, longs, new_offsets, s2v_blocks, ctr_blocks = (
+            _native.siv_plan(offsets, flat.size, skip, _MAX_BODY)
+        )
+        if err == 1:
+            raise DBPSInvalidInputError(_AUTH_FAIL)
+        if err:
+            raise DBPSInvalidInputError("element offsets do not fit the batch")
+        out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
+        if idx.size:
+            aes_into = self._mac.update_into
+            if encrypt:
+                ivs = _native.siv_s2v(
+                    flat, offsets, idx, s2v_blocks, self._consts, aes_into
+                )
+            else:
+                ivs = np.empty((idx.size, _BS), dtype=np.uint8)
+            ctr = _native.siv_ctr_blocks(
+                flat, offsets, idx, skip, ivs, ctr_blocks
+            )
+            # update_into wants one block minus a byte of slack
+            ks = np.empty(ctr.size + _BS - 1, dtype=np.uint8)
+            if ctr.size:
+                self._ctr.update_into(ctr, ks)
+            _native.siv_ctr_xor(
+                flat, offsets, idx, skip, ivs, ks, out, new_offsets
+            )
+            # decrypt: the S2V of the recovered plaintext must equal the
+            # transmitted IV (see decrypt_batch)
+            if not encrypt and not np.array_equal(
+                _native.siv_s2v(
+                    out, new_offsets, idx, s2v_blocks, self._consts, aes_into
+                ),
+                ivs,
+            ):
+                raise DBPSInvalidInputError(_AUTH_FAIL)
+        self._scalar_fill(flat, offsets, longs, out, new_offsets, encrypt)
+        return out, new_offsets
+
+    def _scalar_fill(
+        self,
+        flat: np.ndarray,
+        offsets: np.ndarray,
+        longs: np.ndarray,
+        out: np.ndarray,
+        new_offsets: np.ndarray,
+        encrypt: bool,
+    ) -> None:
+        """One ``AESSIV`` call per element too long for the batch."""
+        from cryptography.exceptions import InvalidTag
+
+        for i in longs.tolist():
+            data = flat[offsets[i] : offsets[i + 1]].tobytes()
+            try:
+                if encrypt:
+                    res = self._aead.encrypt(data, [self._ad])
+                else:
+                    res = self._aead.decrypt(data, [self._ad])
+            except InvalidTag:
+                raise DBPSInvalidInputError(_AUTH_FAIL) from None
+            out[new_offsets[i] : new_offsets[i + 1]] = np.frombuffer(
+                res, np.uint8
+            )
+
     # -- public batch API ----------------------------------------------
     def encrypt_batch(
         self, flat: np.ndarray, offsets: np.ndarray
@@ -318,34 +408,39 @@ class BatchSIV:
         """Element-wise ``AESSIV.encrypt(P, [ad])``: each output element
         is ``V || CTR(P)`` (16-byte SIV prepended). Empty elements pass
         through empty (the engine's documented null/empty bypass)."""
+        if _native.LIB is not None:
+            return self._native_batch(flat, offsets, encrypt=True)
         lens = np.diff(offsets)
         new_offsets = np.zeros_like(offsets)
         np.cumsum(np.where(lens > 0, lens + _BS, 0), out=new_offsets[1:])
-        nonempty = lens > 0
-        if not nonempty.any():
-            return np.empty(0, dtype=np.uint8), new_offsets
-        if nonempty.all():
-            sub_flat, sub_off = flat, offsets
-        else:
-            sub_flat = flat[np.repeat(nonempty, lens)]
-            sub_off = np.zeros(int(nonempty.sum()) + 1, dtype=np.int64)
-            np.cumsum(lens[nonempty], out=sub_off[1:])
-        sivs, body = self._s2v_and_ctr(sub_flat, sub_off)
         out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
-        ne_starts = new_offsets[:-1][nonempty]
-        sub_lens = np.diff(sub_off)
-        if int(sub_lens.min()) == int(sub_lens.max()):
-            w = int(sub_lens[0])
-            o2 = out.reshape(-1, _BS + w)
-            o2[:, :_BS] = sivs
-            o2[:, _BS:] = body.reshape(-1, w)
-        else:
-            iv_pos = (ne_starts[:, None] + np.arange(_BS)).reshape(-1)
-            out[iv_pos] = sivs.reshape(-1)
-            body_pos = _ragged_positions(
-                ne_starts + _BS - sub_off[:-1], sub_lens, body.size
-            )
-            out[body_pos] = body
+        long = lens > _MAX_BODY
+        batched = (lens > 0) & ~long
+        if batched.any():
+            if batched.all():
+                sub_flat, sub_off = flat, offsets
+            else:
+                sub_flat = flat[np.repeat(batched, lens)]
+                sub_off = np.zeros(int(batched.sum()) + 1, dtype=np.int64)
+                np.cumsum(lens[batched], out=sub_off[1:])
+            sivs, body = self._s2v_and_ctr(sub_flat, sub_off)
+            ne_starts = new_offsets[:-1][batched]
+            sub_lens = np.diff(sub_off)
+            if int(sub_lens.min()) == int(sub_lens.max()) and not long.any():
+                w = int(sub_lens[0])
+                o2 = out.reshape(-1, _BS + w)
+                o2[:, :_BS] = sivs
+                o2[:, _BS:] = body.reshape(-1, w)
+            else:
+                iv_pos = (ne_starts[:, None] + np.arange(_BS)).reshape(-1)
+                out[iv_pos] = sivs.reshape(-1)
+                body_pos = _ragged_positions(
+                    ne_starts + _BS - sub_off[:-1], sub_lens, body.size
+                )
+                out[body_pos] = body
+        self._scalar_fill(
+            flat, offsets, np.flatnonzero(long), out, new_offsets, True
+        )
         return out, new_offsets
 
     def decrypt_batch(
@@ -354,25 +449,32 @@ class BatchSIV:
         """Element-wise ``AESSIV.decrypt``; raises on any authentication
         failure (tampered ciphertext or wrong key), matching the scalar
         path's error contract."""
+        if _native.LIB is not None:
+            return self._native_batch(flat, offsets, encrypt=False)
         lens = np.diff(offsets)
         if ((lens > 0) & (lens < _BS)).any():
             raise DBPSInvalidInputError(_AUTH_FAIL)
         new_offsets = np.zeros_like(offsets)
         np.cumsum(np.where(lens > 0, lens - _BS, 0), out=new_offsets[1:])
-        nonempty = lens > 0
-        if not nonempty.any():
-            return np.empty(0, dtype=np.uint8), new_offsets
-        starts = offsets[:-1][nonempty]
-        ne_lens = lens[nonempty]
+        long = lens > _MAX_BODY + _BS
+        batched = (lens > 0) & ~long
+        if not batched.any():
+            out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
+            self._scalar_fill(
+                flat, offsets, np.flatnonzero(long), out, new_offsets, False
+            )
+            return out, new_offsets
+        starts = offsets[:-1][batched]
+        ne_lens = lens[batched]
         body_lens = ne_lens - _BS
         sub_off = np.zeros(len(body_lens) + 1, dtype=np.int64)
         np.cumsum(body_lens, out=sub_off[1:])
         if int(ne_lens.min()) == int(ne_lens.max()):
             w = int(ne_lens[0])
-            if nonempty.all():
+            if batched.all():
                 ct2 = flat.reshape(-1, w)
             else:
-                ct2 = flat[np.repeat(nonempty, lens)].reshape(-1, w)
+                ct2 = flat[np.repeat(batched, lens)].reshape(-1, w)
             sivs = np.ascontiguousarray(ct2[:, :_BS])
             body = np.ascontiguousarray(ct2[:, _BS:]).reshape(-1)
         else:
@@ -397,4 +499,11 @@ class BatchSIV:
             check = self._s2v_ragged(plain, sub_off, *maps)
         if not np.array_equal(check, sivs):
             raise DBPSInvalidInputError(_AUTH_FAIL)
-        return plain, new_offsets
+        if not long.any():
+            return plain, new_offsets
+        out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
+        out[np.repeat(batched, np.diff(new_offsets))] = plain
+        self._scalar_fill(
+            flat, offsets, np.flatnonzero(long), out, new_offsets, False
+        )
+        return out, new_offsets

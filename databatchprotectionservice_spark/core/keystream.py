@@ -33,6 +33,7 @@ import functools
 import numpy as np
 
 from . import _native
+from .aessiv_batch import MAX_BATCH_BLOCKS, BatchSIV
 from .errors import DBPSInvalidInputError
 
 _MASK64 = (1 << 64) - 1
@@ -239,16 +240,13 @@ class AesSivEncryptor(Encryptor):
         self._aead = AESSIV(key)
         self._batch = None
         if os.environ.get("DBPS_SIV_BATCH", "1") != "0":
-            from .aessiv_batch import BatchSIV
-
             self._batch = BatchSIV(key, b"value")
 
-    #: ragged batches with mean plaintext length above this run the
-    #: scalar loop instead: the batch engine's per-byte index maps cost
-    #: more than the per-element AESSIV call overhead they save once
-    #: elements are long (measured crossover ~50-80 B on the test rig).
-    #: Uniform-width batches (all fixed-size types, equal-length
-    #: strings) always batch — the 2D layout has no index maps at all.
+    #: without the C helper, ragged batches with mean plaintext length
+    #: above this run the scalar loop instead: the numpy layout's
+    #: per-byte index maps then cost more than the per-element AESSIV
+    #: call overhead they save. Uniform-width batches (all fixed-size
+    #: types, equal-length strings) have no index maps at all.
     _BATCH_MEAN_LEN = 32
 
     def _route_batch(self, offsets: np.ndarray, overhead: int) -> bool:
@@ -258,14 +256,16 @@ class AesSivEncryptor(Encryptor):
         if n <= 1:
             return False
         lens = np.diff(offsets)
-        if int(lens.min()) == int(lens.max()):
-            # uniform width still has to respect the cost model: the
-            # batch S2V's CBC chain loops once per 16-byte BLOCK of an
-            # element (vectorized across elements), so a few LONG
-            # equal-width blobs are faster as scalar C calls — batch
-            # only when the per-element block count doesn't dwarf the
-            # element count
-            width = int(lens.max())
+        # the batch S2V's CBC chain loops once per 16-byte BLOCK of its
+        # longest element (vectorized across elements), so a few LONG
+        # blobs are faster as scalar C calls — batch only when the
+        # block count doesn't dwarf the element count
+        width = int(lens.max())
+        if _native.LIB is not None:
+            # the native layout has no per-byte maps, and elements past
+            # MAX_BATCH_BLOCKS leave the round loop inside the batch
+            return min(width // 16, MAX_BATCH_BLOCKS) + 1 <= n
+        if int(lens.min()) == width:
             return (
                 width <= self._BATCH_MEAN_LEN + overhead
                 or width // 16 + 1 <= n

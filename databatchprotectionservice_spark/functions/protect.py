@@ -186,9 +186,9 @@ def _tag_and_wrap(
         pa.large_binary(),
         n,
         [
-            None if validity is None else validity,
-            pa.py_buffer(out_offsets.tobytes()),
-            pa.py_buffer(out_flat.tobytes()),
+            validity,
+            pa.py_buffer(out_offsets),
+            pa.py_buffer(out_flat),
         ],
     )
 
@@ -226,11 +226,12 @@ def _strip_tags(arr: pa.Array, expected_tag: int):
     ct_offsets = np.empty(n + 1, dtype=np.int64)
     ct_offsets[0] = 0
     np.cumsum(np.maximum(lengths - 1, 0), out=ct_offsets[1:])
-    if n and np.all(nonempty) and lengths.max() == lengths.min():
-        # uniform width: drop the tag column via one 2D slice copy
-        w = int(lengths[0])
+    widths = lengths[nonempty]
+    if widths.size and widths.max() == widths.min():
+        # one width across the non-empty cells (null slots are empty, so
+        # they add no bytes): drop the tag column via one 2D slice copy
         ct_flat = np.ascontiguousarray(
-            flat.reshape(n, w)[:, 1:]
+            flat.reshape(-1, int(widths[0]))[:, 1:]
         ).reshape(-1)
         return ct_flat, ct_offsets
     keep = np.ones(flat.size, dtype=bool)
@@ -321,8 +322,8 @@ def make_unprotect_kernel(
                 n,
                 [
                     validity,
-                    pa.py_buffer(offsets.astype(np.int64).tobytes()),
-                    pa.py_buffer(flat.tobytes()),
+                    pa.py_buffer(np.ascontiguousarray(offsets, np.int64)),
+                    pa.py_buffer(np.ascontiguousarray(flat)),
                 ],
             )
             if type_name == "string":
@@ -332,26 +333,25 @@ def make_unprotect_kernel(
         # the dense value buffer from the validity mask
         width = DECIMAL_WIDTH if pa.types.is_decimal(pa_type) else dtype.itemsize
         lengths = np.diff(offsets)
-        valid_mask = np.asarray(arr.is_valid())
-        if not np.all(lengths[valid_mask] == width):
+        if validity is None:
+            valid_mask = None
+            bad = lengths != width
+        else:
+            valid_mask = np.asarray(arr.is_valid())
+            bad = lengths != np.where(valid_mask, width, 0)
+        if bad.any():
             raise DBPSInvalidInputError(
                 f"decrypted cell length != {width} for a {type_name} column"
             )
-        full = np.zeros(n * width, dtype=np.uint8).reshape(n, width)
-        if flat.size and valid_mask.any():
-            src = (
-                offsets[:-1][valid_mask, None]
-                + np.arange(width, dtype=np.int64)[None, :]
-            ).ravel()
-            full[valid_mask] = flat[src].reshape(-1, width)
-        if pa.types.is_decimal(pa_type):
-            return pa.Array.from_buffers(
-                pa_type, n, [validity, pa.py_buffer(full.tobytes())]
-            )
-        vals = np.frombuffer(full.tobytes(), dtype=dtype)
+        rows = np.ascontiguousarray(flat).reshape(-1, width)
+        if valid_mask is None:
+            full = rows
+        else:
+            full = np.zeros((n, width), dtype=np.uint8)
+            full[valid_mask] = rows
         if type_name == "boolean":
-            return _with_validity(pa.array(vals.astype(bool)), validity, n)
-        return _with_validity(pa.array(vals), validity, n).cast(pa_type)
+            return _with_validity(pa.array(full.reshape(-1) != 0), validity, n)
+        return pa.Array.from_buffers(pa_type, n, [validity, pa.py_buffer(full)])
 
     return _unprotect
 
@@ -457,19 +457,19 @@ def unprotect_column(
     return df.withColumn(column, udf(F.col(column)))
 
 
-def _make_verify_udf(
+def make_verify_kernel(
     original_type: T.DataType, key_id: str, encryptor_name: str
 ):
-    """Per-cell integrity check returning a boolean column: tag matches
-    the declared physical type, the payload decrypts (AES-SIV
-    authenticates; the keystream path length-checks fixed-width cells),
-    and no plaintext leaves the UDF. Nulls verify as true (a null cell
-    carries nothing to corrupt).
+    """The plain ``pa.Array -> pa.Array`` integrity kernel behind
+    :func:`verify_column`: one boolean per cell. A cell verifies when its
+    tag matches the declared physical type and its payload decrypts
+    (AES-SIV authenticates; the keystream path length-checks fixed-width
+    cells). Nulls verify as true (a null cell carries nothing to
+    corrupt), and no plaintext leaves the kernel.
 
-    Cells decrypt one-by-one on purpose: batch decryption aborts at the
-    FIRST bad cell, but a verdict is needed per cell. This is a
-    maintenance scan, not a query path, and with AES-SIV the per-value
-    AEAD call dominates regardless of batching."""
+    All tagged cells decrypt in one batch call. A batch aborts at its
+    FIRST bad cell, but a verdict is needed per cell, so only when the
+    batch fails do the cells decrypt one by one."""
     phys, dtype, pa_type = _physical_for(original_type)
     tag = int(phys)
     if isinstance(original_type, T.DecimalType):
@@ -479,38 +479,54 @@ def _make_verify_udf(
     else:
         pt_width = None
 
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf(T.BooleanType())
     def _verify(arr: pa.Array) -> pa.Array:
         arr = _compact(arr)
         enc = make_encryptor(encryptor_name, key_id)
-        n = len(arr)
-        ok = np.zeros(n, dtype=bool)
-        valid_mask = np.asarray(arr.is_valid()) if n else np.zeros(0, bool)
-        ok[~valid_mask] = True  # nulls: nothing to verify
+        valid_mask = np.asarray(arr.is_valid(), dtype=bool)
         flat, offsets = _array_as_flat_offsets(arr)
         starts = offsets[:-1]
         lengths = np.diff(offsets)
-        for i in range(n):
-            if not valid_mask[i]:
-                continue
-            ln = int(lengths[i])
-            if ln < 1 or int(flat[starts[i]]) != tag:
-                continue  # missing tag byte or wrong physical type
-            cell = flat[starts[i] + 1 : starts[i] + ln]
-            try:
-                pt_flat, _ = enc.decrypt_elements(
-                    cell, np.array([0, cell.size], dtype=np.int64)
-                )
-            except Exception:  # noqa: BLE001 - auth failure = invalid cell
-                continue
-            if pt_width is not None and pt_flat.size != pt_width:
-                continue  # fixed-width plaintext has the wrong length
-            ok[i] = True
+        ok = ~valid_mask  # nulls: nothing to verify
+        # a missing tag byte or a wrong physical type fails outright
+        tagged = valid_mask & (lengths >= 1)
+        tagged[tagged] = flat[starts[tagged]] == tag
+        cells = np.flatnonzero(tagged)
+        keep = np.repeat(tagged, lengths)
+        keep[starts[cells]] = False  # drop the tag bytes
+        ct_offsets = np.zeros(cells.size + 1, dtype=np.int64)
+        np.cumsum(lengths[cells] - 1, out=ct_offsets[1:])
+        try:
+            _, pt_offsets = enc.decrypt_elements(flat[keep], ct_offsets)
+        except DBPSInvalidInputError:
+            ok[cells] = [
+                _verify_cell(enc, flat[starts[i] + 1 : starts[i] + lengths[i]])
+                for i in cells
+            ]
+        else:
+            # fixed-width plaintext must have its type's width
+            ok[cells] = pt_width is None or np.diff(pt_offsets) == pt_width
         return pa.array(ok)
 
+    def _verify_cell(enc, cell: np.ndarray) -> bool:
+        try:
+            pt_flat, _ = enc.decrypt_elements(
+                cell, np.array([0, cell.size], dtype=np.int64)
+            )
+        except Exception:  # noqa: BLE001 - auth failure = invalid cell
+            return False
+        return pt_width is None or pt_flat.size == pt_width
+
     return _verify
+
+
+def _make_verify_udf(
+    original_type: T.DataType, key_id: str, encryptor_name: str
+):
+    from pyspark.sql.functions import arrow_udf
+
+    return arrow_udf(T.BooleanType())(
+        make_verify_kernel(original_type, key_id, encryptor_name)
+    )
 
 
 def verify_column(

@@ -3,14 +3,20 @@
 RFC 5297 is fully deterministic, so the batched evaluation (per-round
 ECB over all elements) and the scalar library must agree exactly —
 checked here over block-boundary lengths, random batches, and the
-authentication failure modes."""
+authentication failure modes. Every test runs on both layouts: the
+native C one (when the helper compiled) and the numpy fallback, chosen
+through ``_native.LIB`` exactly as in production."""
 
 import hashlib
 
 import numpy as np
 import pytest
 
-from databatchprotectionservice_spark.core.aessiv_batch import BatchSIV
+from databatchprotectionservice_spark.core import _native
+from databatchprotectionservice_spark.core.aessiv_batch import (
+    MAX_BATCH_BLOCKS,
+    BatchSIV,
+)
 from databatchprotectionservice_spark.core.errors import DBPSInvalidInputError
 from databatchprotectionservice_spark.core.keystream import AesSivEncryptor
 
@@ -31,6 +37,16 @@ def _arrow(elems):
     return flat, off
 
 
+def _layouts(monkeypatch):
+    """Yield each AES-SIV layout name with ``_native.LIB`` set for it."""
+    lib = _native.LIB
+    if lib is not None:
+        yield "native"
+    monkeypatch.setattr(_native, "LIB", None)
+    yield "numpy"
+    monkeypatch.setattr(_native, "LIB", lib)
+
+
 def _elems(flat, off):
     return [
         flat[off[i] : off[i + 1]].tobytes() for i in range(len(off) - 1)
@@ -40,7 +56,7 @@ def _elems(flat, off):
 BOUNDARY_LENS = [0, 1, 15, 16, 17, 31, 32, 33, 47, 48, 100, 1000]
 
 
-def test_encrypt_matches_cryptography_on_boundary_lengths():
+def test_encrypt_matches_cryptography_on_boundary_lengths(monkeypatch):
     rng = np.random.default_rng(3)
     elems = [
         bytes(rng.integers(0, 256, n, dtype=np.uint8))
@@ -48,46 +64,151 @@ def test_encrypt_matches_cryptography_on_boundary_lengths():
     ]
     b = BatchSIV(KEY, AD)
     ref = _ref()
+    for layout in _layouts(monkeypatch):
+        ct_flat, ct_off = b.encrypt_batch(*_arrow(elems))
+        for pt, ct in zip(elems, _elems(ct_flat, ct_off)):
+            assert ct == (ref.encrypt(pt, [AD]) if pt else b""), layout
+
+
+def _assert_parity_and_roundtrip(b, elems, layout):
+    ref = _ref()
     ct_flat, ct_off = b.encrypt_batch(*_arrow(elems))
-    for pt, ct in zip(elems, _elems(ct_flat, ct_off)):
-        assert ct == (ref.encrypt(pt, [AD]) if pt else b"")
+    assert _elems(ct_flat, ct_off) == [
+        ref.encrypt(pt, [AD]) if pt else b"" for pt in elems
+    ], layout
+    pt_flat, pt_off = b.decrypt_batch(ct_flat, ct_off)
+    assert _elems(pt_flat, pt_off) == elems, layout
+    return ct_flat, ct_off
 
 
-def test_random_batch_parity_and_roundtrip():
+def test_random_batch_parity_and_roundtrip(monkeypatch):
     rng = np.random.default_rng(11)
     elems = [
         bytes(rng.integers(0, 256, int(rng.integers(0, 64)), dtype=np.uint8))
         for _ in range(400)
     ]
     b = BatchSIV(KEY, AD)
-    ref = _ref()
-    ct_flat, ct_off = b.encrypt_batch(*_arrow(elems))
-    assert _elems(ct_flat, ct_off) == [
-        ref.encrypt(pt, [AD]) if pt else b"" for pt in elems
-    ]
-    pt_flat, pt_off = b.decrypt_batch(ct_flat, ct_off)
-    assert _elems(pt_flat, pt_off) == elems
+    for layout in _layouts(monkeypatch):
+        _assert_parity_and_roundtrip(b, elems, layout)
 
 
-def test_tamper_and_wrong_key_raise():
+def test_every_length_up_to_70(monkeypatch):
+    rng = np.random.default_rng(12)
+    elems = [bytes(rng.integers(0, 256, n, dtype=np.uint8)) for n in range(71)]
     b = BatchSIV(KEY, AD)
-    ct_flat, ct_off = b.encrypt_batch(*_arrow([b"attack at dawn, eh"]))
-    bad = ct_flat.copy()
-    bad[20] ^= 1
-    with pytest.raises(DBPSInvalidInputError, match="authentication"):
-        b.decrypt_batch(bad, ct_off)
+    for layout in _layouts(monkeypatch):
+        _assert_parity_and_roundtrip(b, elems, layout)
+        _assert_parity_and_roundtrip(b, elems[::-1], layout)
+
+
+def test_null_and_empty_slots_mixed_in(monkeypatch):
+    """Null slots reach the cipher as empty elements, like empty
+    strings; both stay empty while their neighbours encrypt."""
+    elems = [b"", b"alpha", b"", b"", b"x" * 16, b"", b"beta" * 9, b""]
+    b = BatchSIV(KEY, AD)
+    for layout in _layouts(monkeypatch):
+        _assert_parity_and_roundtrip(b, elems, layout)
+        # a batch of nothing but empty slots
+        _assert_parity_and_roundtrip(b, [b""] * 5, layout)
+
+
+def test_sixteen_byte_ciphertext_has_empty_body(monkeypatch):
+    """A bare IV is the valid encryption of the empty string; any other
+    16 bytes fail authentication."""
+    empty_ct = _ref().encrypt(b"", [AD])
+    assert len(empty_ct) == 16
+    b = BatchSIV(KEY, AD)
+    for layout in _layouts(monkeypatch):
+        flat, off = _arrow([empty_ct, _ref().encrypt(b"abc", [AD])])
+        pt_flat, pt_off = b.decrypt_batch(flat, off)
+        assert _elems(pt_flat, pt_off) == [b"", b"abc"], layout
+        bad = flat.copy()
+        bad[3] ^= 1
+        with pytest.raises(DBPSInvalidInputError, match="authentication"):
+            b.decrypt_batch(bad, off)
+
+
+class _CountingECB:
+    """An ECB context that counts its calls (one per CBC round or CTR)."""
+
+    def __init__(self, inner):
+        self.inner, self.calls = inner, 0
+
+    def update(self, data):
+        self.calls += 1
+        return self.inner.update(data)
+
+    def update_into(self, data, buf):
+        self.calls += 1
+        return self.inner.update_into(data, buf)
+
+
+def test_skewed_batch_keeps_the_round_count_bounded(monkeypatch):
+    """One 1 MiB element among short ones takes the scalar call; the
+    batch's CBC rounds follow the short elements, not its 65,536
+    blocks."""
+    rng = np.random.default_rng(13)
+    big = bytes(rng.integers(0, 256, 1 << 20, dtype=np.uint8))
+    elems = [b"short", big] + [b"%d" % i * 3 for i in range(50)]
+    b = BatchSIV(KEY, AD)
+    for layout in _layouts(monkeypatch):
+        b._mac = _CountingECB(b._mac)
+        _assert_parity_and_roundtrip(b, elems, layout)
+        # one S2V on encrypt, one on decrypt, each a handful of rounds
+        assert b._mac.calls <= 10, layout
+        b._mac = b._mac.inner
+
+
+def test_tamper_and_wrong_key_raise(monkeypatch):
+    b = BatchSIV(KEY, AD)
     other = BatchSIV(hashlib.sha256(b"other").digest(), AD)
-    with pytest.raises(DBPSInvalidInputError, match="authentication"):
-        other.decrypt_batch(ct_flat, ct_off)
+    for layout in _layouts(monkeypatch):
+        ct_flat, ct_off = b.encrypt_batch(*_arrow([b"attack at dawn, eh"]))
+        bad = ct_flat.copy()
+        bad[20] ^= 1
+        with pytest.raises(DBPSInvalidInputError, match="authentication"):
+            b.decrypt_batch(bad, ct_off)
+        with pytest.raises(DBPSInvalidInputError, match="authentication"):
+            other.decrypt_batch(ct_flat, ct_off)
 
 
-def test_truncated_ciphertext_raises():
+def test_tampered_cell_inside_a_ragged_batch_raises(monkeypatch):
+    """One flipped bit anywhere in one cell — IV, body, or a cell long
+    enough for the scalar call — fails the whole batch."""
+    rng = np.random.default_rng(14)
+    elems = [
+        bytes(rng.integers(0, 256, n, dtype=np.uint8))
+        for n in (3, 0, 40, 17, 16 * MAX_BATCH_BLOCKS + 1, 9)
+    ]
     b = BatchSIV(KEY, AD)
-    with pytest.raises(DBPSInvalidInputError, match="authentication"):
-        b.decrypt_batch(
-            np.frombuffer(b"short", dtype=np.uint8),
-            np.array([0, 5], dtype=np.int64),
-        )
+    for layout in _layouts(monkeypatch):
+        ct_flat, ct_off = b.encrypt_batch(*_arrow(elems))
+        for cell, at in ((2, 5), (2, 30), (3, 16), (4, 500)):
+            bad = ct_flat.copy()
+            bad[ct_off[cell] + at] ^= 0x20
+            with pytest.raises(DBPSInvalidInputError, match="authentication"):
+                b.decrypt_batch(bad, ct_off)
+
+
+def test_truncated_ciphertext_raises(monkeypatch):
+    b = BatchSIV(KEY, AD)
+    for layout in _layouts(monkeypatch):
+        with pytest.raises(DBPSInvalidInputError, match="authentication"):
+            b.decrypt_batch(
+                np.frombuffer(b"short", dtype=np.uint8),
+                np.array([0, 5], dtype=np.int64),
+            )
+
+
+def test_native_layout_refuses_offsets_outside_the_buffer():
+    """The C routines trust the offsets, so the plan checks them first."""
+    if _native.LIB is None:
+        pytest.skip("no C compiler: the numpy layout indexes with bounds")
+    b = BatchSIV(KEY, AD)
+    flat = np.zeros(8, dtype=np.uint8)
+    for off in ([0, 4, 9], [0, 5, 3], [-1, 8]):
+        with pytest.raises(DBPSInvalidInputError, match="offsets"):
+            b.encrypt_batch(flat, np.array(off, dtype=np.int64))
 
 
 def test_encryptor_batch_and_scalar_paths_agree(monkeypatch):
@@ -101,10 +222,12 @@ def test_encryptor_batch_and_scalar_paths_agree(monkeypatch):
     monkeypatch.setenv("DBPS_SIV_BATCH", "0")
     slow = AesSivEncryptor("key_T")
     assert slow._batch is None
-    f_flat, f_off = fast.encrypt_elements(flat, off)
     s_flat, s_off = slow.encrypt_elements(flat, off)
-    assert f_flat.tobytes() == s_flat.tobytes()
-    assert list(f_off) == list(s_off)
-    d_flat, d_off = fast.decrypt_elements(f_flat, f_off)
-    assert d_flat.tobytes() == flat.tobytes()
-    assert list(d_off) == list(off)
+    for layout in _layouts(monkeypatch):
+        assert fast._route_batch(off, overhead=0), layout
+        f_flat, f_off = fast.encrypt_elements(flat, off)
+        assert f_flat.tobytes() == s_flat.tobytes(), layout
+        assert list(f_off) == list(s_off), layout
+        d_flat, d_off = fast.decrypt_elements(f_flat, f_off)
+        assert d_flat.tobytes() == flat.tobytes(), layout
+        assert list(d_off) == list(off), layout

@@ -269,3 +269,38 @@ def test_small_arrow_batches_roundtrip(spark):
         assert rows == [(i, f"v{i}") for i in range(500)]
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+
+
+@pytest.mark.parametrize("encryptor", ["keystream_xor", "aes_siv"])
+def test_fixed_width_unprotect_on_a_nullable_batch(encryptor):
+    """Null slots carry no payload, so unprotect scatters the decrypted
+    rows back under the validity mask; a non-null cell that decrypts to
+    the wrong width must still be rejected, not shifted into place."""
+    import numpy as np
+    import pyarrow as pa
+
+    from databatchprotectionservice_spark.core.keystream import make_encryptor
+    from databatchprotectionservice_spark.core.types import PhysicalType
+    from databatchprotectionservice_spark.functions.protect import (
+        make_protect_kernel,
+        make_unprotect_kernel,
+    )
+
+    plain = pa.array([7, None, -3, None, 2**40], pa.int64())
+    prot = make_protect_kernel(T.LongType(), "kn", encryptor)(plain)
+    unprot = make_unprotect_kernel(T.LongType(), "kn", encryptor)
+    assert unprot(prot).equals(plain)
+    dates = pa.array([datetime.date(2024, 2, 29), None], pa.date32())
+    prot_dates = make_protect_kernel(T.DateType(), "kd", encryptor)(dates)
+    assert make_unprotect_kernel(T.DateType(), "kd", encryptor)(
+        prot_dates
+    ).equals(dates)
+
+    # cell 2 replaced by a well-formed ciphertext of 5 plaintext bytes
+    ct, _ = make_encryptor(encryptor, "kn").encrypt_elements(
+        np.frombuffer(b"short", np.uint8), np.array([0, 5], np.int64)
+    )
+    cells = prot.to_pylist()
+    cells[2] = bytes([int(PhysicalType.INT64)]) + ct.tobytes()
+    with pytest.raises(DBPSInvalidInputError, match="decrypted cell length"):
+        unprot(pa.array(cells, pa.large_binary()))

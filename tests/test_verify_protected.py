@@ -118,3 +118,41 @@ def test_verify_unknown_column_rejected(spark, people, tmp_path):
     write_protected(people, path, {"name": "key_A"})
     with pytest.raises(DBPSInvalidInputError, match="nope.*name"):
         verify_protected(spark, path, columns=["nope"])
+
+
+@pytest.mark.parametrize("encryptor", ["keystream_xor", "aes_siv"])
+def test_clean_batch_verifies_with_one_decrypt_call(monkeypatch, encryptor):
+    """A clean batch costs one batch decrypt; a bad cell makes the kernel
+    decide cell by cell, with the same verdicts as before."""
+    import pyarrow as pa
+
+    from databatchprotectionservice_spark.functions import protect as mod
+
+    calls = []
+    make = mod.make_encryptor
+
+    def counting(name, key_id):
+        enc = make(name, key_id)
+        inner = enc.decrypt_elements
+
+        def decrypt_elements(*a, **kw):
+            calls.append(len(a[1]) - 1)
+            return inner(*a, **kw)
+
+        enc.decrypt_elements = decrypt_elements
+        return enc
+
+    monkeypatch.setattr(mod, "make_encryptor", counting)
+    names = pa.array(["ada", None, "grace", "", "x" * 40], pa.large_string())
+    prot = mod.make_protect_kernel(T.StringType(), "k1", encryptor)(names)
+    verify = mod.make_verify_kernel(T.StringType(), "k1", encryptor)
+    assert verify(prot).to_pylist() == [True] * 5
+    assert calls == [4]  # one call over the four non-null cells
+
+    if encryptor == "aes_siv":
+        cells = prot.to_pylist()
+        cells[2] = cells[2][:-1] + bytes([cells[2][-1] ^ 1])
+        calls.clear()
+        got = verify(pa.array(cells, pa.large_binary())).to_pylist()
+        assert got == [True, True, False, True, True]
+        assert calls == [4, 1, 1, 1, 1]  # the batch, then cell by cell
