@@ -25,9 +25,12 @@ loaded. Without a compiler the numpy layout below does the same work:
   batch and shared between S2V and CTR (their per-element block counts
   coincide for non-empty elements).
 
-In both layouts an element of more than ``MAX_BATCH_BLOCKS`` blocks
-takes one scalar ``AESSIV`` call instead, so the number of CBC rounds
-per batch stays bounded however skewed the lengths are.
+In the native layout an element of more than ``MAX_BATCH_BLOCKS``
+blocks takes one scalar ``AESSIV`` call instead, so the number of CBC
+rounds per batch stays bounded however skewed the lengths are. The
+numpy layout has no such split: ``AesSivEncryptor`` sends a batch
+whose longest element has more blocks than the batch has elements to
+its scalar loop.
 
 Output is byte-identical to
 ``cryptography.hazmat.primitives.ciphers.aead.AESSIV`` (pinned by
@@ -47,9 +50,13 @@ from . import _native
 from .errors import DBPSInvalidInputError
 
 _BS = 16  # AES block size
-#: elements with more body blocks than this take the scalar AESSIV call:
-#: each block is one CBC round for the whole batch, while one scalar
-#: call costs about as much as a round
+#: native layout: elements with more body blocks than this take the
+#: scalar AESSIV call. A CBC round costs about as much as one scalar call
+#: (both ~5 us on a 4-core x86 VM) however few chains it carries, so a
+#: lone long element is cheaper alone. Measured there: a lower cap sends
+#: bulk 64-1024 B strings to the 2x slower scalar call (16,384 cells:
+#: 29 ms at 64, 58 ms at 32), a higher one gains at most ~25% on bulk
+#: 1-4 KiB strings, where AES itself dominates.
 MAX_BATCH_BLOCKS = 64
 _MAX_BODY = MAX_BATCH_BLOCKS * _BS
 
@@ -413,34 +420,31 @@ class BatchSIV:
         lens = np.diff(offsets)
         new_offsets = np.zeros_like(offsets)
         np.cumsum(np.where(lens > 0, lens + _BS, 0), out=new_offsets[1:])
+        nonempty = lens > 0
+        if not nonempty.any():
+            return np.empty(0, dtype=np.uint8), new_offsets
+        if nonempty.all():
+            sub_flat, sub_off = flat, offsets
+        else:
+            sub_flat = flat[np.repeat(nonempty, lens)]
+            sub_off = np.zeros(int(nonempty.sum()) + 1, dtype=np.int64)
+            np.cumsum(lens[nonempty], out=sub_off[1:])
+        sivs, body = self._s2v_and_ctr(sub_flat, sub_off)
         out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
-        long = lens > _MAX_BODY
-        batched = (lens > 0) & ~long
-        if batched.any():
-            if batched.all():
-                sub_flat, sub_off = flat, offsets
-            else:
-                sub_flat = flat[np.repeat(batched, lens)]
-                sub_off = np.zeros(int(batched.sum()) + 1, dtype=np.int64)
-                np.cumsum(lens[batched], out=sub_off[1:])
-            sivs, body = self._s2v_and_ctr(sub_flat, sub_off)
-            ne_starts = new_offsets[:-1][batched]
-            sub_lens = np.diff(sub_off)
-            if int(sub_lens.min()) == int(sub_lens.max()) and not long.any():
-                w = int(sub_lens[0])
-                o2 = out.reshape(-1, _BS + w)
-                o2[:, :_BS] = sivs
-                o2[:, _BS:] = body.reshape(-1, w)
-            else:
-                iv_pos = (ne_starts[:, None] + np.arange(_BS)).reshape(-1)
-                out[iv_pos] = sivs.reshape(-1)
-                body_pos = _ragged_positions(
-                    ne_starts + _BS - sub_off[:-1], sub_lens, body.size
-                )
-                out[body_pos] = body
-        self._scalar_fill(
-            flat, offsets, np.flatnonzero(long), out, new_offsets, True
-        )
+        ne_starts = new_offsets[:-1][nonempty]
+        sub_lens = np.diff(sub_off)
+        if int(sub_lens.min()) == int(sub_lens.max()):
+            w = int(sub_lens[0])
+            o2 = out.reshape(-1, _BS + w)
+            o2[:, :_BS] = sivs
+            o2[:, _BS:] = body.reshape(-1, w)
+        else:
+            iv_pos = (ne_starts[:, None] + np.arange(_BS)).reshape(-1)
+            out[iv_pos] = sivs.reshape(-1)
+            body_pos = _ragged_positions(
+                ne_starts + _BS - sub_off[:-1], sub_lens, body.size
+            )
+            out[body_pos] = body
         return out, new_offsets
 
     def decrypt_batch(
@@ -456,25 +460,20 @@ class BatchSIV:
             raise DBPSInvalidInputError(_AUTH_FAIL)
         new_offsets = np.zeros_like(offsets)
         np.cumsum(np.where(lens > 0, lens - _BS, 0), out=new_offsets[1:])
-        long = lens > _MAX_BODY + _BS
-        batched = (lens > 0) & ~long
-        if not batched.any():
-            out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
-            self._scalar_fill(
-                flat, offsets, np.flatnonzero(long), out, new_offsets, False
-            )
-            return out, new_offsets
-        starts = offsets[:-1][batched]
-        ne_lens = lens[batched]
+        nonempty = lens > 0
+        if not nonempty.any():
+            return np.empty(0, dtype=np.uint8), new_offsets
+        starts = offsets[:-1][nonempty]
+        ne_lens = lens[nonempty]
         body_lens = ne_lens - _BS
         sub_off = np.zeros(len(body_lens) + 1, dtype=np.int64)
         np.cumsum(body_lens, out=sub_off[1:])
         if int(ne_lens.min()) == int(ne_lens.max()):
             w = int(ne_lens[0])
-            if batched.all():
+            if nonempty.all():
                 ct2 = flat.reshape(-1, w)
             else:
-                ct2 = flat[np.repeat(batched, lens)].reshape(-1, w)
+                ct2 = flat[np.repeat(nonempty, lens)].reshape(-1, w)
             sivs = np.ascontiguousarray(ct2[:, :_BS])
             body = np.ascontiguousarray(ct2[:, _BS:]).reshape(-1)
         else:
@@ -499,11 +498,4 @@ class BatchSIV:
             check = self._s2v_ragged(plain, sub_off, *maps)
         if not np.array_equal(check, sivs):
             raise DBPSInvalidInputError(_AUTH_FAIL)
-        if not long.any():
-            return plain, new_offsets
-        out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
-        out[np.repeat(batched, np.diff(new_offsets))] = plain
-        self._scalar_fill(
-            flat, offsets, np.flatnonzero(long), out, new_offsets, False
-        )
-        return out, new_offsets
+        return plain, new_offsets

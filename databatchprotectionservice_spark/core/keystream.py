@@ -248,6 +248,11 @@ class AesSivEncryptor(Encryptor):
     #: call overhead they save. Uniform-width batches (all fixed-size
     #: types, equal-length strings) have no index maps at all.
     _BATCH_MEAN_LEN = 32
+    #: ... and so do ragged batches needing more CBC rounds than this:
+    #: each numpy round scans every element, live or not, and past
+    #: ~200-350 rounds the scalar loop was faster at 4,096 and at
+    #: 65,536 cells alike (one long cell among short ones)
+    _RAGGED_MAX_ROUNDS = 256
 
     def _route_batch(self, offsets: np.ndarray, overhead: int) -> bool:
         if self._batch is None:
@@ -262,16 +267,20 @@ class AesSivEncryptor(Encryptor):
         # block count doesn't dwarf the element count
         width = int(lens.max())
         if _native.LIB is not None:
-            # the native layout has no per-byte maps, and elements past
-            # MAX_BATCH_BLOCKS leave the round loop inside the batch
-            return min(width // 16, MAX_BATCH_BLOCKS) + 1 <= n
+            # native cost ~ 32 scalar calls fixed + 2 per CBC round
+            # (elements past MAX_BATCH_BLOCKS leave the round loop);
+            # the crossover measured at 8, 32 and 64 rounds on 16 B to
+            # 1 KiB ragged strings sat at n ~ 48, 96 and 150-190
+            rounds = min(width // 16, MAX_BATCH_BLOCKS) + 1
+            return 2 * rounds + 32 <= n
+        rounds = width // 16 + 1
         if int(lens.min()) == width:
-            return (
-                width <= self._BATCH_MEAN_LEN + overhead
-                or width // 16 + 1 <= n
-            )
+            return width <= self._BATCH_MEAN_LEN + overhead or rounds <= n
         mean = (int(offsets[-1]) - int(offsets[0])) / n
-        return mean <= self._BATCH_MEAN_LEN + overhead
+        return (
+            rounds <= min(n, self._RAGGED_MAX_ROUNDS)
+            and mean <= self._BATCH_MEAN_LEN + overhead
+        )
 
     @property
     def length_preserving(self) -> bool:

@@ -144,19 +144,51 @@ class _CountingECB:
 
 
 def test_skewed_batch_keeps_the_round_count_bounded(monkeypatch):
-    """One 1 MiB element among short ones takes the scalar call; the
-    batch's CBC rounds follow the short elements, not its 65,536
-    blocks."""
+    """One 1 MiB element among short ones costs a handful of CBC rounds,
+    not its 65,536 blocks: the native layout gives it the scalar call,
+    and without the helper the encryptor sends the batch to its scalar
+    loop."""
     rng = np.random.default_rng(13)
     big = bytes(rng.integers(0, 256, 1 << 20, dtype=np.uint8))
-    elems = [b"short", big] + [b"%d" % i * 3 for i in range(50)]
-    b = BatchSIV(KEY, AD)
+    elems = [b"short", big] + [b"%d" % i * 3 for i in range(200)]
+    flat, off = _arrow(elems)
+    ref = _ref()
+    enc = AesSivEncryptor("key_T")
     for layout in _layouts(monkeypatch):
-        b._mac = _CountingECB(b._mac)
-        _assert_parity_and_roundtrip(b, elems, layout)
+        assert enc._route_batch(off, overhead=0) == (layout == "native")
+        enc._batch._mac = _CountingECB(enc._batch._mac)
+        ct_flat, ct_off = enc.encrypt_elements(flat, off)
+        assert _elems(ct_flat, ct_off) == [
+            ref.encrypt(pt, [AD]) for pt in elems
+        ], layout
+        pt_flat, pt_off = enc.decrypt_elements(ct_flat, ct_off)
+        assert _elems(pt_flat, pt_off) == elems, layout
         # one S2V on encrypt, one on decrypt, each a handful of rounds
-        assert b._mac.calls <= 10, layout
-        b._mac = b._mac.inner
+        assert enc._batch._mac.calls <= 10, layout
+        enc._batch._mac = enc._batch._mac.inner
+
+
+def test_routing_follows_the_measured_crossovers(monkeypatch):
+    """Native: batch from 2 x rounds + 32 elements. Numpy: a ragged
+    batch needing more than 256 CBC rounds runs the scalar loop."""
+    enc = AesSivEncryptor("key_T")
+
+    def offsets(lens):
+        off = np.zeros(len(lens) + 1, dtype=np.int64)
+        np.cumsum(lens, out=off[1:])
+        return off
+
+    for layout in _layouts(monkeypatch):
+        if layout == "native":
+            # longest element 130 B: 9 rounds, crossover at 50 elements
+            assert enc._route_batch(offsets([20] * 49 + [130]), 0)
+            assert not enc._route_batch(offsets([20] * 48 + [130]), 0)
+            # past MAX_BATCH_BLOCKS the rounds stop growing
+            big = offsets([20] * 161 + [1 << 20])
+            assert enc._route_batch(big, 0)
+        else:
+            assert enc._route_batch(offsets([20] * 999 + [16 * 255]), 0)
+            assert not enc._route_batch(offsets([20] * 999 + [16 * 256]), 0)
 
 
 def test_tamper_and_wrong_key_raise(monkeypatch):
@@ -216,7 +248,8 @@ def test_encryptor_batch_and_scalar_paths_agree(monkeypatch):
     same bytes and the same offsets (empty-element bypass included)."""
     rng = np.random.default_rng(5)
     elems = [b"", b"x", bytes(rng.integers(0, 256, 40, dtype=np.uint8)), b""]
-    flat, off = _arrow(elems)
+    # enough elements that both layouts take the batch
+    flat, off = _arrow(elems * 16)
     fast = AesSivEncryptor("key_T")
     assert fast._batch is not None
     monkeypatch.setenv("DBPS_SIV_BATCH", "0")
