@@ -240,83 +240,78 @@ def _strip_tags(arr: pa.Array, expected_tag: int):
     return ct_flat, ct_offsets
 
 
-def make_protect_kernel(
-    spark_type: T.DataType, key_id: str, encryptor_name: str
-):
-    """The plain ``pa.Array -> pa.Array`` encrypt kernel — shared by the
-    arrow_udf wrapper (`protect_column`) and non-UDF consumers like the
-    ``dbps_protected`` data source writer."""
-    phys, dtype, pa_type = _physical_for(spark_type)
-    tag = int(phys)
-    # static per-column facts: plaintext element width (None = variable)
-    # and whether ciphertext keeps that width (length-preserving cipher)
-    if pa.types.is_decimal(pa_type):
-        pt_width = DECIMAL_WIDTH
-    elif dtype is not None:
-        pt_width = dtype.itemsize
-    else:
-        pt_width = None
-    length_preserving = make_encryptor(encryptor_name, "probe").length_preserving
-    ct_width = pt_width if length_preserving else None
+class ColumnCodec:
+    """Every protection fact of one (Spark type, key id, encryptor)
+    column, fixed once: the analogue of the reference agent's per-column
+    ``init`` (``dbpa_interface.h:96-161``). Each operation is built from
+    the two byte-level halves, :meth:`seal` (encrypt, then tag) and
+    :meth:`open` (untag, then decrypt).
 
-    def _protect(arr: pa.Array) -> pa.Array:
-        arr = _compact(arr)
-        enc = make_encryptor(encryptor_name, key_id)
-        if pa.types.is_decimal(pa_type):
-            flat, offsets = _decimal_as_flat_offsets(arr, pa_type)
-        elif dtype is None:
-            flat, offsets = _array_as_flat_offsets(arr)
+    The encryptor is looked up through the module-level ``make_encryptor``
+    on every call rather than bound here, so a tracer that patches it
+    sees every cipher call."""
+
+    def __init__(self, spark_type: T.DataType, key_id: str, encryptor_name: str):
+        phys, self.dtype, self.pa_type = _physical_for(spark_type)
+        self.tag = int(phys)
+        self.type_name = spark_type.typeName()
+        self.key_id = key_id
+        self.encryptor_name = encryptor_name
+        self.is_decimal = isinstance(spark_type, T.DecimalType)
+        # plaintext element width (None = variable), and the ciphertext
+        # width when the cipher keeps it (length-preserving)
+        if self.is_decimal:
+            self.pt_width = DECIMAL_WIDTH
+        elif self.dtype is not None:
+            self.pt_width = self.dtype.itemsize
         else:
-            flat, offsets = _fixed_as_flat_offsets(arr, dtype, pa_type)
-        ct_flat, ct_offsets = enc.encrypt_elements(
-            flat, offsets, uniform_width=pt_width
+            self.pt_width = None
+        length_preserving = make_encryptor(encryptor_name, "probe").length_preserving
+        self.ct_width = self.pt_width if length_preserving else None
+
+    def encryptor(self):
+        return make_encryptor(self.encryptor_name, self.key_id)
+
+    def flatten(self, arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+        """Plaintext array -> (flat uint8, int64 offsets); fixed-width
+        null slots are zero-filled, variable-width ones empty."""
+        if self.is_decimal:
+            return _decimal_as_flat_offsets(arr, self.pa_type)
+        if self.dtype is None:
+            return _array_as_flat_offsets(arr)
+        return _fixed_as_flat_offsets(arr, self.dtype, self.pa_type)
+
+    def seal(self, flat, offsets, validity, uniform: bool = True) -> pa.Array:
+        """Encrypt plaintext elements and tag each cell. ``uniform``
+        asserts every element has the plaintext width: always true of a
+        flattened batch (null slots are zero-filled), true of a
+        decrypted batch only when it is null-free (null slots come back
+        empty)."""
+        ct_flat, ct_offsets = self.encryptor().encrypt_elements(
+            flat, offsets, uniform_width=self.pt_width if uniform else None
         )
         return _tag_and_wrap(
-            ct_flat, ct_offsets, tag, _validity_buffer(arr), uniform_width=ct_width
+            ct_flat,
+            ct_offsets,
+            self.tag,
+            validity,
+            uniform_width=self.ct_width if uniform else None,
         )
 
-    return _protect
-
-
-def _make_protect_udf(spark_type: T.DataType, key_id: str, encryptor_name: str):
-    from pyspark.sql.functions import arrow_udf
-
-    return arrow_udf(T.BinaryType())(
-        make_protect_kernel(spark_type, key_id, encryptor_name)
-    )
-
-
-def make_unprotect_kernel(
-    spark_type: T.DataType, key_id: str, encryptor_name: str
-):
-    """The plain ``pa.Array -> pa.Array`` decrypt kernel — shared by the
-    arrow_udf wrapper (`unprotect_column`) and non-UDF consumers like
-    the ``dbps_protected`` Python data source, which decrypts whole
-    Arrow record batches outside any Spark plan."""
-    phys, dtype, pa_type = _physical_for(spark_type)
-    tag = int(phys)
-    type_name = spark_type.typeName()
-
-    if isinstance(spark_type, T.DecimalType):
-        pt_width = DECIMAL_WIDTH
-    elif dtype is not None:
-        pt_width = dtype.itemsize
-    else:
-        pt_width = None
-    length_preserving = make_encryptor(encryptor_name, "probe").length_preserving
-    ct_width = pt_width if length_preserving else None
-
-    def _unprotect(arr: pa.Array) -> pa.Array:
-        arr = _compact(arr)
-        enc = make_encryptor(encryptor_name, key_id)
-        ct_flat, ct_offsets = _strip_tags(arr, tag)
+    def open(self, arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+        """Tagged cells -> decrypted (flat, offsets), validating every
+        tag; null slots come back empty."""
+        ct_flat, ct_offsets = _strip_tags(arr, self.tag)
         # null slots carry ZERO-length payloads through Spark, so the
         # uniform-width shortcut is only valid on null-free batches
-        uw = ct_width if arr.null_count == 0 else None
-        flat, offsets = enc.decrypt_elements(ct_flat, ct_offsets, uniform_width=uw)
+        uw = self.ct_width if arr.null_count == 0 else None
+        return self.encryptor().decrypt_elements(ct_flat, ct_offsets, uniform_width=uw)
+
+    def rebuild(self, arr: pa.Array, flat, offsets) -> pa.Array:
+        """Decrypted elements -> the typed array, with ``arr``'s nulls."""
         validity = _validity_buffer(arr)
         n = len(arr)
-        if dtype is None:
+        if self.dtype is None:
             out = pa.LargeBinaryArray.from_buffers(
                 pa.large_binary(),
                 n,
@@ -326,12 +321,12 @@ def make_unprotect_kernel(
                     pa.py_buffer(np.ascontiguousarray(flat)),
                 ],
             )
-            if type_name == "string":
+            if self.type_name == "string":
                 return out.cast(pa.large_string())
             return out
         # fixed-width: null cells carry no payload through Spark, so rebuild
         # the dense value buffer from the validity mask
-        width = DECIMAL_WIDTH if pa.types.is_decimal(pa_type) else dtype.itemsize
+        width = self.pt_width
         lengths = np.diff(offsets)
         if validity is None:
             valid_mask = None
@@ -341,7 +336,7 @@ def make_unprotect_kernel(
             bad = lengths != np.where(valid_mask, width, 0)
         if bad.any():
             raise DBPSInvalidInputError(
-                f"decrypted cell length != {width} for a {type_name} column"
+                f"decrypted cell length != {width} for a {self.type_name} column"
             )
         rows = np.ascontiguousarray(flat).reshape(-1, width)
         if valid_mask is None:
@@ -349,19 +344,42 @@ def make_unprotect_kernel(
         else:
             full = np.zeros((n, width), dtype=np.uint8)
             full[valid_mask] = rows
-        if type_name == "boolean":
+        if self.type_name == "boolean":
             return _with_validity(pa.array(full.reshape(-1) != 0), validity, n)
-        return pa.Array.from_buffers(pa_type, n, [validity, pa.py_buffer(full)])
+        return pa.Array.from_buffers(self.pa_type, n, [validity, pa.py_buffer(full)])
+
+
+def make_protect_kernel(
+    spark_type: T.DataType, key_id: str, encryptor_name: str
+):
+    """The plain ``pa.Array -> pa.Array`` encrypt kernel (flatten, then
+    seal) — shared by the arrow_udf wrapper (`protect_column`) and
+    non-UDF consumers like the ``dbps_protected`` data source writer."""
+    codec = ColumnCodec(spark_type, key_id, encryptor_name)
+
+    def _protect(arr: pa.Array) -> pa.Array:
+        arr = _compact(arr)
+        flat, offsets = codec.flatten(arr)
+        return codec.seal(flat, offsets, _validity_buffer(arr))
+
+    return _protect
+
+
+def make_unprotect_kernel(
+    spark_type: T.DataType, key_id: str, encryptor_name: str
+):
+    """The plain ``pa.Array -> pa.Array`` decrypt kernel (open, then the
+    typed rebuild) — shared by the arrow_udf wrapper (`unprotect_column`)
+    and non-UDF consumers like the ``dbps_protected`` Python data source,
+    which decrypts whole Arrow record batches outside any Spark plan."""
+    codec = ColumnCodec(spark_type, key_id, encryptor_name)
+
+    def _unprotect(arr: pa.Array) -> pa.Array:
+        arr = _compact(arr)
+        flat, offsets = codec.open(arr)
+        return codec.rebuild(arr, flat, offsets)
 
     return _unprotect
-
-
-def _make_unprotect_udf(spark_type: T.DataType, key_id: str, encryptor_name: str):
-    from pyspark.sql.functions import arrow_udf
-
-    return arrow_udf(spark_type)(
-        make_unprotect_kernel(spark_type, key_id, encryptor_name)
-    )
 
 
 def _with_validity(arr: pa.Array, validity, n: int) -> pa.Array:
@@ -371,56 +389,28 @@ def _with_validity(arr: pa.Array, validity, n: int) -> pa.Array:
     return pa.Array.from_buffers(arr.type, n, [validity, *buffers[1:]])
 
 
-def _make_rotate_udf(
+def _make_rotate_kernel(
     original_type: T.DataType,
     old_key_id: str,
     new_key_id: str,
     old_encryptor: str,
     new_encryptor: str,
 ):
-    """One Arrow pass: strip tags -> decrypt(old) -> encrypt(new) -> re-tag.
+    """One Arrow pass: the old codec's open, then the new codec's seal.
 
     Key rotation without the plaintext ever existing as a DataFrame
-    column: the decrypted bytes live only inside this UDF's Arrow batch
-    (executor memory) between the two cipher calls. The physical-type
-    tag is preserved, so rotated cells remain readable by the normal
-    unprotect path with the new key."""
-    phys, dtype, pa_type = _physical_for(original_type)
-    tag = int(phys)
-    if isinstance(original_type, T.DecimalType):
-        pt_width = DECIMAL_WIDTH
-    elif dtype is not None:
-        pt_width = dtype.itemsize
-    else:
-        pt_width = None
-    old_lp = make_encryptor(old_encryptor, "probe").length_preserving
-    new_lp = make_encryptor(new_encryptor, "probe").length_preserving
-    old_ct_width = pt_width if old_lp else None
-    new_ct_width = pt_width if new_lp else None
+    column: the decrypted bytes live only inside this kernel's Arrow
+    batch (executor memory) between the two cipher calls. The
+    physical-type tag is preserved, so rotated cells remain readable by
+    the normal unprotect path with the new key."""
+    old = ColumnCodec(original_type, old_key_id, old_encryptor)
+    new = ColumnCodec(original_type, new_key_id, new_encryptor)
 
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf(T.BinaryType())
     def _rotate(arr: pa.Array) -> pa.Array:
         arr = _compact(arr)
-        old = make_encryptor(old_encryptor, old_key_id)
-        new = make_encryptor(new_encryptor, new_key_id)
-        ct_flat, ct_offsets = _strip_tags(arr, tag)
-        # null slots carry zero-length payloads, so the uniform-width
-        # shortcut only holds on null-free batches (same rule as
-        # _make_unprotect_udf)
-        uw = old_ct_width if arr.null_count == 0 else None
-        flat, offsets = old.decrypt_elements(ct_flat, ct_offsets, uniform_width=uw)
-        new_uw = pt_width if arr.null_count == 0 else None
-        new_flat, new_offsets = new.encrypt_elements(
-            flat, offsets, uniform_width=new_uw
-        )
-        return _tag_and_wrap(
-            new_flat,
-            new_offsets,
-            tag,
-            _validity_buffer(arr),
-            uniform_width=new_ct_width if arr.null_count == 0 else None,
+        flat, offsets = old.open(arr)
+        return new.seal(
+            flat, offsets, _validity_buffer(arr), uniform=arr.null_count == 0
         )
 
     return _rotate
@@ -439,7 +429,9 @@ def protect_column(
 ) -> DataFrame:
     """Replace ``column`` with its protected (BinaryType) form."""
     spark_type = df.schema[column].dataType
-    udf = _make_protect_udf(spark_type, key_id, encryptor)
+    udf = F.arrow_udf(T.BinaryType())(
+        make_protect_kernel(spark_type, key_id, encryptor)
+    )
     return df.withColumn(column, udf(F.col(column)))
 
 
@@ -453,7 +445,9 @@ def unprotect_column(
     """Inverse of :func:`protect_column`; ``original_type`` is the logical
     type the column had before protection (the analogue of the reference
     agent's per-column ``datatype`` init parameter)."""
-    udf = _make_unprotect_udf(original_type, key_id, encryptor)
+    udf = F.arrow_udf(original_type)(
+        make_unprotect_kernel(original_type, key_id, encryptor)
+    )
     return df.withColumn(column, udf(F.col(column)))
 
 
@@ -470,18 +464,12 @@ def make_verify_kernel(
     All tagged cells decrypt in one batch call. A batch aborts at its
     FIRST bad cell, but a verdict is needed per cell, so only when the
     batch fails do the cells decrypt one by one."""
-    phys, dtype, pa_type = _physical_for(original_type)
-    tag = int(phys)
-    if isinstance(original_type, T.DecimalType):
-        pt_width = DECIMAL_WIDTH
-    elif dtype is not None:
-        pt_width = dtype.itemsize
-    else:
-        pt_width = None
+    codec = ColumnCodec(original_type, key_id, encryptor_name)
+    tag, pt_width = codec.tag, codec.pt_width
 
     def _verify(arr: pa.Array) -> pa.Array:
         arr = _compact(arr)
-        enc = make_encryptor(encryptor_name, key_id)
+        enc = codec.encryptor()
         valid_mask = np.asarray(arr.is_valid(), dtype=bool)
         flat, offsets = _array_as_flat_offsets(arr)
         starts = offsets[:-1]
@@ -519,16 +507,6 @@ def make_verify_kernel(
     return _verify
 
 
-def _make_verify_udf(
-    original_type: T.DataType, key_id: str, encryptor_name: str
-):
-    from pyspark.sql.functions import arrow_udf
-
-    return arrow_udf(T.BooleanType())(
-        make_verify_kernel(original_type, key_id, encryptor_name)
-    )
-
-
 def verify_column(
     df: DataFrame,
     column: str,
@@ -542,7 +520,9 @@ def verify_column(
     protected data. With ``aes_siv`` this is a true cryptographic
     authentication sweep; with the keystream placeholder it validates
     tag + fixed-width length structure."""
-    udf = _make_verify_udf(original_type, key_id, encryptor)
+    udf = F.arrow_udf(T.BooleanType())(
+        make_verify_kernel(original_type, key_id, encryptor)
+    )
     return df.withColumn(flag_column or f"{column}__ok", udf(F.col(column)))
 
 
@@ -558,9 +538,11 @@ def rotate_key_column(
     """Re-encrypt a protected ``column`` under ``new_key_id`` (optionally
     a different cipher) in one vectorized pass — the rotation primitive
     for long-lived protected datasets. Plaintext never appears in the
-    plan; see :func:`_make_rotate_udf`."""
-    udf = _make_rotate_udf(
-        original_type, old_key_id, new_key_id, old_encryptor, new_encryptor
+    plan; see :func:`_make_rotate_kernel`."""
+    udf = F.arrow_udf(T.BinaryType())(
+        _make_rotate_kernel(
+            original_type, old_key_id, new_key_id, old_encryptor, new_encryptor
+        )
     )
     return df.withColumn(column, udf(F.col(column)))
 

@@ -82,7 +82,8 @@ def compact(
     else:
         out = df.repartition(n_files)
     out.write.mode(mode).parquet(out_path)
-    sidecar = _read_sidecar(spark, in_path)
+    text = _read_sidecar(spark, in_path)
+    sidecar = json.loads(text) if text is not None else None
     if sidecar is not None:
         _write_sidecar(spark, out_path, sidecar)
     rows = spark.read.parquet(out_path).count()
@@ -90,5 +91,5 @@ def compact(
         "input_bytes": in_bytes,
         "n_output_files": n_files,
         "rows": rows,
-        "sidecar": json.loads(sidecar) if sidecar is not None else None,
+        "sidecar": sidecar,
     }

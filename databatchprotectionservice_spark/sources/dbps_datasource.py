@@ -24,6 +24,9 @@ Current scope: parquet cell encoding, flat OR hive-partitioned layout
 with partition-value pruning happening at planning time — pruned
 directories are never listed into splits). Base64 text datasets use
 ``read_protected``. The batch/stream writers emit the flat layout.
+Paths are local: plain OS paths or ``file://`` URIs. The source runs in
+Python workers with no JVM gateway, so the Hadoop FS API (and with it
+``hdfs://`` or ``s3a://``) is out of reach.
 """
 
 from __future__ import annotations
@@ -44,7 +47,15 @@ from pyspark.sql.datasource import (
 )
 
 from ..core.errors import DBPSInvalidInputError
-from .protected_parquet import SIDECAR_NAME
+from .protected_parquet import (
+    SIDECAR_NAME,
+    _write_sidecar,
+    build_sidecar,
+    column_entries,
+    entry_type,
+    local_path,
+    read_protection_metadata,
+)
 
 FORMAT_NAME = "dbps_protected"
 
@@ -66,16 +77,6 @@ def parse_columns_option(spec: str) -> dict[str, str]:
     if not out:
         raise DBPSInvalidInputError("columns option names no columns")
     return out
-
-
-def _load_sidecar(path: str) -> dict:
-    sp = os.path.join(path, SIDECAR_NAME)
-    if not os.path.exists(sp):
-        raise DBPSInvalidInputError(
-            f"no {SIDECAR_NAME} found at {path!r}; not a protected dataset"
-        )
-    with open(sp) as f:
-        return json.load(f)
 
 
 class _FileSplit(InputPartition):
@@ -148,12 +149,15 @@ class ProtectedParquetDataSource(DataSource):
         return FORMAT_NAME
 
     def _path(self) -> str:
+        """The dataset directory as an OS path. The methods here run in
+        Python workers with no JVM gateway, so only local paths (plain
+        or ``file://`` URIs) are reachable."""
         path = self.options.get("path")
         if not path:
             raise DBPSInvalidInputError(
                 f"format('{FORMAT_NAME}') requires .load(<dataset path>)"
             )
-        return path
+        return local_path(path)
 
     def schema(self) -> T.StructType:
         import pyarrow.parquet as pq
@@ -161,7 +165,7 @@ class ProtectedParquetDataSource(DataSource):
         from pyspark.sql.pandas.types import from_arrow_schema
 
         path = self._path()
-        meta = _load_sidecar(path)
+        meta = read_protection_metadata(path)
         if meta.get("format", "parquet") != "parquet":
             raise DBPSInvalidInputError(
                 f"{FORMAT_NAME} reads parquet cell encoding; this dataset "
@@ -178,13 +182,7 @@ class ProtectedParquetDataSource(DataSource):
             if cfg is None:
                 fields.append(f)
             else:
-                fields.append(
-                    T.StructField(
-                        f.name,
-                        T._parse_datatype_json_string(cfg["original_type"]),
-                        f.nullable,
-                    )
-                )
+                fields.append(T.StructField(f.name, entry_type(cfg), f.nullable))
         # hive partition columns come last, like the native reader
         fields.extend(_partition_fields(meta, fragments))
         return T.StructType(fields)
@@ -192,7 +190,9 @@ class ProtectedParquetDataSource(DataSource):
     def reader(self, schema: T.StructType) -> "ProtectedParquetReader":
         return ProtectedParquetReader(self._path(), schema)
 
-    def writer(self, schema: T.StructType, overwrite: bool):
+    def _write_options(self, schema: T.StructType, check_append: bool):
+        """(path, columns, encryptor) from the write options. With
+        ``check_append``, an existing dataset is validated up front."""
         path = self._path()
         spec = self.options.get("columns")
         if not spec:
@@ -207,21 +207,22 @@ class ProtectedParquetDataSource(DataSource):
                 f"columns not in DataFrame: {missing}"
             )
         encryptor = self.options.get("encryptor", "keystream_xor")
-        # gate on the SIDECAR like streamWriter does, not on top-level
-        # parquet files: a hive-partitioned protected dataset keeps its
-        # parquet only in key=value/ subdirs, which _parquet_files never
-        # sees — the old gate let appends bypass validation and rewrite
-        # the sidecar out from under the partitioned files
-        if (
-            not overwrite
-            and os.path.isdir(path)
-            and os.path.exists(os.path.join(path, SIDECAR_NAME))
-        ):
+        # gate on the SIDECAR, not on top-level parquet files: a
+        # hive-partitioned protected dataset keeps its parquet only in
+        # key=value/ subdirs, and an ungated append would rewrite the
+        # sidecar out from under the partitioned files
+        if check_append and os.path.exists(os.path.join(path, SIDECAR_NAME)):
             _check_append_compatible(path, schema, columns, encryptor)
+        return path, columns, encryptor
+
+    def writer(self, schema: T.StructType, overwrite: bool):
         # overwrite deletes NOTHING here: writer() runs at plan time,
         # before any task — destroying the old dataset now would leave
         # neither old nor new data if the job fails.  Deletion happens
         # in commit(), preserving keep-old-until-commit semantics.
+        path, columns, encryptor = self._write_options(
+            schema, check_append=not overwrite
+        )
         return ProtectedParquetWriter(
             path, schema, columns, encryptor, overwrite=overwrite
         )
@@ -234,20 +235,6 @@ class ProtectedParquetDataSource(DataSource):
             raise DBPSInvalidInputError(
                 f"{FORMAT_NAME} streaming sink is append-only"
             )
-        path = self._path()
-        spec = self.options.get("columns")
-        if not spec:
-            raise DBPSInvalidInputError(
-                f"format('{FORMAT_NAME}') writes need .option('columns', "
-                "'col:key_id,...')"
-            )
-        columns = parse_columns_option(spec)
-        missing = [c for c in columns if c not in schema.fieldNames()]
-        if missing:
-            raise DBPSInvalidInputError(
-                f"columns not in DataFrame: {missing}"
-            )
-        encryptor = self.options.get("encryptor", "keystream_xor")
         # restarting a stream on an existing dataset with a different
         # key/encryptor/schema would append files the sidecar decrypts
         # wrongly (keystream XOR under the wrong key is silent garbage)
@@ -255,19 +242,8 @@ class ProtectedParquetDataSource(DataSource):
         # sidecar EXISTING: Spark's commit runner re-instantiates this
         # writer mid-first-commit, when task files are on disk but the
         # sidecar isn't yet.
-        if os.path.isdir(path) and os.path.exists(
-            os.path.join(path, SIDECAR_NAME)
-        ):
-            _check_append_compatible(path, schema, columns, encryptor)
+        path, columns, encryptor = self._write_options(schema, check_append=True)
         return ProtectedParquetStreamWriter(path, schema, columns, encryptor)
-
-
-def _parquet_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, n)
-        for n in os.listdir(path)
-        if n.endswith(".parquet") and not n.startswith(("_", "."))
-    )
 
 
 def _check_append_compatible(
@@ -286,21 +262,14 @@ def _check_append_compatible(
 
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    meta = _load_sidecar(path)
+    meta = read_protection_metadata(path)
     if meta.get("partition_by"):
         raise DBPSInvalidInputError(
             f"{FORMAT_NAME} writes the flat layout; appending to a "
             "hive-partitioned protected dataset would mix layouts — "
             "use write_protected(partition_by=...) instead"
         )
-    want = {
-        name: {
-            "key_id": key_id,
-            "original_type": schema[name].dataType.json(),
-            "encryptor": encryptor,
-        }
-        for name, key_id in columns.items()
-    }
+    want = column_entries(schema, columns, encryptor)
     if meta.get("columns") != want:
         raise DBPSInvalidInputError(
             "append config mismatch: dataset sidecar protects "
@@ -309,10 +278,10 @@ def _check_append_compatible(
             "must match exactly; use mode('overwrite') to "
             "replace the dataset)"
         )
-    files = _parquet_files(path)
+    files = _list_fragments(path)
     if not files:  # config already validated; no footer to compare yet
         return
-    disk = from_arrow_schema(pq.read_schema(files[0]))
+    disk = from_arrow_schema(pq.read_schema(files[0][0]))
     disk_unprotected = {
         f.name: f.dataType for f in disk.fields if f.name not in columns
     }
@@ -336,7 +305,7 @@ class ProtectedParquetReader(DataSourceReader):
     def __init__(self, path: str, schema: T.StructType):
         self._path = path
         self._schema = schema
-        self._meta = _load_sidecar(path)
+        self._meta = read_protection_metadata(path)
         self._part_cols = list(self._meta.get("partition_by") or [])
         self._pushed: list = []  # -> pyarrow scanner filter
         self._part_pushed: list = []  # -> split pruning at planning time
@@ -527,9 +496,7 @@ class ProtectedParquetReader(DataSourceReader):
         kernels = {
             name: (
                 make_unprotect_kernel(
-                    T._parse_datatype_json_string(cfg["original_type"]),
-                    cfg["key_id"],
-                    cfg["encryptor"],
+                    entry_type(cfg), cfg["key_id"], cfg["encryptor"]
                 ),
                 to_arrow_type(self._schema[name].dataType),
             )
@@ -620,7 +587,7 @@ class ProtectedParquetWriter(DataSourceArrowWriter):
         os.makedirs(self._dst, exist_ok=True)
         filename = f"part-{pid:05d}-{uuid.uuid4().hex}.parquet"
         # task-commit protocol: write under a dot-prefixed in-progress
-        # name (invisible to _parquet_files / readers), rename into
+        # name (invisible to _list_fragments / readers), rename into
         # place only when the task finishes cleanly. A failed or
         # speculative task therefore never leaves a readable
         # valid-footer partial behind for a retry to duplicate — the
@@ -656,8 +623,6 @@ class ProtectedParquetWriter(DataSourceArrowWriter):
         return _Committed(filename if writer is not None else "")
 
     def commit(self, messages) -> None:
-        from ..core.pagecodec import DBPS_VERSION, DBPS_VERSION_KEY
-
         if self._overwrite:
             # keep-old-until-commit: every task file has landed, so NOW
             # the previous dataset goes — all top-level files except
@@ -677,22 +642,8 @@ class ProtectedParquetWriter(DataSourceArrowWriter):
                 elif os.path.isdir(full) and "=" in n:
                     shutil.rmtree(full)
 
-        sidecar = {
-            DBPS_VERSION_KEY: DBPS_VERSION,
-            "format": "parquet",
-            "cell_encoding": "binary",
-            "partition_by": [],
-            "columns": {
-                name: {
-                    "key_id": key_id,
-                    "original_type": self._schema[name].dataType.json(),
-                    "encryptor": self._encryptor,
-                }
-                for name, key_id in self._columns.items()
-            },
-        }
-        with open(os.path.join(self._dst, SIDECAR_NAME), "w") as f:
-            json.dump(sidecar, f, indent=2, sort_keys=True)
+        col_meta = column_entries(self._schema, self._columns, self._encryptor)
+        _write_sidecar(None, self._dst, build_sidecar(col_meta))
 
     def abort(self, messages) -> None:
         for m in messages:

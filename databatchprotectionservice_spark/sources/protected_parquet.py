@@ -31,10 +31,13 @@ from ..functions.protect import protect_column, unprotect_column
 SIDECAR_NAME = "_dbps_protection.json"
 
 
+def local_path(path: str) -> str:
+    """``path`` as an OS path: a ``file://`` URI loses its scheme."""
+    return path[len("file://"):] if path.startswith("file://") else path
+
+
 def _sidecar_path(path: str) -> str:
-    if path.startswith("file://"):
-        path = path[len("file://"):]
-    return os.path.join(path, SIDECAR_NAME)
+    return os.path.join(local_path(path), SIDECAR_NAME)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -52,8 +55,14 @@ def _is_local(path: str) -> bool:
     return scheme in ("", "file")
 
 
-def _write_sidecar(spark: SparkSession | None, path: str, payload: str) -> None:
+def _write_sidecar(spark: SparkSession | None, path: str, sidecar: dict) -> None:
+    """Write the sidecar document next to the data at ``path``. Without a
+    session (Python data-source workers have no JVM gateway) or on a
+    local path it goes to the local filesystem, else through Hadoop FS."""
+    payload = json.dumps(sidecar, indent=2, sort_keys=True)
     if spark is None or _is_local(path):
+        # a streaming sink may not have created the directory yet
+        os.makedirs(local_path(path), exist_ok=True)
         with open(_sidecar_path(path), "w") as f:
             f.write(payload)
         return
@@ -87,19 +96,42 @@ def _read_sidecar(spark: SparkSession | None, path: str) -> str | None:
     return bytes(data).decode("utf-8")
 
 
+def column_entry(original_type: T.DataType, key_id: str, encryptor: str) -> dict:
+    """THE per-column sidecar entry: what a reader needs to decrypt it."""
+    return {
+        "key_id": key_id,
+        "original_type": original_type.json(),
+        "encryptor": encryptor,
+    }
+
+
+def column_entries(
+    schema: T.StructType, columns: dict[str, str], encryptor: str
+) -> dict:
+    """Entries for ``columns`` (name -> key_id) of a plaintext ``schema``."""
+    return {
+        name: column_entry(schema[name].dataType, key_id, encryptor)
+        for name, key_id in columns.items()
+    }
+
+
+def entry_type(cfg: dict) -> T.DataType:
+    """The logical type a column entry decrypts to."""
+    return T._parse_datatype_json_string(cfg["original_type"])
+
+
 def build_sidecar(
     col_meta: dict,
     data_format: str = "parquet",
     cell_encoding: str = "binary",
     partition_by: list[str] | None = None,
 ) -> dict:
-    """THE sidecar document shape — one builder shared by the batch
-    writer here and the streaming writer in ``streaming/pipeline.py``
-    (a drifted copy would silently produce datasets ``read_protected``
-    can't open).  ``partition_by`` is always present: readers and the
-    append gate key off it."""
-    from ..core.pagecodec import DBPS_VERSION, DBPS_VERSION_KEY
-
+    """THE sidecar document shape, shared by every writer: the batch and
+    rotation writers here, the ``dbps_protected`` data source and the
+    streaming writer in ``streaming/pipeline.py`` (a drifted copy would
+    silently produce datasets ``read_protected`` can't open).
+    ``partition_by`` is always present: readers and the append gate key
+    off it."""
     return {
         DBPS_VERSION_KEY: DBPS_VERSION,
         "format": data_format,
@@ -107,6 +139,79 @@ def build_sidecar(
         "partition_by": list(partition_by or []),
         "columns": col_meta,
     }
+
+
+def read_protection_metadata(path: str, spark: SparkSession | None = None) -> dict:
+    """Load and validate the sidecar (version check mirrors the decrypt
+    sequencer's ``encryption_sequencer.cpp:335-346``). ``file://`` URIs
+    resolve to local paths; other schemes need ``spark``'s Hadoop FS."""
+    text = _read_sidecar(spark, path)
+    if text is None:
+        raise DBPSInvalidInputError(
+            f"no {SIDECAR_NAME} found at {path!r}; not a protected dataset"
+        )
+    meta = json.loads(text)
+    version = meta.get(DBPS_VERSION_KEY)
+    if version is None or not str(version).startswith(DBPS_VERSION):
+        raise DBPSInvalidInputError(
+            f"unsupported {DBPS_VERSION_KEY}: {version!r}"
+        )
+    if not isinstance(meta.get("columns"), dict):
+        raise DBPSInvalidInputError("sidecar missing 'columns' map")
+    return meta
+
+
+def _write_dataset(df: DataFrame, path: str, mode: str, sidecar: dict) -> None:
+    """Write ``df`` in the sidecar's format and layout, then the sidecar."""
+    data_format = sidecar["format"]
+    writer = df.write.mode(mode)
+    if sidecar["partition_by"]:
+        writer = writer.partitionBy(*sidecar["partition_by"])
+    if data_format == "csv":
+        writer = writer.option("header", "true")
+    getattr(writer, data_format)(path)
+    _write_sidecar(df.sparkSession, path, sidecar)
+
+
+def _open_protected(
+    spark: SparkSession,
+    path: str,
+    columns: list[str] | None = None,
+    skip: set[str] = frozenset(),
+) -> tuple[dict, DataFrame, dict]:
+    """Sidecar and data of a protected dataset, shared by every reader:
+    ``(meta, df, targets)``. ``targets`` maps each protected column to
+    act on (``columns``, default all; unknown names fail) minus ``skip``
+    to its sidecar entry, and its cells in ``df`` are raw ciphertext
+    (base64 text cells decoded)."""
+    from pyspark.sql import functions as F
+
+    meta = read_protection_metadata(path, spark)
+    if columns is None:
+        columns = list(meta["columns"])
+    unknown = [c for c in columns if c not in meta["columns"]]
+    if unknown:
+        raise DBPSInvalidInputError(
+            f"columns not present in protection sidecar: {unknown!r} "
+            f"(sidecar has {sorted(meta['columns'])!r})"
+        )
+    data_format = meta.get("format", "parquet")
+    reader = spark.read
+    if data_format == "csv":
+        reader = reader.option("header", "true").option("inferSchema", "true")
+    df = getattr(reader, data_format)(path)
+    targets = {}
+    for name in columns:
+        if name in skip:
+            continue
+        if name not in df.columns:
+            raise DBPSInvalidInputError(
+                f"sidecar column {name!r} missing from dataset at {path!r}"
+            )
+        if meta.get("cell_encoding") == "base64":
+            df = df.withColumn(name, F.unbase64(F.col(name)))
+        targets[name] = meta["columns"][name]
+    return meta, df, targets
 
 
 def write_protected(
@@ -143,52 +248,18 @@ def write_protected(
     from pyspark.sql import functions as F
 
     base64_cells = data_format != "parquet"
-    col_meta = {}
     out = df
     for name, key_id in columns.items():
-        original_type = out.schema[name].dataType
         out = protect_column(out, name, key_id, encryptor)
         if base64_cells:
             out = out.withColumn(name, F.base64(F.col(name)))
-        col_meta[name] = {
-            "key_id": key_id,
-            "original_type": original_type.json(),
-            "encryptor": encryptor,
-        }
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if data_format == "csv":
-        writer = writer.option("header", "true")
-    getattr(writer, data_format)(path)
     sidecar = build_sidecar(
-        col_meta,
+        column_entries(df.schema, columns, encryptor),
         data_format=data_format,
         cell_encoding="base64" if base64_cells else "binary",
         partition_by=partition_by,
     )
-    _write_sidecar(
-        df.sparkSession, path, json.dumps(sidecar, indent=2, sort_keys=True)
-    )
-
-
-def read_protection_metadata(path: str, spark: SparkSession | None = None) -> dict:
-    """Load and validate the sidecar (version check mirrors the decrypt
-    sequencer's ``encryption_sequencer.cpp:335-346``)."""
-    text = _read_sidecar(spark, path)
-    if text is None:
-        raise DBPSInvalidInputError(
-            f"no {SIDECAR_NAME} found at {path!r}; not a protected dataset"
-        )
-    meta = json.loads(text)
-    version = meta.get(DBPS_VERSION_KEY)
-    if version is None or not str(version).startswith(DBPS_VERSION):
-        raise DBPSInvalidInputError(
-            f"unsupported {DBPS_VERSION_KEY}: {version!r}"
-        )
-    if not isinstance(meta.get("columns"), dict):
-        raise DBPSInvalidInputError("sidecar missing 'columns' map")
-    return meta
+    _write_dataset(out, path, mode, sidecar)
 
 
 def rotate_protected(
@@ -213,32 +284,12 @@ def rotate_protected(
 
     from ..functions.protect import rotate_key_column
 
-    meta = read_protection_metadata(src_path, spark)
-    unknown = [c for c in new_keys if c not in meta["columns"]]
-    if unknown:
-        raise DBPSInvalidInputError(
-            f"columns not present in protection sidecar: {unknown!r} "
-            f"(sidecar has {sorted(meta['columns'])!r})"
-        )
-    data_format = meta.get("format", "parquet")
+    meta, df, targets = _open_protected(spark, src_path, list(new_keys))
     base64_cells = meta.get("cell_encoding") == "base64"
-    reader = spark.read
-    if data_format == "csv":
-        reader = reader.option("header", "true").option("inferSchema", "true")
-    df = getattr(reader, data_format)(src_path)
-    new_meta_cols = {}
-    for name, cfg in meta["columns"].items():
-        if name not in new_keys:
-            new_meta_cols[name] = dict(cfg)
-            continue
-        if name not in df.columns:
-            raise DBPSInvalidInputError(
-                f"sidecar column {name!r} missing from dataset at {src_path!r}"
-            )
+    new_meta_cols = {name: dict(cfg) for name, cfg in meta["columns"].items()}
+    for name, cfg in targets.items():
         enc_new = new_encryptor or cfg["encryptor"]
-        original_type = T._parse_datatype_json_string(cfg["original_type"])
-        if base64_cells:
-            df = df.withColumn(name, F.unbase64(F.col(name)))
+        original_type = entry_type(cfg)
         df = rotate_key_column(
             df,
             name,
@@ -250,29 +301,17 @@ def rotate_protected(
         )
         if base64_cells:
             df = df.withColumn(name, F.base64(F.col(name)))
-        new_meta_cols[name] = {
-            "key_id": new_keys[name],
-            "original_type": cfg["original_type"],
-            "encryptor": enc_new,
-        }
+        new_meta_cols[name] = column_entry(original_type, new_keys[name], enc_new)
     # preserve the source layout: the sidecar records partition_by at
     # write time, so the rotated copy keeps directory-partition pruning
     # (sidecars from engine versions before this field rotate flat)
-    part_cols = meta.get("partition_by") or []
-    writer = df.write.mode(mode)
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    if data_format == "csv":
-        writer = writer.option("header", "true")
-    getattr(writer, data_format)(dst_path)
-    sidecar = {
-        DBPS_VERSION_KEY: DBPS_VERSION,
-        "format": data_format,
-        "cell_encoding": "base64" if base64_cells else "binary",
-        "partition_by": part_cols,
-        "columns": new_meta_cols,
-    }
-    _write_sidecar(spark, dst_path, json.dumps(sidecar, indent=2, sort_keys=True))
+    sidecar = build_sidecar(
+        new_meta_cols,
+        data_format=meta.get("format", "parquet"),
+        cell_encoding="base64" if base64_cells else "binary",
+        partition_by=meta.get("partition_by"),
+    )
+    _write_dataset(df, dst_path, mode, sidecar)
     return sidecar
 
 
@@ -289,35 +328,11 @@ def verify_protected(
 
     from ..functions.protect import verify_column
 
-    meta = read_protection_metadata(path, spark)
-    data_format = meta.get("format", "parquet")
-    base64_cells = meta.get("cell_encoding") == "base64"
-    reader = spark.read
-    if data_format == "csv":
-        reader = reader.option("header", "true").option("inferSchema", "true")
-    df = getattr(reader, data_format)(path)
-    if columns is None:
-        targets = meta["columns"]
-    else:
-        unknown = [c for c in columns if c not in meta["columns"]]
-        if unknown:
-            raise DBPSInvalidInputError(
-                f"columns not present in protection sidecar: {unknown!r} "
-                f"(sidecar has {sorted(meta['columns'])!r})"
-            )
-        targets = {c: meta["columns"][c] for c in columns}
+    _, df, targets = _open_protected(spark, path, columns)
     aggs = []
     for name, cfg in targets.items():
-        if name not in df.columns:
-            raise DBPSInvalidInputError(
-                f"sidecar column {name!r} missing from dataset at {path!r}"
-            )
-        col = df[name]
-        if base64_cells:
-            df = df.withColumn(name, F.unbase64(col))
-        original_type = T._parse_datatype_json_string(cfg["original_type"])
         df = verify_column(
-            df, name, original_type, cfg["key_id"], cfg["encryptor"]
+            df, name, entry_type(cfg), cfg["key_id"], cfg["encryptor"]
         )
         aggs += [
             F.count(F.lit(1)).alias(f"{name}__n"),
@@ -348,37 +363,11 @@ def read_protected(
     all); ``keep_protected`` names columns to leave as ciphertext (e.g.
     when the reader's role may not see them — they stay opaque binary).
     """
-    from pyspark.sql import functions as F
-
-    meta = read_protection_metadata(path, spark)
-    data_format = meta.get("format", "parquet")
-    base64_cells = meta.get("cell_encoding") == "base64"
-    reader = spark.read
-    if data_format == "csv":
-        reader = reader.option("header", "true").option("inferSchema", "true")
-    df = getattr(reader, data_format)(path)
-    keep = set(keep_protected or [])
-    if columns is None:
-        targets = meta["columns"]
-    else:
-        unknown = [c for c in columns if c not in meta["columns"]]
-        if unknown:
-            raise DBPSInvalidInputError(
-                f"columns not present in protection sidecar: {unknown!r} "
-                f"(sidecar has {sorted(meta['columns'])!r})"
-            )
-        targets = {c: meta["columns"][c] for c in columns}
+    _, df, targets = _open_protected(
+        spark, path, columns, skip=set(keep_protected or [])
+    )
     for name, cfg in targets.items():
-        if name in keep:
-            continue
-        if name not in df.columns:
-            raise DBPSInvalidInputError(
-                f"sidecar column {name!r} missing from dataset at {path!r}"
-            )
-        if base64_cells:
-            df = df.withColumn(name, F.unbase64(F.col(name)))
-        original_type = T._parse_datatype_json_string(cfg["original_type"])
         df = unprotect_column(
-            df, name, original_type, cfg["key_id"], cfg["encryptor"]
+            df, name, entry_type(cfg), cfg["key_id"], cfg["encryptor"]
         )
     return df

@@ -406,22 +406,13 @@ def write_protected_stream(
     is source -> ArrowEvalPython -> file sink with no state store; file
     commits happen per micro-batch via the normal streaming file-sink
     log."""
-    import json
-    import os
+    from ..sources.protected_parquet import (
+        _write_sidecar,
+        build_sidecar,
+        column_entries,
+    )
 
-    from ..functions.protect import protect_column
-    from ..sources.protected_parquet import SIDECAR_NAME, build_sidecar
-
-    out = stream_df
-    col_meta = {}
-    for name, key_id in columns.items():
-        original_type = out.schema[name].dataType
-        out = protect_column(out, name, key_id, encryptor)
-        col_meta[name] = {
-            "key_id": key_id,
-            "original_type": original_type.json(),
-            "encryptor": encryptor,
-        }
+    out = protect_stream(stream_df, columns, encryptor)
     writer = (
         out.writeStream.format("parquet")
         .option("path", path)
@@ -431,11 +422,9 @@ def write_protected_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     query = writer.start()
-    os.makedirs(path, exist_ok=True)
-    # the shared builder (one sidecar contract with the batch writer)
-    sidecar = build_sidecar(col_meta)
-    with open(os.path.join(path, SIDECAR_NAME), "w") as f:
-        json.dump(sidecar, f, indent=2, sort_keys=True)
+    # the batch writer's sidecar contract, on the path's own filesystem
+    col_meta = column_entries(stream_df.schema, columns, encryptor)
+    _write_sidecar(stream_df.sparkSession, path, build_sidecar(col_meta))
     return query
 
 

@@ -48,10 +48,12 @@ def test_format_read_restores_values_and_types(
     path = str(tmp_path / f"ds_{encryptor}")
     cols = {"name": "key_A", "balance": "key_B", "dec": "key_C"}
     write_protected(people.repartition(3), path, cols, encryptor=encryptor)
-    got = spark.read.format("dbps_protected").load(path)
-    assert dict(got.dtypes) == dict(people.dtypes)
-    for c in ["pid", "name", "balance", "dec"]:
-        assert _vals(got, c) == _vals(people, c)
+    # a file:// URI names the same dataset
+    for uri in (path, "file://" + path):
+        got = spark.read.format("dbps_protected").load(uri)
+        assert dict(got.dtypes) == dict(people.dtypes)
+        for c in ["pid", "name", "balance", "dec"]:
+            assert _vals(got, c) == _vals(people, c)
 
 
 def test_partitions_map_files(spark, people, tmp_path):
@@ -158,14 +160,14 @@ def test_format_write_roundtrip_and_ciphertext_on_disk(
 
 def test_format_write_append_validates_config(spark, people, tmp_path):
     path = str(tmp_path / "dsw_append")
-    w = lambda df, cols: (
+    w = lambda df, cols, dst=path: (
         df.write.format("dbps_protected")
         .mode("append")
         .option("columns", cols)
-        .save(path)
+        .save(dst)
     )
     w(people, "name:key_A")
-    w(people, "name:key_A")  # same config appends
+    w(people, "name:key_A", "file://" + path)  # same config appends
     got = spark.read.format("dbps_protected").load(path)
     assert got.count() == 2 * people.count()
     with pytest.raises(Exception, match="append config mismatch"):

@@ -3,9 +3,9 @@
 Properties that make a rotation correct:
 * rotated data unprotects with the NEW key to the original values;
 * the OLD key no longer yields the plaintext (ciphertext changed);
-* nulls survive; every physical type family works (long, double,
-  string, decimal);
-* rotation can also migrate ciphers (keystream -> AES-SIV and back);
+* nulls survive; every physical type family works (long, integer,
+  double, boolean, date, string, decimal), under every cipher pair
+  (keystream -> keystream, keystream -> AES-SIV and back);
 * the dataset-level helper rewrites the sidecar so `read_protected`
   opens the rotated dataset with no extra configuration.
 """
@@ -30,14 +30,22 @@ from databatchprotectionservice_spark.sources.protected_parquet import (
 
 @pytest.fixture(scope="module")
 def people(spark):
+    import datetime
+
     rows = [
-        Row(pid=1, name="ada", balance=10.5, dec=None),
-        Row(pid=2, name=None, balance=-3.25, dec="12.34"),
-        Row(pid=3, name="grace", balance=None, dec="-0.01"),
-        Row(pid=4, name="", balance=0.0, dec="9999999999.99"),
+        Row(pid=1, name="ada", balance=10.5, dec=None, qty=7, flag=True,
+            day=datetime.date(2024, 2, 29)),
+        Row(pid=2, name=None, balance=-3.25, dec="12.34", qty=None,
+            flag=False, day=None),
+        Row(pid=3, name="grace", balance=None, dec="-0.01", qty=-1,
+            flag=None, day=datetime.date(1970, 1, 1)),
+        Row(pid=4, name="", balance=0.0, dec="9999999999.99", qty=0,
+            flag=True, day=datetime.date(1969, 12, 31)),
     ]
-    return spark.createDataFrame(rows).withColumn(
-        "dec", F.col("dec").cast(T.DecimalType(12, 2))
+    return (
+        spark.createDataFrame(rows)
+        .withColumn("dec", F.col("dec").cast(T.DecimalType(12, 2)))
+        .withColumn("qty", F.col("qty").cast(T.IntegerType()))
     )
 
 
@@ -56,13 +64,33 @@ def _vals(df, column):
         ("name", T.StringType()),
         ("balance", T.DoubleType()),
         ("dec", T.DecimalType(12, 2)),
+        ("flag", T.BooleanType()),
+        ("day", T.DateType()),
+        ("qty", T.IntegerType()),
     ],
 )
 def test_rotate_roundtrips_every_type(spark, people, column, dtype):
-    prot = protect_column(people, column, "k_old")
-    rotated = rotate_key_column(prot, column, dtype, "k_old", "k_new")
-    back = unprotect_column(rotated, column, dtype, "k_new")
-    assert _vals(back, column) == _vals(people, column)
+    """Rotation is the old codec's open plus the new codec's seal, so
+    every type runs under the same-cipher pair and both migrations."""
+    for old_enc, new_enc in [
+        ("keystream_xor", "keystream_xor"),
+        ("keystream_xor", "aes_siv"),
+        ("aes_siv", "keystream_xor"),
+    ]:
+        prot = protect_column(people, column, "k_old", encryptor=old_enc)
+        rotated = rotate_key_column(
+            prot,
+            column,
+            dtype,
+            "k_old",
+            "k_new",
+            old_encryptor=old_enc,
+            new_encryptor=new_enc,
+        )
+        back = unprotect_column(
+            rotated, column, dtype, "k_new", encryptor=new_enc
+        )
+        assert _vals(back, column) == _vals(people, column), (old_enc, new_enc)
 
 
 def test_rotation_changes_ciphertext_and_retires_old_key(spark, people):

@@ -5,6 +5,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from databatchprotectionservice_spark.core.errors import DBPSInvalidInputError
+from databatchprotectionservice_spark.sources.dbps_datasource import (
+    register_dbps_datasource,
+)
 from databatchprotectionservice_spark.sources.protected_parquet import (
     read_protected,
     read_protection_metadata,
@@ -106,6 +109,10 @@ def test_bad_version_rejected(spark, customer, tmp_path):
     json.dump(meta, open(sidecar, "w"))
     with pytest.raises(DBPSInvalidInputError):
         read_protected(spark, path)
+    # the data source reads the same sidecar through the same check
+    register_dbps_datasource(spark)
+    with pytest.raises(Exception, match="unsupported dbps_agent_version"):
+        spark.read.format("dbps_protected").load(path).collect()
 
 
 def test_aes_siv_roundtrip(spark, customer, tmp_path):

@@ -236,6 +236,40 @@ def test_write_protected_stream_readable_by_batch(spark, sf_dir, tmp_path):
     )
 
 
+def test_write_protected_stream_file_uri_keeps_sidecar_with_data(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A file:// output path puts the sidecar next to the data files,
+    not under a relative ``file:`` directory in the working directory."""
+    import os
+
+    from databatchprotectionservice_spark.sources.protected_parquet import (
+        read_protected,
+    )
+    from databatchprotectionservice_spark.streaming.pipeline import (
+        write_protected_stream,
+    )
+
+    monkeypatch.chdir(tmp_path)
+    stream = read_events_stream(spark, sf_dir + "/events.parquet")
+    out = str(tmp_path / "prot_stream_uri")
+    q = write_protected_stream(
+        stream,
+        "file://" + out,
+        {"user_id": "kuid"},
+        checkpoint=str(tmp_path / "ckpt_uri"),
+    )
+    q.awaitTermination(120)
+    q.stop()
+    assert os.path.exists(os.path.join(out, "_dbps_protection.json"))
+    assert not os.path.exists(tmp_path / "file:")
+    back = read_protected(spark, "file://" + out)
+    expect = _batch_events(spark, sf_dir)
+    assert back.agg(F.sum("user_id")).collect() == expect.agg(
+        F.sum("user_id")
+    ).collect()
+
+
 def test_dedup_stream_drops_in_horizon_duplicates(spark, tmp_path):
     """Duplicate keys within the watermark horizon are dropped; the
     result matches batch dropDuplicates on the same data."""
