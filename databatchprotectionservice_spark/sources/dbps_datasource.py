@@ -278,10 +278,10 @@ def _check_append_compatible(
             "must match exactly; use mode('overwrite') to "
             "replace the dataset)"
         )
-    files = _list_fragments(path)
-    if not files:  # config already validated; no footer to compare yet
+    fragments = _list_fragments(path)
+    if not fragments:  # config already validated; no footer to compare yet
         return
-    disk = from_arrow_schema(pq.read_schema(files[0][0]))
+    disk = from_arrow_schema(pq.read_schema(fragments[0][0]))
     disk_unprotected = {
         f.name: f.dataType for f in disk.fields if f.name not in columns
     }
