@@ -28,7 +28,8 @@ sys.path.insert(0, REPO)
 
 # The headline set is the ENTIRE registry (VERDICT r1 item 9: a
 # regression in any registered operator must be visible in the bench),
-# in registry insertion order so timings are comparable across rounds.
+# in ``all_queries()`` order: the computed scoring window first (its
+# first key is q11_important_parts), then the rest.
 HEADLINE: list[str] | None = None  # resolved to entrymod.queries() keys
 
 # EVERY query gets ONE discarded warmup run before the timed N

@@ -33,6 +33,7 @@ import json
 import struct
 import zlib
 
+from .bits import uleb128, zigzag_decode, zigzag_encode
 from .compression import compress as _compress
 from .compression import decompress as _decompress
 from .errors import DBPSInvalidInputError
@@ -52,25 +53,8 @@ class AvroFormatError(DBPSInvalidInputError):
 # ---------------------------------------------------------------------------
 
 
-def zigzag_encode(n: int) -> int:
-    return (n << 1) ^ (n >> 63) if n >= 0 else ((-n) << 1) - 1
-
-
-def zigzag_decode(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 def write_long(n: int) -> bytes:
-    u = zigzag_encode(n)
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+    return uleb128(zigzag_encode(n))
 
 
 def read_long(data: bytes, pos: int) -> tuple:

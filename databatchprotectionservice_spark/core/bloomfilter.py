@@ -9,15 +9,13 @@ writers emit for exactly this: one split-block Bloom filter per
 column chunk, XXH64 over the value's PLAIN encoding, a 32-byte block
 per hash with one bit set in each of its eight 32-bit lanes.
 
-Everything here follows the two public specs, not a library:
-
-* **XXH64** (Collet's published algorithm): the four lane
-  accumulators over 32-byte stripes, the prime-multiply avalanche,
-  verified against the reference test vectors in the unit tests.
-* **SBBF** (parquet-format BloomFilter.md): ``block_index =
-  ((h >> 32) * num_blocks) >> 32`` (fastrange over the TOP half),
-  the eight published odd SALT constants each selecting one bit of
-  one lane from the LOW half, check = all eight bits set.
+Everything here follows parquet-format BloomFilter.md, not a
+library: values hash with XXH64 seed 0 (``core/bits.py``) over their
+PLAIN encoding; ``block_index = ((h >> 32) * num_blocks) >> 32``
+(fastrange over the TOP half); the eight published odd SALT constants
+each select one bit of one lane from the LOW half; check = all eight
+bits set.  Inserts OR the mask in, lookups need every lane bit — one
+cache line per operation, which is why the format chose it.
 
 The bitset is a power-of-two number of 32-byte blocks (what
 parquet-mr emits), sized from an expected distinct count at ~1% false
@@ -28,90 +26,23 @@ of the raw bitset and points ``ColumnMetaData`` fids 14/15 at it;
 1.0 neither write nor read parquet Bloom filters, so interop is
 pinned the same way as the Gorilla codec: spec-vector unit tests plus
 the oracle-gated pruning query whose in-UDF asserts forbid false
-negatives against a full scan.
+negatives against a full scan.  The txnlog point-lookup operator
+keeps one filter per shard in its add-action stats the same way:
+probe, then verify, so false positives die in the join.
 """
 
 from __future__ import annotations
 
 import struct
 
+from .bits import xxh64
 from .errors import DBPSInvalidInputError
 
-_MASK64 = (1 << 64) - 1
 _MASK32 = (1 << 32) - 1
-
-# XXH64 primes (public reference constants)
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _MASK64
-
-
-def _round(acc: int, lane: int) -> int:
-    acc = (acc + lane * _P2) & _MASK64
-    return (_rotl(acc, 31) * _P1) & _MASK64
-
-
-def _merge(acc: int, val: int) -> int:
-    acc ^= _round(0, val)
-    return (acc * _P1 + _P4) & _MASK64
-
-
-def xxh64(data: bytes, seed: int = 0) -> int:
-    """XXH64 of ``data`` — the published algorithm, stripe by stripe."""
-    n = len(data)
-    pos = 0
-    if n >= 32:
-        v1 = (seed + _P1 + _P2) & _MASK64
-        v2 = (seed + _P2) & _MASK64
-        v3 = seed & _MASK64
-        v4 = (seed - _P1) & _MASK64
-        for pos in range(0, n - 31, 32):
-            l1, l2, l3, l4 = struct.unpack_from("<QQQQ", data, pos)
-            v1 = _round(v1, l1)
-            v2 = _round(v2, l2)
-            v3 = _round(v3, l3)
-            v4 = _round(v4, l4)
-        pos += 32
-        h = (
-            _rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)
-        ) & _MASK64
-        h = _merge(h, v1)
-        h = _merge(h, v2)
-        h = _merge(h, v3)
-        h = _merge(h, v4)
-    else:
-        h = (seed + _P5) & _MASK64
-    h = (h + n) & _MASK64
-    while pos + 8 <= n:
-        (k,) = struct.unpack_from("<Q", data, pos)
-        h ^= _round(0, k)
-        h = (_rotl(h, 27) * _P1 + _P4) & _MASK64
-        pos += 8
-    if pos + 4 <= n:
-        (k,) = struct.unpack_from("<I", data, pos)
-        h ^= (k * _P1) & _MASK64
-        h = (_rotl(h, 23) * _P2 + _P3) & _MASK64
-        pos += 4
-    while pos < n:
-        h ^= (data[pos] * _P5) & _MASK64
-        h = (_rotl(h, 11) * _P1) & _MASK64
-        pos += 1
-    h ^= h >> 33
-    h = (h * _P2) & _MASK64
-    h ^= h >> 29
-    h = (h * _P3) & _MASK64
-    h ^= h >> 32
-    return h
 
 
 # SBBF salt constants (parquet-format BloomFilter.md, verbatim)
-_SALT = (
+SALTS = (
     0x47B6137B,
     0x44974D91,
     0x8824AD5B,
@@ -144,22 +75,31 @@ def plain_bytes(value, ptype: str) -> bytes:
     raise DBPSInvalidInputError(f"no bloom hashing for type {ptype}")
 
 
+class SbbfError(DBPSInvalidInputError):
+    """Invalid split-block Bloom parameters or serialized bytes."""
+
+
+def _num_blocks(num_bytes: int) -> int:
+    if num_bytes < MIN_BYTES or num_bytes > MAX_BYTES:
+        raise SbbfError(
+            f"bloom bitset {num_bytes} outside [{MIN_BYTES}, {MAX_BYTES}]"
+        )
+    if num_bytes % 32:
+        raise SbbfError(
+            f"bloom bitset {num_bytes} not a whole number of 32-byte blocks"
+        )
+    return num_bytes // 32
+
+
 class SplitBlockBloomFilter:
     """One chunk's SBBF: ``num_blocks`` 32-byte blocks, each 8 u32
-    lanes; one bit per lane per key."""
+    lanes; one bit per lane per key.  New filters are a power-of-two
+    byte count in [32 B, 128 MiB]."""
 
     def __init__(self, num_bytes: int):
-        if num_bytes < MIN_BYTES or num_bytes > MAX_BYTES:
-            raise DBPSInvalidInputError(
-                f"bloom bitset {num_bytes} outside [{MIN_BYTES}, "
-                f"{MAX_BYTES}]"
-            )
-        if num_bytes % 32:
-            raise DBPSInvalidInputError(
-                f"bloom bitset {num_bytes} not a whole number of "
-                "32-byte blocks"
-            )
-        self.num_blocks = num_bytes // 32
+        if num_bytes & (num_bytes - 1):
+            raise SbbfError(f"bloom bitset {num_bytes} not a power of two")
+        self.num_blocks = _num_blocks(num_bytes)
         self._lanes = [0] * (self.num_blocks * 8)
 
     @classmethod
@@ -176,7 +116,7 @@ class SplitBlockBloomFilter:
     def _mask_at(self, h: int) -> tuple[int, list[int]]:
         block = ((h >> 32) * self.num_blocks) >> 32
         lo = h & _MASK32
-        bits = [1 << (((lo * s) & _MASK32) >> 27) for s in _SALT]
+        bits = [1 << (((lo * s) & _MASK32) >> 27) for s in SALTS]
         return block, bits
 
     def insert_hash(self, h: int) -> None:
@@ -203,12 +143,16 @@ class SplitBlockBloomFilter:
         return self.check_hash(xxh64(plain_bytes(value, ptype)))
 
     def to_bytes(self) -> bytes:
+        """Little-endian lane words, blocks in order — the bitset
+        layout of a parquet bloom-filter page body."""
         return struct.pack(f"<{len(self._lanes)}I", *self._lanes)
 
     @classmethod
     def from_bytes(cls, raw: bytes):
-        f = cls(len(raw))
-        f._lanes = list(
-            struct.unpack(f"<{len(raw) // 4}I", raw)
-        )
+        """A serialized bitset; any whole number of 32-byte blocks in
+        range reads, since other writers need not round to a power
+        of two."""
+        f = cls.__new__(cls)
+        f.num_blocks = _num_blocks(len(raw))
+        f._lanes = list(struct.unpack(f"<{len(raw) // 4}I", raw))
         return f

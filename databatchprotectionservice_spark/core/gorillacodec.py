@@ -43,6 +43,7 @@ from __future__ import annotations
 
 import struct
 
+from .bits import zigzag_decode, zigzag_encode
 from .errors import DBPSInvalidInputError
 
 
@@ -108,14 +109,6 @@ class BitReader:
         return (chunk >> shift) & ((1 << nbits) - 1)
 
 
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 127) if v < 0 else v << 1
-
-
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 #: (prefix value, prefix bits, payload bits, lo, hi) — offset-binary
 #: payload stores ``dod - lo``
 _DOD_LADDER = (
@@ -167,7 +160,7 @@ def encode_timestamps(ts: list) -> tuple[bytes, list]:
             w.write(dod - lo, vbits)
         else:
             w.write(0b11110, 5)
-            z = _zigzag(dod)
+            z = zigzag_encode(dod)
             if z >> 64:
                 raise GorillaFormatError(f"dod {dod} exceeds 64 bits")
             w.write(z, 64)
@@ -198,7 +191,7 @@ def decode_timestamps(data: bytes) -> list:
         else:
             if r.read(1) != 0:
                 raise GorillaFormatError("prefix beyond the escape code")
-            dod = _unzigzag(r.read(64))
+            dod = zigzag_decode(r.read(64))
         out.append(out[-1] + (out[-1] - out[-2]) + dod)
     return out
 

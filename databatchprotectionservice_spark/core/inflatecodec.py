@@ -14,9 +14,13 @@ the public RFCs alone:
   16/17/18 repeat codes, the length/distance extra-bit tables, and
   canonical Huffman code construction (§3.2.2's algorithm verbatim);
 * RFC 1950: 2-byte header (CM/CINFO/FCHECK/FDICT/FLEVEL) and the
-  Adler-32 trailer, Adler-32 implemented from its definition;
+  Adler-32 trailer;
 * RFC 1952: gzip member header (magic, CM, FLG with FEXTRA/FNAME/
-  FCOMMENT/FHCRC), CRC-32 (reflected 0xEDB88320) and ISIZE trailer.
+  FCOMMENT/FHCRC), CRC-32 and ISIZE trailer.
+
+The two checksums are stdlib ``zlib.adler32`` / ``zlib.crc32`` (same
+values, same ``crc32(data, running)`` chaining); they are arithmetic,
+not part of the container format this module spells out.
 
 The referee in tests is stdlib zlib itself: every stream zlib emits
 (all levels, both strategies) must decode byte-exact, and our
@@ -27,6 +31,7 @@ plus the mutation battery.
 from __future__ import annotations
 
 import struct
+from zlib import adler32, crc32
 
 from .errors import DBPSInvalidInputError
 
@@ -260,18 +265,6 @@ def inflate_raw(data: bytes, start: int = 0) -> tuple[bytes, int]:
     return bytes(out), bits.byte_pos()
 
 
-def adler32(data: bytes) -> int:
-    """RFC 1950 §8: two mod-65521 running sums."""
-    a, b = 1, 0
-    for i in range(0, len(data), 4096):
-        for byte in data[i : i + 4096]:
-            a += byte
-            b += a
-        a %= 65521
-        b %= 65521
-    return (b << 16) | a
-
-
 def inflate_zlib(data: bytes) -> bytes:
     """RFC 1950 wrapper: header checks + Adler-32 trailer verify."""
     if len(data) < 6:
@@ -293,26 +286,6 @@ def inflate_zlib(data: bytes) -> bytes:
     if want != got:
         raise InflateError(f"Adler-32 mismatch: {got:#x} != {want:#x}")
     return out
-
-
-_CRC_TABLE = None
-
-
-def crc32(data: bytes, crc: int = 0) -> int:
-    """RFC 1952 §8 CRC-32 (reflected 0xEDB88320), table-driven."""
-    global _CRC_TABLE
-    if _CRC_TABLE is None:
-        tbl = []
-        for n in range(256):
-            c = n
-            for _ in range(8):
-                c = (c >> 1) ^ 0xEDB88320 if c & 1 else c >> 1
-            tbl.append(c)
-        _CRC_TABLE = tbl
-    c = crc ^ 0xFFFFFFFF
-    for byte in data:
-        c = _CRC_TABLE[(c ^ byte) & 0xFF] ^ (c >> 8)
-    return c ^ 0xFFFFFFFF
 
 
 def inflate_gzip(data: bytes) -> bytes:

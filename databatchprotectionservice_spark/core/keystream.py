@@ -218,8 +218,9 @@ class AesSivEncryptor(Encryptor):
     The per-value hot path runs on ``core/aessiv_batch.BatchSIV`` — a
     whole Arrow batch per handful of AES-ECB calls instead of one
     ``AESSIV`` call per element (byte-identical output; parity pinned in
-    tests/test_aessiv_batch.py). ``DBPS_SIV_BATCH=0`` falls back to the
-    scalar loop."""
+    tests/test_aessiv_batch.py). ``_route_batch`` sends batches the
+    batch engine would run slower (few or very long cells) through the
+    scalar loop instead."""
 
     _OVERHEAD = 16
 
@@ -232,15 +233,12 @@ class AesSivEncryptor(Encryptor):
                 "AES-SIV requires the 'cryptography' package"
             ) from e
         import hashlib
-        import os
 
         # derive a 32-byte AES-SIV key from the key id (stand-in for a KMS
         # lookup; the reference likewise maps key_id -> key material)
         key = hashlib.sha256(b"dbps-key:" + key_id.encode()).digest()
         self._aead = AESSIV(key)
-        self._batch = None
-        if os.environ.get("DBPS_SIV_BATCH", "1") != "0":
-            self._batch = BatchSIV(key, b"value")
+        self._batch = BatchSIV(key, b"value")
 
     #: without the C helper, ragged batches with mean plaintext length
     #: above this run the scalar loop instead: the numpy layout's

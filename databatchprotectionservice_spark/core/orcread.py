@@ -39,6 +39,7 @@ from __future__ import annotations
 
 import struct
 
+from .bits import zigzag_decode
 from .errors import DBPSInvalidInputError
 from .orcmeta import (
     OrcFormatError,
@@ -171,10 +172,6 @@ class _ByteCursor:
             if shift > max_bits - 1:
                 raise OrcReadError(f"varint over {max_bits} bits")
 
-    def svarint(self, max_bits: int = 64) -> int:
-        u = self.uvarint(max_bits)
-        return (u >> 1) ^ -(u & 1)
-
     def unpack_be(self, count: int, width: int) -> list:
         """``count`` values of ``width`` bits, big-endian bit order."""
         if width == 0:
@@ -247,8 +244,10 @@ def rlev2_decode(cur: _ByteCursor, n: int, signed: bool) -> list:
             enc_w = (first >> 1) & 0x1F
             width = _FBS[enc_w] if enc_w else 0
             total = ((first & 1) << 8 | cur.u8()) + 1
-            base = cur.svarint() if signed else cur.uvarint()
-            delta_base = cur.svarint()
+            base = cur.uvarint()
+            if signed:
+                base = zigzag_decode(base)
+            delta_base = zigzag_decode(cur.uvarint())
             vals = [base]
             if width == 0:
                 while len(vals) < total:
@@ -448,7 +447,10 @@ def read_stripe_column(
         # values need up to 127 bits + zigzag, far over the 64-bit cap
         # the integer-RLE paths enforce — 200 bits admits every legal
         # decimal(38) while still refusing runaway/corrupt streams
-        unscaled = [cur.svarint(max_bits=200) for _ in range(n_present)]
+        unscaled = [
+            zigzag_decode(cur.uvarint(max_bits=200))
+            for _ in range(n_present)
+        ]
         sec_raw = _stream(data, meta, sf, column, K_SECONDARY)
         if sec_raw is None:
             raise OrcReadError("DECIMAL without a SECONDARY stream")

@@ -57,6 +57,7 @@ import struct
 
 import numpy as np
 
+from .bits import zigzag_decode
 from .compression import decompress as _decompress
 from .errors import DBPSInvalidInputError
 from .pagecodec import read_uleb128
@@ -315,11 +316,6 @@ def _uvarint64(raw: bytes, pos: int) -> tuple:
             raise ParquetReadError("delta varint over 64 bits")
 
 
-def _zigzag_varint(raw: bytes, pos: int) -> tuple:
-    u, pos = _uvarint64(raw, pos)
-    return (u >> 1) ^ -(u & 1), pos
-
-
 def _wrap_signed(v: int, bits: int) -> int:
     v &= (1 << bits) - 1
     return v - (1 << bits) if v >= (1 << (bits - 1)) else v
@@ -334,7 +330,8 @@ def _delta_bp_decode(raw: bytes, pos: int, bits: int) -> tuple:
     block, pos = _uvarint64(raw, pos)
     minis, pos = _uvarint64(raw, pos)
     total, pos = _uvarint64(raw, pos)
-    first, pos = _zigzag_varint(raw, pos)
+    first, pos = _uvarint64(raw, pos)
+    first = zigzag_decode(first)
     if block <= 0 or block % 128 or minis <= 0 or block % minis:
         raise ParquetReadError(
             f"delta header: block {block} / miniblocks {minis}"
@@ -362,7 +359,8 @@ def _delta_bp_decode(raw: bytes, pos: int, bits: int) -> tuple:
         )
     out = [_wrap_signed(first, bits)]
     while len(out) < total:
-        min_delta, pos = _zigzag_varint(raw, pos)
+        min_delta, pos = _uvarint64(raw, pos)
+        min_delta = zigzag_decode(min_delta)
         if pos + minis > len(raw):
             raise ParquetReadError("delta bit widths overrun the page")
         widths = raw[pos : pos + minis]

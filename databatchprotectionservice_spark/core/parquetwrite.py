@@ -75,6 +75,7 @@ from __future__ import annotations
 
 import struct
 
+from .bits import uleb128, zigzag_encode
 from .bloomfilter import SplitBlockBloomFilter
 from .errors import DBPSInvalidInputError
 from .snappycodec import snappy_compress
@@ -189,20 +190,6 @@ def _plain_encode(values: list, ptype: str) -> bytes:
     return bytes(out)
 
 
-def _uvar(u: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        out.append(b | 0x80 if u else b)
-        if not u:
-            return bytes(out)
-
-
-def _zzvar(v: int) -> bytes:
-    return _uvar(((v << 1) ^ (v >> 63)) & ((1 << 64) - 1))
-
-
 def _wrap_s(v: int, bits: int) -> int:
     v &= (1 << bits) - 1
     return v - (1 << bits) if v >= (1 << (bits - 1)) else v
@@ -221,9 +208,9 @@ def _delta_bp_encode(ints: list, bits: int) -> bytes:
     widths, and LSB-first packed ``delta - min_delta``.  Delta
     arithmetic is modular in the type's width (spec)."""
     out = bytearray(
-        _uvar(_DBP_BLOCK) + _uvar(_DBP_MINIS) + _uvar(len(ints))
+        uleb128(_DBP_BLOCK) + uleb128(_DBP_MINIS) + uleb128(len(ints))
     )
-    out += _zzvar(int(ints[0]) if ints else 0)
+    out += uleb128(zigzag_encode(int(ints[0]) if ints else 0))
     deltas = [
         _wrap_s(int(b) - int(a), bits)
         for a, b in zip(ints, ints[1:])
@@ -233,7 +220,7 @@ def _delta_bp_encode(ints: list, bits: int) -> bytes:
         mind = min(block)
         frame = [d - mind for d in block]
         frame += [0] * (_DBP_BLOCK - len(frame))
-        out += _zzvar(mind)
+        out += uleb128(zigzag_encode(mind))
         widths = []
         minis = []
         for mb in range(_DBP_MINIS):
@@ -318,13 +305,7 @@ def _rle_levels(levels: list, prefix: bool = True) -> bytes:
             j += 1
         run = j - i
         # ULEB128 of (run << 1), then the 1-byte level value
-        u = run << 1
-        while True:
-            b = u & 0x7F
-            u >>= 7
-            body.append(b | 0x80 if u else b)
-            if not u:
-                break
+        body += uleb128(run << 1)
         body.append(levels[i])
         i = j
     if not prefix:
@@ -341,22 +322,13 @@ def _rle_hybrid(values: list, bw: int) -> bytes:
     values past num_values are legal and ignored by readers)."""
     nbytes = (bw + 7) // 8
     body = bytearray()
-
-    def uleb(u: int) -> None:
-        while True:
-            b = u & 0x7F
-            u >>= 7
-            body.append(b | 0x80 if u else b)
-            if not u:
-                return
-
     i, n = 0, len(values)
     while i < n:
         j = i
         while j < n and values[j] == values[i]:
             j += 1
         if j - i >= 8:
-            uleb((j - i) << 1)
+            body += uleb128((j - i) << 1)
             body += int(values[i]).to_bytes(nbytes, "little")
             i = j
             continue
@@ -376,7 +348,7 @@ def _rle_hybrid(values: list, bw: int) -> bytes:
         while k < n and (k - i) % 8:
             k += 1
         groups = (k - i + 7) // 8
-        uleb((groups << 1) | 1)
+        body += uleb128((groups << 1) | 1)
         acc = 0
         nb = 0
         for x in range(groups * 8):

@@ -25,6 +25,7 @@ that the engine's dominant page codec has no black box in it.
 
 from __future__ import annotations
 
+from .bits import uleb128
 from .errors import DBPSInvalidInputError
 
 MAX_CONTENT = 1 << 30
@@ -154,14 +155,7 @@ def snappy_compress(data: bytes) -> bytes:
     n = len(data)
     if n > MAX_CONTENT:
         raise SnappyFormatError("content over the cap")
-    out = bytearray()
-    v = n
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | 0x80 if v else b)
-        if not v:
-            break
+    out = bytearray(uleb128(n))
     table: dict = {}
     anchor = 0
     i = 0

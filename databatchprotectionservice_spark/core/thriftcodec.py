@@ -29,6 +29,7 @@ from __future__ import annotations
 
 import struct
 
+from .bits import uleb128, zigzag_decode, zigzag_encode
 from .errors import DBPSInvalidInputError
 
 _U64 = (1 << 64) - 1
@@ -77,10 +78,6 @@ class ThriftReader:
             shift += 7
         raise ThriftFormatError("varint over 10 bytes")
 
-    def _zigzag(self) -> int:
-        u = self._varint() & _U64
-        return (u >> 1) ^ -(u & 1)
-
     def _binary(self) -> bytes:
         n = self._varint()
         if n > len(self.data) - self.pos:
@@ -119,7 +116,7 @@ class ThriftReader:
             b = self._byte()
             return b - 256 if b > 127 else b
         if vtype in (T_I16, T_I32, T_I64):
-            return self._zigzag()
+            return zigzag_decode(self._varint() & _U64)
         if vtype == T_DOUBLE:
             return self._double()
         if vtype == T_BINARY:
@@ -180,7 +177,7 @@ class ThriftReader:
             if delta:
                 fid = last_id + delta
             else:
-                fid = self._zigzag()
+                fid = zigzag_decode(self._varint() & _U64)
             if not -(1 << 15) <= fid < (1 << 15):
                 raise ThriftFormatError(f"field id {fid} out of i16")
             last_id = fid
@@ -202,21 +199,6 @@ class ThriftWriter:
     def __init__(self):
         self.out = bytearray()
 
-    # -- primitives ---------------------------------------------------------
-
-    def _varint(self, u: int) -> None:
-        while True:
-            b = u & 0x7F
-            u >>= 7
-            if u:
-                self.out.append(b | 0x80)
-            else:
-                self.out.append(b)
-                return
-
-    def _zigzag(self, n: int) -> None:
-        self._varint(((n << 1) ^ (n >> 63)) & _U64)
-
     def _field_header(self, last_id: int, fid: int, ftype: int) -> int:
         delta = fid - last_id
         if delta <= 0:
@@ -227,7 +209,7 @@ class ThriftWriter:
             self.out.append((delta << 4) | ftype)
         else:
             self.out.append(ftype)
-            self._zigzag(fid)
+            self.out += uleb128(zigzag_encode(fid))
         return fid
 
     # -- struct assembly ----------------------------------------------------
@@ -249,14 +231,14 @@ class ThriftWriter:
 
     def _value(self, vtype: int, value) -> None:
         if vtype in (T_I16, T_I32, T_I64):
-            self._zigzag(int(value))
+            self.out += uleb128(zigzag_encode(int(value)))
         elif vtype == T_I8:
             self.out.append(int(value) & 0xFF)
         elif vtype == T_DOUBLE:
             self.out += struct.pack("<d", float(value))
         elif vtype == T_BINARY:
             b = bytes(value)
-            self._varint(len(b))
+            self.out += uleb128(len(b))
             self.out += b
         elif vtype in (T_LIST, T_SET):
             etype, items = value
@@ -265,7 +247,7 @@ class ThriftWriter:
                 self.out.append((n << 4) | etype)
             else:
                 self.out.append((15 << 4) | etype)
-                self._varint(n)
+                self.out += uleb128(n)
             for item in items:
                 if etype in (T_TRUE, T_FALSE):
                     self.out.append(1 if item else 2)

@@ -1,4 +1,4 @@
-"""Zstandard frame walk + raw-block encoder + from-scratch XXH64.
+"""Zstandard frame walk + raw-block encoder.
 
 Public format (RFC 8878).  Implemented from scratch:
 
@@ -20,16 +20,14 @@ Public format (RFC 8878).  Implemented from scratch:
   optional content checksum).  Any conformant zstd decoder must
   accept its output — the unit suite pins that against pyarrow's
   real libzstd both directions;
-* **XXH64** — the checksum primitive, implemented from the public
-  algorithm (4-lane stripe accumulation, merge rounds, avalanche);
-  pinned against Spark's JVM ``xxhash64`` (seed 42 over binary) and
-  the classic published vectors.  The frame checksum is the low 32
-  bits of ``XXH64(content, 0)`` and IS verified whenever the walk
-  could regenerate the content.
+* **content checksum** — the low 32 bits of ``XXH64(content, 0)``
+  (the shared ``core/bits.py`` primitive), verified whenever the
+  walk could regenerate the content.
 """
 
 from __future__ import annotations
 
+from .bits import xxh64
 from .errors import DBPSInvalidInputError
 
 MAGIC = 0xFD2FB528
@@ -37,82 +35,10 @@ SKIPPABLE_LO = 0x184D2A50
 MAX_CONTENT = 1 << 30
 MAX_BLOCKS = 1 << 20
 
-_M64 = (1 << 64) - 1
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-
 
 from .zstdblock import ZstdFormatError  # noqa: E402 - shared error type
 
 assert issubclass(ZstdFormatError, DBPSInvalidInputError)
-
-
-# ---------------------------------------------------------------------------
-# XXH64
-# ---------------------------------------------------------------------------
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _round(acc: int, lane: int) -> int:
-    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
-
-
-def xxh64(data: bytes, seed: int = 0) -> int:
-    """XXH64 of ``data`` — the published algorithm, pure integers."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        a1 = (seed + _P1 + _P2) & _M64
-        a2 = (seed + _P2) & _M64
-        a3 = seed & _M64
-        a4 = (seed - _P1) & _M64
-        end = n - 32
-        while i <= end:
-            a1 = _round(a1, int.from_bytes(data[i : i + 8], "little"))
-            a2 = _round(a2, int.from_bytes(data[i + 8 : i + 16], "little"))
-            a3 = _round(a3, int.from_bytes(data[i + 16 : i + 24], "little"))
-            a4 = _round(a4, int.from_bytes(data[i + 24 : i + 32], "little"))
-            i += 32
-        h = (
-            _rotl(a1, 1) + _rotl(a2, 7) + _rotl(a3, 12) + _rotl(a4, 18)
-        ) & _M64
-        for acc in (a1, a2, a3, a4):
-            h = ((h ^ _round(0, acc)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h = (
-            _rotl(h ^ _round(0, int.from_bytes(data[i : i + 8], "little")), 27)
-            * _P1
-            + _P4
-        ) & _M64
-        i += 8
-    if i + 4 <= n:
-        h = (
-            _rotl(
-                h ^ (int.from_bytes(data[i : i + 4], "little") * _P1) & _M64,
-                23,
-            )
-            * _P2
-            + _P3
-        ) & _M64
-        i += 4
-    while i < n:
-        h = (_rotl(h ^ (data[i] * _P5) & _M64, 11) * _P1) & _M64
-        i += 1
-    h ^= h >> 33
-    h = (h * _P2) & _M64
-    h ^= h >> 29
-    h = (h * _P3) & _M64
-    h ^= h >> 32
-    return h
 
 
 # ---------------------------------------------------------------------------

@@ -1623,7 +1623,7 @@ def _txnlog_build(spark, sf_dir):
     import base64
 
     from ..core.parquetmeta import parse_footer
-    from ..core.sbbf import SplitBlockBloom
+    from ..core.bloomfilter import SplitBlockBloomFilter
     from ..core.txnlog import (
         checkpoint_bytes,
         encode_commit,
@@ -1677,9 +1677,9 @@ def _txnlog_build(spark, sf_dir):
             # file bytes agree: our footer walk must see the same rows
             if parse_footer(data)["num_rows"] != len(g):
                 raise ValueError("shard file footer disagrees with group")
-            bloom = SplitBlockBloom(64)
+            bloom = SplitBlockBloomFilter(64)
             for i in ids.tolist():
-                bloom.insert_int64(i)
+                bloom.insert(i, "INT64")
             out.append(
                 (
                     g["source"].iloc[0],
@@ -2477,7 +2477,7 @@ def txnlog_bloom_point_lookup(spark, sf_dir) -> DataFrame:
     """Point lookups planned from per-file bloom filters, then verified.
 
     Each shard file's add action carries a parquet-spec SPLIT-BLOCK
-    bloom over its doc_ids (`core/sbbf.py` — XXH64 PLAIN-encoding
+    bloom over its doc_ids (`core/bloomfilter.py` — XXH64 PLAIN-encoding
     hashes, the published salt lanes, one cache line per probe).  A
     point-lookup for the fixed probe set runs the production shape:
     the driver probes the blooms of every LIVE file in the replayed
@@ -2491,7 +2491,7 @@ def txnlog_bloom_point_lookup(spark, sf_dir) -> DataFrame:
     """
     import base64
 
-    from ..core.sbbf import SplitBlockBloom
+    from ..core.bloomfilter import SplitBlockBloomFilter
 
     _, _, snap = _txnlog_build(spark, sf_dir)
     candidates = []  # (source, shard_id, probe)
@@ -2500,11 +2500,11 @@ def txnlog_bloom_point_lookup(spark, sf_dir) -> DataFrame:
         source, part = path.split("/", 1)
         shard_id = int(part.removeprefix("part-"))
         n_live[source] = n_live.get(source, 0) + 1
-        bloom = SplitBlockBloom.from_bytes(
+        bloom = SplitBlockBloomFilter.from_bytes(
             base64.b64decode(add["stats"]["sbbf"])
         )
         for p in TXNLOG_PROBE_IDS:
-            if bloom.might_contain_int64(p):
+            if bloom.might_contain(p, "INT64"):
                 candidates.append((source, shard_id, p))
 
     cand_df = local_frame(

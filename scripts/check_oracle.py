@@ -1,9 +1,7 @@
 #!/usr/bin/env python
 """Local replica of the driver's correctness gate.
 
-Round-1 reverse-engineering (scripts/probe_hasher.py + analyze_hasher.py)
-showed the driver's value-hash is explained, for all 48 observed outcomes,
-by this comparison:
+The gate compares each query with its DuckDB oracle like this:
 
 * Spark side fetched with ``df.toPandas()``; DuckDB side with ``.df()``
   (so DuckDB HUGEINT and DECIMAL become float64 — ``str()`` of those will
@@ -22,8 +20,8 @@ rounding, no Decimal normalization) so local green implies driver green.
 
 Set ``CHECK_ORACLE_JSON=/path.json`` to also write a machine-readable
 artifact in the driver's CORRECTNESS format (per-query rows_match /
-schema_match / hash_match / err), so committed sweep logs can be
-diffed and consumed programmatically.
+schema_match / hash_match / err), so sweep results can be diffed and
+consumed programmatically.
 """
 
 from __future__ import annotations

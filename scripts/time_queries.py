@@ -7,8 +7,8 @@ Usage: python scripts/time_queries.py q1 q2 ... [--runs N] [--explain]
 
 $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS behave exactly as in bench.py.
 --explain additionally writes .explain("formatted") for each query to
-plans/r15/<name>_current.txt (rename to _before/_after when committing
-evidence).
+plans/$SPARK_GRAFT_PLANS_DIR/<name>_current.txt (default plans/explain/,
+created if missing, git-ignored).
 """
 
 from __future__ import annotations
@@ -62,7 +62,7 @@ def main() -> None:
         df.collect()
         warm = time.time() - t0
         if explain:
-            pdir = os.environ.get("SPARK_GRAFT_PLANS_DIR", "r16")
+            pdir = os.environ.get("SPARK_GRAFT_PLANS_DIR", "explain")
             os.makedirs(os.path.join(REPO, "plans", pdir), exist_ok=True)
             with open(
                 os.path.join(REPO, "plans", pdir, f"{name}_current.txt"), "w"

@@ -252,9 +252,10 @@ def test_encryptor_batch_and_scalar_paths_agree(monkeypatch):
     flat, off = _arrow(elems * 16)
     fast = AesSivEncryptor("key_T")
     assert fast._batch is not None
-    monkeypatch.setenv("DBPS_SIV_BATCH", "0")
     slow = AesSivEncryptor("key_T")
+    monkeypatch.setattr(slow, "_batch", None)
     assert slow._batch is None
+    assert not slow._route_batch(off, overhead=0)
     s_flat, s_off = slow.encrypt_elements(flat, off)
     for layout in _layouts(monkeypatch):
         assert fast._route_batch(off, overhead=0), layout

@@ -16,6 +16,12 @@ from hypothesis import strategies as st
 from databatchprotectionservice_spark.core.avrocodec import (
     encode_avro_ocf,
     parse_avro_ocf,
+    read_long,
+)
+from databatchprotectionservice_spark.core.bits import (
+    uleb128,
+    zigzag_decode,
+    zigzag_encode,
 )
 from databatchprotectionservice_spark.core.lz4codec import (
     lz4_block_compress,
@@ -28,6 +34,8 @@ from databatchprotectionservice_spark.core.msgpackcodec import (
     packb,
     unpackb,
 )
+from databatchprotectionservice_spark.core.orcread import _ByteCursor
+from databatchprotectionservice_spark.core.pagecodec import read_uleb128
 from databatchprotectionservice_spark.core.snappycodec import (
     snappy_compress,
     snappy_decompress,
@@ -40,6 +48,7 @@ from databatchprotectionservice_spark.core.tfrecordcodec import (
     encode_tfrecord,
     parse_tfrecord,
 )
+from databatchprotectionservice_spark.core.thriftcodec import ThriftReader
 from databatchprotectionservice_spark.core.zstdmeta import (
     encode_zstd_raw,
     parse_zstd_frames,
@@ -178,3 +187,44 @@ def test_avro_inverts(rows, codec):
 )
 def test_tfexample_inverts(feats):
     assert parse_example(make_example(feats)) == feats
+
+
+_INT64 = st.integers(-(2**63), 2**63 - 1)
+
+
+@settings(max_examples=200, deadline=None)
+@given(u=st.integers(0, 2**64 - 1), n=_INT64, small=st.integers(0, 2**32 - 1))
+def test_shared_uleb128_reads_back_in_every_format(u, n, small):
+    """One writer, four independent readers, each bounded differently:
+    Thrift takes full 64-bit varints, Avro zigzagged longs, pagecodec's
+    level-run headers stop at 35 bits."""
+    wire = uleb128(u)
+    r = ThriftReader(wire)
+    assert r._varint() == u and r.pos == len(wire)
+    wire = uleb128(zigzag_encode(n))
+    assert read_long(wire, 0) == (n, len(wire))
+    wire = uleb128(small)
+    assert read_uleb128(wire + b"\xff", 0) == (small, len(wire))
+
+
+@settings(max_examples=40, deadline=None)
+@given(n=st.integers(0, 1 << 22) | st.integers(0, 300))
+def test_shared_uleb128_is_the_snappy_preamble(n):
+    # one literal of n bytes (4-byte length form) behind the preamble
+    body = b"" if n == 0 else bytes([63 << 2]) + (n - 1).to_bytes(4, "little")
+    data = bytes(n)
+    assert snappy_decompress(uleb128(n) + body + data) == data
+
+
+@settings(max_examples=300, deadline=None)
+@given(n=_INT64, wide=st.integers(-(2**199), 2**199 - 1))
+def test_zigzag_pair_round_trips_at_64_and_200_bits(n, wide):
+    u = zigzag_encode(n)
+    # on int64 it is the usual fixed-width fold
+    assert u == ((n << 1) ^ (n >> 63)) & (2**64 - 1)
+    assert zigzag_decode(u) == n
+    w = zigzag_encode(wide)
+    assert 0 <= w < 2**200
+    assert zigzag_decode(w) == wide
+    # ORC's unbounded decimal varints carry exactly this shape
+    assert zigzag_decode(_ByteCursor(uleb128(w)).uvarint(max_bits=200)) == wide
