@@ -42,8 +42,8 @@ supported Int width and every index bounds-checked against the
 resolved dictionary.  Compressed bodies decode too (also r11):
 ``BodyCompression`` BUFFER-method framing — each non-empty buffer
 ``[i64 uncompressed length][frame]``, -1 meaning stored raw — with
-LZ4 frames through ``core/lz4codec.py`` and ZSTD frames through the
-``core/zstdmeta.py``/``zstdblock.py`` entropy stack, every inflated
+LZ4 frames through ``core/lz4codec.py`` and ZSTD frames through
+``core/zstdmeta.py`` (frame walk, libzstd block decode), every inflated
 length checked against the declaration.  Nested columns decode too
 (also r11): List and Struct fields recurse depth-first through the
 node/buffer flattening order the columnar spec defines — List =
@@ -1053,7 +1053,7 @@ def _decode_rb_table(
                 out = lz4_frame_decompress(payload)["content"]
             except Lz4FormatError as e:
                 raise ArrowIpcFormatError(f"lz4 buffer: {e}") from None
-        else:  # zstd frame through the from-scratch entropy decoder
+        else:  # zstd frame: our frame walk, libzstd block decode
             from .zstdmeta import ZstdFormatError, parse_zstd_frames
 
             try:
@@ -2229,8 +2229,7 @@ def _compress_body_buffer(raw: bytes, compression: str) -> bytes:
         from .lz4codec import lz4_frame_compress
 
         frame = lz4_frame_compress(raw)
-    else:  # zstd frame via the compression layer (parquetwrite.py
-        # precedent: pyarrow-backed compress, from-scratch decode twin)
+    else:  # zstd frame via the compression layer (pyarrow's libzstd)
         from .compression import compress
         from .types import CompressionCodec
 

@@ -320,7 +320,7 @@ _IMA_DIFF = None
 _IMA_NEXT = None
 
 
-def _ima_decode_blocks(blocks: np.ndarray) -> np.ndarray:
+def _ima_block_samples(blocks: np.ndarray) -> np.ndarray:
     """(nb, block_align) uint8 block matrix -> (nb, spb) int16 samples.
 
     Every IMA block is self-contained (the 4-byte header carries sample
@@ -676,7 +676,7 @@ def decode_wav_adpcm_batch(
                 np.frombuffer(payload, dtype=np.uint8).reshape(nb, ba)
             )
         all_blocks = np.concatenate(mats) if len(mats) != 1 else mats[0]
-        decoded = _ima_decode_blocks(all_blocks)
+        decoded = _ima_block_samples(all_blocks)
         ofs = 0
         for i, nb in zip(idxs, counts):
             rate, _ba, _spb, _pl, fact_frames = parsed[i]

@@ -30,8 +30,8 @@ compression scheme Prometheus/M3/InfluxDB-family TSDB engines adopted:
 
 Reference scope: the reference service treats payload bytes as opaque
 (`src/data_batch_protection_service.cpp`); a columnar TSDB codec is
-engine-side machinery beside the other from-scratch byte layers
-(``pagecodec``, ``zstdblock``), here because a 100 TB events pipeline
+engine-side machinery beside the other byte layers (``pagecodec``,
+``zstdmeta``), here because a 100 TB events pipeline
 stores exactly these streams.  Bit-exact determinism makes the
 timestamp half SQL-restatable: the per-point prefix class is a pure
 function of ``dod``, so an oracle can recount class histograms and

@@ -1,36 +1,26 @@
-"""DEFLATE decoder from scratch — RFC 1951, with the RFC 1950 (zlib)
-and RFC 1952 (gzip) wrappers.
+"""DEFLATE (RFC 1951) with the RFC 1950 (zlib) and RFC 1952 (gzip)
+wrappers.
 
-The engine's production paths keep CPython's zlib as the kernel (it
-is public stdlib, and the point of those paths is the CONTAINER
-format); this module is the spec twin that removes the last black box
-from the byte stack — the same role ``snappycodec.py`` plays beside
-the C snappy in ``compression.py``.  Everything below derives from
-the public RFCs alone:
+Decoding runs in stdlib ``zlib`` (``decompressobj``); this module
+keeps the container walks around it:
 
-* RFC 1951 §3.2: LSB-first bit packing, the three block types
-  (stored with LEN/NLEN complement check, fixed Huffman, dynamic
-  Huffman), the code-length code with its fixed symbol order and the
-  16/17/18 repeat codes, the length/distance extra-bit tables, and
-  canonical Huffman code construction (§3.2.2's algorithm verbatim);
-* RFC 1950: 2-byte header (CM/CINFO/FCHECK/FDICT/FLEVEL) and the
-  Adler-32 trailer;
+* RFC 1950: 2-byte header (CM/CINFO/FCHECK/FDICT) and the Adler-32
+  trailer;
 * RFC 1952: gzip member header (magic, CM, FLG with FEXTRA/FNAME/
-  FCOMMENT/FHCRC), CRC-32 and ISIZE trailer.
+  FCOMMENT/FHCRC), CRC-32 and ISIZE trailer, and the walk over
+  concatenated members.
 
-The two checksums are stdlib ``zlib.adler32`` / ``zlib.crc32`` (same
-values, same ``crc32(data, running)`` chaining); they are arithmetic,
-not part of the container format this module spells out.
-
-The referee in tests is stdlib zlib itself: every stream zlib emits
-(all levels, both strategies) must decode byte-exact, and our
-decoder's strictness is pinned by hand-assembled hostile streams
-plus the mutation battery.
+Every decode is capped at ``MAX_OUTPUT`` bytes, and any ``zlib.error``
+surfaces as :class:`InflateError`.  The encoder half (fixed and
+dynamic Huffman blocks over a greedy LZ77 parse, stored fallback,
+zlib/gzip framing) is written from the RFC; tests use stdlib zlib as
+its decode referee.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
 from zlib import adler32, crc32
 
 from .errors import DBPSInvalidInputError
@@ -62,207 +52,19 @@ _DIST_TABLE = [
 _CLC_ORDER = (16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13, 2, 14, 1, 15)
 
 
-class _Bits:
-    """LSB-first bit reader over bytes (RFC 1951 §3.1.1)."""
-
-    __slots__ = ("data", "pos", "buf", "nbits")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.nbits = 0
-
-    def need(self, n: int) -> None:
-        while self.nbits < n:
-            if self.pos >= len(self.data):
-                raise InflateError("unexpected end of DEFLATE stream")
-            self.buf |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-
-    def take(self, n: int) -> int:
-        if n == 0:
-            return 0
-        self.need(n)
-        v = self.buf & ((1 << n) - 1)
-        self.buf >>= n
-        self.nbits -= n
-        return v
-
-    def align_byte(self) -> None:
-        self.buf = 0
-        self.nbits = 0
-
-    def byte_pos(self) -> int:
-        """Position of the next unread byte (after align)."""
-        return self.pos
-
-
-class _Huffman:
-    """Canonical Huffman decoder built from code LENGTHS alone
-    (RFC 1951 §3.2.2).  Decoding walks bit-by-bit through the
-    canonical first-code/count arrays — O(code length) per symbol
-    with no table blowup on hostile length sets."""
-
-    __slots__ = ("counts", "symbols", "first_code", "first_sym", "maxlen")
-
-    def __init__(self, lengths: list[int]):
-        maxlen = max(lengths) if lengths else 0
-        if maxlen == 0:
-            raise InflateError("Huffman code with no symbols")
-        if maxlen > 15:
-            raise InflateError(f"code length {maxlen} exceeds 15")
-        counts = [0] * (maxlen + 1)
-        for ln in lengths:
-            if ln:
-                counts[ln] += 1
-        # over-subscription check (§3.2.2's implicit completeness):
-        # an over-full code is invalid; incomplete codes appear in
-        # legal streams only for the 1-symbol distance case, which
-        # zlib emits — accept incomplete, reject over-full
-        left = 1
-        for ln in range(1, maxlen + 1):
-            left = (left << 1) - counts[ln]
-            if left < 0:
-                raise InflateError("over-subscribed Huffman code")
-        # canonical ordering: symbols sorted by (length, symbol)
-        self.maxlen = maxlen
-        self.counts = counts
-        offs = [0] * (maxlen + 2)
-        for ln in range(1, maxlen + 1):
-            offs[ln + 1] = offs[ln] + counts[ln]
-        self.symbols = [0] * offs[maxlen + 1]
-        next_off = offs[:]
-        for sym, ln in enumerate(lengths):
-            if ln:
-                self.symbols[next_off[ln]] = sym
-                next_off[ln] += 1
-        # first canonical code and first symbol index per length
-        self.first_code = [0] * (maxlen + 1)
-        self.first_sym = [0] * (maxlen + 1)
-        code = 0
-        idx = 0
-        for ln in range(1, maxlen + 1):
-            self.first_code[ln] = code
-            self.first_sym[ln] = idx
-            code = (code + counts[ln]) << 1
-            idx += counts[ln]
-
-    def decode(self, bits: _Bits) -> int:
-        code = 0
-        for ln in range(1, self.maxlen + 1):
-            code |= bits.take(1)
-            n = self.counts[ln]
-            d = code - self.first_code[ln]
-            if 0 <= d < n:
-                return self.symbols[self.first_sym[ln] + d]
-            code <<= 1
-        raise InflateError("invalid Huffman code in stream")
-
-
-_FIXED_LIT = None
-_FIXED_DIST = None
-
-
-def _fixed_tables() -> tuple[_Huffman, _Huffman]:
-    global _FIXED_LIT, _FIXED_DIST
-    if _FIXED_LIT is None:
-        lengths = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-        _FIXED_LIT = _Huffman(lengths)
-        _FIXED_DIST = _Huffman([5] * 30)
-    return _FIXED_LIT, _FIXED_DIST
-
-
-def _dynamic_tables(bits: _Bits) -> tuple[_Huffman, _Huffman]:
-    hlit = bits.take(5) + 257
-    hdist = bits.take(5) + 1
-    hclen = bits.take(4) + 4
-    if hlit > 286 or hdist > 30:
-        raise InflateError(f"HLIT/HDIST out of range: {hlit}/{hdist}")
-    clc_lengths = [0] * 19
-    for i in range(hclen):
-        clc_lengths[_CLC_ORDER[i]] = bits.take(3)
-    clc = _Huffman(clc_lengths)
-    lengths: list[int] = []
-    while len(lengths) < hlit + hdist:
-        sym = clc.decode(bits)
-        if sym < 16:
-            lengths.append(sym)
-        elif sym == 16:
-            if not lengths:
-                raise InflateError("repeat code with no previous length")
-            lengths.extend([lengths[-1]] * (3 + bits.take(2)))
-        elif sym == 17:
-            lengths.extend([0] * (3 + bits.take(3)))
-        else:
-            lengths.extend([0] * (11 + bits.take(7)))
-    if len(lengths) != hlit + hdist:
-        raise InflateError("code-length run overflows HLIT+HDIST")
-    lit = _Huffman(lengths[:hlit])
-    dist = _Huffman(lengths[hlit:])
-    return lit, dist
-
-
 def inflate_raw(data: bytes, start: int = 0) -> tuple[bytes, int]:
     """Decode one complete raw-DEFLATE stream starting at byte
     ``start``; returns (decompressed bytes, next byte position)."""
-    bits = _Bits(bytes(data), start)
-    out = bytearray()
-    while True:
-        bfinal = bits.take(1)
-        btype = bits.take(2)
-        if btype == 0:  # stored
-            bits.align_byte()
-            p = bits.byte_pos()
-            if p + 4 > len(bits.data):
-                raise InflateError("truncated stored-block header")
-            ln, nln = struct.unpack_from("<HH", bits.data, p)
-            if ln ^ nln != 0xFFFF:
-                raise InflateError("stored block LEN/NLEN mismatch")
-            if p + 4 + ln > len(bits.data):
-                raise InflateError("truncated stored block")
-            out += bits.data[p + 4 : p + 4 + ln]
-            bits.pos = p + 4 + ln
-        elif btype in (1, 2):
-            lit, dist = (
-                _fixed_tables() if btype == 1 else _dynamic_tables(bits)
-            )
-            while True:
-                sym = lit.decode(bits)
-                if sym < 256:
-                    out.append(sym)
-                elif sym == 256:
-                    break
-                else:
-                    if sym > 285:
-                        raise InflateError(f"invalid length code {sym}")
-                    eb, base = _LEN_TABLE[sym - 257]
-                    length = base + bits.take(eb)
-                    dsym = dist.decode(bits)
-                    if dsym > 29:
-                        raise InflateError(f"invalid distance code {dsym}")
-                    deb, dbase = _DIST_TABLE[dsym]
-                    distance = dbase + bits.take(deb)
-                    if distance > len(out):
-                        raise InflateError(
-                            "back-reference before stream start"
-                        )
-                    # overlapping copy byte-by-byte (RFC allows
-                    # distance < length: the run replicates)
-                    s = len(out) - distance
-                    for i in range(length):
-                        out.append(out[s + i])
-                if len(out) > MAX_OUTPUT:
-                    raise InflateError("output exceeds decoder cap")
-        else:
-            raise InflateError("reserved block type 3")
-        if len(out) > MAX_OUTPUT:
-            raise InflateError("output exceeds decoder cap")
-        if bfinal:
-            break
-    bits.align_byte()
-    return bytes(out), bits.byte_pos()
+    d = zlib.decompressobj(-15)
+    try:
+        out = d.decompress(memoryview(data)[start:], MAX_OUTPUT + 1)
+    except zlib.error as e:
+        raise InflateError(f"zlib: {e}") from None
+    if len(out) > MAX_OUTPUT:
+        raise InflateError("output exceeds decoder cap")
+    if not d.eof:
+        raise InflateError("unexpected end of DEFLATE stream")
+    return out, len(data) - len(d.unused_data)
 
 
 def inflate_zlib(data: bytes) -> bytes:
@@ -289,55 +91,22 @@ def inflate_zlib(data: bytes) -> bytes:
 
 
 def inflate_gzip(data: bytes) -> bytes:
-    """RFC 1952 single-member gzip: header walk (FEXTRA/FNAME/
-    FCOMMENT/FHCRC), raw inflate, CRC-32 + ISIZE trailer verify."""
-    if len(data) < 18 or data[0] != 0x1F or data[1] != 0x8B:
-        raise InflateError("missing gzip magic")
-    if data[2] != 8:
-        raise InflateError(f"gzip CM {data[2]} is not DEFLATE")
-    flg = data[3]
-    if flg & 0xE0:
-        raise InflateError("gzip reserved FLG bits set")
-    pos = 10
-    if flg & 0x04:  # FEXTRA
-        if pos + 2 > len(data):
-            raise InflateError("truncated FEXTRA length")
-        xlen = struct.unpack_from("<H", data, pos)[0]
-        pos += 2 + xlen
-    for bit in (0x08, 0x10):  # FNAME, FCOMMENT: nul-terminated
-        if flg & bit:
-            end = data.find(b"\x00", pos)
-            if end < 0:
-                raise InflateError("unterminated gzip header string")
-            pos = end + 1
-    if flg & 0x02:  # FHCRC
-        if pos + 2 > len(data):
-            raise InflateError("truncated FHCRC")
-        want = struct.unpack_from("<H", data, pos)[0]
-        if crc32(data[:pos]) & 0xFFFF != want:
-            raise InflateError("gzip header CRC16 mismatch")
-        pos += 2
-    out, pos = inflate_raw(data, pos)
-    if pos + 8 > len(data):
-        raise InflateError("gzip stream missing CRC32/ISIZE trailer")
-    want_crc, want_isize = struct.unpack_from("<II", data, pos)
-    if crc32(out) != want_crc:
-        raise InflateError("gzip CRC-32 mismatch")
-    if len(out) % (1 << 32) != want_isize:
-        raise InflateError("gzip ISIZE mismatch")
-    if pos + 8 != len(data):
-        # single-member contract is pinned strict: bytes after the
-        # trailer are garbage here, not a second member (gzip_members
-        # is the multi-stream entry point)
-        raise InflateError("trailing garbage after gzip trailer")
-    return out
+    """RFC 1952 single-member gzip: exactly one member, trailer-verified.
+
+    Bytes after the member's trailer are an error here, not a second
+    member (:func:`gzip_members` is the multi-stream entry point)."""
+    members = gzip_members(data)
+    if len(members) != 1:
+        raise InflateError(
+            f"expected one gzip member, found {len(members)}"
+        )
+    return members[0]
 
 
 # ---------------------------------------------------------------------------
 # Encode direction: fixed-Huffman DEFLATE with greedy LZ77 (+ stored
 # fallback), zlib/gzip wrappers.  The decode referee in tests is
-# stdlib zlib — streams this encoder emits must inflate byte-exact
-# there AND through this module's own decoder.
+# stdlib zlib — streams this encoder emits must inflate byte-exact.
 # ---------------------------------------------------------------------------
 
 #: greedy matcher bounds (RFC limits: length <= 258, distance <= 32768)
@@ -347,7 +116,7 @@ _WINDOW = 32768
 
 
 class _BitWriter:
-    """LSB-first bit packer (the inverse of _Bits)."""
+    """LSB-first bit packer (RFC 1951 §3.1.1)."""
 
     __slots__ = ("out", "buf", "nbits")
 
@@ -541,9 +310,8 @@ def gzip_members(data: bytes) -> list[bytes]:
     while pos < len(data):
         if pos + 18 > len(data) or data[pos] != 0x1F or data[pos + 1] != 0x8B:
             raise InflateError(f"missing gzip member magic at {pos}")
-        # find this member's extent by decoding it in place: reuse the
-        # single-member path on the remaining bytes, then compute how
-        # many bytes it consumed from the raw-stream end position
+        # the member's extent is the header walked here, then the
+        # raw-stream end position inflate_raw reports, then the trailer
         if data[pos + 2] != 8:
             raise InflateError(f"gzip CM {data[pos + 2]} is not DEFLATE")
         flg = data[pos + 3]
@@ -591,7 +359,7 @@ def _package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
     package-merge / coin-collector algorithm): lengths are the leaf
     multiplicities in the cheapest ``2n-2`` items of the L-th merged
     list.  Returns {symbol: length}; a single-symbol alphabet gets
-    length 1 (the legal incomplete code both decoders accept)."""
+    length 1 (the legal incomplete code zlib accepts)."""
     leaves = sorted((f, s) for s, f in freqs.items() if f > 0)
     n = len(leaves)
     if n == 0:
@@ -622,8 +390,7 @@ def _package_merge(freqs: dict[int, int], limit: int) -> dict[int, int]:
 
 def _canonical_codes(lengths: list[int]) -> list[tuple[int, int]]:
     """Code lengths -> canonical (code, length) per symbol, the
-    §3.2.2 next_code construction (the encoder-side mirror of
-    ``_Huffman``)."""
+    §3.2.2 next_code construction."""
     maxlen = max(lengths) if lengths else 0
     counts = [0] * (maxlen + 1)
     for ln in lengths:

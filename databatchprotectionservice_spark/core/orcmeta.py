@@ -22,9 +22,8 @@ codecs: NONE, ZLIB (raw deflate), SNAPPY (length from the stream's
 own ULEB128 prefix via ``core/compression.py``), LZ4 (raw block —
 the ORC codec calls ``LZ4_decompress_safe`` on the bare chunk, no
 frame header — through the from-scratch ``core/lz4codec.py``), and
-ZSTD (each chunk is a complete zstd frame, entropy-decoded by the
-from-scratch FSE+Huffman stack in ``core/zstdmeta.py`` /
-``core/zstdblock.py``).  LZO chunks stay the named seam: the
+ZSTD (each chunk is a complete zstd frame: ``core/zstdmeta.py`` walks
+the frame and libzstd decodes its blocks).  LZO chunks stay the named seam: the
 LZO1X match tables are GPL-licensed, so a clean-room decoder has no
 public-spec source to build from.
 

@@ -1,4 +1,4 @@
-"""Snappy raw-block codec from scratch — the reference's default codec.
+"""Snappy raw-block encoder — the reference's default codec.
 
 Public format (google/snappy ``format_description.txt``): a ULEB128
 uncompressed-length preamble, then tagged elements —
@@ -8,19 +8,12 @@ uncompressed-length preamble, then tagged elements —
 * ``01`` copy with 3-bit length (4-11) and an 11-bit offset split
   across the tag's top 3 bits and one trailing byte;
 * ``10`` copy with 6-bit length (1-64) and a 2-byte LE offset;
-* ``11`` copy with a 4-byte LE offset (emitted only for giant
-  streams; decoded here, never emitted).
+* ``11`` copy with a 4-byte LE offset (never emitted here).
 
-Copies may self-overlap (offset < length replicates) and the decoder
-must regenerate EXACTLY the preamble's byte count — both enforced.
 The encoder is the same greedy hash-table matcher family as
 ``core/lz4codec.py`` (min match 4, 64-byte ops, 64 KiB offsets).
-
-The production page path (``core/compression.py``) keeps pyarrow's
-C++ snappy for throughput; this module is the spec-complete twin the
-unit suite pins against it in BOTH directions, the same role
-``refbench/shims/snappy.h`` plays on the C++ side — and the proof
-that the engine's dominant page codec has no black box in it.
+Decoding goes through ``core/compression.py`` (pyarrow's C++
+snappy), which the unit suite uses as this encoder's referee.
 """
 
 from __future__ import annotations
@@ -32,83 +25,7 @@ MAX_CONTENT = 1 << 30
 
 
 class SnappyFormatError(DBPSInvalidInputError):
-    """Malformed snappy raw-block data."""
-
-
-def snappy_decompress(data: bytes) -> bytes:
-    n = len(data)
-    # ULEB128 preamble
-    length, shift, pos = 0, 0, 0
-    while True:
-        if pos >= n:
-            raise SnappyFormatError("truncated length preamble")
-        b = data[pos]
-        pos += 1
-        length |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 32:
-            raise SnappyFormatError("length varint over 5 bytes")
-    if length > MAX_CONTENT:
-        raise SnappyFormatError(f"declared length {length} over the cap")
-    out = bytearray()
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            x = tag >> 2
-            if x < 60:
-                lit = x + 1
-            else:
-                nb = x - 59
-                if pos + nb > n:
-                    raise SnappyFormatError("truncated literal length")
-                lit = int.from_bytes(data[pos : pos + nb], "little") + 1
-                pos += nb
-            if pos + lit > n:
-                raise SnappyFormatError("literal overruns the block")
-            out += data[pos : pos + lit]
-            pos += lit
-        else:
-            if kind == 1:
-                if pos >= n:
-                    raise SnappyFormatError("truncated copy-1")
-                mlen = ((tag >> 2) & 0x07) + 4
-                offset = ((tag >> 5) << 8) | data[pos]
-                pos += 1
-            elif kind == 2:
-                if pos + 2 > n:
-                    raise SnappyFormatError("truncated copy-2")
-                mlen = (tag >> 2) + 1
-                offset = int.from_bytes(data[pos : pos + 2], "little")
-                pos += 2
-            else:
-                if pos + 4 > n:
-                    raise SnappyFormatError("truncated copy-4")
-                mlen = (tag >> 2) + 1
-                offset = int.from_bytes(data[pos : pos + 4], "little")
-                pos += 4
-            if offset == 0 or offset > len(out):
-                raise SnappyFormatError(
-                    f"copy offset {offset} outside the window"
-                )
-            start = len(out) - offset
-            if offset >= mlen:
-                out += out[start : start + mlen]
-            else:  # overlapping copy replicates
-                for k in range(mlen):
-                    out.append(out[start + k])
-        if len(out) > length:
-            raise SnappyFormatError(
-                f"output {len(out)} exceeds declared {length}"
-            )
-    if len(out) != length:
-        raise SnappyFormatError(
-            f"regenerated {len(out)} bytes, preamble declares {length}"
-        )
-    return bytes(out)
+    """Input the snappy encoder refuses (content over the cap)."""
 
 
 def _emit_literal(out: bytearray, chunk: bytes) -> None:

@@ -1,31 +1,32 @@
 """Zstandard frame walk + raw-block encoder.
 
-Public format (RFC 8878).  Implemented from scratch:
+Public format (RFC 8878).  The frame layer is walked here; the
+entropy-coded block content is libzstd's job:
 
 * **frame walk** — magic, Frame_Header_Descriptor (content-size /
   single-segment / checksum / dictionary-ID flags), window
   descriptor math (``10+exponent`` log, eighth-mantissa add),
   all four Frame_Content_Size widths, skippable frames
   (0x184D2A50-5F), and the 3-byte block headers (Raw / RLE /
-  Compressed / Reserved).  Raw and RLE block content is regenerated;
-  Compressed blocks decode through the from-scratch FSE+Huffman
-  decoder (``zstdblock.py`` — the r9 seam, closed in r10), with
-  repeat offsets, Treeless Huffman reuse, and Repeat_Mode FSE
-  tables persisting across blocks within a frame.  The one
-  remaining documented out-of-scope case is dictionary frames
-  (``Dictionary_ID`` set): their content needs the external
+  Compressed / Reserved).  A frame of Raw and RLE blocks is
+  regenerated here; a frame holding any Compressed block is decoded
+  by libzstd (pyarrow's ``CompressedInputStream``) in one call on
+  that frame's bytes, the read bounded by the declared content size
+  (or the 128 KiB block maximum per block) and by ``MAX_CONTENT``.
+  Dictionary frames (``Dictionary_ID`` set) need the external
   dictionary, so they report ``content=None, checksum_ok=None``;
 * **raw-block encoder** — a spec-legal zstd COMPRESSOR that emits
   only Raw blocks (single-segment frames, 128 KiB block chunking,
   optional content checksum).  Any conformant zstd decoder must
-  accept its output — the unit suite pins that against pyarrow's
-  real libzstd both directions;
+  accept its output — the unit suite pins that against libzstd;
 * **content checksum** — the low 32 bits of ``XXH64(content, 0)``
   (the shared ``core/bits.py`` primitive), verified whenever the
-  walk could regenerate the content.
+  walk has the content.
 """
 
 from __future__ import annotations
+
+import pyarrow as pa
 
 from .bits import xxh64
 from .errors import DBPSInvalidInputError
@@ -34,11 +35,11 @@ MAGIC = 0xFD2FB528
 SKIPPABLE_LO = 0x184D2A50
 MAX_CONTENT = 1 << 30
 MAX_BLOCKS = 1 << 20
+_BLOCK_MAX = 1 << 17  # 128 KiB — the spec's block maximum
 
 
-from .zstdblock import ZstdFormatError  # noqa: E402 - shared error type
-
-assert issubclass(ZstdFormatError, DBPSInvalidInputError)
+class ZstdFormatError(DBPSInvalidInputError):
+    """Malformed zstd data."""
 
 
 # ---------------------------------------------------------------------------
@@ -51,12 +52,25 @@ def _need(data: bytes, pos: int, n: int, what: str) -> None:
         raise ZstdFormatError(f"truncated {what} at offset {pos}")
 
 
+def _libzstd(frame: bytes, limit: int) -> bytes:
+    """Decode one complete frame, reading at most ``limit + 1`` bytes
+    so a hostile frame cannot allocate past ``limit``."""
+    try:
+        stream = pa.CompressedInputStream(pa.BufferReader(frame), "zstd")
+        out = stream.read(limit + 1)
+    except (pa.ArrowException, OSError) as e:  # corrupt data: OSError
+        raise ZstdFormatError(f"libzstd: {e}") from None
+    if len(out) > limit:
+        raise ZstdFormatError(f"regenerated content over the {limit}-byte cap")
+    return out
+
+
 def parse_zstd_frames(data: bytes) -> list:
     """Walk every frame in a zstd stream (frames may be concatenated).
 
     -> [{kind, content_size, window_size, dict_id, blocks,
     checksum_present, checksum_ok, content}] — ``content`` is the
-    regenerated bytes when every block was Raw/RLE, else None;
+    regenerated bytes, or None for a dictionary frame;
     ``checksum_ok`` is True/False when verifiable, None otherwise.
     """
     frames = []
@@ -64,6 +78,7 @@ def parse_zstd_frames(data: bytes) -> list:
     if not data:
         raise ZstdFormatError("empty stream")
     while pos < len(data):
+        frame_start = pos
         _need(data, pos, 4, "frame magic")
         magic = int.from_bytes(data[pos : pos + 4], "little")
         pos += 4
@@ -128,20 +143,11 @@ def parse_zstd_frames(data: bytes) -> list:
         if single_segment:
             window_size = content_size
 
-        # per-frame decode state (RFC 8878 §3.1.1.2): repeat offsets,
-        # the previous Huffman table (Treeless literals), and the
-        # previous FSE tables (Repeat_Mode) all persist across blocks
-        # WITHIN one frame and reset at the next frame header.
-        # Dictionary frames are the one documented out-of-scope case:
-        # their content needs the external dictionary, so the walk
-        # reports it unavailable instead of mis-decoding.
-        from .zstdblock import decode_block
-
+        # Raw and RLE content is regenerated as the blocks are walked;
+        # it is the frame's content only when no block is Compressed
         blocks = []
-        chunks: bytearray | None = bytearray() if dict_id is None else None
-        rep = [1, 4, 8]
-        prev_huffman: tuple | None = None
-        seq_tables: dict = {}
+        chunks = bytearray()
+        n_compressed = 0
         while True:
             _need(data, pos, 3, "block header")
             head = int.from_bytes(data[pos : pos + 3], "little")
@@ -155,60 +161,53 @@ def parse_zstd_frames(data: bytes) -> list:
                 raise ZstdFormatError("block count over the cap")
             if btype == 1:  # RLE: one byte, regenerated bsize times
                 _need(data, pos, 1, "RLE byte")
-                if bsize > MAX_CONTENT:
-                    raise ZstdFormatError("RLE block over the cap")
-                if chunks is not None:
-                    chunks += data[pos : pos + 1] * bsize
+                chunks += data[pos : pos + 1] * bsize
                 pos += 1
             else:
                 _need(data, pos, bsize, "block payload")
                 if btype == 0:
-                    if chunks is not None:
-                        chunks += data[pos : pos + bsize]
-                else:  # compressed: full FSE+Huffman decode
-                    if chunks is not None:
-                        decoded, prev_huffman = decode_block(
-                            data[pos : pos + bsize],
-                            chunks,
-                            rep,
-                            prev_huffman,
-                            seq_tables,
-                        )
-                        block_max = min(
-                            window_size or MAX_CONTENT, 1 << 17
-                        )
-                        if len(decoded) > block_max:
-                            raise ZstdFormatError(
-                                "compressed block regenerates over the "
-                                "block maximum"
-                            )
-                        chunks += decoded
+                    chunks += data[pos : pos + bsize]
+                else:
+                    n_compressed += 1
                 pos += bsize
             blocks.append(
                 {"type": ("raw", "rle", "compressed")[btype],
                  "size": bsize}
             )
-            if chunks is not None and len(chunks) > MAX_CONTENT:
+            if len(chunks) > MAX_CONTENT:
                 raise ZstdFormatError("regenerated content over the cap")
             if last:
                 break
 
-        content = bytes(chunks) if chunks is not None else None
-        if content is not None and content_size is not None:
-            if len(content) != content_size:
+        want = None
+        if checksum_present:
+            _need(data, pos, 4, "content checksum")
+            want = int.from_bytes(data[pos : pos + 4], "little")
+            pos += 4
+        content = None
+        if dict_id is None:
+            if n_compressed:
+                # a Compressed block regenerates at most the 128 KiB
+                # block maximum, which bounds the read when the header
+                # declares no content size
+                limit = content_size
+                if limit is None:
+                    limit = len(chunks) + n_compressed * _BLOCK_MAX
+                content = _libzstd(
+                    data[frame_start:pos], min(limit, MAX_CONTENT)
+                )
+            else:
+                content = bytes(chunks)
+            if content_size is not None and len(content) != content_size:
                 raise ZstdFormatError(
                     f"regenerated {len(content)} bytes, header "
                     f"declares {content_size}"
                 )
         checksum_ok = None
-        if checksum_present:
-            _need(data, pos, 4, "content checksum")
-            want = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-            if content is not None:
-                checksum_ok = (xxh64(content, 0) & 0xFFFFFFFF) == want
-                if not checksum_ok:
-                    raise ZstdFormatError("content checksum mismatch")
+        if want is not None and content is not None:
+            checksum_ok = (xxh64(content, 0) & 0xFFFFFFFF) == want
+            if not checksum_ok:
+                raise ZstdFormatError("content checksum mismatch")
         frames.append(
             {
                 "kind": "zstd",
@@ -228,7 +227,6 @@ def parse_zstd_frames(data: bytes) -> list:
 # raw-block encoder
 # ---------------------------------------------------------------------------
 
-_RAW_BLOCK = 1 << 17  # 128 KiB — the spec's block maximum
 
 
 def encode_zstd_raw(content: bytes, *, checksum: bool = True) -> bytes:
@@ -256,7 +254,7 @@ def encode_zstd_raw(content: bytes, *, checksum: bool = True) -> bytes:
     out += fcs_value.to_bytes(fcs_len, "little")
     at = 0
     while True:
-        chunk = content[at : at + _RAW_BLOCK]
+        chunk = content[at : at + _BLOCK_MAX]
         at += len(chunk)
         last = 1 if at >= n else 0
         out += ((len(chunk) << 3) | (0 << 1) | last).to_bytes(3, "little")

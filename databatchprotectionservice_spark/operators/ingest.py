@@ -1108,9 +1108,9 @@ def ingest_tfexample_shards(spark, sf_dir) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: codec rotates NONE/ZLIB/SNAPPY/LZ4/ZSTD by ``shard_id % 5`` —
-#: every chunk codec the from-scratch walk implements (LZ4 raw
-#: blocks via core/lz4codec.py, ZSTD frames via the FSE+Huffman
-#: stack; LZO stays the GPL-tables seam); row totals and codec
+#: every chunk codec the walk reads (LZ4 raw blocks via
+#: core/lz4codec.py, ZSTD frames via core/zstdmeta.py and libzstd;
+#: LZO stays the GPL-tables seam); row totals and codec
 #: counts are the oracle facts, stripe/schema agreement is asserted
 #: in-executor against pyarrow's own ORC reader.
 ORC_SHARDS_ORACLE = f"""
@@ -1165,7 +1165,7 @@ def ingest_orc_shards(spark, sf_dir) -> DataFrame:
     shard proves all five chunk codecs in every run — LZ4 chunks
     are raw lz4 BLOCKS (the ORC codec calls LZ4_decompress_safe)
     inflated by core/lz4codec.py, ZSTD chunks are complete frames
-    entropy-decoded by core/zstdmeta.py + core/zstdblock.py.
+    walked by core/zstdmeta.py and block-decoded by libzstd.
 
     100 TB: one shuffle on the shard key; the walk itself reads only
     the file TAIL in a real deployment (PostScript length byte ->
@@ -1900,12 +1900,12 @@ def ingest_zstd_frames(spark, sf_dir) -> DataFrame:
     frame back to the exact bytes), and the closed-form framing
     arithmetic the oracle restates.
 
-    Leg 2 (Compressed blocks — the r9 seam, now closed): the same
-    bytes go through REAL libzstd compression, the checksum flag and
-    XXH64-low32 trailer are spliced onto its frame, and our
-    from-scratch FSE+Huffman decoder (`core/zstdblock.py`) must
-    regenerate the content byte-exact with the checksum VERIFIED
-    (``checksum_ok is True`` — never the old ``None`` seam report).
+    Leg 2 (Compressed blocks): the same bytes go through REAL libzstd
+    compression, the checksum flag and XXH64-low32 trailer are
+    spliced onto its frame, and `parse_zstd_frames` must return the
+    content byte-exact with the checksum VERIFIED (``checksum_ok is
+    True``): our frame walk finds the frame's extent, libzstd decodes
+    its blocks, and our XXH64 checks the spliced trailer.
     ``sum_comp_content_bytes`` flows from the decoded bytes, so a
     lossy decode breaks the oracle match, not just an assertion.
 
@@ -1943,7 +1943,7 @@ def ingest_zstd_frames(spark, sf_dir) -> DataFrame:
                 if len(frame) != 9 + fcs_len + 3 * n_blocks + n:
                     raise ValueError("frame arithmetic drifted")
                 # leg 2: libzstd-compressed frame + spliced checksum,
-                # entropy-decoded by the from-scratch block decoder
+                # decoded through the frame walk
                 comp = bytearray(codec.compress(content))
                 comp[4] |= 0x04  # Content_Checksum_Flag
                 comp += (xxh64(content, 0) & 0xFFFFFFFF).to_bytes(
@@ -1951,9 +1951,9 @@ def ingest_zstd_frames(spark, sf_dir) -> DataFrame:
                 )
                 (cf,) = parse_zstd_frames(bytes(comp))
                 if cf["content"] != content:
-                    raise ValueError("block decoder lost the payload")
+                    raise ValueError("zstd decode lost the payload")
                 if cf["checksum_ok"] is not True:
-                    raise ValueError("block decoder checksum unverified")
+                    raise ValueError("zstd decode checksum unverified")
                 srcs.append(src)
                 cbytes.append(n)
                 fbytes.append(len(frame))
@@ -4765,18 +4765,18 @@ _GZIP_ROW_SCHEMA = T.StructType(
 
 @register("ingest_gzip_multistream", oracle=GZIP_MEMBERS_ORACLE)
 def ingest_gzip_multistream(spark, sf_dir) -> DataFrame:
-    """Concatenated-gzip-member shards on the FROM-SCRATCH deflate —
-    the Common Crawl warc.gz layout (one gzip member per record, all
-    members concatenated into one seekable file) with no black box
-    in either direction.
+    """Concatenated-gzip-member shards written by the from-scratch
+    deflate encoder — the Common Crawl warc.gz layout (one gzip member
+    per record, all members concatenated into one seekable file).
 
     Per shard: every document compresses to its own gzip member via
     ``core/inflatecodec.gzip_compress`` (fixed-Huffman LZ77 or stored
     fallback, FNAME carrying the doc id); members concatenate; then
-    TWO walks verify the shard — this module's member walker
-    (header fields, per-member CRC-32 + ISIZE) must recover every
-    payload byte-exactly, and stdlib gzip (the independent referee)
-    must agree on the concatenation.
+    TWO walks verify the shard — the member walker
+    ``core/inflatecodec.gzip_members`` (header fields, zlib's inflate
+    per member, CRC-32 + ISIZE) must recover every payload
+    byte-exactly, and stdlib gzip (the independent referee) must
+    agree on the concatenation.
 
     100 TB: one shard-key shuffle then Arrow-batched byte work; the
     member framing is WHY the real layout is seekable/splittable —

@@ -438,7 +438,7 @@ CHANGED: dict[str, int] = {
     # overflow the 49-mandatory r9 window; the sweep artifact is the
     # verification evidence of record for this class of change.
     # r11: ORC chunk inflation gained LZ4 (raw blocks, core/lz4codec)
-    # and ZSTD (frames, core/zstdblock) — the shard rotation widened
+    # and ZSTD (frames, core/zstdmeta) — the shard rotation widened
     # from %3 to %5 and the result schema grew n_codec_lz4/zstd, so
     # the query must re-score this round
     "ingest_orc_shards": 11,

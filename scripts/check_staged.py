@@ -69,8 +69,7 @@ def staged_manifest():
         ),
         # r14: BodyCompression-framed IPC bodies through both codecs,
         # both framings and both writers (the r14 encoder-side
-        # compression + the RFC 8878 power-of-two Huffman-table fix
-        # under the gate).
+        # compression under the gate).
         "ingest_arrow_compressed": (
             ingest.ingest_arrow_compressed,
             ingest.ARROW_COMPRESSED_ORACLE,

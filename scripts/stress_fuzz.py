@@ -53,7 +53,8 @@ from databatchprotectionservice_spark.core.zstdmeta import (
 
 def _zstd_checksummed_frame(content: bytes) -> bytes:
     """Real libzstd Compressed blocks + a spliced content checksum, so
-    the fuzz target covers the full FSE/Huffman decode AND verify."""
+    the fuzz target covers the frame walk, the libzstd block decode
+    AND the checksum verify."""
     import pyarrow as _pa
 
     frame = bytearray(_pa.Codec("zstd", compression_level=19).compress(content))

@@ -429,11 +429,14 @@ def test_encoder_ragged_batch_refused():
 @pytest.mark.parametrize("codec", ["lz4", "zstd"])
 def test_compressed_bodies_decode(codec):
     """BodyCompression BUFFER framing (r11): per-buffer i64 length
-    prefix + LZ4/ZSTD frame, inflated by the in-house codecs, pinned
+    prefix + LZ4/ZSTD frame, inflated by the reader's codecs, pinned
     against pyarrow's compressing writer — plain, nullable AND
-    dictionary-encoded columns, multi-batch."""
+    dictionary-encoded columns, multi-batch.  The all-zero column's
+    700-row value buffer compresses past 255x under zstd, beyond the
+    ratio rule of the page layer's ``compression.decompress``."""
     import io
 
+    assert 255 * len(pa.compress(bytes(700 * 8), codec="zstd")) < 700 * 8
     t = pa.table(
         {
             "x": pa.array(
@@ -447,6 +450,7 @@ def test_compressed_bodies_decode(codec):
             "d": pa.array(
                 [f"k{i % 5}" for i in range(5000)]
             ).dictionary_encode(),
+            "z": pa.array([0] * 5000, pa.int64()),
         }
     )
     sink = io.BytesIO()

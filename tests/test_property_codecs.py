@@ -4,8 +4,9 @@ Extends the reference-style exhaustive-roundtrip discipline
 (``test_property_roundtrip.py``) to the container/serialization
 codecs staged this round: for ARBITRARY generated values, the decode
 of an encode is the identity — including every compression twin the
-codec family owns (our LZ4/snappy vs real liblz4/C++ snappy via
-pyarrow, both directions per example).
+codec family owns (our LZ4 vs real liblz4 via pyarrow both
+directions per example, our snappy encoder through the C++ snappy
+decode path).
 """
 
 import pyarrow as pa
@@ -23,6 +24,7 @@ from databatchprotectionservice_spark.core.bits import (
     zigzag_decode,
     zigzag_encode,
 )
+from databatchprotectionservice_spark.core.compression import decompress
 from databatchprotectionservice_spark.core.lz4codec import (
     lz4_block_compress,
     lz4_block_decompress,
@@ -36,10 +38,7 @@ from databatchprotectionservice_spark.core.msgpackcodec import (
 )
 from databatchprotectionservice_spark.core.orcread import _ByteCursor
 from databatchprotectionservice_spark.core.pagecodec import read_uleb128
-from databatchprotectionservice_spark.core.snappycodec import (
-    snappy_compress,
-    snappy_decompress,
-)
+from databatchprotectionservice_spark.core.snappycodec import snappy_compress
 from databatchprotectionservice_spark.core.tfexample import (
     make_example,
     parse_example,
@@ -49,10 +48,16 @@ from databatchprotectionservice_spark.core.tfrecordcodec import (
     parse_tfrecord,
 )
 from databatchprotectionservice_spark.core.thriftcodec import ThriftReader
+from databatchprotectionservice_spark.core.types import CompressionCodec
 from databatchprotectionservice_spark.core.zstdmeta import (
     encode_zstd_raw,
     parse_zstd_frames,
 )
+
+
+def _decode_snappy(data: bytes) -> bytes:
+    return decompress(data, CompressionCodec.SNAPPY)
+
 
 # compressible-ish binary: runs of a few byte values plus noise
 blobs = st.binary(max_size=2000) | st.builds(
@@ -90,11 +95,11 @@ def test_lz4_frame_inverts(data, bc, store):
 @given(data=blobs)
 def test_snappy_inverts_and_interops(data):
     ours = snappy_compress(data)
-    assert snappy_decompress(ours) == data
+    assert _decode_snappy(ours) == data
     assert pa.decompress(
         ours, decompressed_size=len(data), codec="snappy", asbytes=True
     ) == data
-    assert snappy_decompress(
+    assert _decode_snappy(
         pa.compress(data, codec="snappy", asbytes=True)
     ) == data
 
@@ -213,7 +218,7 @@ def test_shared_uleb128_is_the_snappy_preamble(n):
     # one literal of n bytes (4-byte length form) behind the preamble
     body = b"" if n == 0 else bytes([63 << 2]) + (n - 1).to_bytes(4, "little")
     data = bytes(n)
-    assert snappy_decompress(uleb128(n) + body + data) == data
+    assert _decode_snappy(uleb128(n) + body + data) == data
 
 
 @settings(max_examples=300, deadline=None)

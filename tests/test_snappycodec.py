@@ -1,11 +1,11 @@
-"""Snappy raw blocks (core/snappycodec.py).
+"""Snappy raw blocks: the encoder (core/snappycodec.py) and the
+decode path (``core/compression.decompress``, pyarrow's C++ snappy).
 
-Referees: real C++ snappy via pyarrow in both directions,
-hand-assembled elements from the format description (every literal
-length escape, all three copy tags, overlap replication), randomized
-roundtrips, and the mutation battery.  Cross-validated against
-``core/compression.py``'s pyarrow path — the page-protection codec
-and this spec twin must be interchangeable on real page payloads.
+Pinned: hand-assembled elements from the format description (every
+literal length escape, all three copy tags, overlap replication),
+interop with pyarrow's snappy in both directions, randomized
+roundtrips, the length contract, and the mutation battery — the
+decode path must raise the domain error on every corrupted block.
 """
 
 import random
@@ -13,14 +13,16 @@ import random
 import pyarrow as pa
 import pytest
 
+from databatchprotectionservice_spark.core.compression import decompress
 from databatchprotectionservice_spark.core.errors import (
     DBPSInvalidInputError,
 )
-from databatchprotectionservice_spark.core.snappycodec import (
-    SnappyFormatError,
-    snappy_compress,
-    snappy_decompress,
-)
+from databatchprotectionservice_spark.core.snappycodec import snappy_compress
+from databatchprotectionservice_spark.core.types import CompressionCodec
+
+
+def _decode_snappy(data: bytes) -> bytes:
+    return decompress(data, CompressionCodec.SNAPPY)
 
 
 def test_hand_assembled_elements():
@@ -28,24 +30,24 @@ def test_hand_assembled_elements():
     wire = bytes([7]) + bytes([1 << 2]) + b"ab" + bytes(
         [1 | (0 << 2) | (0 << 5), 2]
     ) + bytes([0 << 2]) + b"Z"
-    assert snappy_decompress(wire) == b"ab" + b"abab" + b"Z"
+    assert _decode_snappy(wire) == b"ab" + b"abab" + b"Z"
     # copy-2: len 5, offset 3 after 3 literals -> overlap replication
     wire = bytes([8]) + bytes([2 << 2]) + b"xyz" + bytes(
         [2 | (4 << 2)]
     ) + (3).to_bytes(2, "little")
-    assert snappy_decompress(wire) == b"xyz" + b"xyzxy"
+    assert _decode_snappy(wire) == b"xyz" + b"xyzxy"
     # copy-4 decodes too
     wire = bytes([8]) + bytes([2 << 2]) + b"xyz" + bytes(
         [3 | (4 << 2)]
     ) + (3).to_bytes(4, "little")
-    assert snappy_decompress(wire) == b"xyz" + b"xyzxy"
+    assert _decode_snappy(wire) == b"xyz" + b"xyzxy"
 
 
 def test_literal_length_escapes():
     for lit in [59, 60, 61, 255, 256, 70000]:
         body = bytes((i * 3) & 0xFF for i in range(lit))
         wire = snappy_compress(body)
-        assert snappy_decompress(wire) == body
+        assert _decode_snappy(wire) == body
         assert pa.decompress(
             wire, decompressed_size=lit, codec="snappy", asbytes=True
         ) == body
@@ -65,11 +67,11 @@ def test_literal_length_escapes():
 )
 def test_interop_both_directions(data):
     ours = snappy_compress(data)
-    assert snappy_decompress(ours) == data
+    assert _decode_snappy(ours) == data
     assert pa.decompress(
         ours, decompressed_size=len(data), codec="snappy", asbytes=True
     ) == data
-    assert snappy_decompress(
+    assert _decode_snappy(
         pa.compress(data, codec="snappy", asbytes=True)
     ) == data
 
@@ -81,21 +83,15 @@ def test_randomized_roundtrip():
         data = b"-".join(
             rng.choice(words) for _ in range(rng.randrange(0, 250))
         )
-        assert snappy_decompress(snappy_compress(data)) == data
+        assert _decode_snappy(snappy_compress(data)) == data
 
 
 def test_compression_module_cross_validation():
-    """The pyarrow page path and this spec twin are interchangeable
+    """The page path's compressor and this encoder are interchangeable
     on a real page payload (documents column bytes)."""
     import pyarrow.parquet as pq
 
-    from databatchprotectionservice_spark.core.compression import (
-        compress,
-        decompress,
-    )
-    from databatchprotectionservice_spark.core.types import (
-        CompressionCodec,
-    )
+    from databatchprotectionservice_spark.core.compression import compress
 
     t = pq.read_table(
         "/root/testdata/sf0.001/documents.parquet", columns=["text"]
@@ -104,23 +100,26 @@ def test_compression_module_cross_validation():
         (v or "").encode() for v in t["text"].to_pylist()[:2000]
     )
     via_module = compress(payload, CompressionCodec.SNAPPY)
-    assert snappy_decompress(via_module) == payload
+    assert _decode_snappy(via_module) == payload
     ours = snappy_compress(payload)
     assert decompress(ours, CompressionCodec.SNAPPY) == payload
 
 
 def test_length_contract_and_errors():
-    with pytest.raises(SnappyFormatError, match="declares"):
-        snappy_decompress(bytes([9]) + bytes([1 << 2]) + b"ab")
-    with pytest.raises(SnappyFormatError, match="exceeds"):
-        snappy_decompress(bytes([1]) + bytes([2 << 2]) + b"abc")
-    with pytest.raises(SnappyFormatError, match="offset"):
-        snappy_decompress(
+    # preamble declares 9, the block regenerates 2
+    with pytest.raises(DBPSInvalidInputError, match="Corrupt snappy"):
+        _decode_snappy(bytes([9]) + bytes([1 << 2]) + b"ab")
+    # preamble declares 1, the literal carries 3
+    with pytest.raises(DBPSInvalidInputError, match="Corrupt snappy"):
+        _decode_snappy(bytes([1]) + bytes([2 << 2]) + b"abc")
+    # copy offset 9 reaches before the block start
+    with pytest.raises(DBPSInvalidInputError, match="Corrupt snappy"):
+        _decode_snappy(
             bytes([5]) + bytes([0 << 2]) + b"a"
             + bytes([2 | (3 << 2)]) + (9).to_bytes(2, "little")
         )
-    with pytest.raises(SnappyFormatError, match="truncated"):
-        snappy_decompress(b"")
+    with pytest.raises(DBPSInvalidInputError, match="length varint"):
+        _decode_snappy(b"")
 
 
 def test_mutation_battery():
@@ -137,7 +136,7 @@ def test_mutation_battery():
             else:
                 b.insert(rng.randrange(len(b) + 1), rng.randrange(256))
         try:
-            snappy_decompress(bytes(b))
+            _decode_snappy(bytes(b))
         except DBPSInvalidInputError:
             continue
         except (MemoryError, OverflowError, IndexError, KeyError) as e:

@@ -1,16 +1,16 @@
-"""Zstd Compressed-block decoder (core/zstdblock.py) — RFC 8878.
+"""Zstd Compressed blocks through the frame walk (core/zstdmeta.py).
 
-Referees, independent of each other and of the decoder:
+The walk finds each frame's extent and libzstd (via pyarrow) decodes
+its blocks.  Pinned here:
 
-* **real libzstd** via pyarrow: frames IT produces at five compression
-  levels over six corpus shapes must decode byte-exact (this sweeps
-  1-stream and 4-stream Huffman literals, direct and FSE-compressed
-  weights, Treeless reuse, all four sequence table modes, repeat
-  offsets, and multi-block windows in one matrix);
-* **hand-assembled wire vectors** pinning the sub-formats the matrix
-  can't isolate: RLE literals, RLE sequence-table modes with known
-  extra bits, the FSE description bit-layout, the spread-step table
-  construction, and the repeat-offset shift rules;
+* **real libzstd frames** at five compression levels over six corpus
+  shapes must decode byte-exact (1-stream and 4-stream Huffman
+  literals, direct and FSE-compressed weights, Treeless reuse, all
+  four sequence table modes, repeat offsets, multi-block windows);
+* **hand-assembled wire vectors**, each wrapped in a frame: RLE
+  literals, RLE sequence-table modes with known extra bits, the
+  repeat-offset shift rules across blocks, and hostile blocks that
+  must raise the domain error;
 * the **mutation battery**: corrupted frames raise the domain error,
   never a non-domain crash or a hang.
 """
@@ -23,17 +23,8 @@ import pytest
 from databatchprotectionservice_spark.core.errors import (
     DBPSInvalidInputError,
 )
-from databatchprotectionservice_spark.core.zstdblock import (
-    ZstdFormatError,
-    _BackBits,
-    build_fse_table,
-    build_huffman_table,
-    decode_block,
-    decode_literals,
-    read_fse_description,
-    read_huffman_weights,
-)
 from databatchprotectionservice_spark.core.zstdmeta import (
+    ZstdFormatError,
     parse_zstd_frames,
     xxh64,
 )
@@ -100,27 +91,49 @@ def test_spliced_checksum_verifies_decoded_content():
 
 
 # ---------------------------------------------------------------------------
-# wire vectors
+# wire vectors, each wrapped in a frame and decoded through the walk
 # ---------------------------------------------------------------------------
 
 
-def test_backward_bitstream_sentinel_and_reads():
-    # encoder wrote (LSB-first): 5 bits 0b10110, then 3 bits 0b011,
-    # then the sentinel 1 -> bits are 10110 011 1 -> byte 0b101100111?
-    # little-endian packing: first-written = lowest bits of byte 0
-    val = 0b10110 | (0b011 << 5) | (1 << 8)
-    data = val.to_bytes(2, "little")
-    br = _BackBits(data)
-    assert br.read(3) == 0b011  # last written, first read
-    assert br.read(5) == 0b10110
-    assert br.pos == 0 and not br.overrun
-    br.read(1)
-    assert br.overrun
+def _frame(*blocks: tuple[int, bytes]) -> bytes:
+    """A windowed frame (8 KiB window, no content size, no checksum)
+    around (block type, payload) pairs; the last block is flagged."""
+    out = bytearray((0xFD2FB528).to_bytes(4, "little"))
+    out += bytes([0x00, 3 << 3])
+    for i, (btype, payload) in enumerate(blocks):
+        last = int(i == len(blocks) - 1)
+        out += ((len(payload) << 3) | (btype << 1) | last).to_bytes(
+            3, "little"
+        )
+        out += payload
+    return bytes(out)
+
+
+def _decode(*blocks: tuple[int, bytes]) -> bytes:
+    (f,) = parse_zstd_frames(_frame(*blocks))
+    return f["content"]
+
+
+RAW, COMPRESSED = 0, 2
 
 
 def test_backbits_rejects_zero_sentinel_byte():
-    with pytest.raises(ZstdFormatError, match="sentinel"):
-        _BackBits(b"\xff\x00")
+    """A sequence bitstream whose last byte is zero has no sentinel."""
+    block = bytes(
+        [
+            (7 << 3) | 1,  # RLE literals 'Q' x 7
+            ord("Q"),
+            1,
+            (1 << 6) | (1 << 4) | (1 << 2),
+            4,
+            2,
+            0,
+            0xFF,
+            0x00,  # final bitstream byte without the sentinel bit
+        ]
+    )
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
 
 
 def test_fse_description_rle_literals_and_sequences_vector():
@@ -145,17 +158,16 @@ def test_fse_description_rle_literals_and_sequences_vector():
             0b00000110,  # sentinel at bit 2, extra bits 0b10
         ]
     )
-    out, _huf = decode_block(block, bytearray(), [1, 4, 8], None, {})
     # 4 literals, then a 3-byte match at offset 3 ('QQQ' again), then
     # the remaining 3 literals
-    assert out == b"QQQQ" + b"QQQ" + b"QQQ"
+    assert _decode((COMPRESSED, block)) == b"QQQQ" + b"QQQ" + b"QQQ"
 
 
 def test_repeat_offset_shift_rules():
-    """offset_value 1..3 against the [1,4,8] initial history, with the
-    literals_length==0 shift — pinned through two hand blocks."""
+    """offset_value 1 against the [1,4,8] initial history, with the
+    literals_length==0 shift, reaching back into a prior Raw block."""
     # one sequence: ll=0 (code 0), of_code=0 -> offset_value 1; with
-    # ll==0 that selects rep2 (=4), demoting rep1
+    # ll==0 that selects rep2 (=4)
     lits = b"ABCDEFGH"
     block = bytes(
         [
@@ -169,99 +181,37 @@ def test_repeat_offset_shift_rules():
             0b00000001,  # empty bitstream: just the sentinel
         ]
     )
-    window = bytearray(b"wxyz0123")  # match reaches into prior blocks
-    rep = [1, 4, 8]
-    out, _ = decode_block(block, window, rep, None, {})
     # ll=0 & offset_value=1 -> rep2=4: copy 5 bytes from 4 back, i.e.
-    # the window tail '0123' then self-reference '0'
-    assert out == b"01230" + lits
-    assert rep == [4, 1, 8]
+    # the Raw block's tail '0123' then self-reference '0'
+    out = _decode((RAW, b"wxyz0123"), (COMPRESSED, block))
+    assert out == b"wxyz0123" + b"01230" + lits
 
 
-def test_fse_description_and_table_vector():
-    """Hand-written FSE description: accuracy log 5, probabilities
-    [24, 8] over a 2-symbol alphabet (sum = 32).  The bit layout is
-    verified field by field, then the built table's invariants."""
-    # forward bits: acc_log-5=0 (4 bits 0000).  Field 1: remaining=33,
-    # threshold=32, small-zone max=(2*32-1)-33=30; stored value
-    # 24+1=25 < 30 -> 5-bit field (low zone).  remaining=9 folds the
-    # threshold to 8 (3-bit fields), small-zone max=(2*8-1)-9=6.
-    # Field 2: stored value 8+1=9 needs the high zone: low-3 bits 7
-    # (>= 6), extra bit 1 -> raw 15 >= threshold -> 15-6=9 -> count 8.
-    # Bits LSB-first: 0000 | 11001 | 1111
-    bits = 0b0000 | (25 << 4) | (15 << 9)
-    data = bits.to_bytes(2, "little")
-    counts, log, used = read_fse_description(data, max_symbol=10, max_log=6)
-    assert log == 5 and used == 2
-    assert counts[:2] == [24, 8] and all(c == 0 for c in counts[2:])
-    table = build_fse_table(counts, log)
-    assert len(table) == 32
-    assert sum(1 for s, _, _ in table if s == 0) == 24
-    assert sum(1 for s, _, _ in table if s == 1) == 8
-    # every baseline+2^nbits window must stay inside the table
-    for sym, nbits, base in table:
-        assert 0 <= base and base + (1 << nbits) <= 32
-
-
-def test_fse_low_probability_cells_sit_high():
-    counts = [-1, -1, 30]  # two "less than 1" symbols
-    table = build_fse_table(counts, 5)
-    assert table[31] == (0, 5, 0)
-    assert table[30] == (1, 5, 0)
-    assert all(s == 2 for s, _, _ in table[:30])
-
-
-def test_huffman_direct_weights_and_table():
-    """Direct 4-bit weights: headerByte=127+N, two weights per byte.
-    Weights [2,2,2,1] -> implicit last weight completes 16: total
-    2+2+2+1=7 -> next pow2 16 -> rest 9?  no: rest must be a power of
-    two, so use [3,2,2,1]: total 4+2+2+1=9 -> 16 -> rest 7 invalid;
-    [4,3,2,1]: 8+4+2+1=15 -> 16 -> rest 1 -> last weight 1."""
-    data = bytes([127 + 4, (4 << 4) | 3, (2 << 4) | 1])
-    weights, used = read_huffman_weights(data)
-    assert used == 3
-    assert weights == [4, 3, 2, 1, 1]
-    cells, table_log = build_huffman_table(weights)
-    assert table_log == 4
-    # weight-1 symbols (3 and 4) hold the LOW cells, one each
-    assert cells[0] == (3, 4) and cells[1] == (4, 4)
-    # weight-4 symbol 0 spans the top 8 cells at 1 bit
-    assert cells[8:] == [(0, 1)] * 8
-    counts = {}
-    for sym, _ in cells:
-        counts[sym] = counts.get(sym, 0) + 1
-    assert counts == {0: 8, 1: 4, 2: 2, 3: 1, 4: 1}
+def _compressed_literals(regen: int, tree_and_stream: bytes) -> bytes:
+    """Huffman literals, one stream, 10-bit sizes, then no sequences."""
+    head = 2 | (regen << 4) | (len(tree_and_stream) << 14)
+    return head.to_bytes(3, "little") + tree_and_stream + b"\x00"
 
 
 def test_huffman_invalid_weights_raise():
-    with pytest.raises(ZstdFormatError, match="complete"):
-        # weights [1,1,1,1,1]: total 5 -> table 8 -> rest 3, not a
-        # power of two -> no implicit last weight exists
-        read_huffman_weights(bytes([127 + 5, 0x11, 0x11, 0x10]))
-    with pytest.raises(ZstdFormatError, match="weight"):
-        read_huffman_weights(bytes([127 + 2, (12 << 4) | 1]))
-
-
-def test_huffman_power_of_two_explicit_sum_doubles_table():
-    """RFC 8878 §4.2.1.1: tableLog = highbit(total) + 1 — when the
-    explicit weights already sum to an exact power of two the table
-    still DOUBLES and the implicit symbol takes the whole other half.
-    pyarrow's zstd encoder emits the one-explicit-weight case for
-    two-symbol literal alphabets (r14 regression: the int32 index
-    buffer of a dictionary-encoded IPC column)."""
-    # one explicit weight 1: total 1 -> table 2 -> implicit weight 1
-    w, used = read_huffman_weights(bytes([127 + 1, 0x10]))
-    assert (w, used) == ([1, 1], 2)
-    # weights [2,2,2,2]: total 8 -> table 16 -> implicit weight 4
-    w, used = read_huffman_weights(bytes([127 + 4, 0x22, 0x22]))
-    assert (w, used) == ([2, 2, 2, 2, 4], 3)
+    # direct weights [1,1,1,1,1]: total 5 -> table 8 -> rest 3, not a
+    # power of two -> no implicit last weight exists
+    block = _compressed_literals(
+        4, bytes([127 + 5, 0x11, 0x11, 0x10, 0x00, 0x01])
+    )
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
+    # a weight of 12 is over the format's maximum
+    block = _compressed_literals(4, bytes([127 + 2, (12 << 4) | 1, 0x01]))
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
 
 
 def test_treeless_without_history_raises():
     # literals type 3 (Treeless), size_format 0, sizes 0
     block = bytes([3 | (0 << 2), 0, 0, 0])
-    with pytest.raises(ZstdFormatError, match="Treeless"):
-        decode_literals(block, None)
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
 
 
 def test_sequence_repeat_mode_without_history_raises():
@@ -274,8 +224,8 @@ def test_sequence_repeat_mode_without_history_raises():
             1,
         ]
     )
-    with pytest.raises(ZstdFormatError, match="Repeat mode"):
-        decode_block(block, bytearray(), [1, 4, 8], None, {})
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
 
 
 def test_literal_overconsumption_raises():
@@ -292,8 +242,8 @@ def test_literal_overconsumption_raises():
             0b00000001,
         ]
     )
-    with pytest.raises(ZstdFormatError, match="literals"):
-        decode_block(block, bytearray(), [1, 4, 8], None, {})
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
 
 
 def test_match_before_frame_start_raises():
@@ -312,8 +262,8 @@ def test_match_before_frame_start_raises():
             0b00000100,
         ]
     )
-    with pytest.raises(ZstdFormatError, match="before the frame"):
-        decode_block(block, bytearray(), [1, 4, 8], None, {})
+    with pytest.raises(ZstdFormatError, match="libzstd"):
+        _decode((COMPRESSED, block))
 
 
 def test_mutation_battery_compressed_frames():

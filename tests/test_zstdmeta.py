@@ -69,8 +69,8 @@ def test_walk_reads_libzstd_frames():
     assert f["kind"] == "zstd"
     assert f["content_size"] == len(content)
     assert any(b["type"] == "compressed" for b in f["blocks"])
-    # the r9 entropy-decode seam is CLOSED (core/zstdblock.py): the
-    # walk now regenerates Compressed-block content byte-exact
+    # the walk hands a frame with Compressed blocks to libzstd and
+    # returns its content byte-exact
     assert f["content"] == content
     # pyarrow emits no content checksum, so nothing to verify here;
     # test_zstdblock.py pins checksum_ok=True via a spliced trailer
