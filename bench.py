@@ -28,8 +28,7 @@ sys.path.insert(0, REPO)
 
 # The headline set is the ENTIRE registry (VERDICT r1 item 9: a
 # regression in any registered operator must be visible in the bench),
-# in ``all_queries()`` order: the computed scoring window first (its
-# first key is q11_important_parts), then the rest.
+# in ``all_queries()`` order, which is registration order.
 HEADLINE: list[str] | None = None  # resolved to entrymod.queries() keys
 
 # EVERY query gets ONE discarded warmup run before the timed N

@@ -14,6 +14,6 @@
 ``ingest``       container-ingest + format-walk queries (WARC/tar/ZIP/
                  TFRecord/Avro/ORC/MessagePack/zstd/LZ4 walks, the
                  parquet footer/read/write trio, the lakehouse
-                 transaction log) — staged for r10 registration,
-                 swept by ``scripts/check_staged.py``.
+                 transaction log), each registered with its DuckDB
+                 oracle like every other module here.
 """

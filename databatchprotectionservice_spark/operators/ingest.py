@@ -69,12 +69,13 @@ def _banded_shards(spark, d, shard_fn, schema):
     """``d.groupBy("source", "shard_id").applyInPandas(shard_fn,
     schema)`` with the per-group scaffold amortized over SHARD_BAND
     shards per call (see SHARD_BAND).  ``d`` must carry ``source`` and
-    ``shard_id``; ``shard_fn`` receives exactly the per-shard frame it
-    received before (minus nothing — the band column is dropped) and
-    its outputs are concatenated.  The explicit exchange width is kept:
-    per-shard Python codec work dominates at gate scale, and AQE's
-    size-based coalescing would fold this tiny shuffle onto one task
-    (SCALE.md: 'AQE coalescing vs Python-heavy applyInPandas')."""
+    ``shard_id``; ``shard_fn`` receives one shard's rows with the band
+    column dropped and a fresh ``RangeIndex``, exactly as an unbanded
+    group would arrive, and its outputs are concatenated.  The explicit
+    exchange width is kept: per-shard Python codec work dominates at
+    gate scale, and AQE's size-based coalescing would fold this tiny
+    shuffle onto one task (SCALE.md: 'AQE coalescing vs Python-heavy
+    applyInPandas')."""
     dd = d.withColumn(
         "_band", F.expr(f"shard_id div {SHARD_BAND}")
     ).repartition(
@@ -83,7 +84,7 @@ def _banded_shards(spark, d, shard_fn, schema):
 
     def _run(pdf: pd.DataFrame) -> pd.DataFrame:
         outs = [
-            shard_fn(g.drop(columns="_band"))
+            shard_fn(g.drop(columns="_band").reset_index(drop=True))
             for _, g in pdf.groupby("shard_id", sort=True)
         ]
         return pd.concat(outs, ignore_index=True)
@@ -3802,7 +3803,7 @@ def export_arrow_ipc_shards(spark, sf_dir) -> DataFrame:
     (the independent referee: schema names/types, batch count and
     every value must match) and this module's own reader (the
     self-twin).  Same facts and oracle as the ingest direction, so a
-    framing bug in either direction breaks the staged gate.
+    framing bug in either direction breaks the oracle gate.
 
     100 TB: identical plan shape to the ingest twin — one shuffle on
     the shard key, Arrow-batched Python, no driver materialization.
@@ -5107,6 +5108,7 @@ _PGIDX_ROW_SCHEMA = T.StructType(
 )
 
 
+@register("parquet_page_prune_real", oracle=PARQUET_PAGE_PRUNE_ORACLE)
 def parquet_page_prune_real(spark, sf_dir) -> DataFrame:
     """Page-index pruning with no black box (r14, VERDICT r13 ask #6).
 
@@ -5417,6 +5419,7 @@ _ADV_ROW_SCHEMA = T.StructType(
 )
 
 
+@register("ingest_arrow_dict_views", oracle=ARROW_DICT_VIEWS_ORACLE)
 def ingest_arrow_dict_views(spark, sf_dir) -> DataFrame:
     """Dictionary, Utf8View and RunEndEncoded columns through the
     Arrow IPC STREAM framing, both codec directions (r14, VERDICT r13
@@ -5631,7 +5634,7 @@ def ingest_arrow_dict_views(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r14 staged: BodyCompression through the Arrow IPC codec, both
+# BodyCompression through the Arrow IPC codec, both
 # framings x both codecs x both writers
 # ---------------------------------------------------------------------------
 
@@ -5691,6 +5694,7 @@ _ACMP_ROW_SCHEMA = T.StructType(
 )
 
 
+@register("ingest_arrow_compressed", oracle=ARROW_COMPRESSED_ORACLE)
 def ingest_arrow_compressed(spark, sf_dir) -> DataFrame:
     """BodyCompression-framed Arrow IPC bodies through BOTH codecs
     (LZ4_FRAME, ZSTD), BOTH framings (file, stream) and BOTH writers
@@ -5909,7 +5913,7 @@ def ingest_arrow_compressed(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r14 staged: split-block Bloom filter row-group pruning, oracle-gated
+# Split-block Bloom filter row-group pruning, oracle-gated
 # ---------------------------------------------------------------------------
 
 #: okey-range shard width for the bloom query (with the status split,
@@ -5981,6 +5985,7 @@ _BLF_ROW_SCHEMA = T.StructType(
 )
 
 
+@register("parquet_bloom_prune_real", oracle=PARQUET_BLOOM_PRUNE_ORACLE)
 def parquet_bloom_prune_real(spark, sf_dir) -> DataFrame:
     """Split-block Bloom filter pruning with no black box (r14).
 
@@ -6158,7 +6163,7 @@ def parquet_bloom_prune_real(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r14 staged: ORC stripe VALUE decode under the oracle gate
+# ORC stripe VALUE decode under the oracle gate
 # ---------------------------------------------------------------------------
 
 OV_SHARD = 4096
@@ -6223,6 +6228,7 @@ _OV_ROW_SCHEMA = T.StructType(
 )
 
 
+@register("ingest_orc_values_real", oracle=ORC_VALUES_ORACLE)
 def ingest_orc_values_real(spark, sf_dir) -> DataFrame:
     """ORC stripe VALUE decode with no black box (r14 — the read half
     ``core/orcread.py`` under the driver gate, completing the

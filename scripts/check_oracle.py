@@ -18,10 +18,12 @@ rounding, no Decimal normalization) so local green implies driver green.
 
     python scripts/check_oracle.py [sf_dir] [query_name ...]
 
-Set ``CHECK_ORACLE_JSON=/path.json`` to also write a machine-readable
-artifact in the driver's CORRECTNESS format (per-query rows_match /
-schema_match / hash_match / err), so sweep results can be diffed and
-consumed programmatically.
+A registered query without an oracle counts as a failure.  The run
+ends with an ``N/N hash-matched`` tally line and exits non-zero on any
+failure.  Set ``CHECK_ORACLE_JSON=/path.json`` to also write a
+machine-readable artifact in the CORRECTNESS format (per-query
+rows_match / schema_match / hash_match / err), so sweep results can be
+diffed and consumed programmatically.
 """
 
 from __future__ import annotations
@@ -96,10 +98,13 @@ def main():
         t_spark = time.time() - t0
         sql = oracles.get(name)
         if sql is None:
-            print(
-                f"  {name:40s} rows={len(spark_pdf):6d} (no oracle) "
-                f"[{t_spark:.1f}s]"
-            )
+            print(f"  {name:40s} NO ORACLE")
+            failures.append(name)
+            report[name] = {
+                "rows_match": False, "schema_match": False,
+                "hash_match": False, "spark_rows": len(spark_pdf),
+                "oracle_rows": None, "err": "no oracle",
+            }
             continue
         t0 = time.time()
         try:
@@ -163,10 +168,11 @@ def main():
             json.dump(report, fh, indent=1, sort_keys=True)
         print(f"wrote {out_json} ({len(report)} queries)")
     print()
+    passed = sum(r["hash_match"] for r in report.values())
+    print(f"{passed}/{len(report)} hash-matched")
     if failures:
         print(f"FAILED: {failures}")
         sys.exit(1)
-    print("all queries hash-match the oracle (driver-equivalent strict compare)")
 
 
 if __name__ == "__main__":

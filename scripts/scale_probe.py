@@ -221,12 +221,7 @@ def main() -> None:
     only = {
         n for n in os.environ.get("SCALE_PROBE_ONLY", "").split(",") if n
     }
-    qs = dict(entrymod.queries())
-    # staged (incubation-tier) queries probe with the same protocol
-    sys.path.insert(0, os.path.join(REPO, "scripts"))
-    from check_staged import staged_manifest
-
-    qs.update({n: fn for n, (fn, _o) in staged_manifest().items()})
+    qs = entrymod.queries()
     base = json.load(open(os.path.join(REPO, "BENCH_DETAIL.json")))
     results = {}
     for name in QUERIES:

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Time a subset of registry queries with the bench's exact methodology
 (one discarded warmup + min-of-N collect()), without running the full
-205-query pass — the optimization round's inner measurement loop.
+registry pass — the inner measurement loop of an optimization.
 
 Usage: python scripts/time_queries.py q1 q2 ... [--runs N] [--explain]
 

@@ -267,3 +267,29 @@ def test_txnlog_compaction_matches_oracle(spark, corpus_dir):
         # touch a row; somewhere it must actually compact
         assert all(r[2] <= r[1] for r in got)
         assert any(r[3] >= 2 for r in got) or all(r[1] == r[2] for r in got)
+
+
+def test_banded_shards_arrive_with_a_range_index(spark):
+    """Several shards share one band; each must reach ``shard_fn`` with
+    a fresh RangeIndex, as an unbanded applyInPandas group would."""
+    import pandas as pd
+
+    from databatchprotectionservice_spark.operators.ingest import _banded_shards
+
+    rows = [("s", shard, i) for shard in (0, 1, 2) for i in range(4)]
+    d = spark.createDataFrame(rows, "source string, shard_id long, v long")
+
+    def shard_fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        assert list(pdf.index) == list(range(len(pdf)))
+        return pd.DataFrame(
+            {
+                "source": [pdf["source"].iloc[0]],
+                "shard_id": [int(pdf["shard_id"].iloc[0])],
+                "n": [len(pdf)],
+            }
+        )
+
+    got = _banded_shards(
+        spark, d, shard_fn, "source string, shard_id long, n long"
+    ).collect()
+    assert sorted(map(tuple, got)) == [("s", 0, 4), ("s", 1, 4), ("s", 2, 4)]

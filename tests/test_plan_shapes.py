@@ -993,3 +993,33 @@ def test_orc_values_one_shard_shuffle(spark, sf_dir):
     assert n_hash == 2, plan
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "Window"):
         assert bad not in plan, bad
+
+
+def test_local_frame_is_a_jobless_local_table_scan(spark):
+    """registry.local_frame ships driver-side rows as one Arrow table:
+    the plan is a LocalTableScan and collecting it starts no job."""
+    from databatchprotectionservice_spark.plans.registry import local_frame
+
+    df = local_frame(spark, [(1, "x"), (2, "y")], "a bigint, b string")
+    sc = spark.sparkContext
+    sc.setJobGroup("local_frame_probe", "local_frame job count")
+    try:
+        assert sorted(map(tuple, df.collect())) == [(1, "x"), (2, "y")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert "LocalTableScan" in _plan(df)
+    assert list(sc.statusTracker().getJobIdsForGroup("local_frame_probe")) == []
+
+
+def test_local_frame_rejects_values_its_schema_cannot_hold(spark):
+    """No fallback to the row-pickling path: a string in a bigint
+    column raises.  A float into an integer column truncates, as the
+    docstring says."""
+    import pyarrow as pa
+
+    from databatchprotectionservice_spark.plans.registry import local_frame
+
+    with pytest.raises(pa.ArrowInvalid):
+        local_frame(spark, [("notint", "x")], "a bigint, b string")
+    df = local_frame(spark, [(1.7, "x")], "a bigint, b string")
+    assert [tuple(r) for r in df.collect()] == [(1, "x")]

@@ -1,35 +1,19 @@
-"""Registry ordering contract for the driver's correctness gate.
+"""Registry ordering contract.
 
-The driver scores only the first 50 entries of ``queries()`` in dict
-order (observed rounds 1-8), so the ordering is part of the external
-contract: the scoring window must lead the dict, every query needs an
-oracle, and the two dicts must agree on keys and order.
-
-Since round 9 the window is COMPUTED from the committed
-CORRECTNESS_r*.json artifacts (``registry.score_first()``) instead of
-hand-rotated, so these tests verify the rotation invariants hold at the
-CURRENT boundary — and, because the computation re-runs whenever a new
-artifact lands, they keep holding at every future boundary without a
-hand edit (the r7/r8 repeat failure mode).
+``all_queries()`` and ``all_oracles()`` read ``REGISTRY`` in insertion
+order: every query needs an oracle, and the two dicts agree on keys and
+order, so ``scripts/check_oracle.py`` walks both in step.
 """
 
 from databatchprotectionservice_spark.plans import registry
 
-
-def test_score_first_queries_lead_the_dict():
-    names = list(registry.all_queries())
-    window = registry.score_first()
-    assert names[: len(window)] == list(window)
-
-
-def test_new_queries_sit_immediately_after_the_window():
-    """Queries registered in the current round are exempt from the
-    window for exactly one boundary and must be FIRST IN LINE for the
-    next rotation: pinned to the positions right after the window."""
-    names = list(registry.all_queries())
-    w = len(registry.score_first())
-    naw = registry.new_after_window()
-    assert tuple(names[w : w + len(naw)]) == naw
+PROMOTED = (
+    "parquet_page_prune_real",
+    "ingest_arrow_dict_views",
+    "ingest_arrow_compressed",
+    "parquet_bloom_prune_real",
+    "ingest_orc_values_real",
+)
 
 
 def test_every_query_has_an_oracle_in_the_same_order():
@@ -39,360 +23,10 @@ def test_every_query_has_an_oracle_in_the_same_order():
     assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
 
 
-def test_window_exactly_fills_the_scoring_contract():
-    """The computed window must use every driver slot (the pool is ~3x
-    the window, so a short window wastes verdicts) and must never
-    overflow it (mandatory entries past position 50 would silently go
-    unscored)."""
-    assert len(registry.score_first()) == registry.SCORE_WINDOW
-
-
-def test_changed_and_registered_names_exist():
+def test_queries_follow_registry_insertion_order():
     registry._ensure_loaded()
-    missing = [n for n in registry.CHANGED if n not in registry.REGISTRY]
-    missing += [n for n in registry.REGISTERED_IN if n not in registry.REGISTRY]
-    assert missing == []
-
-
-def test_freshness_no_stale_query_outside_scoring_window():
-    """The staleness policy, mechanized.  The driver scores only the
-    first ``SCORE_WINDOW`` registry entries per round; with N registered
-    queries the pool cycles in ceil(N / SCORE_WINDOW) rounds, so the
-    tightest invariant a round-robin can guarantee is that bound on
-    staleness.  Three clauses:
-      * no query whose last green verdict is >= cycle_len rounds old
-        sits outside the window;
-      * no NEVER-scored query sits outside the window, except queries
-        registered this round (new_after_window() — position-pinned
-        right after the window, judge-side verified at registration,
-        first in line next round);
-      * every query changed since its last verdict sits inside the
-        window (a changed query cannot ship without a fresh official
-        verdict — ADVICE r6)."""
-    last, current = registry._verdict_history()
-    window = set(registry.score_first()[: registry.SCORE_WINDOW])
-    registry._ensure_loaded()
-    cycle_len = registry.cycle_len()
-    pinned = set(registry.new_after_window())
-    stale = [
-        n
-        for n in registry.REGISTRY
-        if last.get(n, 0) <= current - cycle_len
-        and n not in window
-        and n not in pinned
-    ]
-    assert stale == [], (
-        f"queries with a verdict >= {cycle_len} rounds stale are outside "
-        f"the first-{registry.SCORE_WINDOW} scoring window: {stale}"
-    )
-    never = [
-        n
-        for n in registry.REGISTRY
-        if n not in last and n not in window and n not in pinned
-    ]
-    assert never == [], (
-        f"never-driver-scored queries outside the scoring window and not "
-        f"registered this round: {never}"
-    )
-    changed_pending = [
-        n
-        for n, rnd in registry.CHANGED.items()
-        if n in registry.REGISTRY
-        and last.get(n, 0) < rnd
-        and n not in window
-        and n not in pinned
-    ]
-    assert changed_pending == [], (
-        f"changed-impl queries outside the window: {changed_pending}"
-    )
-
-
-def test_registered_this_round_is_within_budget():
-    """Same-round registrations that the window could NOT absorb ride
-    NEW_AFTER_WINDOW for one boundary; more than 3 of them at once
-    risks making the freshness invariant unsatisfiable at the next
-    boundary (the r7 lesson).  The r10 bulk promotion of the staged
-    manifest absorbed all 43 INTO the window (the mandatory set was
-    only 3 that round), so this stayed at 0 even then."""
-    assert len(registry.new_after_window()) <= 3
-
-
-def _next_promo_round(current: int) -> int:
-    """The NEXT promotion boundary relative to BOTH the on-disk
-    artifacts and the committed promotion state.  The r12 lesson
-    (judge-adjudicated): anchoring a hypothetical promotion at a fixed
-    offset from ``current`` is wrong on one side of an artifact drop —
-    before CORRECTNESS_r{N} lands the planned promotion is at
-    ``current + 1``; the moment it lands, ``current`` advances and the
-    SAME planned promotion is at ``current``.  Deriving the anchor
-    from ``REGISTERED_IN`` (has the round being built already
-    promoted?) is invariant across the drop."""
-    registry._ensure_loaded()
-    latest_registration = max(registry.REGISTERED_IN.values())
-    return current + 1 if latest_registration >= current else current
-
-
-def test_next_boundary_rotation_holds(monkeypatch):
-    """Simulate the r-next boundary BEFORE it happens: pretend this
-    round's verdicts landed (every window entry green at the current
-    round), advance one round, and assert the computed window still
-    satisfies every invariant — the structural proof that the r7/r8
-    hand-rotation failure mode cannot recur.  Also checks the window
-    arithmetic the registration budget protects: the mandatory set
-    (new stale cohort + this round's registrations) must fit.  The
-    simulation injects a minimal hypothetical promotion (K=1) at the
-    next promotion boundary, anchored by _next_promo_round so the
-    test is green on both sides of an artifact drop."""
-    registry._ensure_loaded()
-    last, current = registry._verdict_history()
-    simulated = dict(last)
-    for n in registry.score_first()[: registry.SCORE_WINDOW]:
-        simulated[n] = current
-    hypo_registry = dict(registry.REGISTRY)
-    hypo_reg_in = dict(registry.REGISTERED_IN)
-    promo_round = max(_next_promo_round(current), current + 1)
-    for i in range(1):
-        n = f"__hypo_promo_{i}"
-        hypo_registry[n] = registry.QuerySpec(n, lambda s, d: None, "SELECT 1")
-        hypo_reg_in[n] = promo_round
-    monkeypatch.setattr(registry, "REGISTRY", hypo_registry)
-    monkeypatch.setattr(registry, "REGISTERED_IN", hypo_reg_in)
-    monkeypatch.setattr(
-        registry, "_verdict_history", lambda: (simulated, current + 1)
-    )
-    window = registry.score_first()
-    assert len(window) == registry.SCORE_WINDOW
-    wset = set(window)
-    cycle_len = registry.cycle_len()
-    pinned = set(registry.new_after_window())
-    # this round's registrations carry no verdict yet and were NOT
-    # registered in round current+1 -> they must be IN the next window
-    for n, rnd in hypo_reg_in.items():
-        if rnd == current and n not in simulated:
-            assert n in wset, f"{n} (registered r{rnd}) missed the window"
-    stale = [
-        n
-        for n in hypo_registry
-        if simulated.get(n, 0) <= current + 1 - cycle_len
-        and n not in wset
-        and n not in pinned
-    ]
-    assert stale == [], f"next-boundary stale overflow: {stale}"
-    never = [
-        n
-        for n in hypo_registry
-        if n not in simulated and n not in wset and n not in pinned
-    ]
-    assert never == []
-
-
-def test_multi_boundary_rotation_holds(monkeypatch):
-    """The r10 saturation-resolution proof, kept live: simulate SIX
-    future boundaries (each round's window goes green, then the round
-    advances) and assert every invariant at every step.  This is the
-    arithmetic that justified promoting the whole staged manifest at
-    r10 — registry 149 -> 192 raised cycle_len from 3 to 4 (capacity
-    200), so the steady state is ~42 mandatory + fillers per round and
-    every query re-scores within cycle_len rounds.  If a future
-    registration breaks the steady state, this fails BEFORE the
-    boundary ships, not two rounds later.
-
-    The hypothetical promotion (K=1) is anchored at the next real
-    promotion boundary via _next_promo_round — NOT a fixed
-    ``current + 1`` offset — so the walk models the same plan before
-    and after a driver artifact drop (the r12 judge finding)."""
-    registry._ensure_loaded()
-    last, current = registry._verdict_history()
-    base_registry = dict(registry.REGISTRY)
-    hypo_registry = dict(registry.REGISTRY)
-    hypo_reg_in = dict(registry.REGISTERED_IN)
-    promo_round = _next_promo_round(current)
-    n = "__hypo_promo_0"
-    hypo_registry[n] = registry.QuerySpec(n, lambda s, d: None, "SELECT 1")
-    hypo_reg_in[n] = promo_round
-    monkeypatch.setattr(registry, "REGISTERED_IN", hypo_reg_in)
-    simulated = dict(last)
-    for step in range(6):
-        rnd = current + step
-        # the hypothetical promotion enters the registry AT its
-        # registration boundary, not before (a staged query is
-        # invisible to the window until promoted)
-        monkeypatch.setattr(
-            registry,
-            "REGISTRY",
-            hypo_registry if rnd >= promo_round else base_registry,
-        )
-        monkeypatch.setattr(
-            registry, "_verdict_history", lambda s=dict(simulated), r=rnd: (dict(s), r)
-        )
-        window = registry.score_first()
-        assert len(window) == registry.SCORE_WINDOW, f"short window at r{rnd}"
-        wset = set(window)
-        clen = registry.cycle_len()
-        pinned = set(registry.new_after_window())
-        active = hypo_registry if rnd >= promo_round else base_registry
-        stale = [
-            n for n in active
-            if simulated.get(n, 0) and simulated[n] <= rnd - clen
-            and n not in wset and n not in pinned
-        ]
-        assert stale == [], f"r{rnd}: stale outside window: {stale}"
-        never = [
-            n for n in active
-            if n not in simulated and n not in wset and n not in pinned
-            and hypo_reg_in.get(n) != rnd
-        ]
-        assert never == [], f"r{rnd}: never-scored outside window: {never}"
-        for n in window:
-            simulated[n] = rnd
-    # after the horizon, no verdict is older than the cycle bound
-    ages = [current + 5 - simulated[n] for n in hypo_registry if n in simulated]
-    assert max(ages) <= registry.cycle_len() - 1
-
-
-def _simulate_boundaries(K, promo_round, horizon=7):
-    """Walk ``horizon`` boundaries from the live artifact state with K
-    hypothetical queries promoted at ``promo_round``; return the first
-    round that overflows the window (or blows the NEW_AFTER_WINDOW
-    budget), else None.  Mirrors score_first()'s grouping."""
-    import math
-
-    registry._ensure_loaded()
-    last, current = registry._verdict_history()
-    sim = {n: r for n, r in last.items()}
-    names = list(registry.REGISTRY)
-    reg_in = dict(registry.REGISTERED_IN)
-    hypo = [f"__hypo_p{promo_round}_{i}" for i in range(K)]
-    names += hypo
-    for n in hypo:
-        reg_in[n] = promo_round
-    for rnd in range(current, current + horizon):
-        active = [n for n in names if reg_in.get(n, 0) <= rnd]
-        clen = math.ceil(len(active) / registry.SCORE_WINDOW)
-        pinned = {n for n in active if reg_in.get(n) == rnd}
-        never = [n for n in active if not sim.get(n) and n not in pinned]
-        stale = [
-            n for n in active
-            if sim.get(n) and sim[n] <= rnd - clen
-        ]
-        mandatory = list(dict.fromkeys(never + stale))
-        if len(mandatory) > registry.SCORE_WINDOW:
-            return rnd
-        window = list(mandatory)
-        fillers = sorted(
-            (n for n in active if n not in set(window) and n not in pinned),
-            key=lambda n: sim.get(n, 0),
-        )
-        pf = [n for n in pinned if n not in set(window)]
-        window += (pf + fillers)[
-            : registry.SCORE_WINDOW - len(window)
-        ]
-        if len([n for n in pinned if n not in set(window)]) > 3:
-            return rnd  # NEW_AFTER_WINDOW budget blown
-        for n in window:
-            sim[n] = rnd
-    return None
-
-
-def test_capacity_horizon_holds():
-    """The capacity-wall guard, state-INDEPENDENT (the r12 lesson: the
-    previous form asserted 'K=0 overflows', which was true only while
-    the registry sat exactly at the 200 = cycle_len(4) x 50 wall, so
-    the test turned red the moment the planned r13 promotion resolved
-    the wall).  Two clauses that hold at ANY registry size and on both
-    sides of an artifact drop:
-
-      * the COMMITTED registry (K=0 growth) must survive seven
-        boundaries with no window overflow — i.e. any capacity wall
-        must be resolved by promotions committed in the SAME tree,
-        never deferred to a future build round (the r12 wall needed
-        REGISTERED_IN=13 entries committed before the r12 artifacts
-        landed; from r13 the promotion ships with the wall);
-      * promoting K more queries at the next promotion boundary, for
-        a representative span of K short of a full window width,
-        must also hold — the admission check new staged queries run
-        before registering.  (K = SCORE_WINDOW would recreate the
-        wall: a full-width same-round cohort all goes stale together
-        cycle_len rounds later.)"""
-    registry._ensure_loaded()
-    _, current = registry._verdict_history()
-    promo_round = _next_promo_round(current)
-    bad = _simulate_boundaries(0, promo_round)
-    assert bad is None, (
-        f"K=0: the committed registry overflows the scoring window at "
-        f"r{bad} — a capacity wall is binding; promote staged queries "
-        f"IN THIS TREE (REGISTERED_IN={promo_round}) before the boundary"
-    )
-    for K in (1, 2, 3, 4, 6, 10, 25, registry.SCORE_WINDOW - 1):
-        bad = _simulate_boundaries(K, promo_round)
-        assert bad is None, f"K={K}: overflow at r{bad}"
-
-
-def test_invariants_hold_after_this_rounds_artifact_lands(monkeypatch):
-    """Both-states guard (VERDICT r12 ask #7): pytest must be green in
-    the exact state the judge runs it — AFTER this round's
-    CORRECTNESS_r{current}.json lands, with the registry UNCHANGED
-    (the judge sees the committed tree, not the next build round's
-    promotions).  Simulate that drop: this round's window goes green
-    at ``current``, the round advances, no new registrations.  Every
-    window invariant must still hold.  Had this test existed at r12 it
-    would have fired at BUILD time (registry at the 200 wall with no
-    committed resolution), not at judge time."""
-    registry._ensure_loaded()
-    last, current = registry._verdict_history()
-    simulated = dict(last)
-    for n in registry.score_first()[: registry.SCORE_WINDOW]:
-        simulated[n] = current
-    monkeypatch.setattr(
-        registry, "_verdict_history", lambda: (dict(simulated), current + 1)
-    )
-    window = registry.score_first()
-    assert len(window) == registry.SCORE_WINDOW, (
-        "the committed registry overflows the scoring window the moment "
-        "this round's artifacts land — resolve the wall in THIS tree"
-    )
-    wset = set(window)
-    clen = registry.cycle_len()
-    pinned = set(registry.new_after_window())
-    assert len(pinned) <= 3
-    stale = [
-        n
-        for n in registry.REGISTRY
-        if simulated.get(n, 0) <= current + 1 - clen
-        and n not in wset
-        and n not in pinned
-    ]
-    assert stale == [], f"post-drop stale outside window: {stale}"
-    never = [
-        n
-        for n in registry.REGISTRY
-        if n not in simulated and n not in wset and n not in pinned
-    ]
-    assert never == [], f"post-drop never-scored outside window: {never}"
-
-
-def test_staged_manifest_disjoint_from_registry():
-    """The two-tier contract: a query lives in EITHER the staged
-    manifest (incubation) OR the registry, never both — a promotion
-    that forgets to drain the manifest would double-gate the query
-    and skew the capacity arithmetic."""
-    import importlib.util
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    scripts = os.path.join(repo, "scripts")
-    if scripts not in sys.path:  # check_staged imports check_oracle
-        sys.path.insert(0, scripts)
-    spec = importlib.util.spec_from_file_location(
-        "check_staged", os.path.join(scripts, "check_staged.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    staged = set(mod.staged_manifest())
-    registry._ensure_loaded()
-    overlap = staged & set(registry.REGISTRY)
-    assert overlap == set(), f"staged AND registered: {sorted(overlap)}"
-    # every staged name must be absent from REGISTERED_IN too (it
-    # gains its entry at promotion time)
-    assert staged & set(registry.REGISTERED_IN) == set()
+    assert list(registry.all_queries()) == list(registry.REGISTRY)
+    oracles = registry.all_oracles()
+    for name in PROMOTED:
+        assert name in registry.REGISTRY
+        assert oracles[name].strip()

@@ -837,8 +837,8 @@ def test_hll_tws_state_merges_prereduced_batches(spark, tmp_path):
 def test_listener_bus_population_bounded(spark, sf_dir):
     """Every streaming start leaks one StreamingQueryListenerBus from
     the run's cloned session (never deregistered); the post-run prune
-    must pin the shared-bus population at one — the r13 TWS-drift
-    accumulator (TWS_ADJUDICATION_r14.md)."""
+    must pin the shared-bus population at one — the TWS-drift
+    accumulator (SCALE.md, "TWS listener-bus accumulator")."""
     from databatchprotectionservice_spark.operators.streamops import (
         streaming_hourly_rollup,
     )
