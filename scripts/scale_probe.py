@@ -128,7 +128,7 @@ QUERIES = [
     # late-r9 addition: the incremental SCD2 upsert (TWS protocol cost
     # per key + one extra staging write; state is one row per user)
     "streaming_scd2_tws",
-    # round-10 staged additions: PSL site grouping + HTML extraction
+    # round-10 additions: PSL site grouping + HTML extraction
     # (narrow Python string passes — must track the documents scan)
     # and the residual-IVFPQ composition (same pruning economics as
     # the flat variant)
@@ -143,27 +143,27 @@ QUERIES = [
     "events_hourly_anomalies",
     # r11: nested parquet read (binaryFile -> per-file decode)
     "parquet_nested_read_real",
-    # r11 staged: Gorilla codec over per-type event streams
+    # r11: Gorilla codec over per-type event streams
     "timeseries_gorilla_stats",
-    # r12 staged: Arrow temporal/decimal shards (orders replicate 10x
+    # r12: Arrow temporal/decimal shards (orders replicate 10x
     # with shifted keys, so shard count scales with the data) and the
     # nested parquet write (documents-driven, same shard economics)
     "ingest_arrow_temporal",
     "parquet_write_nested_real",
-    # r14 staged: page-index pruning (orders-driven shard writer +
+    # r14: page-index pruning (orders-driven shard writer +
     # index-driven page-skip read; shard count scales with the data,
     # per-task work tracks kept pages)
     "parquet_page_prune_real",
-    # r14 staged: dict/view/REE arrow stream roundtrip (events-driven;
+    # r14: dict/view/REE arrow stream roundtrip (events-driven;
     # user_id shards replicate 10x with shifted keys)
     "ingest_arrow_dict_views",
-    # r14 staged: BodyCompression IPC bodies (lineitem-driven; shard
+    # r14: BodyCompression IPC bodies (lineitem-driven; shard
     # count scales with orderkey range, per-shard codec work is flat)
     "ingest_arrow_compressed",
-    # r14 staged: SBBF row-group pruning (orders-driven; per shard the
+    # r14: SBBF row-group pruning (orders-driven; per shard the
     # filter build is O(rows), each probe O(groups) filter checks)
     "parquet_bloom_prune_real",
-    # r14 staged: ORC stripe value decode (orders-driven; per-shard
+    # r14: ORC stripe value decode (orders-driven; per-shard
     # decode is O(rows) over fixed-size stream state)
     "ingest_orc_values_real",
 ]
