@@ -42,9 +42,9 @@ supported Int width and every index bounds-checked against the
 resolved dictionary.  Compressed bodies decode too (also r11):
 ``BodyCompression`` BUFFER-method framing — each non-empty buffer
 ``[i64 uncompressed length][frame]``, -1 meaning stored raw — with
-LZ4 frames through ``core/lz4codec.py`` and ZSTD frames through
-``core/zstdmeta.py`` (frame walk, libzstd block decode), every inflated
-length checked against the declaration.  Nested columns decode too
+LZ4 frames decoded by liblz4 through ``core/lz4codec.py`` and ZSTD
+frames through ``core/zstdmeta.py`` (frame walk, libzstd block
+decode), every inflated length checked against the declaration.  Nested columns decode too
 (also r11): List and Struct fields recurse depth-first through the
 node/buffer flattening order the columnar spec defines — List =
 ``[validity][i32 offsets]`` then the child's buffers, Struct =
@@ -94,11 +94,10 @@ and Map encodes through the List<entries-struct> layout with
 reads.  No Schema.fbs type tag remains decode-only or encode-only.
 Compressed bodies ENCODE too (r14): ``compression="lz4"|"zstd"``
 on either encoder BodyCompression-frames every record and
-dictionary batch buffer — LZ4 frames written by
-``core/lz4codec.py``'s from-scratch frame writer, ZSTD through the
-compression layer, with the spec's ``-1`` stored-raw escape for
-incompressible buffers — so the codec matrix is symmetric with the
-reader.  Only non-BUFFER compression
+dictionary batch buffer — LZ4 frames written by liblz4, ZSTD
+through the compression layer, with the spec's ``-1`` stored-raw
+escape for incompressible buffers — so the codec matrix is symmetric
+with the reader.  Only non-BUFFER compression
 methods and unknown/corrupt tags raise
 :class:`ArrowIpcFormatError`, in the same style as the other
 codecs' unsupported paths.
@@ -1046,11 +1045,11 @@ def _decode_rb_table(
                 f"compressed buffer declares length {want}"
             )
         if compression == "lz4":
-            # LZ4 FRAME format — the in-house frame walker
-            from .lz4codec import Lz4FormatError, lz4_frame_decompress
+            # one LZ4 FRAME, decoded by liblz4 to exactly ``want``
+            from .lz4codec import Lz4FormatError, read_lz4_frame
 
             try:
-                out = lz4_frame_decompress(payload)["content"]
+                out = read_lz4_frame(payload, want)
             except Lz4FormatError as e:
                 raise ArrowIpcFormatError(f"lz4 buffer: {e}") from None
         else:  # zstd frame: our frame walk, libzstd block decode
@@ -2224,11 +2223,10 @@ def _compress_body_buffer(raw: bytes, compression: str) -> bytes:
     ``[i64 uncompressed length][frame]``, or ``[-1][raw]`` when the
     frame would not shrink it (the spec's stored-raw escape, which
     :func:`_decode_rb_table` and pyarrow both honor)."""
-    if compression == "lz4":
-        # LZ4 FRAME format through the in-house frame writer
-        from .lz4codec import lz4_frame_compress
+    if compression == "lz4":  # an LZ4 FRAME, written by liblz4
+        import pyarrow as pa
 
-        frame = lz4_frame_compress(raw)
+        frame = pa.compress(raw, codec="lz4", asbytes=True)
     else:  # zstd frame via the compression layer (pyarrow's libzstd)
         from .compression import compress
         from .types import CompressionCodec
@@ -2407,8 +2405,8 @@ def encode_arrow_ipc(
     one DictionaryBatch per id before the record batches, and record
     batches carry indices.  With ``compression`` ("lz4" | "zstd",
     r14) every record AND dictionary batch body is BodyCompression
-    BUFFER-framed — LZ4 frames by ``core/lz4codec.py``'s from-scratch
-    writer, ZSTD through the compression layer.  Output is readable
+    BUFFER-framed — LZ4 frames by liblz4, ZSTD through the
+    compression layer.  Output is readable
     by pyarrow's ``ipc.open_file`` (the referee the tests drive) and
     by :func:`read_arrow_ipc`.
     """

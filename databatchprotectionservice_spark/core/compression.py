@@ -10,6 +10,10 @@ per-block fallback path is exercised the same way as in the reference.
 Snappy's raw block format starts with a ULEB128 uncompressed-length prefix,
 which we parse to supply pyarrow the ``decompressed_size`` it requires —
 the C++ snappy library does the same internally.
+
+A declared size is exact: pyarrow zero-pads a stream that decodes short
+of the buffer it is given, so a snappy prefix must equal the declaration
+and an LZ4_RAW or BROTLI stream must not fit one byte less.
 """
 
 from __future__ import annotations
@@ -93,13 +97,19 @@ def decompress(
     name = _PYARROW_CODECS.get(codec)
     if name is None:
         raise DBPSUnsupportedError(f"unsupported compression codec: {codec.name}")
-    if uncompressed_size is None:
-        if codec == CompressionCodec.SNAPPY:
-            uncompressed_size = snappy_uncompressed_len(data)
-        else:
-            raise DBPSUnsupportedError(
-                f"{codec.name} requires a known uncompressed size"
+    declared = uncompressed_size is not None
+    if codec == CompressionCodec.SNAPPY:
+        prefix = snappy_uncompressed_len(data)
+        if declared and uncompressed_size != prefix:
+            raise DBPSInvalidInputError(
+                f"snappy stream holds {prefix} bytes, declared "
+                f"{uncompressed_size}"
             )
+        uncompressed_size = prefix
+    elif not declared:
+        raise DBPSUnsupportedError(
+            f"{codec.name} requires a known uncompressed size"
+        )
     # the length prefix is attacker-controlled (up to 2^35-1): cap it
     # BEFORE pyarrow preallocates the claimed buffer.  Real snappy
     # cannot exceed ~255x expansion, and no sane page exceeds the
@@ -112,9 +122,30 @@ def decompress(
             f"claimed uncompressed size {uncompressed_size} implausible "
             f"for {len(data)} compressed bytes"
         )
+    out = _pa_decompress(data, uncompressed_size, name)
+    # pyarrow zero-pads a stream that decodes short of the size it is
+    # given; liblz4 and brotli fail instead when the buffer is too
+    # small, so one byte less must not fit (zstd checks the frame's
+    # own content size)
+    if (
+        codec in (CompressionCodec.LZ4_RAW, CompressionCodec.BROTLI)
+        and uncompressed_size > 0
+    ):
+        try:
+            _pa_decompress(data, uncompressed_size - 1, name)
+        except DBPSInvalidInputError:
+            return out
+        raise DBPSInvalidInputError(
+            f"{codec.name} stream holds fewer than the declared "
+            f"{uncompressed_size} bytes"
+        )
+    return out
+
+
+def _pa_decompress(data: bytes, size: int, name: str) -> bytes:
     try:
         return pa.decompress(
-            data, decompressed_size=uncompressed_size, codec=name, asbytes=True
+            data, decompressed_size=size, codec=name, asbytes=True
         )
     except (pa.ArrowException, OSError, ValueError) as e:
         # pyarrow surfaces corrupt-stream errors as OSError

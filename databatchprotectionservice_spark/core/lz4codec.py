@@ -1,359 +1,111 @@
-"""LZ4 — block codec (both directions) + frame format + XXH32.
+"""LZ4 reads through liblz4 (pyarrow), with the length checks a
+container needs.
 
-Public formats (lz4_Block_format.md / lz4_Frame_format.md).  Unlike
-the zstd walk, LZ4's block format has NO entropy stage — token-coded
-LZ77 sequences — so this module implements the REAL codec from
-scratch, not just framing:
+Public formats (lz4_Block_format.md / lz4_Frame_format.md).  liblz4
+does every byte of the decode and verifies the frame's header, block
+and content checksums itself; this module adds what liblz4's stream
+API does not check:
 
-* **block decode** — token nibbles (literal length / match length,
-  both 15-escaped through 255-runs), 2-byte little-endian offsets,
-  overlapping-copy semantics (offset < match length replicates), the
-  final literals-only sequence; every read bounds-checked, output
-  capped;
-* **block encode** — greedy single-entry hash-table match finder
-  (4-byte window, min match 4, 64 KiB offsets) honoring the spec's
-  end-of-block rules (last 5 bytes literal, no match within the last
-  12);
-* **frame format** — magic 0x184D2204, FLG/BD descriptor with the
-  XXH32-derived header-checksum byte, optional content size, block
-  framing with the high-bit uncompressed flag, optional per-block
-  and whole-content XXH32 checksums — all VERIFIED on parse because
-  the block decoder regenerates the content;
-* **XXH32** — from the published algorithm, pinned by its classic
-  check values.
+* :func:`read_lz4_frame` — exactly ONE frame (liblz4's stream would
+  run on into a second frame, and reads empty input as empty
+  content), decoding to exactly the length the container declares;
+* :func:`read_lz4_block` — a raw block with no declared size (ORC's
+  LZ4 chunks), wrapped in a constant frame header so liblz4 reports
+  its exact output length.
 
-Interop in the unit suite runs through real liblz4 (pyarrow): our
-blocks decode with ``lz4_raw``, its blocks decode with ours, and its
-``lz4`` frames walk+decode end to end.
+Raw blocks WITH a declared size (parquet LZ4_RAW pages, hadoop-LZ4
+chunks) go through ``core/compression.decompress`` and its
+exact-length rule.  Every liblz4 error surfaces as
+:class:`Lz4FormatError`.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from .errors import DBPSInvalidInputError
 
-FRAME_MAGIC = 0x184D2204
+FRAME_MAGIC = b"\x04\x22\x4d\x18"
+#: declared-content cap for one frame
 MAX_CONTENT = 1 << 30
+#: the largest output of one raw block under :data:`_BLOCK_FRAME`
+MAX_BLOCK = 4 << 20
 
-_M32 = 0xFFFFFFFF
-_Q1 = 2654435761
-_Q2 = 2246822519
-_Q3 = 3266489917
-_Q4 = 668265263
-_Q5 = 374761393
+#: frame header for one raw block: magic, FLG 0x60 (version 01,
+#: independent blocks, no checksums, no content size), BD 0x70 (4 MiB
+#: maximum block), then the header-checksum byte 0x73, which the frame
+#: spec defines as ``(XXH32(FLG BD, seed 0) >> 8) & 0xFF`` =
+#: ``(0x789F73AA >> 8) & 0xFF``.  liblz4 verifies that byte.
+_BLOCK_FRAME = bytes.fromhex("04224d18607073")
 
 
 class Lz4FormatError(DBPSInvalidInputError):
     """Malformed LZ4 block or frame data."""
 
 
-# ---------------------------------------------------------------------------
-# XXH32
-# ---------------------------------------------------------------------------
+def _stream_read(frame: bytes, limit: int) -> bytes:
+    try:
+        with pa.CompressedInputStream(pa.BufferReader(frame), "lz4") as s:
+            return s.read(limit)
+    except (OSError, pa.ArrowException) as e:
+        raise Lz4FormatError(f"liblz4: {e}") from None
 
 
-def _rotl32(x: int, r: int) -> int:
-    return ((x << r) | (x >> (32 - r))) & _M32
-
-
-def xxh32(data: bytes, seed: int = 0) -> int:
-    n = len(data)
-    i = 0
-    if n >= 16:
-        a1 = (seed + _Q1 + _Q2) & _M32
-        a2 = (seed + _Q2) & _M32
-        a3 = seed & _M32
-        a4 = (seed - _Q1) & _M32
-        end = n - 16
-        while i <= end:
-            a1 = (_rotl32((a1 + int.from_bytes(data[i : i + 4], "little") * _Q2) & _M32, 13) * _Q1) & _M32
-            a2 = (_rotl32((a2 + int.from_bytes(data[i + 4 : i + 8], "little") * _Q2) & _M32, 13) * _Q1) & _M32
-            a3 = (_rotl32((a3 + int.from_bytes(data[i + 8 : i + 12], "little") * _Q2) & _M32, 13) * _Q1) & _M32
-            a4 = (_rotl32((a4 + int.from_bytes(data[i + 12 : i + 16], "little") * _Q2) & _M32, 13) * _Q1) & _M32
-            i += 16
-        h = (
-            _rotl32(a1, 1) + _rotl32(a2, 7) + _rotl32(a3, 12) + _rotl32(a4, 18)
-        ) & _M32
-    else:
-        h = (seed + _Q5) & _M32
-    h = (h + n) & _M32
-    while i + 4 <= n:
-        h = (_rotl32((h + int.from_bytes(data[i : i + 4], "little") * _Q3) & _M32, 17) * _Q4) & _M32
-        i += 4
-    while i < n:
-        h = (_rotl32((h + data[i] * _Q5) & _M32, 11) * _Q1) & _M32
-        i += 1
-    h ^= h >> 15
-    h = (h * _Q2) & _M32
-    h ^= h >> 13
-    h = (h * _Q3) & _M32
-    h ^= h >> 16
-    return h
-
-
-# ---------------------------------------------------------------------------
-# block codec
-# ---------------------------------------------------------------------------
-
-
-def lz4_block_decompress(data: bytes, max_output: int = MAX_CONTENT) -> bytes:
-    """Token-coded LZ77 sequences -> regenerated bytes."""
-    out = bytearray()
-    pos = 0
-    n = len(data)
-    if n == 0:
-        raise Lz4FormatError("empty block")
-    while pos < n:
-        token = data[pos]
-        pos += 1
-        lit_len = token >> 4
-        if lit_len == 15:
-            while True:
-                if pos >= n:
-                    raise Lz4FormatError("truncated literal-length run")
-                b = data[pos]
-                pos += 1
-                lit_len += b
-                if b != 255:
-                    break
-        if pos + lit_len > n:
-            raise Lz4FormatError("literals overrun the block")
-        out += data[pos : pos + lit_len]
-        pos += lit_len
-        if len(out) > max_output:
-            raise Lz4FormatError("output over the cap")
-        if pos == n:  # final sequence: literals only
-            return bytes(out)
-        if pos + 2 > n:
-            raise Lz4FormatError("truncated match offset")
-        offset = data[pos] | (data[pos + 1] << 8)
-        pos += 2
-        if offset == 0 or offset > len(out):
-            raise Lz4FormatError(
-                f"match offset {offset} outside the window"
-            )
-        match_len = (token & 0x0F) + 4
-        if (token & 0x0F) == 15:
-            while True:
-                if pos >= n:
-                    raise Lz4FormatError("truncated match-length run")
-                b = data[pos]
-                pos += 1
-                match_len += b
-                if b != 255:
-                    break
-        if len(out) + match_len > max_output:
-            raise Lz4FormatError("output over the cap")
-        start = len(out) - offset
-        if offset >= match_len:
-            out += out[start : start + match_len]
-        else:  # overlapping copy replicates byte-by-byte semantics
-            for k in range(match_len):
-                out.append(out[start + k])
-    raise Lz4FormatError("block ended inside a sequence")
-
-
-def lz4_block_compress(data: bytes) -> bytes:
-    """Greedy hash-table matcher honoring the end-of-block rules."""
-    n = len(data)
-    out = bytearray()
-
-    def _emit(lit_start: int, lit_end: int, offset: int, mlen: int):
-        lit_len = lit_end - lit_start
-        token_lit = 15 if lit_len >= 15 else lit_len
-        token_match = 0
-        extra = mlen - 4 if mlen else 0
-        if mlen:
-            token_match = 15 if extra >= 15 else extra
-        out.append((token_lit << 4) | token_match)
-        rem = lit_len - 15
-        while token_lit == 15:
-            out.append(255 if rem >= 255 else rem)
-            if rem < 255:
-                break
-            rem -= 255
-        out.extend(data[lit_start:lit_end])
-        if mlen:
-            out.extend(offset.to_bytes(2, "little"))
-            rem = extra - 15
-            while token_match == 15:
-                out.append(255 if rem >= 255 else rem)
-                if rem < 255:
-                    break
-                rem -= 255
-
-    if n == 0:
-        return b"\x00"  # empty final sequence: token 0, no literals
-    table: dict = {}
-    anchor = 0
-    i = 0
-    # the spec: no match may start within the last 12 bytes and the
-    # last 5 bytes are always literals
-    limit = n - 12
-    while i < limit:
-        key = data[i : i + 4]
-        cand = table.get(key, -1)
-        table[key] = i
-        if cand >= 0 and i - cand <= 0xFFFF and data[cand : cand + 4] == key:
-            mlen = 4
-            max_m = n - 5 - i  # matches must stop 5 bytes before end
-            while (
-                mlen < max_m
-                and data[cand + mlen] == data[i + mlen]
-            ):
-                mlen += 1
-            _emit(anchor, i, i - cand, mlen)
-            i += mlen
-            anchor = i
-        else:
-            i += 1
-    _emit(anchor, n, 0, 0)
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# frame format
-# ---------------------------------------------------------------------------
-
-_BD_SIZES = {4: 1 << 16, 5: 1 << 18, 6: 1 << 20, 7: 1 << 22}
-
-
-def lz4_frame_compress(
-    content: bytes,
-    *,
-    block_size_id: int = 4,
-    content_checksum: bool = True,
-    block_checksum: bool = False,
-    store_uncompressed: bool = False,
-) -> bytes:
-    """Content -> an LZ4 frame any conformant decoder accepts."""
-    if block_size_id not in _BD_SIZES:
-        raise Lz4FormatError(f"bad block size id {block_size_id}")
-    if len(content) > MAX_CONTENT:
-        raise Lz4FormatError("content over the cap")
-    flg = (1 << 6) | (1 << 5)  # version 01, block-independent
-    if block_checksum:
-        flg |= 1 << 4
-    flg |= 1 << 3  # content size present
-    if content_checksum:
-        flg |= 1 << 2
-    bd = block_size_id << 4
-    head = bytes([flg, bd]) + len(content).to_bytes(8, "little")
-    out = bytearray(FRAME_MAGIC.to_bytes(4, "little"))
-    out += head
-    out.append((xxh32(head, 0) >> 8) & 0xFF)
-    bmax = _BD_SIZES[block_size_id]
-    for at in range(0, len(content), bmax) or [0]:
-        chunk = content[at : at + bmax]
-        comp = None if store_uncompressed else lz4_block_compress(chunk)
-        if comp is None or len(comp) >= len(chunk):
-            out += (len(chunk) | (1 << 31)).to_bytes(4, "little")
-            body = chunk
-        else:
-            out += len(comp).to_bytes(4, "little")
-            body = comp
-        out += body
-        if block_checksum:
-            out += xxh32(body, 0).to_bytes(4, "little")
-    out += (0).to_bytes(4, "little")  # end mark
-    if content_checksum:
-        out += xxh32(content, 0).to_bytes(4, "little")
-    return bytes(out)
-
-
-def lz4_frame_decompress(data: bytes) -> dict:
-    """Frame -> {content, blocks, content_size, flags...}; every
-    checksum (header byte, per-block, whole-content) VERIFIED."""
-    if len(data) < 7:
-        raise Lz4FormatError("shorter than any frame")
-    if int.from_bytes(data[:4], "little") != FRAME_MAGIC:
-        raise Lz4FormatError("bad frame magic")
-    pos = 4
-    flg = data[pos]
-    if (flg >> 6) != 1:
-        raise Lz4FormatError(f"unsupported frame version {flg >> 6}")
-    if flg & 0x02:
-        raise Lz4FormatError("reserved FLG bit set")
-    block_indep = bool(flg & 0x20)
-    block_checksum = bool(flg & 0x10)
-    has_size = bool(flg & 0x08)
-    content_checksum = bool(flg & 0x04)
-    has_dict = bool(flg & 0x01)
-    bd = data[pos + 1]
+def _frame_extent(data: bytes) -> tuple[int, int]:
+    """Walk one frame's skeleton (descriptor, block sizes, checksum
+    slots) without decoding it: returns (end offset, the most bytes
+    its blocks can decode to)."""
+    if len(data) < 7 or data[:4] != FRAME_MAGIC:
+        raise Lz4FormatError("not an LZ4 frame")
+    flg, bd = data[4], data[5]
     bs_id = (bd >> 4) & 0x07
-    if bs_id not in _BD_SIZES or bd & 0x8F:
+    if bs_id < 4:
         raise Lz4FormatError(f"bad BD byte 0x{bd:02x}")
-    head_len = 2 + (8 if has_size else 0) + (4 if has_dict else 0)
-    if pos + head_len + 1 > len(data):
-        raise Lz4FormatError("truncated frame descriptor")
-    head = data[pos : pos + head_len]
-    hc = data[pos + head_len]
-    if ((xxh32(head, 0) >> 8) & 0xFF) != hc:
-        raise Lz4FormatError("frame header checksum mismatch")
-    content_size = None
-    if has_size:
-        content_size = int.from_bytes(data[pos + 2 : pos + 10], "little")
-        if content_size > MAX_CONTENT:
-            raise Lz4FormatError("declared content over the cap")
-    pos += head_len + 1
-    if not block_indep:
-        raise Lz4FormatError(
-            "block-linked frames are a documented seam "
-            "(the 64 KiB inter-block window)"
-        )
-
-    content = bytearray()
-    blocks = []
-    bmax = _BD_SIZES[bs_id]
+    block_max = 1 << (2 * bs_id + 8)
+    pos = 7 + (8 if flg & 0x08 else 0) + (4 if flg & 0x01 else 0)
+    block_tail = 4 if flg & 0x10 else 0
+    room = 0
     while True:
         if pos + 4 > len(data):
             raise Lz4FormatError("truncated block header")
         word = int.from_bytes(data[pos : pos + 4], "little")
+        size = word & 0x7FFFFFFF
         pos += 4
-        if word == 0:
+        if size == 0:  # end mark
             break
-        uncompressed = bool(word >> 31)
-        bsize = word & 0x7FFFFFFF
-        if bsize > bmax + 4:
-            raise Lz4FormatError(f"block of {bsize} over the BD limit")
-        if pos + bsize > len(data):
-            raise Lz4FormatError("block payload overruns the frame")
-        body = data[pos : pos + bsize]
-        pos += bsize
-        if block_checksum:
-            if pos + 4 > len(data):
-                raise Lz4FormatError("truncated block checksum")
-            if int.from_bytes(data[pos : pos + 4], "little") != xxh32(
-                body, 0
-            ):
-                raise Lz4FormatError("block checksum mismatch")
-            pos += 4
-        if uncompressed:
-            content += body
-        else:
-            content += lz4_block_decompress(body, max_output=bmax)
-        if len(content) > MAX_CONTENT:
-            raise Lz4FormatError("content over the cap")
-        blocks.append(
-            {"size": bsize, "uncompressed": uncompressed}
-        )
-    if content_checksum:
-        if pos + 4 > len(data):
-            raise Lz4FormatError("truncated content checksum")
-        if int.from_bytes(data[pos : pos + 4], "little") != xxh32(
-            bytes(content), 0
-        ):
-            raise Lz4FormatError("content checksum mismatch")
-        pos += 4
-    if pos != len(data):
-        raise Lz4FormatError(f"{len(data) - pos} trailing bytes")
-    if content_size is not None and len(content) != content_size:
+        pos += size + block_tail
+        # a stored block (high bit) holds its own size; an LZ4 block
+        # expands less than 256-fold
+        room += size if word >> 31 else min(block_max, size << 8)
+    pos += 4 if flg & 0x04 else 0
+    if pos > len(data):
+        raise Lz4FormatError("frame overruns its buffer")
+    return pos, room
+
+
+def read_lz4_frame(frame: bytes, want: int) -> bytes:
+    """Exactly one LZ4 frame that decodes to exactly ``want`` bytes."""
+    end, room = _frame_extent(frame)
+    if end != len(frame):
+        raise Lz4FormatError(f"{len(frame) - end} bytes after the frame")
+    if want > min(room, MAX_CONTENT):
         raise Lz4FormatError(
-            f"regenerated {len(content)}, header declares {content_size}"
+            f"declared {want} bytes, the frame holds at most {room}"
         )
-    return {
-        "content": bytes(content),
-        "content_size": content_size,
-        "blocks": blocks,
-        "block_checksum": block_checksum,
-        "content_checksum": content_checksum,
-    }
+    # read one byte past the declaration so an overlong frame shows
+    out = _stream_read(frame, want + 1)
+    if len(out) != want:
+        raise Lz4FormatError(f"frame decoded to {len(out)}, declared {want}")
+    return out
+
+
+def read_lz4_block(block: bytes) -> bytes:
+    """One raw LZ4 block with no declared size, decoded to at most
+    :data:`MAX_BLOCK` bytes; a truncated block raises."""
+    frame = (
+        _BLOCK_FRAME + len(block).to_bytes(4, "little") + block + bytes(4)
+    )
+    out = _stream_read(frame, MAX_BLOCK + 1)
+    if len(out) > MAX_BLOCK:
+        raise Lz4FormatError(f"block decodes past {MAX_BLOCK} bytes")
+    return out

@@ -21,7 +21,8 @@ the TWS client and tf.train.Example) — no generated code.  Chunk
 codecs: NONE, ZLIB (raw deflate), SNAPPY (length from the stream's
 own ULEB128 prefix via ``core/compression.py``), LZ4 (raw block —
 the ORC codec calls ``LZ4_decompress_safe`` on the bare chunk, no
-frame header — through the from-scratch ``core/lz4codec.py``), and
+frame header — decoded by liblz4 through ``core/lz4codec.py``, at
+most 4 MiB per chunk), and
 ZSTD (each chunk is a complete zstd frame: ``core/zstdmeta.py`` walks
 the frame and libzstd decodes its blocks).  LZO chunks stay the named seam: the
 LZO1X match tables are GPL-licensed, so a clean-room decoder has no
@@ -192,13 +193,11 @@ def decompress_region(data: bytes, compression: int) -> bytes:
             out += _codec_decompress(chunk, CompressionCodec.SNAPPY)
         elif name == "LZ4":
             # the ORC codec hands the bare chunk to
-            # LZ4_decompress_safe: a raw lz4 BLOCK, no frame header
-            from .lz4codec import Lz4FormatError, lz4_block_decompress
+            # LZ4_decompress_safe: a raw lz4 BLOCK, no declared size
+            from .lz4codec import Lz4FormatError, read_lz4_block
 
             try:
-                out += lz4_block_decompress(
-                    chunk, max_output=MAX_META_BYTES + 1
-                )
+                out += read_lz4_block(chunk)
             except Lz4FormatError as e:
                 raise OrcFormatError(f"lz4 chunk: {e}") from None
         else:  # ZSTD — each chunk is a complete zstd frame

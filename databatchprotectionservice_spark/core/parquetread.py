@@ -83,44 +83,41 @@ class ParquetReadError(DBPSInvalidInputError):
 
 
 def _inflate(body: bytes, codec, size: int) -> bytes:
-    """Page inflate: the shared compression layer, plus the
-    hadoop-framed LZ4 walk (parquet codec 5, r14) the layer
-    deliberately refuses — its unsupported set mirrors the
-    reference's per-block fallback matrix and must not widen.
-    Hadoop framing: repeated ``[u32be uncompressed][u32be
-    compressed][raw LZ4 block]`` chunks."""
-    if codec == CompressionCodec.LZ4:
-        from .lz4codec import Lz4FormatError, lz4_block_decompress
+    """Page inflate through the shared compression layer, whose
+    declared sizes are exact.  The layer refuses hadoop-framed LZ4
+    (parquet codec 5) — its unsupported set mirrors the reference's
+    per-block fallback matrix and must not widen — so this walks the
+    framing, repeated ``[u32be uncompressed][u32be compressed][raw
+    LZ4 block]`` chunks, and hands each block to the layer as
+    LZ4_RAW."""
+    if codec != CompressionCodec.LZ4:
+        return _layer_decompress(body, codec, size)
+    out = bytearray()
+    pos = 0
+    while pos < len(body):
+        if pos + 8 > len(body):
+            raise ParquetReadError("truncated hadoop-LZ4 chunk header")
+        want = int.from_bytes(body[pos : pos + 4], "big")
+        clen = int.from_bytes(body[pos + 4 : pos + 8], "big")
+        pos += 8
+        if pos + clen > len(body):
+            raise ParquetReadError("hadoop-LZ4 chunk overruns the page")
+        out += _layer_decompress(
+            body[pos : pos + clen], CompressionCodec.LZ4_RAW, want
+        )
+        pos += clen
+    if len(out) != size:
+        raise ParquetReadError(
+            f"hadoop-LZ4 page inflated to {len(out)}, declared {size}"
+        )
+    return bytes(out)
 
-        out = bytearray()
-        pos = 0
-        while pos < len(body):
-            if pos + 8 > len(body):
-                raise ParquetReadError("truncated hadoop-LZ4 chunk header")
-            want = int.from_bytes(body[pos : pos + 4], "big")
-            clen = int.from_bytes(body[pos + 4 : pos + 8], "big")
-            pos += 8
-            if clen < 0 or pos + clen > len(body):
-                raise ParquetReadError("hadoop-LZ4 chunk overruns the page")
-            try:
-                got = lz4_block_decompress(
-                    body[pos : pos + clen], max_output=max(want, 1)
-                )
-            except Lz4FormatError as e:
-                raise ParquetReadError(f"hadoop-LZ4 chunk: {e}") from None
-            if len(got) != want:
-                raise ParquetReadError(
-                    f"hadoop-LZ4 chunk inflated to {len(got)}, "
-                    f"declared {want}"
-                )
-            out += got
-            pos += clen
-        if len(out) != size:
-            raise ParquetReadError(
-                f"hadoop-LZ4 page inflated to {len(out)}, declared {size}"
-            )
-        return bytes(out)
-    return _decompress(body, codec, size)
+
+def _layer_decompress(body: bytes, codec, size: int) -> bytes:
+    try:
+        return _decompress(body, codec, size)
+    except DBPSInvalidInputError as e:
+        raise ParquetReadError(f"{codec.name} page: {e}") from None
 
 
 def _verify_page_crc(page: dict, body: bytes) -> None:

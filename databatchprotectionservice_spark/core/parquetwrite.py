@@ -1,13 +1,12 @@
 """Parquet writer from scratch — the loop closed in both directions.
 
-Emits spec-compliant flat parquet files using only first-party
-layers: the compact-protocol serializer (``core/thriftcodec.py
-ThriftWriter``) for page headers, column metadata and the footer;
-PLAIN value encoding per physical type; hybrid-RLE definition levels
-for nullable columns; and — when ``codec="SNAPPY"`` — page bodies
-compressed by OUR snappy (``core/snappycodec.py``), so a file can be
-produced end-to-end with zero third-party bytes and still be read by
-pyarrow, Spark, and DuckDB (the unit suite pins all three).
+Emits spec-compliant flat parquet files from first-party layers: the
+compact-protocol serializer (``core/thriftcodec.py ThriftWriter``) for
+page headers, column metadata and the footer; PLAIN value encoding per
+physical type; and hybrid-RLE definition levels for nullable columns.
+Page bodies compress through ``core/compression.py`` (C++ snappy,
+zlib, libzstd, liblz4, brotli).  pyarrow, Spark and DuckDB read the
+files (the unit suite pins all three).
 
 Shape: one row group by default, or size-bounded groups via
 ``row_group_rows`` (r14) — each with its own chunk Statistics,
@@ -20,9 +19,8 @@ Since r13 chunks also carry Statistics (null_count + min_value/
 max_value under declared column_orders — the row-group pruning
 hook), admissible chunks dictionary-encode (PLAIN dictionary page +
 RLE_DICTIONARY data pages, see ``write_parquet``'s
-``use_dictionary``), and pages compress with SNAPPY (from-scratch),
-GZIP (stdlib zlib), ZSTD, or LZ4_RAW (raw blocks by OUR
-``core/lz4codec.py`` encoder, r14).  DATA_PAGE_V2 is supported on
+``use_dictionary``), and pages compress with SNAPPY, GZIP, BROTLI,
+ZSTD or LZ4_RAW.  DATA_PAGE_V2 is supported on
 BOTH sides since r13 — pass ``data_page_version=2`` to emit V2
 pages (levels outside the compressed region, per-page null counts);
 the READER (``core/parquetread.py``) covers both versions.  Since
@@ -40,9 +38,9 @@ DELTA_LENGTH_BYTE_ARRAY / DELTA_BYTE_ARRAY, read back by pyarrow,
 DuckDB and our own reader).  Page CRC-32 stamps
 (``page_checksums``, PageHeader fid 4) round-trip with pyarrow's
 verifier in both directions (r14).  The legacy hadoop-framed
-LZ4 (codec 5) writes and reads through the from-scratch block codec
-(r14; Spark's parquet reader is the interop referee — pyarrow 16
-maps "lz4" to LZ4_RAW).  Remaining writer seam: LZO (patented
+LZ4 (codec 5) writes and reads one liblz4 block per chunk (r14;
+Spark's parquet reader is the interop referee — pyarrow 16 maps
+"lz4" to LZ4_RAW).  Remaining writer seam: LZO (patented
 out-of-scope, refused like the reference's unsupported set).
 
 Nested columns (r12, mirroring the reader's record assembly):
@@ -77,8 +75,8 @@ import struct
 
 from .bits import uleb128, zigzag_encode
 from .bloomfilter import SplitBlockBloomFilter
+from .compression import compress
 from .errors import DBPSInvalidInputError
-from .snappycodec import snappy_compress
 from .thriftcodec import (
     T_BINARY,
     T_I32,
@@ -88,48 +86,23 @@ from .thriftcodec import (
     T_TRUE,
     ThriftWriter,
 )
+from .types import CompressionCodec
 
 
 def _page_compress(raw: bytes, codec: str) -> bytes:
-    """Compress one page body per the column chunk's codec: SNAPPY
-    via the from-scratch encoder, GZIP via stdlib zlib as an
-    RFC-1952 member (the parquet GZIP contract), ZSTD through the
-    shared compression layer."""
-    if codec == "SNAPPY":
-        return snappy_compress(raw)
-    if codec == "GZIP":
-        import zlib
-
-        co = zlib.compressobj(wbits=31)
-        return co.compress(raw) + co.flush()
-    if codec == "ZSTD":
-        from .compression import CompressionCodec, compress
-
-        return compress(raw, CompressionCodec.ZSTD)
-    if codec == "LZ4_RAW":
-        # the raw LZ4 block format (no frame) — parquet codec 7,
-        # emitted by OUR from-scratch encoder; readers recover the
-        # size from the page header's uncompressed_page_size
-        from .lz4codec import lz4_block_compress
-
-        return lz4_block_compress(raw)
-    if codec == "BROTLI":
-        from .compression import CompressionCodec, compress
-
-        return compress(raw, CompressionCodec.BROTLI)
+    """Compress one page body per the column chunk's codec through the
+    shared compression layer (snappy, zlib, libzstd, liblz4, brotli).
+    Hadoop LZ4 (codec 5) wraps one LZ4_RAW block in its 8-byte
+    ``[u32be uncompressed][u32be compressed]`` chunk header."""
     if codec == "LZ4":
-        # the legacy hadoop framing (parquet codec 5): one
-        # [u32be uncompressed][u32be compressed][raw LZ4 block]
-        # chunk per page, the block by OUR from-scratch encoder
-        from .lz4codec import lz4_block_compress
-
-        blk = lz4_block_compress(raw)
+        blk = compress(raw, CompressionCodec.LZ4_RAW)
         return (
             len(raw).to_bytes(4, "big")
             + len(blk).to_bytes(4, "big")
             + blk
         )
-    return raw
+    return compress(raw, CompressionCodec[codec])
+
 
 MAGIC = b"PAR1"
 _TYPE_IDS = {
@@ -140,11 +113,9 @@ _TYPE_IDS = {
     "DOUBLE": 5,
     "BYTE_ARRAY": 6,
 }
-#: writer codecs: SNAPPY through the from-scratch encoder, GZIP
-#: through stdlib zlib (RFC-1952 members per the parquet contract),
-#: ZSTD and BROTLI through the compression layer, LZ4_RAW through
-#: the from-scratch block encoder.  Hadoop-framed LZ4 and LZO stay
-#: seams (same as the read side's documented posture).
+#: writer codecs (parquet.thrift ids), all through the compression
+#: layer; GZIP pages are RFC-1952 members per the parquet contract.
+#: LZO stays a seam (same as the read side's documented posture).
 _CODEC_IDS = {
     "UNCOMPRESSED": 0, "SNAPPY": 1, "GZIP": 2, "BROTLI": 4, "LZ4": 5,
     "ZSTD": 6, "LZ4_RAW": 7,

@@ -1109,7 +1109,7 @@ def ingest_tfexample_shards(spark, sf_dir) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 #: codec rotates NONE/ZLIB/SNAPPY/LZ4/ZSTD by ``shard_id % 5`` —
-#: every chunk codec the walk reads (LZ4 raw blocks via
+#: every chunk codec the walk reads (LZ4 raw blocks via liblz4 in
 #: core/lz4codec.py, ZSTD frames via core/zstdmeta.py and libzstd;
 #: LZO stays the GPL-tables seam); row totals and codec
 #: counts are the oracle facts, stripe/schema agreement is asserted
@@ -1165,8 +1165,9 @@ def ingest_orc_shards(spark, sf_dir) -> DataFrame:
     parser's own stripe-accounting invariants.  Codec rotation by
     shard proves all five chunk codecs in every run — LZ4 chunks
     are raw lz4 BLOCKS (the ORC codec calls LZ4_decompress_safe)
-    inflated by core/lz4codec.py, ZSTD chunks are complete frames
-    walked by core/zstdmeta.py and block-decoded by libzstd.
+    inflated by liblz4 through core/lz4codec.py, ZSTD chunks are
+    complete frames walked by core/zstdmeta.py and block-decoded by
+    libzstd.
 
     100 TB: one shuffle on the shard key; the walk itself reads only
     the file TAIL in a real deployment (PostScript length byte ->
@@ -1995,7 +1996,7 @@ def ingest_zstd_frames(spark, sf_dir) -> DataFrame:
     )
 
 # ---------------------------------------------------------------------------
-# LZ4-framed transport — real compression, three referees per row
+# LZ4-framed transport — liblz4 frames through the container read
 # ---------------------------------------------------------------------------
 
 #: closed-form facts: content bytes and block counts (64 KiB blocks,
@@ -2027,24 +2028,23 @@ _LZ4_ROW_SCHEMA = T.StructType(
 
 @register("ingest_lz4_frames", oracle=LZ4_FRAMES_ORACLE)
 def ingest_lz4_frames(spark, sf_dir) -> DataFrame:
-    """Documents through REAL from-scratch LZ4 compression.
+    """Documents through LZ4 frame compression.
 
-    Each document is compressed by our greedy LZ77 matcher into an
-    LZ4 frame (block + content checksums on), then THREE referees
-    must agree per row: our own frame decoder (checksums verified,
-    content byte-exact), REAL liblz4 (pyarrow decompresses our
-    frame), and a size bound (a conformant LZ4 frame of n bytes
-    cannot exceed n + per-block worst-case literal overhead +
-    framing — asserted, catching a matcher that emits illegal
-    sequences liblz4 would still tolerate).  The oracle restates the
-    closed-form facts (content bytes, 64 KiB block counts).
+    Each document is compressed by liblz4 into one LZ4 frame (64 KiB
+    blocks), then two checks must hold per row: the container read
+    (``core/lz4codec.read_lz4_frame``: exactly one frame, decoded by
+    liblz4 to exactly the content length) returns the content
+    byte-exact, and the frame stays within the size bound (n bytes
+    plus per-block worst-case literal overhead plus framing).  The
+    oracle restates the closed-form facts (content bytes, 64 KiB
+    block counts).
 
     100 TB: narrow mapInPandas; this is the compress-verify-ship
     stage of an archival/export pipeline.
     """
     import pyarrow as pa_
 
-    from ..core.lz4codec import lz4_frame_compress, lz4_frame_decompress
+    from ..core.lz4codec import read_lz4_frame
 
     prep(spark)
     d = load_spread(spark, sf_dir, "documents").select("source", "text")
@@ -2054,17 +2054,9 @@ def ingest_lz4_frames(spark, sf_dir) -> DataFrame:
             srcs, cbytes, blks = [], [], []
             for src, txt in zip(pdf["source"], pdf["text"]):
                 content = (txt or "").encode("utf-8")
-                frame = lz4_frame_compress(content, block_checksum=True)
-                got = lz4_frame_decompress(frame)
-                if got["content"] != content:
+                frame = pa_.compress(content, codec="lz4", asbytes=True)
+                if read_lz4_frame(frame, len(content)) != content:
                     raise ValueError("LZ4 roundtrip lost bytes")
-                if pa_.decompress(
-                    frame,
-                    decompressed_size=len(content),
-                    codec="lz4",
-                    asbytes=True,
-                ) != content:
-                    raise ValueError("liblz4 rejected our frame")
                 n_blocks = max((len(content) + 65535) // 65536, 1)
                 # worst case per block: all literals + token/run bytes
                 bound = (
@@ -2612,12 +2604,13 @@ def parquet_write_real(spark, sf_dir) -> DataFrame:
     """The engine WRITES parquet with no black box — and three readers
     must take its word for it.
 
-    Each shard group becomes a parquet file emitted entirely by
-    first-party code (`core/parquetwrite.py`: compact-protocol thrift
-    via ThriftWriter, dictionary or PLAIN pages, hybrid-RLE
-    definition levels, chunk statistics; shards rotate through all
-    four page codecs — UNCOMPRESSED / OUR snappy / GZIP / ZSTD — and
-    both data-page versions, r13).  In the
+    Each shard group becomes a parquet file laid out by first-party
+    code (`core/parquetwrite.py`: compact-protocol thrift via
+    ThriftWriter, dictionary or PLAIN pages, hybrid-RLE definition
+    levels, chunk statistics; shards rotate through four page codecs
+    — UNCOMPRESSED / SNAPPY / GZIP / ZSTD, compressed by the native
+    libraries behind `core/compression.py` — and both data-page
+    versions, r13).  In the
     same executor the file is read back by pyarrow (the independent
     referee: values AND null placement must match the group exactly)
     and by our own reader (`core/parquetread.py` — the write/read
@@ -2845,7 +2838,7 @@ def parquet_write_nested_real(spark, sf_dir) -> DataFrame:
     just row counts.  In-executor, pyarrow (the independent referee)
     and our own ``read_record_field`` both read the bytes back and
     must reproduce every struct/list/null shape exactly; odd shards
-    compress pages with OUR snappy.
+    compress pages with SNAPPY.
 
     100 TB: identical plan shape to parquet_write_real — one shuffle
     on the shard key, Arrow-batched Python, shard count grows with
@@ -3112,7 +3105,7 @@ def parquet_write_map_real(spark, sf_dir) -> DataFrame:
     In-executor, pyarrow reads the bytes back entry-for-entry (maps
     surface as key/value tuple lists) and our own
     ``read_record_field`` must agree; shards rotate through ALL four
-    page codecs (UNCOMPRESSED / our SNAPPY / GZIP / ZSTD) and both
+    page codecs (UNCOMPRESSED / SNAPPY / GZIP / ZSTD) and both
     data-page versions (V2 every third shard), so the whole r13
     writer surface sits under the driver gate.
 
@@ -4729,7 +4722,7 @@ def ingest_robots_filter(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# gzip member stream — the warc.gz shard layout on OUR deflate
+# gzip member stream — the warc.gz shard layout
 # ---------------------------------------------------------------------------
 
 #: docs per concatenated-member shard (the few-larger-files shape,
@@ -4766,14 +4759,14 @@ _GZIP_ROW_SCHEMA = T.StructType(
 
 @register("ingest_gzip_multistream", oracle=GZIP_MEMBERS_ORACLE)
 def ingest_gzip_multistream(spark, sf_dir) -> DataFrame:
-    """Concatenated-gzip-member shards written by the from-scratch
-    deflate encoder — the Common Crawl warc.gz layout (one gzip member
-    per record, all members concatenated into one seekable file).
+    """Concatenated-gzip-member shards — the Common Crawl warc.gz
+    layout (one gzip member per record, all members concatenated into
+    one seekable file).
 
     Per shard: every document compresses to its own gzip member via
-    ``core/inflatecodec.gzip_compress`` (fixed-Huffman LZ77 or stored
-    fallback, FNAME carrying the doc id); members concatenate; then
-    TWO walks verify the shard — the member walker
+    stdlib ``gzip.GzipFile`` (zlib's deflate, FNAME carrying the doc
+    id, mtime 0); members concatenate; then TWO walks verify the
+    shard — the member walker
     ``core/inflatecodec.gzip_members`` (header fields, zlib's inflate
     per member, CRC-32 + ISIZE) must recover every payload
     byte-exactly, and stdlib gzip (the independent referee) must
@@ -4786,7 +4779,9 @@ def ingest_gzip_multistream(spark, sf_dir) -> DataFrame:
     """
     import gzip as gzip_
 
-    from ..core.inflatecodec import gzip_compress, gzip_members
+    import io
+
+    from ..core.inflatecodec import gzip_members
 
     prep(spark)
     d = (
@@ -4794,10 +4789,10 @@ def ingest_gzip_multistream(spark, sf_dir) -> DataFrame:
         .select("doc_id", "source", "text")
         .withColumn("shard_id", F.expr(f"doc_id div {GZIP_SHARD_DOCS}"))
         # EXPLICIT width on the shard exchange: the per-shard Python
-        # codec work is the dominant cost at gate scale and AQE's
-        # size-based coalescing (correct for cheap rows) would fold
-        # the tiny shuffle onto ONE task, serializing ~7 s of pure
-        # deflate onto one core.  An explicit repartition is exempt
+        # work (gzip members, the member walk, the stdlib referee) is
+        # the dominant cost at gate scale and AQE's size-based
+        # coalescing (correct for cheap rows) would fold the tiny
+        # shuffle onto ONE task.  An explicit repartition is exempt
         # from AQE coalescing and already satisfies the groupBy's
         # required distribution, so no second exchange appears.
         .repartition(
@@ -4812,10 +4807,13 @@ def ingest_gzip_multistream(spark, sf_dir) -> DataFrame:
             ("" if t is None else str(t)).encode("utf-8")
             for t in pdf["text"]
         ]
-        blob = b"".join(
-            gzip_compress(p, fname=f"{i}.txt")
-            for i, p in zip(doc_ids, payloads)
-        )
+        buf = io.BytesIO()
+        for i, p in zip(doc_ids, payloads):
+            with gzip_.GzipFile(
+                filename=f"{i}.txt", mode="wb", fileobj=buf, mtime=0
+            ) as member:
+                member.write(p)
+        blob = buf.getvalue()
         got = gzip_members(blob)
         if got != payloads:
             raise ValueError("member walk drifted from the payloads")

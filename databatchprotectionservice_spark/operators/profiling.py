@@ -734,20 +734,56 @@ def profiling_equidepth_histogram(spark, sf_dir):
     identical TOTAL order (cents value, then event_id), making the
     bucket assignment — and thus every boundary fact — exact.
 
-    100 TB shape: one global-sort window is the honest cost of exact
-    equi-depth (same exchange class as the exact median); the
-    production approximation is ``approx_percentile`` (already gated
-    in ``sketch_accuracy_battery``), and at scale a range-partitioned
-    sort keeps the window from funneling through one task.
+    100 TB shape: no window.  A range-partitioned sort over the total
+    order puts every partition's rows in global order, and
+    ``monotonically_increasing_id`` numbers them (partition id in the
+    high bits, local index in the low 33).  Per-partition counts give
+    each partition's offset, so offset + local index is the global
+    row number, and Spark's ``ntile`` is closed-form over it: the
+    first ``N % k`` buckets hold ``N // k + 1`` rows, the rest
+    ``N // k``.  The counts and offsets are one tiny aggregate; the
+    range exchange is planned once and reused.  The production
+    approximation is ``approx_percentile`` (already gated in
+    ``sketch_accuracy_battery``).
     """
-    from pyspark.sql import Window
-
     prep(spark)
     e = load_events(spark, sf_dir)
     cents = F.round(F.col("value") * 100).cast("bigint")
-    w = Window.orderBy(F.col("cents"), F.col("event_id"))
-    t = e.select(cents.alias("cents"), "event_id").withColumn(
-        "bucket", F.ntile(EQUIDEPTH_BUCKETS).over(w)
+    ranged = e.select(cents.alias("cents"), "event_id").repartitionByRange(
+        spark.sparkContext.defaultParallelism, "cents", "event_id"
+    )
+    counts = ranged.groupBy(F.spark_partition_id().alias("pid")).agg(
+        F.count(F.lit(1)).alias("n")
+    )
+    ranked = (
+        ranged.sortWithinPartitions("cents", "event_id")
+        .withColumn("mid", F.monotonically_increasing_id())
+        .select(
+            "cents",
+            F.shiftright("mid", 33).alias("pid"),
+            F.col("mid").bitwiseAND((1 << 33) - 1).alias("ix"),
+        )
+    )
+    offsets = (
+        counts.alias("a")
+        .join(counts.alias("b"), F.col("b.pid") < F.col("a.pid"), "left")
+        .groupBy(F.col("a.pid").alias("pid"))
+        .agg(F.coalesce(F.sum("b.n"), F.lit(0)).alias("off"))
+        .crossJoin(counts.agg(F.sum("n").alias("total")))
+    )
+    k = EQUIDEPTH_BUCKETS
+    # r: 0-based global row number; big: rows in the N % k larger buckets
+    t = (
+        ranked.join(F.broadcast(offsets), "pid")
+        .withColumn("r", F.col("off") + F.col("ix"))
+        .withColumn("q", F.expr(f"total div {k}"))
+        .withColumn("big", F.expr(f"(total % {k}) * (q + 1)"))
+        .selectExpr(
+            "cents",
+            "CASE WHEN r < big THEN r div (q + 1) + 1 "
+            f"ELSE total % {k} + (r - big) div greatest(q, 1) + 1 "
+            "END AS bucket",
+        )
     )
     return (
         t.groupBy("bucket")

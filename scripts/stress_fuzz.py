@@ -38,7 +38,8 @@ from databatchprotectionservice_spark.core.mp4codec import (
 from databatchprotectionservice_spark.core.avicodec import (
     AviFormatError, decode_avi_mjpeg, encode_avi_mjpeg)
 from databatchprotectionservice_spark.core.arrowipc import (
-    ArrowIpcFormatError, FieldSpec, encode_arrow_ipc, read_arrow_ipc)
+    ArrowIpcFormatError, FieldSpec, encode_arrow_ipc, encode_arrow_stream,
+    read_arrow_ipc, read_arrow_stream)
 from databatchprotectionservice_spark.core.cborcodec import (
     CborFormatError, CborTag)
 from databatchprotectionservice_spark.core.cborcodec import dumps as cbor_dumps
@@ -47,6 +48,8 @@ from databatchprotectionservice_spark.core.robotscodec import (
     is_allowed, parse_robots)
 from databatchprotectionservice_spark.core.inflatecodec import (
     InflateError, inflate_gzip, inflate_zlib)
+from databatchprotectionservice_spark.core.orcmeta import (
+    OrcFormatError, decompress_region)
 from databatchprotectionservice_spark.core.zstdmeta import (
     ZstdFormatError, parse_zstd_frames, xxh64)
 
@@ -61,6 +64,17 @@ def _zstd_checksummed_frame(content: bytes) -> bytes:
     frame[4] |= 0x04
     frame += (xxh64(content, 0) & 0xFFFFFFFF).to_bytes(4, "little")
     return bytes(frame)
+
+def _orc_lz4_region(parts) -> bytes:
+    """ORC chunk framing around raw liblz4 blocks: the frame-wrapped
+    block read, its 4 MiB cap and the region walk."""
+    import pyarrow as _pa
+
+    out = b""
+    for part in parts:
+        blk = _pa.compress(part, codec="lz4_raw", asbytes=True)
+        out += (len(blk) << 1).to_bytes(3, "little") + blk
+    return out
 
 rng = np.random.RandomState(20260815)
 img = rng.randint(0, 256, size=(9, 11, 3), dtype=np.uint8)
@@ -127,6 +141,22 @@ BASES = {
             parse_robots(bytes(b).decode("latin-1")), "bot", "/p/x"
         ),
         (),
+    ),
+    "arrow_ipc_lz4": (
+        encode_arrow_stream(
+            [FieldSpec("a", True, "int64", 64),
+             FieldSpec("s", True, "utf8", 0)],
+            [[[i % 7 for i in range(120)],
+              ["lz4 " * (i % 5) for i in range(120)]]],
+            compression="lz4",
+        ),
+        read_arrow_stream,
+        ArrowIpcFormatError,
+    ),
+    "orc_lz4": (
+        _orc_lz4_region([b"orc chunk " * 80, bytes(range(256)) * 2]),
+        lambda b: decompress_region(bytes(b), 4),
+        OrcFormatError,
     ),
     "zstd_compressed": (
         _zstd_checksummed_frame(bytes(range(256)) * 6 + b"zstd " * 100),

@@ -280,7 +280,7 @@ def test_framing_errors():
 
 def test_compressed_body_decodes():
     """Formerly the refusal test — since r11 compressed bodies decode
-    through the in-house codecs; the plain smoke case lives here,
+    through liblz4 and libzstd; the plain smoke case lives here,
     the full matrix in test_compressed_bodies_decode."""
     buf = io.BytesIO()
     opts = pa.ipc.IpcWriteOptions(compression="lz4")
@@ -1534,3 +1534,39 @@ def test_encoder_compression_corruptions_raise():
         cut[i] = 0
     with pytest.raises(DBPSInvalidInputError):
         read_arrow_ipc(bytes(cut))
+
+
+@pytest.mark.parametrize("shape", ["empty", "two_frames", "content_checksum"])
+def test_hostile_lz4_buffers_raise(shape, monkeypatch):
+    """Each lz4 buffer must be exactly one frame that decodes to its
+    declared length, with liblz4's checksums verified.  The encoder
+    lays the hostile regions out; the reader must refuse each."""
+    import struct
+
+    from databatchprotectionservice_spark.core import arrowipc
+
+    from .lz4frames import lz4_frame
+
+    def hostile(raw: bytes, compression: str) -> bytes:
+        if shape == "empty":
+            frame = b""
+        elif shape == "two_frames":
+            half = len(raw) // 2
+            frame = b"".join(
+                pa.compress(part, codec="lz4", asbytes=True)
+                for part in (raw[:half], raw[half:])
+            )
+        else:
+            frame = bytearray(lz4_frame(raw))
+            frame[-1] ^= 0x01
+        return struct.pack("<q", len(raw)) + bytes(frame)
+
+    fields = [FieldSpec("i", False, "int64", 64)]
+    vals = list(range(64)) * 4
+    assert read_arrow_ipc(
+        encode_arrow_ipc(fields, [[vals]], compression="lz4")
+    )["batches"][0]["columns"][0] == vals
+    monkeypatch.setattr(arrowipc, "_compress_body_buffer", hostile)
+    blob = encode_arrow_ipc(fields, [[vals]], compression="lz4")
+    with pytest.raises(ArrowIpcFormatError, match="lz4 buffer"):
+        read_arrow_ipc(blob)

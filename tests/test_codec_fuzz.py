@@ -10,6 +10,12 @@ JPEG fuzz tests pin in test_jpegcodec.py, applied to every codec.
 import numpy as np
 import pytest
 
+from databatchprotectionservice_spark.core.arrowipc import (
+    ArrowIpcFormatError,
+    FieldSpec,
+    encode_arrow_stream,
+    read_arrow_stream,
+)
 from databatchprotectionservice_spark.core.audiocodec import (
     AudioFormatError,
     decode_wav,
@@ -37,11 +43,26 @@ from databatchprotectionservice_spark.core.imagecodec import (
     encode_png_palette,
     encode_ppm,
 )
+from databatchprotectionservice_spark.core.orcmeta import (
+    OrcFormatError,
+    decompress_region,
+)
 from databatchprotectionservice_spark.core.videocodec import (
     VideoFormatError,
     decode_y4m,
     encode_y4m,
 )
+
+
+def _orc_lz4_region() -> bytes:
+    """Two ORC chunks of raw liblz4 blocks behind 3-byte headers."""
+    import pyarrow as pa
+
+    out = b""
+    for part in (b"orc chunk " * 40, bytes(range(200))):
+        blk = pa.compress(part, codec="lz4_raw", asbytes=True)
+        out += (len(blk) << 1).to_bytes(3, "little") + blk
+    return out
 
 
 def _bases():
@@ -90,13 +111,29 @@ def _bases():
             decode_y4m,
             VideoFormatError,
         ),
+        "arrow_lz4": (
+            encode_arrow_stream(
+                [FieldSpec("a", True, "int64", 64),
+                 FieldSpec("s", True, "utf8", 0)],
+                [[[i % 7 for i in range(60)],
+                  ["lz4 " * (i % 5) for i in range(60)]]],
+                compression="lz4",
+            ),
+            read_arrow_stream,
+            ArrowIpcFormatError,
+        ),
+        "orc_lz4": (
+            _orc_lz4_region(),
+            lambda b: decompress_region(b, 4),
+            OrcFormatError,
+        ),
     }
 
 
 @pytest.mark.parametrize(
     "fmt",
     ["png", "png_adam7", "png_palette", "bmp", "ppm", "gif", "wav",
-     "adpcm", "flac", "y4m"],
+     "adpcm", "flac", "y4m", "arrow_lz4", "orc_lz4"],
 )
 def test_mutations_decode_or_raise_domain_error(fmt):
     base, dec, err = _bases()[fmt]
@@ -114,7 +151,7 @@ def test_mutations_decode_or_raise_domain_error(fmt):
 @pytest.mark.parametrize(
     "fmt",
     ["png", "png_adam7", "png_palette", "bmp", "ppm", "gif", "wav",
-     "adpcm", "flac", "y4m"],
+     "adpcm", "flac", "y4m", "arrow_lz4", "orc_lz4"],
 )
 def test_truncations_decode_or_raise_domain_error(fmt):
     base, dec, err = _bases()[fmt]

@@ -10,6 +10,7 @@ import pytest
 from databatchprotectionservice_spark.core import compression as comp
 from databatchprotectionservice_spark.core.errors import (
     DBPSError,
+    DBPSInvalidInputError,
     DBPSUnsupportedError,
 )
 from databatchprotectionservice_spark.core.types import (
@@ -102,6 +103,23 @@ def test_sized_codecs_round_trip_with_known_size(codec):
     assert comp.decompress(ct, codec, uncompressed_size=len(data)) == data
     with pytest.raises(DBPSUnsupportedError):
         comp.decompress(ct, codec)
+
+
+@pytest.mark.parametrize(
+    "codec",
+    [CompressionCodec.LZ4_RAW, CompressionCodec.BROTLI, CompressionCodec.SNAPPY],
+    ids=lambda c: c.name,
+)
+def test_declared_size_is_exact(codec):
+    """pyarrow zero-pads a stream that decodes short of the size it is
+    given; a declared size (a parquet page header's) must match the
+    stream exactly, over or under."""
+    data = bytes(range(256)) * 133
+    ct = comp.compress(data, codec)
+    assert comp.decompress(ct, codec, len(data)) == data
+    for size in (len(data) + 100, len(data) + 1, len(data) - 1):
+        with pytest.raises(DBPSInvalidInputError):
+            comp.decompress(ct, codec, size)
 
 
 @pytest.mark.parametrize(

@@ -1,5 +1,4 @@
-"""DEFLATE/zlib/gzip decode (zlib behind our container walks) and
-the from-scratch encoder, with stdlib zlib as the referee.
+"""DEFLATE/zlib/gzip decode: zlib behind our container walks.
 
 Every stream CPython's zlib emits (all levels: stored, fixed and
 dynamic blocks; sparse, low-entropy and repetitive payloads) must
@@ -23,6 +22,7 @@ from databatchprotectionservice_spark.core.inflatecodec import (
     InflateError,
     adler32,
     crc32,
+    gzip_members,
     inflate_gzip,
     inflate_raw,
     inflate_zlib,
@@ -175,20 +175,22 @@ def test_mutation_battery():
 
 
 # ---------------------------------------------------------------------------
-# Encode direction: fixed-Huffman DEFLATE + wrappers; stdlib zlib is
-# the decode REFEREE (it must read our streams byte-exact).
+# The production writers' streams: stdlib zlib and gzip encode, and
+# the walks above must read every shape they emit.
 # ---------------------------------------------------------------------------
 
-from databatchprotectionservice_spark.core.inflatecodec import (  # noqa: E402
-    deflate,
-    deflate_fixed,
-    deflate_stored,
-    gzip_compress,
-    zlib_compress,
-)
+
+def _gzip_member(p: bytes, fname: str) -> bytes:
+    """One member as ``ingest_gzip_multistream`` writes it."""
+    buf = io.BytesIO()
+    with gzip.GzipFile(filename=fname, mode="wb", fileobj=buf, mtime=0) as f:
+        f.write(p)
+    return buf.getvalue()
 
 
 def test_encoder_zlib_referee_matrix():
+    """zlib, raw DEFLATE and FNAME-carrying gzip members across
+    random, text-like and periodic payloads."""
     rng = random.Random(61)
     for trial in range(60):
         n = rng.randrange(0, 5000)
@@ -200,45 +202,36 @@ def test_encoder_zlib_referee_matrix():
         else:
             u = bytes(rng.randrange(256) for _ in range(rng.randrange(1, 25)))
             p = (u * (n // max(len(u), 1) + 1))[:n]
-        raw = deflate(p)
-        assert zlib.decompress(raw, -15) == p
-        assert inflate_raw(raw)[0] == p
-        assert zlib.decompress(zlib_compress(p)) == p
-        assert inflate_zlib(zlib_compress(p)) == p
-        assert gzip.decompress(gzip_compress(p, fname="t.bin")) == p
-        assert inflate_gzip(gzip_compress(p)) == p
-
-
-def test_encoder_compresses_and_falls_back():
-    repetitive = b"spark " * 2000
-    assert len(deflate_fixed(repetitive)) < len(repetitive) // 50
-    rnd = bytes(random.Random(1).randrange(256) for _ in range(4000))
-    # incompressible input: deflate() picks stored, still referee-clean
-    raw = deflate(rnd)
-    assert len(raw) <= len(deflate_fixed(rnd))
-    assert zlib.decompress(raw, -15) == rnd
+        co = zlib.compressobj(6, zlib.DEFLATED, -15)
+        raw = co.compress(p) + co.flush()
+        assert inflate_raw(raw) == (p, len(raw))
+        assert inflate_zlib(zlib.compress(p)) == p
+        member = _gzip_member(p, "t.bin")
+        assert member[3] & 0x08  # FNAME
+        assert inflate_gzip(member) == p
+        assert gzip_members(member + _gzip_member(p[:7], "u")) == [p, p[:7]]
 
 
 def test_encoder_long_matches_and_window_edge():
-    # a match at exactly the 258 cap and repeats far apart
+    # matches at the 258 cap and repeats farther apart than the window
     p = b"A" * 1000 + b"B" * 40000 + b"A" * 1000
-    raw = deflate_fixed(p)
-    assert zlib.decompress(raw, -15) == p
+    co = zlib.compressobj(9, zlib.DEFLATED, -15)
+    raw = co.compress(p) + co.flush()
     assert inflate_raw(raw)[0] == p
 
 
 def test_encoder_multi_chunk_stored():
     p = bytes(random.Random(2).randrange(256) for _ in range(70000))
-    raw = deflate_stored(p)  # two stored blocks (0xFFFF cap)
-    assert zlib.decompress(raw, -15) == p
-    assert inflate_raw(raw)[0] == p
+    co = zlib.compressobj(0, zlib.DEFLATED, -15)
+    raw = co.compress(p) + co.flush()  # level 0: stored blocks only
+    assert raw[0] & 0x06 == 0 and len(raw) > len(p)
+    assert inflate_raw(raw) == (p, len(raw))
 
 
 # ---------------------------------------------------------------------------
 # Cross-validation against the engine's OWN production byte paths:
-# the spec twin must decode the zlib/deflate streams the PNG, ZIP and
-# Avro codecs actually emit (and, for ZIP, streams our encoder emits
-# must be readable back through the production walk).
+# the walks must decode the zlib/deflate streams the PNG, ZIP and
+# Avro codecs actually emit.
 # ---------------------------------------------------------------------------
 
 
@@ -312,98 +305,27 @@ def test_decodes_avro_deflate_block():
     assert inflate_raw(raw)[0] == zlib.decompress(raw, -15)
 
 
-def test_zip_walk_reads_our_deflate():
-    """Invert the referee: hand the production ZIP walk a member whose
-    deflate stream came from OUR encoder."""
-    from databatchprotectionservice_spark.core.inflatecodec import (
-        deflate as our_deflate,
-    )
-    from databatchprotectionservice_spark.core.zipcodec import parse_zip
-
-    payload = b"our deflate inside a zip " * 40
-    raw = our_deflate(payload)
-    crc = zlib.crc32(payload) & 0xFFFFFFFF
-    name = b"ours.bin"
-    local = (
-        b"PK\x03\x04" + struct.pack("<HHHHH", 20, 0, 8, 0, 0)
-        + struct.pack("<IIIHH", crc, len(raw), len(payload), len(name), 0)
-        + name + raw
-    )
-    central = (
-        b"PK\x01\x02"
-        + struct.pack("<HHHHHH", 20, 20, 0, 8, 0, 0)   # versions..date
-        + struct.pack("<III", crc, len(raw), len(payload))
-        + struct.pack("<HHH", len(name), 0, 0)          # n/e/c lens
-        + struct.pack("<HH", 0, 0)                      # disk, iattr
-        + struct.pack("<II", 0, 0)                      # eattr, offset
-        + name
-    )
-    eocd = (
-        b"PK\x05\x06" + struct.pack("<HHHHIIH", 0, 0, 1, 1,
-                                     len(central), len(local), 0)
-    )
-    blob = local + central + eocd
-    m = parse_zip(blob)[0]
-    assert m["name"] == "ours.bin"
-    assert m["data"] == payload  # the production walk inflated OUR stream
-
-
 def test_dynamic_huffman_encoder_referee():
-    from databatchprotectionservice_spark.core.inflatecodec import (
-        deflate_dynamic,
-    )
-
+    """zlib's Huffman-only and RLE strategies emit dynamic blocks with
+    no or distance-1 matches, down to 1-2 symbol alphabets."""
     rng = random.Random(67)
     for trial in range(50):
         n = rng.randrange(0, 5000)
-        kind = trial % 4
-        if kind == 0:
-            p = bytes(rng.randrange(256) for _ in range(n))
-        elif kind == 1:
+        if trial % 2:
             p = bytes(rng.choice(b"hello world ") for _ in range(n))
-        elif kind == 2:
-            u = bytes(
-                rng.randrange(256) for _ in range(rng.randrange(1, 25))
-            )
-            p = (u * (n // max(len(u), 1) + 1))[:n]
         else:
             p = bytes([rng.choice(b"ab")]) * n  # 1-2 symbol extremes
-        raw = deflate_dynamic(p)
-        assert zlib.decompress(raw, -15) == p
-        assert inflate_raw(raw)[0] == p
-
-
-def test_dynamic_beats_fixed_on_text():
-    from databatchprotectionservice_spark.core.inflatecodec import (
-        deflate_dynamic,
-    )
-
-    p = b"the quick brown fox jumps over the lazy dog " * 300
-    d, f = len(deflate_dynamic(p)), len(deflate_fixed(p))
-    z = len(zlib.compress(p, 6)) - 6  # strip zlib header+adler
-    assert d < f
-    assert d < 1.25 * z  # within 25% of zlib's raw stream
-
-
-def test_deflate_elects_smallest_block_type():
-    text = b"spark table query value " * 800
-    rnd = bytes(random.Random(4).randrange(256) for _ in range(3000))
-    from databatchprotectionservice_spark.core.inflatecodec import (
-        deflate_dynamic,
-    )
-
-    assert len(deflate(text)) == len(deflate_dynamic(text))
-    assert len(deflate(rnd)) <= len(deflate_stored(rnd))
-    for p in (text, rnd, b"", b"x"):
-        assert zlib.decompress(deflate(p), -15) == p
-        assert inflate_raw(deflate(p))[0] == p
+        for strategy in (zlib.Z_HUFFMAN_ONLY, zlib.Z_RLE):
+            co = zlib.compressobj(9, zlib.DEFLATED, -15, 9, strategy)
+            raw = co.compress(p) + co.flush()
+            assert inflate_raw(raw)[0] == p
 
 
 def test_gzip_trailing_garbage_rejected():
-    """ADVICE r9 (low): inflate_gzip is the single-member strict entry
-    point — bytes after the CRC32/ISIZE trailer are an error, exactly as
+    """inflate_gzip is the single-member strict entry point — bytes
+    after the CRC32/ISIZE trailer are an error, exactly as
     gzip_members treats a malformed second member."""
-    blob = gzip_compress(b"strict single member")
+    blob = gzip.compress(b"strict single member")
     assert inflate_gzip(blob) == b"strict single member"
     with pytest.raises(InflateError):
         inflate_gzip(blob + b"\x00")

@@ -131,7 +131,7 @@ def test_unsupported_codec_is_named_seam():
 
 def test_lz4_and_zstd_chunks_inflate():
     """LZ4 chunks are raw lz4 blocks, ZSTD chunks complete frames —
-    both round-trip through the in-house codecs, cross-checked by
+    both round-trip through liblz4 and libzstd, cross-checked by
     parsing real pyarrow-written ORC files."""
     import pyarrow as pa
 
@@ -202,3 +202,20 @@ def test_mutation_battery():
         except (UnicodeDecodeError, MemoryError, KeyError,
                 TypeError, AttributeError, OverflowError) as e:
             pytest.fail(f"non-domain error escaped: {type(e).__name__} {e}")
+
+
+def test_hostile_lz4_chunks_raise():
+    """An ORC LZ4 chunk declares no size: a truncated block, an empty
+    one and one that decodes past the 4 MiB block cap all raise."""
+    def region(chunk: bytes) -> bytes:
+        return (len(chunk) << 1).to_bytes(3, "little") + chunk
+
+    raw = b"orc lz4 chunk " * 300
+    block = pa.compress(raw, codec="lz4_raw", asbytes=True)
+    assert decompress_region(region(block), 4) == raw
+    for bad in (block[:-1], block[: len(block) // 2], b""):
+        with pytest.raises(OrcFormatError):
+            decompress_region(region(bad), 4)
+    big = pa.compress(bytes((4 << 20) + 1), codec="lz4_raw", asbytes=True)
+    with pytest.raises(OrcFormatError):
+        decompress_region(region(big), 4)

@@ -212,3 +212,32 @@ def test_mutation_battery():
             _pt.fail(
                 f"non-domain error escaped: {type(e).__name__} {e}"
             )
+
+
+@pytest.mark.parametrize("codec", ["LZ4_RAW", "LZ4"])
+def test_over_declared_lz4_pages_raise(codec):
+    """liblz4 leaves an over-declared page short (pyarrow zero-pads
+    it); the page inflate must refuse it, for LZ4_RAW pages and for
+    hadoop-LZ4 chunks whose own header over-declares."""
+    from databatchprotectionservice_spark.core.parquetmeta import walk_pages
+    from databatchprotectionservice_spark.core.parquetread import _inflate
+    from databatchprotectionservice_spark.core.parquetwrite import (
+        write_parquet,
+    )
+    from databatchprotectionservice_spark.core.types import CompressionCodec
+
+    vals = list(range(3000))
+    blob = write_parquet({"k": vals}, {"k": "INT64"}, codec=codec)
+    meta = parse_footer(blob)
+    col = meta["row_groups"][0]["columns"][0]
+    leaf = leaf_elements(meta["schema"])[0][0]
+    assert read_column(blob, col, leaf) == vals
+    for page in walk_pages(blob, col):
+        at = page["data_offset"]
+        body = blob[at : at + page["compressed_page_size"]]
+        size = page["uncompressed_page_size"]
+        if codec == "LZ4":  # the chunk header declares 64 bytes more
+            want = int.from_bytes(body[:4], "big") + 64
+            body = want.to_bytes(4, "big") + body[4:]
+        with pytest.raises(ParquetReadError):
+            _inflate(body, CompressionCodec[codec], size + 64)

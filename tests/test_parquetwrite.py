@@ -1,8 +1,8 @@
 """Parquet writer (core/parquetwrite.py).
 
 Four independent referees must read our files: pyarrow, DuckDB,
-Spark, and our own reader — across codecs (including pages
-compressed by OUR snappy), null patterns, and every supported type.
+Spark, and our own reader — across codecs, null patterns, and every
+supported type.
 """
 
 import io
@@ -974,8 +974,7 @@ def test_data_page_version_validated():
 
 
 def test_lz4_raw_pages_three_referees(tmp_path):
-    """r14: LZ4_RAW (codec 7, raw blocks by OUR core/lz4codec
-    encoder) page bodies — pyarrow, DuckDB and our own reader all
+    """r14: LZ4_RAW (codec 7, raw liblz4 blocks) page bodies — pyarrow, DuckDB and our own reader all
     recover the values, both data-page versions, dict and plain."""
     import duckdb
 
@@ -1306,8 +1305,7 @@ def test_brotli_codec_pyarrow_and_own_reader():
 
 def test_lz4_hadoop_codec_roundtrip_and_pyarrow():
     """Parquet codec 5 (legacy hadoop-framed LZ4): our writer frames
-    pages as [u32be raw][u32be comp][LZ4 block] by the from-scratch
-    block codec; our reader and pyarrow's Lz4HadoopCodec both decode
+    pages as [u32be raw][u32be comp][liblz4 block]; our reader and pyarrow's Lz4HadoopCodec both decode
     (pyarrow 16 cannot WRITE codec 5 — its "lz4" maps to LZ4_RAW —
     so the reverse direction is pinned against Spark's writer in
     test_lz4_hadoop_spark_interop)."""

@@ -595,17 +595,22 @@ def test_cube_is_single_expand_single_scan(spark, sf_dir):
     assert n_hash == 1, plan
 
 
-def test_equidepth_single_window_over_total_order(spark, sf_dir):
-    """Exact equi-depth pays exactly one global-sort window (the
-    exact-median exchange class) and nothing else shuffles before the
-    bucket aggregate."""
+def test_equidepth_one_range_exchange_no_window(spark, sf_dir):
+    """Exact equi-depth without a single-partition window: one range
+    exchange over the total order (cents, event_id), which the
+    per-partition counts reuse, and no Window or Cartesian product."""
     from databatchprotectionservice_spark.operators.profiling import (
         profiling_equidepth_histogram,
     )
 
     plan = _plan(profiling_equidepth_histogram(spark, sf_dir))
-    assert plan.count("Window") == 1, plan
-    assert "ntile" in plan
+    ranged = [
+        ln for ln in plan.splitlines()
+        if "Exchange rangepartitioning(cents" in ln
+    ]
+    assert sum("ReusedExchange" not in ln for ln in ranged) == 1, plan
+    assert any("ReusedExchange" in ln for ln in ranged), plan
+    assert "Window" not in plan
     assert "CartesianProduct" not in plan
 
 

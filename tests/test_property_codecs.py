@@ -3,10 +3,8 @@
 Extends the reference-style exhaustive-roundtrip discipline
 (``test_property_roundtrip.py``) to the container/serialization
 codecs staged this round: for ARBITRARY generated values, the decode
-of an encode is the identity — including every compression twin the
-codec family owns (our LZ4 vs real liblz4 via pyarrow both
-directions per example, our snappy encoder through the C++ snappy
-decode path).
+of an encode is the identity — including the LZ4 and snappy read
+paths over liblz4's and C++ snappy's output.
 """
 
 import pyarrow as pa
@@ -24,12 +22,14 @@ from databatchprotectionservice_spark.core.bits import (
     zigzag_decode,
     zigzag_encode,
 )
-from databatchprotectionservice_spark.core.compression import decompress
+from databatchprotectionservice_spark.core.compression import (
+    compress,
+    decompress,
+)
 from databatchprotectionservice_spark.core.lz4codec import (
-    lz4_block_compress,
-    lz4_block_decompress,
-    lz4_frame_compress,
-    lz4_frame_decompress,
+    Lz4FormatError,
+    read_lz4_block,
+    read_lz4_frame,
 )
 from databatchprotectionservice_spark.core.msgpackcodec import (
     Timestamp,
@@ -38,7 +38,6 @@ from databatchprotectionservice_spark.core.msgpackcodec import (
 )
 from databatchprotectionservice_spark.core.orcread import _ByteCursor
 from databatchprotectionservice_spark.core.pagecodec import read_uleb128
-from databatchprotectionservice_spark.core.snappycodec import snappy_compress
 from databatchprotectionservice_spark.core.tfexample import (
     make_example,
     parse_example,
@@ -69,32 +68,29 @@ blobs = st.binary(max_size=2000) | st.builds(
 @settings(max_examples=80, deadline=None)
 @given(data=blobs)
 def test_lz4_block_inverts_and_interops(data):
-    ours = lz4_block_compress(data)
-    assert lz4_block_decompress(ours) == data
-    assert pa.decompress(
-        ours, decompressed_size=len(data), codec="lz4_raw", asbytes=True
-    ) == data
-    assert lz4_block_decompress(
-        pa.compress(data, codec="lz4_raw", asbytes=True)
-    ) == data
+    """Both raw-block reads: with a declared size (parquet), without
+    one (ORC)."""
+    block = compress(data, CompressionCodec.LZ4_RAW)
+    assert decompress(block, CompressionCodec.LZ4_RAW, len(data)) == data
+    assert read_lz4_block(block) == data
 
 
 @settings(max_examples=60, deadline=None)
-@given(data=blobs, bc=st.booleans(), store=st.booleans())
-def test_lz4_frame_inverts(data, bc, store):
-    fr = lz4_frame_compress(
-        data, block_checksum=bc, store_uncompressed=store
-    )
-    assert lz4_frame_decompress(fr)["content"] == data
-    assert pa.decompress(
-        fr, decompressed_size=len(data), codec="lz4", asbytes=True
-    ) == data
+@given(data=blobs, cut=st.integers(1, 8))
+def test_lz4_frame_inverts(data, cut):
+    """liblz4's frames read back exactly; a cut frame or a second frame
+    behind the first raises."""
+    fr = pa.compress(data, codec="lz4", asbytes=True)
+    assert read_lz4_frame(fr, len(data)) == data
+    for bad, want in ((fr[:-cut], len(data)), (fr + fr, 2 * len(data))):
+        with pytest.raises(Lz4FormatError):
+            read_lz4_frame(bad, want)
 
 
 @settings(max_examples=80, deadline=None)
 @given(data=blobs)
 def test_snappy_inverts_and_interops(data):
-    ours = snappy_compress(data)
+    ours = compress(data, CompressionCodec.SNAPPY)
     assert _decode_snappy(ours) == data
     assert pa.decompress(
         ours, decompressed_size=len(data), codec="snappy", asbytes=True

@@ -1,5 +1,5 @@
-"""Snappy raw blocks: the encoder (core/snappycodec.py) and the
-decode path (``core/compression.decompress``, pyarrow's C++ snappy).
+"""Snappy raw blocks through ``core/compression.py`` (C++ snappy in
+both directions).
 
 Pinned: hand-assembled elements from the format description (every
 literal length escape, all three copy tags, overlap replication),
@@ -13,11 +13,14 @@ import random
 import pyarrow as pa
 import pytest
 
-from databatchprotectionservice_spark.core.compression import decompress
+from databatchprotectionservice_spark.core.bits import uleb128
+from databatchprotectionservice_spark.core.compression import (
+    compress,
+    decompress,
+)
 from databatchprotectionservice_spark.core.errors import (
     DBPSInvalidInputError,
 )
-from databatchprotectionservice_spark.core.snappycodec import snappy_compress
 from databatchprotectionservice_spark.core.types import CompressionCodec
 
 
@@ -43,10 +46,20 @@ def test_hand_assembled_elements():
     assert _decode_snappy(wire) == b"xyz" + b"xyzxy"
 
 
+def _literal(body: bytes) -> bytes:
+    """One literal element: lengths up to 60 in the tag, longer ones
+    in 1-4 little-endian bytes behind tags 60-63."""
+    n = len(body) - 1
+    if n < 60:
+        return bytes([n << 2]) + body
+    width = (n.bit_length() + 7) // 8
+    return bytes([(59 + width) << 2]) + n.to_bytes(width, "little") + body
+
+
 def test_literal_length_escapes():
     for lit in [59, 60, 61, 255, 256, 70000]:
         body = bytes((i * 3) & 0xFF for i in range(lit))
-        wire = snappy_compress(body)
+        wire = uleb128(lit) + _literal(body)
         assert _decode_snappy(wire) == body
         assert pa.decompress(
             wire, decompressed_size=lit, codec="snappy", asbytes=True
@@ -66,7 +79,7 @@ def test_literal_length_escapes():
     ids=["empty", "one", "rle", "text", "spread", "zeros"],
 )
 def test_interop_both_directions(data):
-    ours = snappy_compress(data)
+    ours = compress(data, CompressionCodec.SNAPPY)
     assert _decode_snappy(ours) == data
     assert pa.decompress(
         ours, decompressed_size=len(data), codec="snappy", asbytes=True
@@ -83,15 +96,13 @@ def test_randomized_roundtrip():
         data = b"-".join(
             rng.choice(words) for _ in range(rng.randrange(0, 250))
         )
-        assert _decode_snappy(snappy_compress(data)) == data
+        assert _decode_snappy(compress(data, CompressionCodec.SNAPPY)) == data
 
 
 def test_compression_module_cross_validation():
-    """The page path's compressor and this encoder are interchangeable
-    on a real page payload (documents column bytes)."""
+    """The page path's compressor and pyarrow's snappy are
+    interchangeable on a real page payload (documents column bytes)."""
     import pyarrow.parquet as pq
-
-    from databatchprotectionservice_spark.core.compression import compress
 
     t = pq.read_table(
         "/root/testdata/sf0.001/documents.parquet", columns=["text"]
@@ -101,8 +112,8 @@ def test_compression_module_cross_validation():
     )
     via_module = compress(payload, CompressionCodec.SNAPPY)
     assert _decode_snappy(via_module) == payload
-    ours = snappy_compress(payload)
-    assert decompress(ours, CompressionCodec.SNAPPY) == payload
+    theirs = pa.compress(payload, codec="snappy", asbytes=True)
+    assert decompress(theirs, CompressionCodec.SNAPPY) == payload
 
 
 def test_length_contract_and_errors():
@@ -124,7 +135,9 @@ def test_length_contract_and_errors():
 
 def test_mutation_battery():
     rng = random.Random(113)
-    wire = snappy_compress((b"mutate me " * 80) + bytes(range(200)))
+    wire = compress(
+        (b"mutate me " * 80) + bytes(range(200)), CompressionCodec.SNAPPY
+    )
     for _ in range(3000):
         b = bytearray(wire)
         for _ in range(rng.randint(1, 4)):
