@@ -145,8 +145,6 @@ class LocalProtectionAgent:
             compression=self.compression_type,
             encoding=encoding,
             encryptor_name=self.encryptor_name,
-            user_id=self.user_id,
-            application_context=self.app_context,
         )
 
     def encrypt(

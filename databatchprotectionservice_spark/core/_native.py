@@ -1,21 +1,20 @@
-"""Optional C fast path for the per-value hot loops.
+"""The C helper behind the per-value hot loops.
 
 Some loops cannot be fully vectorized in numpy, because each step
 depends on the previous one (the parquet PLAIN ``[u32 len][bytes]``
 walk), because the access pattern is per-element ragged (the
-variable-width keystream XOR), or because the numpy form needs
-per-byte index maps (the batched AES-SIV block layout). The reference
-runs such loops at C speed (``parquet_utils.cpp``,
-``basic_xor_encryptor.cpp``); this module closes that gap by compiling
-a small C helper with the system compiler at first import and binding
-it via ctypes. It only moves bytes: AES stays in ``cryptography``.
+variable-width keystream XOR), or because the layout needs per-byte
+index maps (the batched AES-SIV blocks). The reference runs such loops
+in C++ (``parquet_utils.cpp``, ``basic_xor_encryptor.cpp``); this
+module compiles a small C helper with the system compiler at first
+import and binds it via ctypes. It only moves bytes: AES stays in
+``cryptography``.
 
-Strictly optional: if no compiler exists (or ``DBPS_NATIVE=0``), ``LIB``
-is ``None``, ``UNAVAILABLE`` says why, and callers keep their pure-numpy
-paths — same results, verified by the same tests. A failed build warns
-once per process; ``DBPS_NATIVE=0`` stays quiet. The .so is cached per
-source-hash in the temp dir, so compilation happens once per machine,
-not per executor process.
+Required, like the reference's own C++ build: importing this module
+raises ``RuntimeError`` naming each compiler's failure when none of
+``cc``, ``gcc`` and ``clang`` builds the helper. There is no slower
+fallback. The .so is cached per source-hash in the temp dir, so
+compilation happens once per machine, not per executor process.
 """
 
 from __future__ import annotations
@@ -26,7 +25,6 @@ import hashlib
 import os
 import subprocess
 import tempfile
-import warnings
 
 import numpy as np
 
@@ -36,8 +34,8 @@ _C_SOURCE = r"""
 
 /* Parse `count` back-to-back [u32le len][bytes] records.
    Returns 0 ok / 1 truncated length prefix / 2 truncated element /
-   3 trailing bytes — mirroring the numpy implementation's error order
-   (prefix check per record; element overrun detected by final cursor).
+   3 trailing bytes (prefix check per record; element overrun detected
+   by the final cursor).
    On success fills `flat` (size-4*count bytes) and `offsets` (count+1). */
 int dbps_parse_plain(const uint8_t* src, int64_t size, int64_t count,
                      uint8_t* flat, int64_t* offsets) {
@@ -49,11 +47,11 @@ int dbps_parse_plain(const uint8_t* src, int64_t size, int64_t count,
         memcpy(&n, src + pos, 4);
         pos += 4 + (int64_t)n;
         offsets[i + 1] = offsets[i] + (int64_t)n;
-        /* early classify on overrun: the numpy walk reports a truncated
-           length prefix when a LATER record's prefix lands past the end,
-           and a truncated element only when the overrun is the final
-           record; bailing here also bounds pos/offsets against int64
-           overflow on adversarial counts */
+        /* early classify on overrun: a truncated length prefix when a
+           LATER record's prefix lands past the end, a truncated element
+           only when the overrun is the final record; bailing here also
+           bounds pos/offsets against int64 overflow on adversarial
+           counts */
         if (pos > size) return (i == count - 1) ? 2 : 1;
     }
     if (pos < size) return 3;
@@ -413,26 +411,8 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
     return lib
 
 
-def _load() -> tuple[ctypes.CDLL | None, str | None]:
-    """(library, why it is missing). ``DBPS_NATIVE=0`` switches the
-    helper off quietly; any other failure warns once, because every
-    caller then runs its slower numpy path."""
-    if os.environ.get("DBPS_NATIVE", "1") == "0":
-        return None, "switched off by DBPS_NATIVE=0"
-    try:
-        return _bind(ctypes.CDLL(_build())), None
-    except (OSError, RuntimeError) as e:
-        reason = f"{type(e).__name__}: {e}"
-        warnings.warn(
-            f"dbps native helper unavailable, using the numpy paths: {reason}",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return None, reason
-
-
-#: the compiled helper, or None when unavailable (then UNAVAILABLE says why)
-LIB, UNAVAILABLE = _load()
+#: the compiled helper; importing this module fails without it
+LIB = _bind(ctypes.CDLL(_build()))
 
 
 def _u8(a: np.ndarray) -> _U8P:

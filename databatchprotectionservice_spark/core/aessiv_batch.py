@@ -15,26 +15,14 @@ RFC 5297 directly over AES-ECB, which IS batchable:
 
 The byte layout around those AES calls (padded S2V blocks, each
 round's gather and scatter, counter blocks, writing IV and body into
-the output) runs in the C helper (``core/_native.py``) whenever it is
-loaded. Without a compiler the numpy layout below does the same work:
-
-* **uniform width** (every element the same length — all fixed-width
-  types, and same-length string batches): pure 2D reshapes, no ragged
-  index maps at all;
-* **ragged**: the block-aligned scatter/gather maps are built once per
-  batch and shared between S2V and CTR (their per-element block counts
-  coincide for non-empty elements).
-
-In the native layout an element of more than ``MAX_BATCH_BLOCKS``
-blocks takes one scalar ``AESSIV`` call instead, so the number of CBC
-rounds per batch stays bounded however skewed the lengths are. The
-numpy layout has no such split: ``AesSivEncryptor`` sends a batch
-whose longest element has more blocks than the batch has elements to
-its scalar loop.
+the output) runs in the C helper (``core/_native.py``). An element of
+more than ``MAX_BATCH_BLOCKS`` blocks takes one scalar ``AESSIV`` call
+instead, so the number of CBC rounds per batch stays bounded however
+skewed the lengths are; ``scalar=True`` sends every element there.
 
 Output is byte-identical to
 ``cryptography.hazmat.primitives.ciphers.aead.AESSIV`` (pinned by
-tests/test_aessiv_batch.py against random vectors on both layouts),
+tests/test_aessiv_batch.py against random vectors on both routes),
 because RFC 5297 is fully deterministic.
 
 Scalar reference: mirrors the semantics of the reference's pluggable
@@ -50,13 +38,13 @@ from . import _native
 from .errors import DBPSInvalidInputError
 
 _BS = 16  # AES block size
-#: native layout: elements with more body blocks than this take the
-#: scalar AESSIV call. A CBC round costs about as much as one scalar call
-#: (both ~5 us on a 4-core x86 VM) however few chains it carries, so a
-#: lone long element is cheaper alone. Measured there: a lower cap sends
-#: bulk 64-1024 B strings to the 2x slower scalar call (16,384 cells:
-#: 29 ms at 64, 58 ms at 32), a higher one gains at most ~25% on bulk
-#: 1-4 KiB strings, where AES itself dominates.
+#: elements with more body blocks than this take the scalar AESSIV call.
+#: A CBC round costs about as much as one scalar call (both ~5 us on a
+#: 4-core x86 VM) however few chains it carries, so a lone long element
+#: is cheaper alone. Measured there: a lower cap sends bulk 64-1024 B
+#: strings to the 2x slower scalar call (16,384 cells: 29 ms at 64,
+#: 58 ms at 32), a higher one gains at most ~25% on bulk 1-4 KiB
+#: strings, where AES itself dominates.
 MAX_BATCH_BLOCKS = 64
 _MAX_BODY = MAX_BATCH_BLOCKS * _BS
 
@@ -80,47 +68,6 @@ _AUTH_FAIL = (
 )
 
 
-def _ragged_positions(
-    shift: np.ndarray, lens: np.ndarray, total: int
-) -> np.ndarray:
-    """``np.repeat(shift, lens) + np.arange(total)``, repeat-free:
-    within an element positions step by 1, at each boundary they jump
-    by the shift delta — one boundary scatter + one cumsum. int32 and
-    calloc throughout: the repeat kernel and filled 8-byte-per-payload-
-    byte allocations dominate the batch-SIV bookkeeping otherwise (an
-    Arrow batch is always < 2^31 bytes, so int32 indexes it)."""
-    out = np.zeros(total, dtype=np.int32)
-    if total == 0:
-        return out
-    nz = lens > 0
-    if not nz.all():
-        shift, lens = shift[nz], lens[nz]
-    starts = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=starts[1:])
-    # piecewise-constant expansion of shift (boundary-scatter + cumsum),
-    # then the per-byte arange on top
-    out[0] = shift[0]
-    if len(shift) > 1:
-        out[starts[1:]] = np.diff(shift).astype(np.int32)
-    np.cumsum(out, out=out)
-    out += np.arange(total, dtype=np.int32)
-    return out
-
-
-def _block_index_maps(
-    n_blocks: np.ndarray, bstarts: np.ndarray, total_blocks: int
-) -> tuple[np.ndarray, np.ndarray]:
-    """(element index, within-element block index) per global block —
-    ``repeat(arange(n), n_blocks)`` and ``arange(total) - bstarts[rep]``
-    built repeat-free (n_blocks is always >= 1 per element)."""
-    rep = np.zeros(total_blocks, dtype=np.int32)
-    if total_blocks:
-        rep[bstarts[1:]] = 1
-        np.cumsum(rep, out=rep)
-    t = np.arange(total_blocks, dtype=np.int32) - bstarts.astype(np.int32)[rep]
-    return rep, t
-
-
 class BatchSIV:
     """Vectorized AES-SIV over Arrow-layout batches (flat uint8 + int64
     offsets). One instance per (key, associated-data) pair; the S2V
@@ -137,29 +84,25 @@ class BatchSIV:
         from cryptography.hazmat.primitives.ciphers.aead import AESSIV
 
         self._ad = ad
-        self._aead = AESSIV(key)  # elements past MAX_BATCH_BLOCKS
+        self._aead = AESSIV(key)  # the scalar call
         # RFC 5297: first half is the S2V (CMAC) key, second the CTR key
         self._mac = Cipher(algorithms.AES(key[:_BS]), modes.ECB()).encryptor()
         self._ctr = Cipher(algorithms.AES(key[_BS:]), modes.ECB()).encryptor()
         # CMAC subkeys
         zero = b"\x00" * _BS
-        self._k1 = np.frombuffer(_dbl(self._mac.update(zero)), np.uint8)
-        self._k2 = np.frombuffer(_dbl(self._k1.tobytes()), np.uint8)
+        self._k1 = _dbl(self._mac.update(zero))
+        self._k2 = _dbl(self._k1)
         # S2V accumulator after the AD: D = dbl(CMAC(0^16)) ^ CMAC(ad)
         d = _dbl(self._cmac_scalar(zero))
-        self._d_ad = np.frombuffer(
-            bytes(a ^ b for a, b in zip(d, self._cmac_scalar(ad))),
-            dtype=np.uint8,
-        )
-        self._d_ad_dbl = np.frombuffer(_dbl(self._d_ad.tobytes()), np.uint8)
-        # the native layout's S2V constants, in dbps_siv_s2v_blocks order
-        self._consts = np.concatenate(
-            [self._d_ad, self._d_ad_dbl, self._k1, self._k2]
+        d_ad = bytes(a ^ b for a, b in zip(d, self._cmac_scalar(ad)))
+        # the S2V constants in dbps_siv_s2v_blocks order
+        self._consts = np.frombuffer(
+            d_ad + _dbl(d_ad) + self._k1 + self._k2, np.uint8
         )
 
     # -- scalar CMAC (setup constants only; data path is batched) ------
     def _cmac_scalar(self, msg: bytes) -> bytes:
-        k1, k2 = self._k1.tobytes(), self._k2.tobytes()
+        k1, k2 = self._k1, self._k2
         if len(msg) % _BS == 0 and msg:
             last = bytes(a ^ b for a, b in zip(msg[-_BS:], k1))
             body = msg[:-_BS]
@@ -174,179 +117,16 @@ class BatchSIV:
             )
         return self._mac.update(bytes(a ^ c for a, c in zip(x, last)))
 
-    # -- uniform-width kernels (pure 2D, no ragged maps) ---------------
-    def _s2v_uniform(self, flat: np.ndarray, n: int, w: int) -> np.ndarray:
-        """S2V of n elements of identical width w >= 0."""
-        tw = max(w, _BS)  # short elements pad to one block
-        nb = -(-tw // _BS)
-        blocks = np.zeros((n, nb * _BS), dtype=np.uint8)
-        if w:
-            blocks[:, :w] = flat.reshape(n, w)
-        if w < _BS:
-            # T = dbl(D_ad) ^ pad(P): one complete block
-            blocks[:, w] = 0x80
-            blocks[:, :_BS] ^= self._d_ad_dbl
-        else:
-            # T = P xorend D_ad
-            blocks[:, w - _BS : w] ^= self._d_ad
-        # CMAC finalization on the last block
-        if tw % _BS == 0:
-            blocks[:, (nb - 1) * _BS :] ^= self._k1
-        else:
-            blocks[:, tw] = 0x80
-            blocks[:, (nb - 1) * _BS :] ^= self._k2
-        x = np.zeros((n, _BS), dtype=np.uint8)
-        for j in range(nb):
-            inp = x ^ blocks[:, j * _BS : (j + 1) * _BS]
-            x = np.frombuffer(
-                self._mac.update(inp.tobytes()), np.uint8
-            ).reshape(n, _BS)
-        return x
-
-    def _ctr_xor_uniform(
-        self, sivs: np.ndarray, flat: np.ndarray, n: int, w: int
-    ) -> np.ndarray:
-        if w == 0:
-            return flat.copy()
-        hi, lo = self._q_words(sivs)
-        nb = -(-w // _BS)
-        t = np.arange(nb, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            lo_t = lo[:, None] + t
-            hi_t = hi[:, None] + (lo_t < t).astype(np.uint64)
-        ks = self._ks_from_words(hi_t.reshape(-1), lo_t.reshape(-1))
-        return (
-            flat.reshape(n, w) ^ ks.reshape(n, nb * _BS)[:, :w]
-        ).reshape(-1)
-
-    # -- shared CTR helpers --------------------------------------------
-    @staticmethod
-    def _q_words(sivs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(hi, lo) native-uint64 halves of Q = SIV with the two
-        reserved bits cleared (RFC 5297 §2.5)."""
-        q = sivs.copy()
-        q[:, 8] &= 0x7F
-        q[:, 12] &= 0x7F
-        hi = q[:, :8].copy().view(">u8").reshape(-1).astype(np.uint64)
-        lo = q[:, 8:].copy().view(">u8").reshape(-1).astype(np.uint64)
-        return hi, lo
-
-    def _ks_from_words(self, hi: np.ndarray, lo: np.ndarray) -> np.ndarray:
-        counters = np.empty((hi.size, _BS), dtype=np.uint8)
-        counters[:, :8] = hi.astype(">u8").view(np.uint8).reshape(-1, 8)
-        counters[:, 8:] = lo.astype(">u8").view(np.uint8).reshape(-1, 8)
-        return np.frombuffer(self._ctr.update(counters.tobytes()), np.uint8)
-
-    # -- ragged kernels -------------------------------------------------
-    def _ragged_maps(self, offsets: np.ndarray):
-        """Shared block-layout maps for non-empty ragged elements:
-        (lens, n_blocks, block_starts, byte->block position map)."""
-        lens = np.diff(offsets)
-        n_blocks = np.maximum(-(-lens // _BS), 1)
-        bstarts = np.zeros(len(lens), dtype=np.int64)
-        np.cumsum(n_blocks[:-1], out=bstarts[1:])
-        # position of each flat byte inside the block-aligned buffer —
-        # built once and reused by S2V + CTR
-        shift = bstarts * _BS - offsets[:-1]
-        pos = _ragged_positions(shift, lens, int(offsets[-1]))
-        return lens, n_blocks, bstarts, pos
-
-    def _s2v_ragged(
-        self,
-        flat: np.ndarray,
-        offsets: np.ndarray,
-        lens: np.ndarray,
-        n_blocks: np.ndarray,
-        bstarts: np.ndarray,
-        pos: np.ndarray,
-    ) -> np.ndarray:
-        n = len(lens)
-        long = lens >= _BS
-        t_lens = np.where(long, lens, _BS)
-        blocks = np.zeros((int(n_blocks.sum()), _BS), dtype=np.uint8)
-        blk = blocks.reshape(-1)
-        blk[pos] = flat
-        last_rows = bstarts + n_blocks - 1
-        short = ~long
-        if short.any():
-            # short: T = dbl(D_ad) ^ pad(P), a single complete block
-            blk[bstarts[short] * _BS + lens[short]] = 0x80
-            blocks[bstarts[short]] ^= self._d_ad_dbl
-        if long.any():
-            # long: T = P xorend D_ad — the last 16 plaintext bytes may
-            # straddle two blocks, so XOR via the byte position map
-            tail_base = (bstarts * _BS - offsets[:-1] + offsets[1:] - _BS)[
-                long
-            ]
-            tail_pos = (tail_base[:, None] + np.arange(_BS)).reshape(-1)
-            blk[tail_pos] ^= np.tile(self._d_ad, int(long.sum()))
-        complete = t_lens % _BS == 0
-        if complete.any():
-            blocks[last_rows[complete]] ^= self._k1
-        ragged = ~complete
-        if ragged.any():
-            blk[last_rows[ragged] * _BS + (t_lens % _BS)[ragged]] ^= 0x80
-            blocks[last_rows[ragged]] ^= self._k2
-        x = np.zeros((n, _BS), dtype=np.uint8)
-        for j in range(int(n_blocks.max())):
-            active = n_blocks > j
-            if active.all():
-                inp = x ^ blocks[bstarts + j]
-                # bytearray: keeps x writable for later partial rounds
-                x = np.frombuffer(
-                    bytearray(self._mac.update(inp.tobytes())), np.uint8
-                ).reshape(n, _BS)
-            else:
-                inp = x[active] ^ blocks[bstarts[active] + j]
-                out = self._mac.update(inp.tobytes())
-                x[active] = np.frombuffer(out, np.uint8).reshape(-1, _BS)
-        return x
-
-    def _ctr_xor_ragged(
-        self,
-        sivs: np.ndarray,
-        flat: np.ndarray,
-        lens: np.ndarray,
-        n_blocks: np.ndarray,
-        bstarts: np.ndarray,
-        pos: np.ndarray,
-    ) -> np.ndarray:
-        if flat.size == 0:
-            return flat.copy()
-        hi, lo = self._q_words(sivs)
-        rep, t = _block_index_maps(n_blocks, bstarts, int(n_blocks.sum()))
-        t = t.astype(np.uint64)
-        with np.errstate(over="ignore"):
-            lo_t = lo[rep] + t
-            hi_t = hi[rep] + (lo_t < t).astype(np.uint64)
-        ks = self._ks_from_words(hi_t, lo_t)
-        return flat ^ ks[pos]
-
-    def _s2v_and_ctr(
-        self, flat: np.ndarray, offsets: np.ndarray
+    def _run(
+        self, flat: np.ndarray, offsets: np.ndarray, encrypt: bool, scalar: bool
     ) -> tuple[np.ndarray, np.ndarray]:
-        """(sivs, ctr_of_flat) for non-empty elements, choosing the
-        uniform or ragged layout. S2V runs on the plaintext for encrypt;
-        decrypt calls the pieces separately."""
-        lens = np.diff(offsets)
-        n = len(lens)
-        w = int(lens[0]) if n else 0
-        if n and int(lens.min()) == int(lens.max()):
-            sivs = self._s2v_uniform(flat, n, w)
-            return sivs, self._ctr_xor_uniform(sivs, flat, n, w)
-        maps = self._ragged_maps(offsets)
-        sivs = self._s2v_ragged(flat, offsets, *maps)
-        return sivs, self._ctr_xor_ragged(sivs, flat, *maps)
-
-    # -- native layout -------------------------------------------------
-    def _native_batch(
-        self, flat: np.ndarray, offsets: np.ndarray, encrypt: bool
-    ) -> tuple[np.ndarray, np.ndarray]:
+        # a body cap of -1 sends every non-empty element to the scalar call
+        max_body = -1 if scalar else _MAX_BODY
         flat = np.ascontiguousarray(flat, dtype=np.uint8)
         offsets = np.ascontiguousarray(offsets, dtype=np.int64)
         skip = 0 if encrypt else _BS
         err, idx, longs, new_offsets, s2v_blocks, ctr_blocks = (
-            _native.siv_plan(offsets, flat.size, skip, _MAX_BODY)
+            _native.siv_plan(offsets, flat.size, skip, max_body)
         )
         if err == 1:
             raise DBPSInvalidInputError(_AUTH_FAIL)
@@ -372,7 +152,9 @@ class BatchSIV:
                 flat, offsets, idx, skip, ivs, ks, out, new_offsets
             )
             # decrypt: the S2V of the recovered plaintext must equal the
-            # transmitted IV (see decrypt_batch)
+            # transmitted IV (for a 16-byte ciphertext that is S2V of the
+            # empty string, matching AESSIV.decrypt's acceptance of a
+            # valid empty encryption and InvalidTag otherwise)
             if not encrypt and not np.array_equal(
                 _native.siv_s2v(
                     out, new_offsets, idx, s2v_blocks, self._consts, aes_into
@@ -392,110 +174,40 @@ class BatchSIV:
         new_offsets: np.ndarray,
         encrypt: bool,
     ) -> None:
-        """One ``AESSIV`` call per element too long for the batch."""
+        """One ``AESSIV`` call per element in ``longs``: those too long
+        for the batch, or every non-empty one on the scalar route."""
         from cryptography.exceptions import InvalidTag
 
-        for i in longs.tolist():
-            data = flat[offsets[i] : offsets[i + 1]].tobytes()
-            try:
-                if encrypt:
-                    res = self._aead.encrypt(data, [self._ad])
-                else:
-                    res = self._aead.decrypt(data, [self._ad])
-            except InvalidTag:
-                raise DBPSInvalidInputError(_AUTH_FAIL) from None
-            out[new_offsets[i] : new_offsets[i + 1]] = np.frombuffer(
-                res, np.uint8
-            )
+        call = self._aead.encrypt if encrypt else self._aead.decrypt
+        ad = [self._ad]
+        src, dst = memoryview(flat), memoryview(out)
+        spans = zip(
+            offsets[longs].tolist(),
+            offsets[longs + 1].tolist(),
+            new_offsets[longs].tolist(),
+            new_offsets[longs + 1].tolist(),
+        )
+        try:
+            for a, b, c, d in spans:
+                dst[c:d] = call(src[a:b], ad)
+        except InvalidTag:
+            raise DBPSInvalidInputError(_AUTH_FAIL) from None
 
     # -- public batch API ----------------------------------------------
     def encrypt_batch(
-        self, flat: np.ndarray, offsets: np.ndarray
+        self, flat: np.ndarray, offsets: np.ndarray, scalar: bool = False
     ) -> tuple[np.ndarray, np.ndarray]:
         """Element-wise ``AESSIV.encrypt(P, [ad])``: each output element
         is ``V || CTR(P)`` (16-byte SIV prepended). Empty elements pass
-        through empty (the engine's documented null/empty bypass)."""
-        if _native.LIB is not None:
-            return self._native_batch(flat, offsets, encrypt=True)
-        lens = np.diff(offsets)
-        new_offsets = np.zeros_like(offsets)
-        np.cumsum(np.where(lens > 0, lens + _BS, 0), out=new_offsets[1:])
-        nonempty = lens > 0
-        if not nonempty.any():
-            return np.empty(0, dtype=np.uint8), new_offsets
-        if nonempty.all():
-            sub_flat, sub_off = flat, offsets
-        else:
-            sub_flat = flat[np.repeat(nonempty, lens)]
-            sub_off = np.zeros(int(nonempty.sum()) + 1, dtype=np.int64)
-            np.cumsum(lens[nonempty], out=sub_off[1:])
-        sivs, body = self._s2v_and_ctr(sub_flat, sub_off)
-        out = np.empty(int(new_offsets[-1]), dtype=np.uint8)
-        ne_starts = new_offsets[:-1][nonempty]
-        sub_lens = np.diff(sub_off)
-        if int(sub_lens.min()) == int(sub_lens.max()):
-            w = int(sub_lens[0])
-            o2 = out.reshape(-1, _BS + w)
-            o2[:, :_BS] = sivs
-            o2[:, _BS:] = body.reshape(-1, w)
-        else:
-            iv_pos = (ne_starts[:, None] + np.arange(_BS)).reshape(-1)
-            out[iv_pos] = sivs.reshape(-1)
-            body_pos = _ragged_positions(
-                ne_starts + _BS - sub_off[:-1], sub_lens, body.size
-            )
-            out[body_pos] = body
-        return out, new_offsets
+        through empty (the engine's documented null/empty bypass).
+        ``scalar`` makes one ``AESSIV`` call per element instead of the
+        batched rounds (same bytes; cheaper for a few long elements)."""
+        return self._run(flat, offsets, encrypt=True, scalar=scalar)
 
     def decrypt_batch(
-        self, flat: np.ndarray, offsets: np.ndarray
+        self, flat: np.ndarray, offsets: np.ndarray, scalar: bool = False
     ) -> tuple[np.ndarray, np.ndarray]:
         """Element-wise ``AESSIV.decrypt``; raises on any authentication
-        failure (tampered ciphertext or wrong key), matching the scalar
-        path's error contract."""
-        if _native.LIB is not None:
-            return self._native_batch(flat, offsets, encrypt=False)
-        lens = np.diff(offsets)
-        if ((lens > 0) & (lens < _BS)).any():
-            raise DBPSInvalidInputError(_AUTH_FAIL)
-        new_offsets = np.zeros_like(offsets)
-        np.cumsum(np.where(lens > 0, lens - _BS, 0), out=new_offsets[1:])
-        nonempty = lens > 0
-        if not nonempty.any():
-            return np.empty(0, dtype=np.uint8), new_offsets
-        starts = offsets[:-1][nonempty]
-        ne_lens = lens[nonempty]
-        body_lens = ne_lens - _BS
-        sub_off = np.zeros(len(body_lens) + 1, dtype=np.int64)
-        np.cumsum(body_lens, out=sub_off[1:])
-        if int(ne_lens.min()) == int(ne_lens.max()):
-            w = int(ne_lens[0])
-            if nonempty.all():
-                ct2 = flat.reshape(-1, w)
-            else:
-                ct2 = flat[np.repeat(nonempty, lens)].reshape(-1, w)
-            sivs = np.ascontiguousarray(ct2[:, :_BS])
-            body = np.ascontiguousarray(ct2[:, _BS:]).reshape(-1)
-        else:
-            iv_pos = (starts[:, None] + np.arange(_BS)).reshape(-1)
-            sivs = flat[iv_pos].reshape(-1, _BS)
-            body_pos = _ragged_positions(
-                starts + _BS - sub_off[:-1], body_lens, int(sub_off[-1])
-            )
-            body = flat[body_pos]
-        # CTR then re-derive S2V of the recovered plaintext; it must
-        # equal the transmitted IV (for a 16-byte ciphertext that's S2V
-        # of the empty string, matching AESSIV.decrypt's acceptance of
-        # a valid empty encryption and InvalidTag otherwise)
-        n = len(body_lens)
-        if int(body_lens.min()) == int(body_lens.max()):
-            w = int(body_lens[0])
-            plain = self._ctr_xor_uniform(sivs, body, n, w)
-            check = self._s2v_uniform(plain, n, w)
-        else:
-            maps = self._ragged_maps(sub_off)
-            plain = self._ctr_xor_ragged(sivs, body, *maps)
-            check = self._s2v_ragged(plain, sub_off, *maps)
-        if not np.array_equal(check, sivs):
-            raise DBPSInvalidInputError(_AUTH_FAIL)
-        return plain, new_offsets
+        failure (tampered ciphertext, wrong key or a non-empty element
+        shorter than its IV), on either route."""
+        return self._run(flat, offsets, encrypt=False, scalar=scalar)

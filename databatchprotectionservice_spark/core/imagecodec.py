@@ -319,13 +319,14 @@ def _png_unfilter(
     """Undo PNG scanline filtering. ``raw`` is (h, 1 + w*bpp) uint8 with
     the filter byte in column 0.
 
-    Fast path: the whole image unfilters through the ``core/_native``
-    C helper (the same optional-compiler mechanism as the page codecs).
-    Fallback: filters None/Up are vectorized per row, Sub is a strided
-    cumulative sum, and Average/Paeth — whose left-neighbor dependency
-    (PNG spec §6) forbids full vectorization — run as a per-PIXEL loop
-    over bpp-wide numpy lanes (all channels of a pixel at once), not
-    per byte: O(h*w) interpreter iterations instead of O(h*w*bpp)."""
+    The whole image unfilters through the ``core/_native`` C helper.
+    The numpy form below runs only with ``_native.LIB`` unset, as the
+    reference the C path is tested against: filters None/Up are
+    vectorized per row, Sub is a strided cumulative sum, and
+    Average/Paeth — whose left-neighbor dependency (PNG spec §6) forbids
+    full vectorization — run as a per-PIXEL loop over bpp-wide numpy
+    lanes (all channels of a pixel at once), not per byte: O(h*w)
+    interpreter iterations instead of O(h*w*bpp)."""
     from . import _native
 
     stride = w * bpp

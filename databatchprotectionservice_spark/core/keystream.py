@@ -155,18 +155,9 @@ class KeystreamXorEncryptor(Encryptor):
             # keystream row — no per-byte position array, memory-bandwidth
             ks = self._keystream(uniform_width)
             return (flat.reshape(-1, uniform_width) ^ ks).reshape(-1)
-        ks = self._keystream(max_len)
-        if _native.LIB is not None:
-            # C fast path: per-element XOR at memory bandwidth, no
-            # position array at all
-            return _native.xor_elements(flat, offsets, ks)
-        # variable width: position of every byte within its element.
-        # int32 halves the gather/index memory traffic (an Arrow batch is
-        # always < 2^31 bytes)
-        starts32 = offsets[:-1].astype(np.int32, copy=False)
-        pos = np.arange(flat.size, dtype=np.int32)
-        pos -= np.repeat(starts32, lengths)
-        return flat ^ ks[pos]
+        # variable width: per-element XOR in the C helper at memory
+        # bandwidth, no position array at all
+        return _native.xor_elements(flat, offsets, self._keystream(max_len))
 
     def encrypt_elements(
         self,
@@ -219,10 +210,8 @@ class AesSivEncryptor(Encryptor):
     whole Arrow batch per handful of AES-ECB calls instead of one
     ``AESSIV`` call per element (byte-identical output; parity pinned in
     tests/test_aessiv_batch.py). ``_route_batch`` sends batches the
-    batch engine would run slower (few or very long cells) through the
-    scalar loop instead."""
-
-    _OVERHEAD = 16
+    batch rounds would run slower (few or very long cells) to one
+    ``AESSIV`` call per element, in the same ``BatchSIV``."""
 
     def __init__(self, key_id: str):
         super().__init__(key_id)
@@ -240,45 +229,20 @@ class AesSivEncryptor(Encryptor):
         self._aead = AESSIV(key)
         self._batch = BatchSIV(key, b"value")
 
-    #: without the C helper, ragged batches with mean plaintext length
-    #: above this run the scalar loop instead: the numpy layout's
-    #: per-byte index maps then cost more than the per-element AESSIV
-    #: call overhead they save. Uniform-width batches (all fixed-size
-    #: types, equal-length strings) have no index maps at all.
-    _BATCH_MEAN_LEN = 32
-    #: ... and so do ragged batches needing more CBC rounds than this:
-    #: each numpy round scans every element, live or not, and past
-    #: ~200-350 rounds the scalar loop was faster at 4,096 and at
-    #: 65,536 cells alike (one long cell among short ones)
-    _RAGGED_MAX_ROUNDS = 256
-
-    def _route_batch(self, offsets: np.ndarray, overhead: int) -> bool:
-        if self._batch is None:
-            return False
+    def _route_batch(self, offsets: np.ndarray) -> bool:
+        """Batch AES-SIV rounds (True) or one scalar call per element.
+        The batch S2V loops once per CBC round, i.e. per 16-byte block
+        of its longest element up to MAX_BATCH_BLOCKS (longer elements
+        take the scalar call inside the batch too). Batch cost is about
+        32 scalar calls fixed plus 2 per round; the crossover measured
+        at 8, 32 and 64 rounds on 16 B to 1 KiB ragged strings sat at
+        n ~ 48, 96 and 150-190 elements."""
         n = len(offsets) - 1
         if n <= 1:
             return False
-        lens = np.diff(offsets)
-        # the batch S2V's CBC chain loops once per 16-byte BLOCK of its
-        # longest element (vectorized across elements), so a few LONG
-        # blobs are faster as scalar C calls — batch only when the
-        # block count doesn't dwarf the element count
-        width = int(lens.max())
-        if _native.LIB is not None:
-            # native cost ~ 32 scalar calls fixed + 2 per CBC round
-            # (elements past MAX_BATCH_BLOCKS leave the round loop);
-            # the crossover measured at 8, 32 and 64 rounds on 16 B to
-            # 1 KiB ragged strings sat at n ~ 48, 96 and 150-190
-            rounds = min(width // 16, MAX_BATCH_BLOCKS) + 1
-            return 2 * rounds + 32 <= n
-        rounds = width // 16 + 1
-        if int(lens.min()) == width:
-            return width <= self._BATCH_MEAN_LEN + overhead or rounds <= n
-        mean = (int(offsets[-1]) - int(offsets[0])) / n
-        return (
-            rounds <= min(n, self._RAGGED_MAX_ROUNDS)
-            and mean <= self._BATCH_MEAN_LEN + overhead
-        )
+        width = int(np.diff(offsets).max())
+        rounds = min(width // 16, MAX_BATCH_BLOCKS) + 1
+        return 2 * rounds + 32 <= n
 
     @property
     def length_preserving(self) -> bool:
@@ -309,18 +273,8 @@ class AesSivEncryptor(Encryptor):
         # plaintext to protect and SIV ciphertext is never empty, so the
         # mapping stays unambiguous.
         offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-        if self._route_batch(offsets, overhead=0):
-            return self._batch.encrypt_batch(flat, offsets)
-        out, new_offsets = [], np.empty_like(offsets)
-        new_offsets[0] = 0
-        raw = flat.tobytes()
-        for i in range(len(offsets) - 1):
-            pt = raw[offsets[i] : offsets[i + 1]]
-            ct = self._aead.encrypt(pt, [b"value"]) if pt else b""
-            out.append(ct)
-            new_offsets[i + 1] = new_offsets[i] + len(ct)
-        joined = b"".join(out)
-        return np.frombuffer(joined, dtype=np.uint8), new_offsets
+        scalar = not self._route_batch(offsets)
+        return self._batch.encrypt_batch(flat, offsets, scalar=scalar)
 
     def decrypt_elements(
         self,
@@ -328,29 +282,11 @@ class AesSivEncryptor(Encryptor):
         offsets: np.ndarray,
         uniform_width: int | None = None,  # unused
     ):
-        from cryptography.exceptions import InvalidTag
-
+        # an InvalidTag surfaces as the engine's error type, so
+        # agent.decrypt's never-raise contract holds
         offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-        if self._route_batch(offsets, overhead=self._OVERHEAD):
-            return self._batch.decrypt_batch(flat, offsets)
-        out, new_offsets = [], np.empty_like(offsets)
-        new_offsets[0] = 0
-        raw = flat.tobytes()
-        for i in range(len(offsets) - 1):
-            ct = raw[offsets[i] : offsets[i + 1]]
-            try:
-                pt = self._aead.decrypt(ct, [b"value"]) if ct else b""
-            except InvalidTag as e:
-                # surface as the engine's error type so agent.decrypt's
-                # never-raise contract holds (tamper/wrong-key detection)
-                raise DBPSInvalidInputError(
-                    "AES-SIV authentication failed: ciphertext tampered "
-                    "or wrong key"
-                ) from e
-            out.append(pt)
-            new_offsets[i + 1] = new_offsets[i] + len(pt)
-        joined = b"".join(out)
-        return np.frombuffer(joined, dtype=np.uint8), new_offsets
+        scalar = not self._route_batch(offsets)
+        return self._batch.decrypt_batch(flat, offsets, scalar=scalar)
 
 
 ENCRYPTORS = {

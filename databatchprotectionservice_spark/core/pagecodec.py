@@ -408,7 +408,7 @@ def value_buffer_to_bytes(
     """Typed buffer -> PLAIN value bytes (inverse of reinterpret)."""
     if fixed_size is not None:
         return flat.tobytes()
-    # shared scatter (native C fast path when loaded) — see wire.py
+    # the shared C scatter — see wire.interleave_plain
     return wire.interleave_plain(flat, offsets).tobytes()
 
 
@@ -431,8 +431,6 @@ class PageProtector:
     compression: CompressionCodec = CompressionCodec.UNCOMPRESSED
     encoding: Encoding = Encoding.PLAIN
     encryptor_name: str = "keystream_xor"
-    user_id: str = ""
-    application_context: str = ""
     _encryptor: Encryptor = field(init=False, repr=False)
 
     def __post_init__(self):

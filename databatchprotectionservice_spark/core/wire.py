@@ -43,10 +43,9 @@ def parse_length_prefixed(
     Arrow-style (flat uint8, int64 offsets) pair.
 
     The record starts are data-dependent (each depends on every previous
-    length), so the length walk is inherently sequential — but it is the
-    ONLY sequential part: payload extraction is one vectorized masked
-    copy instead of per-element slicing + concatenate, which is what
-    keeps multi-MB string batches off the Python hot path."""
+    length), so the walk is inherently sequential; it runs in the C
+    helper, which also copies the payloads out in one pass, keeping
+    multi-MB string batches off the Python hot path."""
     buf = (
         np.frombuffer(body, dtype=np.uint8)
         if not isinstance(body, np.ndarray)
@@ -61,38 +60,14 @@ def parse_length_prefixed(
         raise DBPSInvalidInputError(
             f"{what} count {count} impossible for {len(buf)} bytes"
         )
-    if _native.LIB is not None:
-        err, flat, offsets = _native.parse_plain(buf, count)
-        if err == 1:
-            raise DBPSInvalidInputError(f"truncated {what} length prefix")
-        if err == 2:
-            raise DBPSInvalidInputError(f"truncated {what} element")
-        if err == 3:
-            raise DBPSInvalidInputError(f"trailing bytes after {what}")
-        return flat, offsets
-    raw = buf.tobytes()
-    size = len(raw)
-    lengths = np.empty(count, dtype=np.int64)
-    pos = 0
-    for i in range(count):
-        if pos + 4 > size:
-            raise DBPSInvalidInputError(f"truncated {what} length prefix")
-        (n,) = _U32.unpack_from(raw, pos)
-        pos += 4 + n
-        lengths[i] = n
-    if pos != size:
-        if pos > size:
-            raise DBPSInvalidInputError(f"truncated {what} element")
+    err, flat, offsets = _native.parse_plain(buf, count)
+    if err == 1:
+        raise DBPSInvalidInputError(f"truncated {what} length prefix")
+    if err == 2:
+        raise DBPSInvalidInputError(f"truncated {what} element")
+    if err == 3:
         raise DBPSInvalidInputError(f"trailing bytes after {what}")
-    offsets = np.empty(count + 1, dtype=np.int64)
-    offsets[0] = 0
-    np.cumsum(lengths, out=offsets[1:])
-    # drop the 4 header bytes before each record in one masked copy
-    header_starts = offsets[:-1] + 4 * np.arange(count, dtype=np.int64)
-    keep = np.ones(size, dtype=bool)
-    for j in range(4):
-        keep[header_starts + j] = False
-    return buf[keep], offsets
+    return flat, offsets
 
 
 def write_value_list(
@@ -125,25 +100,10 @@ def write_value_list(
 
 def interleave_plain(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     """[u32 len][bytes]-interleave an Arrow-style (flat, offsets) pair
-    into one uint8 array (no tag/count header) — THE shared scatter
-    (with the native C fast path) behind both the tagged wire writer
-    above and ``pagecodec.value_buffer_to_bytes``'s PLAIN emit, which
-    previously carried its own numpy-only copy of this index math."""
-    count = len(offsets) - 1
-    if _native.LIB is not None:
-        return _native.write_interleaved(flat, offsets)
-    # interleave with one vectorized scatter
-    out = np.empty(4 * count + flat.size, dtype=np.uint8)
-    starts = offsets[:-1] + 4 * np.arange(count, dtype=np.int64)
-    len_bytes = np.diff(offsets).astype("<u4").view(np.uint8).reshape(count, 4)
-    for j in range(4):
-        out[starts + j] = len_bytes[:, j]
-    if flat.size:
-        mask = np.ones(out.size, dtype=bool)
-        for j in range(4):
-            mask[starts + j] = False
-        out[mask] = flat
-    return out
+    into one uint8 array (no tag/count header), in the C helper — the
+    one scatter behind both the tagged wire writer above and
+    ``pagecodec.value_buffer_to_bytes``'s PLAIN emit."""
+    return _native.write_interleaved(flat, offsets)
 
 
 def read_value_list(data: bytes) -> tuple[np.ndarray, np.ndarray, int | None]:

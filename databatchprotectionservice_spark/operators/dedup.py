@@ -693,16 +693,20 @@ def dedup_embedding_cosine(spark, sf_dir):
         F.col("vec_id").alias("vec_a"),
         F.col("embedding").alias("qe"),
         F.col("nrm").alias("norm_a"),
-        "bucket",
+        F.col("bucket").alias("bucket_a"),
     )
     b = tagged.select(
         F.col("vec_id").alias("vec_b"),
         F.col("embedding").alias("ce"),
         F.col("nrm").alias("norm_b"),
-        "bucket",
+        F.col("bucket").alias("bucket_b"),
     )
     return (
-        a.join(b, (a.bucket == b.bucket) & (F.col("vec_a") < F.col("vec_b")))
+        a.join(
+            b,
+            (F.col("bucket_a") == F.col("bucket_b"))
+            & (F.col("vec_a") < F.col("vec_b")),
+        )
         .withColumn(
             "cos",
             cosine_prenormed(

@@ -41,8 +41,6 @@ def _protector_from_request(req, encryptor: str) -> PageProtector:
         compression=req.compression,
         encoding=req.encoding,
         encryptor_name=encryptor,
-        user_id=req.user_id,
-        application_context=req.application_context,
     )
 
 

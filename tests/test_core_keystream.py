@@ -53,6 +53,13 @@ def test_keystream_restarts_per_element():
     assert ct[:5].tobytes() == ct[5:].tobytes()
     # and per-element ciphertext equals block ciphertext of one element
     assert ct[:5].tobytes() == enc.encrypt_block(b"hello")
+    # the same on a ragged batch, which takes the C per-element XOR
+    elems = [b"hello", b"", b"x" * 300, b"ab", bytes(range(40))]
+    flat, offsets = bytes_list_to_arrow(elems)
+    ct, _ = enc.encrypt_elements(flat, offsets)
+    assert [
+        ct[offsets[i] : offsets[i + 1]].tobytes() for i in range(len(elems))
+    ] == [enc.encrypt_block(e) for e in elems]
 
 
 @pytest.mark.parametrize("name", ["keystream_xor", "aes_siv"])

@@ -2,6 +2,8 @@
 ``bytes_utils_test.cpp`` (construct/parse, malformed-buffer rejection,
 length-prefix join/split)."""
 
+import struct
+
 import numpy as np
 import pytest
 
@@ -38,7 +40,10 @@ def test_variable_roundtrip():
     values = [b"", b"a", "héllo".encode(), b"\x00" * 100]
     wire = roundtrip(values, None)
     assert wire[0] == TAG_VARIABLE
-    assert len(wire) == 1 + 4 + sum(4 + len(v) for v in values)
+    # [tag][u32 count] then [u32 len][bytes] per element, little-endian
+    assert wire == bytes([TAG_VARIABLE]) + struct.pack("<I", 4) + b"".join(
+        struct.pack("<I", len(v)) + v for v in values
+    )
 
 
 def test_empty_batches():
