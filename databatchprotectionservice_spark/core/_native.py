@@ -3,12 +3,13 @@
 Some loops cannot be fully vectorized in numpy, because each step
 depends on the previous one (the parquet PLAIN ``[u32 len][bytes]``
 walk), because the access pattern is per-element ragged (the
-variable-width keystream XOR), or because the layout needs per-byte
-index maps (the batched AES-SIV blocks). The reference runs such loops
-in C++ (``parquet_utils.cpp``, ``basic_xor_encryptor.cpp``); this
-module compiles a small C helper with the system compiler at first
-import and binds it via ctypes. It only moves bytes: AES stays in
-``cryptography``.
+variable-width keystream XOR, the protect kernels' tag, untag, gather
+and scatter passes), or because the layout needs per-byte index maps
+(the batched AES-SIV blocks). The reference runs such loops in C++
+(``parquet_utils.cpp``, ``basic_xor_encryptor.cpp``,
+``typed_buffer.h``); this module compiles a small C helper with the
+system compiler at first import and binds it via ctypes. It only moves
+bytes: AES stays in ``cryptography``.
 
 Required, like the reference's own C++ build: importing this module
 raises ``RuntimeError`` naming each compiler's failure when none of
@@ -319,9 +320,153 @@ void dbps_siv_ctr_xor(const uint8_t* src, const int64_t* offsets,
         ks += 16 * ((body + 15) / 16);
     }
 }
+
+/* ---- protect-kernel layout -------------------------------------------
+   Rows are an Arrow column: row i is data[off(i):off(i+1)], off being
+   int32 (o32) or int64 (o64) offsets or, with both NULL, i * width (a
+   fixed-width value buffer). `valid` is an Arrow validity bitmap whose
+   bit 0 is row 0, or NULL when no row is null. A batch is what a cipher
+   takes: the valid rows only, in row order, element k being
+   flat[boff[k]:boff[k+1]]. Both passes check every offset before
+   reading through it, and return -1 when offsets decrease or leave
+   their buffer, -2 when the bitmap does not hold the m valid rows the
+   caller counted. */
+
+static int row_valid(const uint8_t* valid, int64_t i) {
+    return !valid || (valid[i >> 3] >> (i & 7)) & 1;
+}
+
+static int64_t row_off(const int32_t* o32, const int64_t* o64, int64_t width,
+                       int64_t i) {
+    return o64 ? o64[i] : o32 ? (int64_t)o32[i] : i * width;
+}
+
+static int rows_fit(const int32_t* o32, const int64_t* o64, int64_t width,
+                    int64_t n, int64_t size) {
+    int64_t a = row_off(o32, o64, width, 0);
+    if (a < 0) return 0;
+    for (int64_t i = 1; i <= n; i++) {
+        int64_t b = row_off(o32, o64, width, i);
+        if (b < a) return 0;
+        a = b;
+    }
+    return a <= size;
+}
+
+/* memcpy for cells written back to back in order: a short one moves as
+   two 16-byte words when both buffers have room past it (the next cell
+   overwrites the surplus) instead of a library call. */
+static void copy_cell(uint8_t* d, int64_t d_room, const uint8_t* s,
+                      int64_t s_room, int64_t len) {
+    if (len <= 32 && d_room >= 32 && s_room >= 32) {
+        memcpy(d, s, 16);
+        memcpy(d + 16, s + 16, 16);
+    } else {
+        memcpy(d, s, (size_t)len);
+    }
+}
+
+/* Rows -> batch. tag < 0 takes each valid row whole (protect's gather);
+   tag >= 0 takes the payload after a one-byte tag (unprotect's untag).
+   A row shorter than the tag (1) or carrying another tag (2) ends the
+   pass with its reason, unless ok is non-NULL: then ok[i] = 1 marks the
+   valid, well-tagged rows and the batch holds only those. With dst NULL
+   only boff is written; dst holds cap bytes. info = {elements, their
+   common width or -1, first bad row or -1, the tag it carries, bytes the
+   null rows hold}. */
+int dbps_gather(const uint8_t* restrict data, int64_t size,
+                const int32_t* o32, const int64_t* o64, int64_t width,
+                int64_t n, const uint8_t* valid, int64_t m, int tag,
+                uint8_t* ok, uint8_t* restrict dst, int64_t cap,
+                int64_t* restrict boff, int64_t* restrict info) {
+    if (!rows_fit(o32, o64, width, n, size)) return -1;
+    int64_t k = 0, seen = 0, pos = 0, spill = 0, common = -1;
+    int64_t skip = tag >= 0;
+    int mixed = 0;
+    boff[0] = 0;
+    info[2] = -1;
+    for (int64_t i = 0; i < n; i++) {
+        int64_t a = row_off(o32, o64, width, i);
+        int64_t len = row_off(o32, o64, width, i + 1) - a;
+        if (!row_valid(valid, i)) {
+            if (ok) ok[i] = 0;
+            spill += len;
+            continue;
+        }
+        if (seen++ == m) return -2;
+        int reason = !skip ? 0 : len < 1 ? 1 : data[a] != tag ? 2 : 0;
+        if (reason) {
+            if (info[2] < 0) {
+                info[2] = i;
+                info[3] = len ? data[a] : -1;
+            }
+            if (!ok) return reason;
+            ok[i] = 0;
+            continue;
+        }
+        if (ok) ok[i] = 1;
+        len -= skip;
+        if (dst) {
+            if (pos + len > cap) return -1;
+            copy_cell(dst + pos, cap - pos, data + a + skip, size - a - skip,
+                      len);
+        }
+        pos += len;
+        boff[++k] = pos;
+        mixed |= k > 1 && len != common;
+        common = len;
+    }
+    info[0] = k;
+    info[1] = mixed ? -1 : common;
+    info[4] = spill;
+    return seen == m ? 0 : -2;
+}
+
+/* Batch -> rows. tag >= 0: row i is [tag][element k] for the k-th valid
+   row and zero-length for a null row (protect's cells; out holds
+   boff[m] - boff[0] + m bytes, out_off n+1 offsets). tag < 0, width > 0:
+   every element must be width bytes (else 1); row i's value goes to
+   out + i*width, zeros for a null row (unprotect's values; with out NULL
+   only the widths are checked). tag < 0, width 0: out_off alone, rows
+   pointing into flat. */
+int dbps_scatter(const uint8_t* restrict flat, int64_t size,
+                 const int64_t* restrict boff, int64_t m, int tag,
+                 int64_t width, int64_t n, const uint8_t* valid,
+                 uint8_t* restrict out, int64_t* restrict out_off) {
+    if (!rows_fit(0, boff, 0, m, size)) return -1;
+    int64_t k, pos = 0, cap = tag >= 0 ? boff[m] - boff[0] + m : n * width;
+    for (k = 0; tag < 0 && width && k < m; k++)
+        if (boff[k + 1] - boff[k] != width) return 1;
+    if (tag < 0) pos = boff[0];
+    if (out_off) out_off[0] = pos;
+    k = 0;
+    for (int64_t i = 0; i < n; i++) {
+        int v = row_valid(valid, i);
+        if (v && k == m) return -2;
+        int64_t a = boff[k], len = v ? boff[k + 1] - a : 0;
+        if (tag >= 0) {
+            if (v) {
+                out[pos] = (uint8_t)tag;
+                copy_cell(out + pos + 1, cap - pos - 1, flat + a, size - a, len);
+                pos += 1 + len;
+            }
+            out_off[i + 1] = pos;
+        } else if (!width) {
+            pos += len;
+            out_off[i + 1] = pos;
+        } else if (out && v) {
+            copy_cell(out + i * width, cap - i * width, flat + a, size - a, width);
+        } else if (out) {
+            memset(out + i * width, 0, (size_t)width);
+        }
+        k += v;
+    }
+    return k == m ? 0 : -2;
+}
 """
 
 _U8P = ctypes.POINTER(ctypes.c_uint8)
+_I32P = ctypes.POINTER(ctypes.c_int32)
 _I64P = ctypes.POINTER(ctypes.c_int64)
 
 
@@ -404,6 +549,17 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
             [_U8P, _I64P, _I64P, ctypes.c_int64, ctypes.c_int64, _U8P,
              _U8P, _U8P, _I64P],
         ),
+        "dbps_gather": (
+            ctypes.c_int,
+            [_U8P, ctypes.c_int64, _I32P, _I64P, ctypes.c_int64,
+             ctypes.c_int64, _U8P, ctypes.c_int64, ctypes.c_int, _U8P, _U8P,
+             ctypes.c_int64, _I64P, _I64P],
+        ),
+        "dbps_scatter": (
+            ctypes.c_int,
+            [_U8P, ctypes.c_int64, _I64P, ctypes.c_int64, ctypes.c_int,
+             ctypes.c_int64, ctypes.c_int64, _U8P, _U8P, _I64P],
+        ),
     }
     for name, (restype, argtypes) in sigs.items():
         fn = getattr(lib, name)
@@ -415,12 +571,12 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
 LIB = _bind(ctypes.CDLL(_build()))
 
 
-def _u8(a: np.ndarray) -> _U8P:
-    return a.ctypes.data_as(_U8P)
+def _u8(a: np.ndarray | None) -> _U8P | None:
+    return None if a is None else a.ctypes.data_as(_U8P)
 
 
-def _i64(a: np.ndarray) -> _I64P:
-    return a.ctypes.data_as(_I64P)
+def _i64(a: np.ndarray | None) -> _I64P | None:
+    return None if a is None else a.ctypes.data_as(_I64P)
 
 
 def parse_plain(
@@ -554,3 +710,70 @@ def siv_ctr_xor(
         _u8(src), _i64(offsets), _i64(idx), idx.size, skip, _u8(ivs),
         _u8(ks), _u8(dst), _i64(dst_offsets),
     )
+
+
+def _short(valid: np.ndarray | None, n: int) -> bool:
+    """Whether a validity bitmap has fewer than n bits."""
+    return valid is not None and valid.size * 8 < n
+
+
+def gather(
+    data: np.ndarray, n: int, valid, m: int, offsets=None, width=0, tag=-1, ok=None
+) -> tuple[int, np.ndarray, np.ndarray, list[int]]:
+    """(err, flat, batch offsets, info) of the m valid rows of ``data``
+    (see dbps_gather): row i is ``data[offsets[i]:offsets[i+1]]`` or,
+    without offsets, ``width`` bytes."""
+    if _short(valid, n) or offsets is not None and len(offsets) != n + 1:
+        return -1, data[:0], np.zeros(1, np.int64), [0, -1, -1, 0, 0]
+    o32 = o64 = None
+    start, size = 0, n * width
+    if offsets is not None:
+        start, size = int(offsets[0]), int(offsets[-1]) - int(offsets[0])
+        if offsets.dtype == np.int32:
+            o32 = offsets.ctypes.data_as(_I32P)
+        else:
+            o64 = _i64(offsets)
+    boff = np.empty(m + 1, dtype=np.int64)
+    info = np.zeros(5, dtype=np.int64)
+    args = (_u8(data), data.size, o32, o64, width, n, _u8(valid), m, tag, _u8(ok))
+    if tag < 0 and (valid is None or offsets is not None):
+        # whole rows: a view of data unless null rows hold bytes
+        err = LIB.dbps_gather(*args, None, 0, _i64(boff), _i64(info))
+        if err:
+            return err, data[:0], boff[:1], info.tolist()
+        size = int(boff[m])
+        if not info[4]:
+            return 0, data[start : start + size], boff, info.tolist()
+    elif tag < 0:
+        size = m * width
+    dst = np.empty(max(size, 0), dtype=np.uint8)
+    err = LIB.dbps_gather(*args, _u8(dst), dst.size, _i64(boff), _i64(info))
+    if err:
+        return err, dst[:0], boff[:1], info.tolist()
+    k = int(info[0])
+    return 0, dst[: int(boff[k])], boff[: k + 1], info.tolist()
+
+
+def scatter(
+    flat: np.ndarray, boff: np.ndarray, n: int, valid, tag=-1, width=0
+) -> tuple[int, np.ndarray, np.ndarray | None]:
+    """(err, row bytes, row offsets) of a batch spread over n rows (see
+    dbps_scatter): tagged cells, or dense ``width``-byte values (``flat``
+    itself without nulls), or offsets into ``flat``."""
+    flat = np.ascontiguousarray(flat, dtype=np.uint8)
+    boff = np.ascontiguousarray(boff, dtype=np.int64)
+    m = len(boff) - 1
+    if _short(valid, n):
+        return -1, flat[:0], None
+    out = out_off = None
+    if tag >= 0:
+        out = np.empty(max(int(boff[m] - boff[0]), 0) + m, dtype=np.uint8)
+    elif width and valid is not None:
+        out = np.empty(n * width, dtype=np.uint8)
+    if tag >= 0 or not width:
+        out_off = np.empty(n + 1, dtype=np.int64)
+    err = LIB.dbps_scatter(
+        _u8(flat), flat.size, _i64(boff), m, tag, width, n, _u8(valid),
+        _u8(out), _i64(out_off),
+    )
+    return err, flat if out is None else out, out_off

@@ -122,6 +122,18 @@ def test_declared_size_is_exact(codec):
             comp.decompress(ct, codec, size)
 
 
+def test_lz4_raw_page_decodes_only_at_its_exact_length():
+    """An LZ4_RAW page decodes to exactly its declared size: a stream cut
+    short and an over-declared one both raise, an exact one decodes."""
+    data = b"lz4 raw page " * 4000 + bytes(range(256))
+    ct = comp.compress(data, CompressionCodec.LZ4_RAW)
+    assert comp.decompress(ct, CompressionCodec.LZ4_RAW, len(data)) == data
+    with pytest.raises(DBPSInvalidInputError):
+        comp.decompress(ct[: len(ct) // 2], CompressionCodec.LZ4_RAW, len(data))
+    with pytest.raises(DBPSInvalidInputError):
+        comp.decompress(ct, CompressionCodec.LZ4_RAW, len(data) + 4096)
+
+
 @pytest.mark.parametrize(
     "codec",
     [

@@ -69,3 +69,92 @@ def test_missing_compiler_raises_naming_each_compiler(tmp_path):
     # one "<compiler>: <its error>" entry per compiler, in order
     tried = last.split("(", 1)[1].rstrip(")").split("; ")
     assert [t.split(":")[0] for t in tried] == ["cc", "gcc", "clang"], last
+
+
+# -- hostile layouts for the protect-kernel passes ---------------------------
+# Both passes must refuse offsets that decrease or leave their buffer (-1),
+# and a bitmap that disagrees with the caller's valid count (-2), before
+# reading through them; an empty batch is an empty result.
+
+import numpy as np  # noqa: E402
+import pytest  # noqa: E402
+
+from databatchprotectionservice_spark.core import _native  # noqa: E402
+
+DATA = np.frombuffer(b"\x06abc\x06de\x06f", np.uint8)  # three tagged cells
+GOOD = [0, 4, 7, 9]
+HOSTILE = {
+    "decreasing": [0, 4, 2, 9],
+    "past_the_buffer": [0, 4, 7, 4096],
+    "negative_start": [-8, 4, 7, 9],
+}
+
+
+@pytest.mark.parametrize("dtype", [np.int32, np.int64])
+@pytest.mark.parametrize("case", sorted(HOSTILE))
+def test_gather_refuses_hostile_offsets(case, dtype):
+    offsets = np.array(HOSTILE[case], dtype)
+    assert _native.gather(DATA, 3, None, 3, offsets)[0] == -1
+    assert _native.gather(DATA, 3, None, 3, offsets, tag=6)[0] == -1
+    ok = np.zeros(3, np.uint8)
+    assert _native.gather(DATA, 3, None, 3, offsets, tag=6, ok=ok)[0] == -1
+
+
+@pytest.mark.parametrize("case", sorted(HOSTILE))
+def test_scatter_refuses_hostile_offsets(case):
+    boff = np.array(HOSTILE[case], np.int64)
+    for kind in ({"tag": 6}, {"width": 3}, {}):
+        assert _native.scatter(DATA, boff, 3, None, **kind)[0] == -1
+
+
+def test_fixed_width_rows_must_fit_the_buffer():
+    valid = np.array([0b101], np.uint8)  # rows 0 and 2
+    assert _native.gather(DATA, 3, valid, 2, width=4)[0] == -1  # 12 > 9 bytes
+    err, rows, boff, _ = _native.gather(DATA, 3, valid, 2, width=3)
+    assert err == 0 and bytes(rows) == b"\x06abe\x06f" and boff.tolist() == [0, 3, 6]
+    err, rows, boff, _ = _native.gather(DATA, 3, None, 3, width=3)
+    assert err == 0 and bytes(rows) == bytes(DATA) and boff.tolist() == [0, 3, 6, 9]
+
+
+def test_passes_refuse_a_bitmap_that_disagrees_with_the_count():
+    valid = np.array([0b011], np.uint8)  # two valid rows, caller says three
+    offsets = np.array(GOOD, np.int64)
+    assert _native.gather(DATA, 3, valid, 3, offsets)[0] == -2
+    assert _native.gather(DATA, 3, valid, 3, width=3)[0] == -2
+    assert _native.gather(DATA, 3, valid, 3, offsets, tag=6)[0] == -2
+    thirds = np.array([0, 3, 6, 9], np.int64)
+    for kind in ({"tag": 6}, {"width": 3}, {}):
+        assert _native.scatter(DATA, thirds, 3, valid, **kind)[0] == -2
+
+
+def test_passes_on_an_empty_batch():
+    empty = np.empty(0, np.uint8)
+    for dtype in (np.int32, np.int64):
+        for tag in (-1, 6):
+            err, flat, boff, info = _native.gather(empty, 0, None, 0, np.zeros(1, dtype), tag=tag)
+            assert (err, flat.size, boff.tolist(), info[:3]) == (0, 0, [0], [0, -1, -1])
+    assert _native.gather(empty, 0, None, 0, width=8)[0] == 0
+    boff = np.zeros(1, np.int64)
+    err, out, out_off = _native.scatter(empty, boff, 0, None, tag=6)
+    assert (err, out.size, out_off.tolist()) == (0, 0, [0])
+    assert _native.scatter(empty, boff, 0, None, width=8)[0] == 0
+    assert _native.scatter(empty, boff, 0, None)[0] == 0
+
+
+def test_untag_reports_the_first_bad_cell():
+    offsets = np.array([0, 4, 4, 9], np.int64)  # row 1 is empty
+    err, *_, info = _native.gather(DATA, 3, None, 3, offsets, tag=6)
+    assert (err, info[2]) == (1, 1)
+    err, *_, info = _native.gather(DATA, 3, None, 3, np.array(GOOD, np.int64), tag=7)
+    assert (err, info[2], info[3]) == (2, 0, 6)
+    ok = np.zeros(3, np.uint8)
+    err, flat, boff, info = _native.gather(DATA, 3, None, 3, offsets, tag=6, ok=ok)
+    assert err == 0 and ok.tolist() == [1, 0, 1] and bytes(flat) == b"abcde\x06f"
+    assert boff.tolist() == [0, 3, 7] and info[:2] == [2, -1]
+
+
+def test_passes_refuse_short_bitmaps_and_offsets():
+    valid = np.array([0b1], np.uint8)  # 8 bits for 9 rows
+    assert _native.gather(DATA, 9, valid, 1, width=1)[0] == -1
+    assert _native.gather(DATA, 3, None, 3, np.array([0, 4, 7], np.int64))[0] == -1
+    assert _native.scatter(DATA, np.array([0, 9], np.int64), 9, valid)[0] == -1

@@ -9,13 +9,17 @@ round-trip.
 
 import datetime
 import math
+from decimal import Decimal
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from databatchprotectionservice_spark.agent import DataFrameProtectionAgent
 from databatchprotectionservice_spark.core.errors import DBPSInvalidInputError
+from databatchprotectionservice_spark.core.types import PhysicalType
 from databatchprotectionservice_spark.functions import (
     protect_column,
     unprotect_column,
@@ -216,34 +220,132 @@ def test_decimal_roundtrip_aes(spark):
     assert [r.d for r in back.collect()] == [r[0] for r in rows]
 
 
-def test_sliced_arrow_arrays_roundtrip():
-    """The UDF internals must handle pa.Array slices (arr.offset != 0):
-    Spark normally hands zero-offset batches, but the _compact guard
-    covers the general case."""
-    import numpy as np
-    import pyarrow as pa
+KERNEL_COLUMNS = [
+    (T.LongType(), pa.array([10, None, 30, 40, None, 60, 70, 80, 90, None, 11, 12], pa.int64())),
+    (T.DoubleType(), pa.array([0.5, -1.0, None, 2.25, 3.0, None, 7.0, 8.5, None, 1e300, -0.0, 4.0])),
+    (T.DateType(), pa.array([1, 2, None, 4, 5, 6, None, 8, 9, 10, 11, 12], pa.int32()).cast(pa.date32())),
+    (T.DecimalType(12, 2), pa.array([Decimal("1.25"), None, Decimal("-3.50"), None] * 3, pa.decimal128(12, 2))),
+    (T.BooleanType(), pa.array([True, False, None, True] * 3)),
+    (T.StringType(), pa.array(["alpha", "beta", None, "", "gamma", "delta", None, "é" * 9, "x", "yz", None, "w"])),
+    (T.BinaryType(), pa.array([b"\x00", None, b"", b"\xff" * 40] * 3, pa.binary())),
+]
+KERNEL_IDS = [t.simpleString() for t, _ in KERNEL_COLUMNS]
 
+
+def _kernels(spark_type, encryptor, key="kk"):
     from databatchprotectionservice_spark.functions.protect import (
-        _array_as_flat_offsets,
-        _compact,
-        _fixed_as_flat_offsets,
+        make_protect_kernel,
+        make_unprotect_kernel,
     )
 
-    full = pa.array(["alpha", "beta", None, "gamma", "delta"], pa.large_string())
-    sliced = full.slice(1, 3)  # ["beta", None, "gamma"] with offset 1
-    assert sliced.offset == 1
-    compacted = _compact(sliced)
-    assert compacted.offset == 0
-    flat, offsets = _array_as_flat_offsets(compacted)
-    assert bytes(flat[offsets[0] : offsets[1]]) == b"beta"
-    assert offsets[1] == offsets[2]  # null -> zero-length
-    assert bytes(flat[offsets[2] : offsets[3]]) == b"gamma"
-
-    ints = pa.array([10, 20, 30, 40], pa.int64()).slice(2, 2)
-    flat, offsets = _fixed_as_flat_offsets(
-        _compact(ints), np.dtype("<i8"), pa.int64()
+    return (
+        make_protect_kernel(spark_type, key, encryptor),
+        make_unprotect_kernel(spark_type, key, encryptor),
     )
-    assert np.frombuffer(flat.tobytes(), dtype="<i8").tolist() == [30, 40]
+
+
+@pytest.mark.parametrize("encryptor", ["keystream_xor", "aes_siv"])
+@pytest.mark.parametrize("spark_type,plain", KERNEL_COLUMNS, ids=KERNEL_IDS)
+def test_sliced_inputs_roundtrip_through_the_kernels(spark_type, plain, encryptor):
+    """Slices whose validity bitmap starts mid-byte (offset 3) protect to
+    the same cells as their compacted copies, and the protected cells
+    unprotect from a slice of their own."""
+    protect, unprotect = _kernels(spark_type, encryptor)
+    sliced = plain.slice(3, 8)
+    assert sliced.offset == 3 and sliced.null_count
+    compacted = pa.concat_arrays([sliced])
+    cells = protect(sliced)
+    assert cells.offset == 0
+    assert cells.to_pylist() == protect(compacted).to_pylist()
+    assert unprotect(cells).cast(plain.type).equals(sliced)
+    every = protect(plain)
+    assert unprotect(every.slice(3, 8)).cast(plain.type).equals(sliced)
+
+
+@pytest.mark.parametrize("encryptor", ["keystream_xor", "aes_siv"])
+@pytest.mark.parametrize("spark_type,plain", KERNEL_COLUMNS, ids=KERNEL_IDS)
+def test_protect_output_null_slots_are_zero_length(spark_type, plain, encryptor):
+    """Null rows come out of protect as zero-length slots, as Spark
+    stores them; non-null cells start with the type tag."""
+    from databatchprotectionservice_spark.functions.protect import ColumnCodec
+
+    cells = _kernels(spark_type, encryptor)[0](plain)
+    assert cells.null_count == plain.null_count
+    offsets = np.frombuffer(cells.buffers()[1], np.int64)[: len(cells) + 1]
+    lengths = np.diff(offsets)
+    valid = np.asarray(plain.is_valid())
+    assert (lengths[~valid] == 0).all()
+    tag = ColumnCodec(spark_type, "kk", encryptor).tag
+    assert all(c[0] == tag for c in cells.to_pylist() if c is not None)
+
+
+def _with_null_payload(cells: pa.Array) -> pa.Array:
+    """The same cells as large_binary whose null rows carry junk bytes."""
+    rows = [b"\x99junk" if c is None else c for c in cells.to_pylist()]
+    dense = pa.array(rows, pa.large_binary())
+    validity = cells.is_valid().buffers()[1]
+    return pa.LargeBinaryArray.from_buffers(
+        pa.large_binary(), len(dense), [validity, *dense.buffers()[1:]]
+    )
+
+
+@pytest.mark.parametrize("encryptor", ["keystream_xor", "aes_siv"])
+@pytest.mark.parametrize("spark_type,plain", KERNEL_COLUMNS, ids=KERNEL_IDS)
+def test_unprotect_reads_both_cell_shapes(spark_type, plain, encryptor):
+    """Spark hands ``binary`` (int32 offsets, empty null slots); written
+    datasets may hold ``large_binary`` whose null slots carry bytes.
+    Both unprotect, and rotate, to the same values."""
+    from databatchprotectionservice_spark.functions.protect import (
+        _make_rotate_kernel,
+    )
+
+    protect, unprotect = _kernels(spark_type, encryptor)
+    cells = protect(plain)
+    spark_shape = cells.cast(pa.binary())
+    junk_shape = _with_null_payload(cells)
+    assert junk_shape.null_count == plain.null_count
+    for shape in (spark_shape, junk_shape):
+        assert unprotect(shape).cast(plain.type).equals(plain)
+    rotate = _make_rotate_kernel(spark_type, "kk", "k2", encryptor, "aes_siv")
+    back = _kernels(spark_type, "aes_siv", "k2")[1]
+    for shape in (spark_shape, junk_shape):
+        assert back(rotate(shape)).cast(plain.type).equals(plain)
+
+
+@pytest.mark.parametrize("encryptor", ["keystream_xor", "aes_siv"])
+def test_unprotect_errors_keep_their_messages(encryptor):
+    """Every malformed cell fails as DBPSInvalidInputError with the
+    message it has always had."""
+    from databatchprotectionservice_spark.core.keystream import make_encryptor
+
+    protect, unprotect = _kernels(T.LongType(), encryptor)
+    cells = protect(pa.array([5, None, 6], pa.int64())).to_pylist()
+
+    def unprotect_with(cell2):
+        return unprotect(pa.array([cells[0], None, cell2], pa.binary()))
+
+    with pytest.raises(DBPSInvalidInputError, match="^protected cell shorter than type tag$"):
+        unprotect_with(b"")
+    wrong_tag = bytes([int(PhysicalType.INT32)]) + cells[2][1:]
+    with pytest.raises(
+        DBPSInvalidInputError,
+        match="^protected cell tagged 1 does not match expected physical type 2$",
+    ):
+        unprotect_with(wrong_tag)
+    ct, _ = make_encryptor(encryptor, "kk").encrypt_elements(
+        np.frombuffer(b"short", np.uint8), np.array([0, 5], np.int64)
+    )
+    with pytest.raises(
+        DBPSInvalidInputError, match="^decrypted cell length != 8 for a long column$"
+    ):
+        unprotect_with(cells[2][:1] + ct.tobytes())
+    if encryptor == "aes_siv":
+        tampered = cells[2][:-1] + bytes([cells[2][-1] ^ 1])
+        with pytest.raises(
+            DBPSInvalidInputError,
+            match="^AES-SIV authentication failed: ciphertext tampered or wrong key$",
+        ):
+            unprotect_with(tampered)
 
 
 def test_small_arrow_batches_roundtrip(spark):
