@@ -5,7 +5,8 @@ depends on the previous one (the parquet PLAIN ``[u32 len][bytes]``
 walk), because the access pattern is per-element ragged (the
 variable-width keystream XOR, the protect kernels' tag, untag, gather
 and scatter passes), or because the layout needs per-byte index maps
-(the batched AES-SIV blocks). The reference runs such loops in C++
+(the batched AES-SIV blocks). The page service's strict base64 decode
+lives here too. The reference runs such loops in C++
 (``parquet_utils.cpp``, ``basic_xor_encryptor.cpp``,
 ``typed_buffer.h``); this module compiles a small C helper with the
 system compiler at first import and binds it via ctypes. It only moves
@@ -76,15 +77,49 @@ void dbps_write_interleaved(const uint8_t* flat, const int64_t* offsets,
     }
 }
 
-/* In-place per-element XOR against a keystream that restarts at every
-   element (ks must cover the longest element). */
-void dbps_xor_elements(uint8_t* data, const int64_t* offsets, int64_t count,
+/* Per-element XOR against a keystream that restarts at every element
+   (ks must cover the longest element): dst = src ^ ks, element by
+   element, at the same offsets. */
+void dbps_xor_elements(const uint8_t* restrict src, uint8_t* restrict dst,
+                       const int64_t* offsets, int64_t count,
                        const uint8_t* ks) {
     for (int64_t i = 0; i < count; i++) {
-        uint8_t* p = data + offsets[i];
+        const uint8_t* s = src + offsets[i];
+        uint8_t* d = dst + offsets[i];
         int64_t len = offsets[i + 1] - offsets[i];
-        for (int64_t j = 0; j < len; j++) p[j] ^= ks[j];
+        for (int64_t j = 0; j < len; j++) d[j] = s[j] ^ ks[j];
     }
+}
+
+/* Strict base64 (RFC 4648 section 4): the length a multiple of 4, the
+   standard alphabet only, '=' only as the last one or two characters.
+   Returns the decoded length, or -1 for any other input and when the
+   output would pass dst[cap]; it reads only src[0:n]. */
+int64_t dbps_b64decode(const uint8_t* src, int64_t n, uint8_t* dst,
+                       int64_t cap) {
+    static const char abc[] =
+        "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/";
+    uint8_t val[256];
+    memset(val, 0xFF, sizeof val);
+    for (int k = 0; k < 64; k++) val[(uint8_t)abc[k]] = (uint8_t)k;
+    if (n < 0 || n % 4) return -1;
+    if (n == 0) return 0;
+    int pad = src[n - 1] != '=' ? 0 : src[n - 2] != '=' ? 1 : 2;
+    if (n / 4 * 3 - pad > cap) return -1;
+    int64_t o = 0;
+    for (int64_t i = 0; i < n; i += 4) {
+        uint32_t a = val[src[i]], b = val[src[i + 1]];
+        uint32_t c = val[src[i + 2]], d = val[src[i + 3]];
+        int tail = i == n - 4 ? pad : 0;
+        if (tail) d = 0;
+        if (tail == 2) c = 0;
+        if ((a | b | c | d) > 63) return -1;
+        uint32_t v = a << 18 | b << 12 | c << 6 | d;
+        dst[o++] = (uint8_t)(v >> 16);
+        if (tail < 2) dst[o++] = (uint8_t)(v >> 8);
+        if (!tail) dst[o++] = (uint8_t)v;
+    }
+    return o;
 }
 
 /* Undo PNG scanline filtering (spec filters 0-4) for a whole image.
@@ -521,7 +556,13 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
             [_U8P, ctypes.c_int64, ctypes.c_int64, _U8P, _I64P],
         ),
         "dbps_write_interleaved": (None, [_U8P, _I64P, ctypes.c_int64, _U8P]),
-        "dbps_xor_elements": (None, [_U8P, _I64P, ctypes.c_int64, _U8P]),
+        "dbps_xor_elements": (
+            None, [_U8P, _U8P, _I64P, ctypes.c_int64, _U8P]
+        ),
+        "dbps_b64decode": (
+            ctypes.c_int64,
+            [ctypes.c_char_p, ctypes.c_int64, _U8P, ctypes.c_int64],
+        ),
         "dbps_png_unfilter": (
             ctypes.c_int,
             [_U8P, ctypes.c_int64, ctypes.c_int64, ctypes.c_int64, _U8P],
@@ -606,10 +647,25 @@ def write_interleaved(flat: np.ndarray, offsets: np.ndarray) -> np.ndarray:
 def xor_elements(
     flat: np.ndarray, offsets: np.ndarray, ks: np.ndarray
 ) -> np.ndarray:
-    out = np.array(flat, dtype=np.uint8, copy=True)
+    """A new array: each element of ``flat`` XORed with ``ks`` from its
+    first byte, bytes outside the elements copied as they are."""
+    flat = np.ascontiguousarray(flat, dtype=np.uint8)
     offsets = np.ascontiguousarray(offsets, dtype=np.int64)
-    LIB.dbps_xor_elements(_u8(out), _i64(offsets), len(offsets) - 1, _u8(ks))
+    out = np.empty_like(flat)
+    first, last = int(offsets[0]), int(offsets[-1])
+    out[:first], out[last:] = flat[:first], flat[last:]
+    LIB.dbps_xor_elements(
+        _u8(flat), _u8(out), _i64(offsets), len(offsets) - 1, _u8(ks)
+    )
     return out
+
+
+def b64decode(text: bytes) -> bytes | None:
+    """Strict base64 decode (see dbps_b64decode); None when ``text`` is
+    not canonical RFC 4648 section 4 base64."""
+    out = np.empty(len(text) // 4 * 3, dtype=np.uint8)
+    n = LIB.dbps_b64decode(text, len(text), _u8(out), out.size)
+    return None if n < 0 else out[:n].tobytes()
 
 
 def png_unfilter(raw: np.ndarray, h: int, stride: int, bpp: int) -> np.ndarray:

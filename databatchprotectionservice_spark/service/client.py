@@ -7,22 +7,29 @@ JWT fetched via ``POST /token`` with a 30-second expiry skew
 ``reference_id`` (``dbps_api_client.cpp:35-40``), and response/request
 field cross-validation (``dbpa_remote.cpp:130-162``).
 
-Uses stdlib ``urllib`` — Spark executors are the concurrency story, so
-the reference's pooled worker-thread client collapses away
-(SURVEY §2.1 #23).
+Each agent keeps one persistent HTTP/1.1 connection (``http.client``),
+guarded by a lock, for the health check, ``/token`` and the data plane;
+the reference keeps a per-URL pool of them (``httplib_pool_registry.h``).
+There is no pool and no worker thread here: Spark executors supply the
+parallelism, one agent per task. A request that fails on a *reused*
+connection because the server closed it (idle timeout, error reply,
+restart) is sent once more on a new connection; encrypt and decrypt
+are idempotent, so the retry is safe. A new connection never retries.
+Request bodies splice the base64 value into a small JSON envelope
+(``json_model.dumps_with_value``), and response values are decoded by
+the C helper's strict base64 decoder.
 """
 
 from __future__ import annotations
 
+import http.client
 import json
 import threading
 import time
-import urllib.error
-import urllib.request
 
 from ..agent import DecryptionResult, EncryptionResult, extract_page_encoding
 from ..core.types import CompressionCodec, PhysicalType
-from .json_model import encode_base64
+from .json_model import decode_base64_safe, dumps_with_value
 
 TOKEN_EXPIRY_SKEW_SECONDS = 30
 
@@ -37,6 +44,8 @@ class RemoteProtectionAgent:
         self._token: str | None = None
         self._token_expires_at = 0
         self._token_lock = threading.Lock()
+        self._conn: http.client.HTTPConnection | None = None
+        self._conn_lock = threading.Lock()
 
     # -- init ----------------------------------------------------------
     def init(
@@ -68,6 +77,16 @@ class RemoteProtectionAgent:
             )
         creds = connection_config.get("credentials", {})
         self._server_url = server_url.rstrip("/")
+        scheme, _, rest = self._server_url.partition("://")
+        conn_cls = {
+            "http": http.client.HTTPConnection,
+            "https": http.client.HTTPSConnection,
+        }.get(scheme.lower())
+        if conn_cls is None or not rest:
+            raise ValueError(f"server_url is not http(s)://host: {server_url!r}")
+        host, _, prefix = rest.partition("/")
+        self._path_prefix = "/" + prefix if prefix else ""
+        self._conn = conn_cls(host, timeout=self._timeout)
         self._client_id = creds.get("client_id", "")
         self._api_key = creds.get("api_key", "")
         self.column_name = column_name
@@ -85,32 +104,47 @@ class RemoteProtectionAgent:
         self._initialized = True
 
     # -- http ----------------------------------------------------------
-    def _post_json(self, path: str, payload: dict, auth: bool) -> tuple[int, dict]:
-        body = json.dumps(payload).encode()
-        req = urllib.request.Request(
-            self._server_url + path,
-            data=body,
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
+    def _request(
+        self, method: str, path: str, body: bytes | None = None, headers=None
+    ) -> tuple[int, bytes]:
+        """(status, body) of one exchange on the persistent connection."""
+        with self._conn_lock:
+            conn = self._conn
+            while True:
+                reused = conn.sock is not None
+                try:
+                    conn.request(
+                        method, self._path_prefix + path, body, headers or {}
+                    )
+                    resp = conn.getresponse()
+                    return resp.status, resp.read()
+                except (ConnectionResetError, BrokenPipeError):
+                    # http.client.RemoteDisconnected is a ConnectionResetError
+                    conn.close()
+                    if not reused:
+                        raise
+                except BaseException:
+                    conn.close()  # a half-done exchange would desync framing
+                    raise
+
+    def _post_json(
+        self, path: str, body: bytes, auth: bool
+    ) -> tuple[int, dict]:
+        headers = {"Content-Type": "application/json"}
         if auth:
-            req.add_header("Authorization", f"Bearer {self._ensure_token()}")
+            headers["Authorization"] = f"Bearer {self._ensure_token()}"
+        status, raw = self._request("POST", path, body, headers)
         try:
-            with urllib.request.urlopen(req, timeout=self._timeout) as resp:
-                return resp.status, json.loads(resp.read().decode() or "{}")
-        except urllib.error.HTTPError as e:
-            try:
-                return e.code, json.loads(e.read().decode() or "{}")
-            except ValueError:
-                return e.code, {}
+            return status, json.loads(raw or b"{}")
+        except ValueError:
+            if status == 200:
+                raise
+            return status, {}
 
     def health_check(self) -> bool:
         try:
-            with urllib.request.urlopen(
-                self._server_url + "/healthz", timeout=self._timeout
-            ) as resp:
-                return resp.status == 200
-        except (urllib.error.URLError, OSError):
+            return self._request("GET", "/healthz")[0] == 200
+        except (OSError, http.client.HTTPException):
             return False
 
     def _ensure_token(self) -> str:
@@ -125,7 +159,9 @@ class RemoteProtectionAgent:
                 return self._token
             status, doc = self._post_json(
                 "/token",
-                {"client_id": self._client_id, "api_key": self._api_key},
+                json.dumps(
+                    {"client_id": self._client_id, "api_key": self._api_key}
+                ).encode(),
                 auth=False,
             )
             if status != 200 or "token" not in doc:
@@ -183,9 +219,12 @@ class RemoteProtectionAgent:
                 error_fields={"stage": "init"},
             )
         try:
-            payload = self._common_request(encoding_attributes)
-            payload["data_batch"]["value"] = encode_base64(plaintext)
-            status, doc = self._post_json("/encrypt", payload, auth=True)
+            body = dumps_with_value(
+                self._common_request(encoding_attributes),
+                ("data_batch", "value"),
+                plaintext,
+            )
+            status, doc = self._post_json("/encrypt", body, auth=True)
             if status != 200:
                 return EncryptionResult(
                     error_message=doc.get("error_string", f"HTTP {status}"),
@@ -198,11 +237,15 @@ class RemoteProtectionAgent:
                     error_message="response user_id does not match request",
                     error_fields={"field": "access.user_id"},
                 )
-            import base64
-
             value = doc.get("data_batch_encrypted", {}).get("value", "")
+            ciphertext = decode_base64_safe(value)
+            if ciphertext is None:
+                return EncryptionResult(
+                    error_message="response value is not valid base64",
+                    error_fields={"field": "data_batch_encrypted.value"},
+                )
             return EncryptionResult(
-                ciphertext=base64.b64decode(value),
+                ciphertext=ciphertext,
                 encryption_metadata=doc.get("encryption_metadata", {}),
             )
         except Exception as e:  # noqa: BLE001 — contract: never raise
@@ -225,9 +268,11 @@ class RemoteProtectionAgent:
             )
         try:
             payload = self._common_request(encoding_attributes)
-            payload["data_batch_encrypted"]["value"] = encode_base64(ciphertext)
             payload["encryption_metadata"] = dict(self.column_encryption_metadata)
-            status, doc = self._post_json("/decrypt", payload, auth=True)
+            body = dumps_with_value(
+                payload, ("data_batch_encrypted", "value"), ciphertext
+            )
+            status, doc = self._post_json("/decrypt", body, auth=True)
             if status != 200:
                 return DecryptionResult(
                     error_message=doc.get("error_string", f"HTTP {status}"),
@@ -241,11 +286,13 @@ class RemoteProtectionAgent:
                     error_message="response datatype does not match request",
                     error_fields={"field": "data_batch.datatype_info.datatype"},
                 )
-            import base64
-
-            return DecryptionResult(
-                plaintext=base64.b64decode(batch.get("value", ""))
-            )
+            plaintext = decode_base64_safe(batch.get("value", ""))
+            if plaintext is None:
+                return DecryptionResult(
+                    error_message="response value is not valid base64",
+                    error_fields={"field": "data_batch.value"},
+                )
+            return DecryptionResult(plaintext=plaintext)
         except Exception as e:  # noqa: BLE001 — contract: never raise
             return DecryptionResult(
                 error_message=str(e), error_fields={"stage": "decrypt"}

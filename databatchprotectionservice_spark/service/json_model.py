@@ -3,15 +3,19 @@
 Field paths and validation mirror ``src/common/json_request.cpp:265-409``
 (encrypt) and ``:483-530`` (decrypt); the schema is
 ``src/common/swagger.yaml``. Values cross the wire as base64 strings
-inside JSON (``json_request.cpp:123-144,393-397``).
+inside JSON (``json_request.cpp:123-144,393-397``). Envelopes that
+carry a value are written by :func:`dumps_with_value`, so the value's
+base64 never passes through ``json.dumps``; values are read by the C
+helper's strict decoder.
 """
 
 from __future__ import annotations
 
 import base64
-import binascii
+import json
 from dataclasses import dataclass, field
 
+from ..core import _native
 from ..core.types import (
     CompressionCodec,
     Encoding,
@@ -32,14 +36,30 @@ def _get_path(doc, *path):
 
 
 def decode_base64_safe(value: str) -> bytes | None:
+    """The bytes of canonical RFC 4648 section 4 base64, else None."""
     try:
-        return base64.b64decode(value, validate=True)
-    except (binascii.Error, ValueError, TypeError):
+        text = value.encode("ascii")
+    except (AttributeError, UnicodeError):
         return None
+    return _native.b64decode(text)
 
 
-def encode_base64(value: bytes) -> str:
-    return base64.b64encode(value).decode()
+def dumps_with_value(doc: dict, path: tuple[str, ...], value: bytes) -> bytes:
+    """``json.dumps`` of ``doc`` with ``b64encode(value)`` as the string at
+    ``path``, UTF-8 encoded. Only the small envelope goes through
+    ``json.dumps``: its leaf is an empty string, moved last along the
+    path so that it sits just before the closing braces, and the base64
+    bytes, which need no JSON escaping, are spliced in there."""
+
+    def value_last(node: dict, keys: tuple[str, ...]) -> dict:
+        key, rest = keys[0], keys[1:]
+        out = {k: v for k, v in node.items() if k != key}
+        out[key] = value_last(node.get(key, {}), rest) if rest else ""
+        return out
+
+    text = json.dumps(value_last(doc, path)).encode()
+    cut = len(text) - len(path) - 1  # the leaf's closing quote
+    return b"".join((text[:cut], base64.b64encode(value), text[cut:]))
 
 
 @dataclass
@@ -108,11 +128,7 @@ class JsonRequest:
         if (v := _get_path(doc, "access", "user_id")) is not None:
             self.user_id = str(v)
         if (v := _get_path(doc, "application_context")) is not None:
-            import json as _json
-
-            self.application_context = (
-                v if isinstance(v, str) else _json.dumps(v)
-            )
+            self.application_context = v if isinstance(v, str) else json.dumps(v)
         if (v := _get_path(doc, "debug", "reference_id")) is not None:
             self.reference_id = str(v)
         attrs = _get_path(doc, "data_batch", "value_format", "encoding_attributes")
@@ -163,11 +179,9 @@ class EncryptJsonRequest(JsonRequest):
 
     @classmethod
     def parse(cls, request_body: str) -> "EncryptJsonRequest":
-        import json as _json
-
         req = cls()
         try:
-            doc = _json.loads(request_body)
+            doc = json.loads(request_body)
         except ValueError:
             req.parse_ok = False
             return req
@@ -195,11 +209,9 @@ class DecryptJsonRequest(JsonRequest):
 
     @classmethod
     def parse(cls, request_body: str) -> "DecryptJsonRequest":
-        import json as _json
-
         req = cls()
         try:
-            doc = _json.loads(request_body)
+            doc = json.loads(request_body)
         except ValueError:
             req.parse_ok = False
             return req
@@ -236,7 +248,8 @@ def build_encrypt_response(
     req: EncryptJsonRequest,
     ciphertext: bytes,
     encryption_metadata: dict[str, str],
-) -> dict:
+) -> bytes:
+    """The 200 body of ``/encrypt``, carrying ``ciphertext``."""
     resp = {
         "data_batch_encrypted": {
             "value_format": {
@@ -247,17 +260,17 @@ def build_encrypt_response(
                     else req.compression
                 ).name
             },
-            "value": encode_base64(ciphertext),
         },
         "access": _access_block(req.user_id),
         "encryption_metadata": dict(encryption_metadata),
     }
     if req.reference_id:
         resp["debug"] = {"reference_id": req.reference_id}
-    return resp
+    return dumps_with_value(resp, ("data_batch_encrypted", "value"), ciphertext)
 
 
-def build_decrypt_response(req: DecryptJsonRequest, plaintext: bytes) -> dict:
+def build_decrypt_response(req: DecryptJsonRequest, plaintext: bytes) -> bytes:
+    """The 200 body of ``/decrypt``, carrying ``plaintext``."""
     resp = {
         "data_batch": {
             "datatype_info": {"datatype": req.datatype.name},
@@ -265,13 +278,12 @@ def build_decrypt_response(req: DecryptJsonRequest, plaintext: bytes) -> dict:
                 "compression": req.compression.name,
                 "encoding": req.encoding.name,
             },
-            "value": encode_base64(plaintext),
         },
         "access": _access_block(req.user_id),
     }
     if req.reference_id:
         resp["debug"] = {"reference_id": req.reference_id}
-    return resp
+    return dumps_with_value(resp, ("data_batch", "value"), plaintext)
 
 
 def build_error_response(error_string: str, error_code: str | None = None) -> dict:

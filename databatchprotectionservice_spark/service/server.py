@@ -8,13 +8,23 @@ one column batch per call, exactly like the sequencer
 (``encryption_sequencer.cpp:113-256``).
 
 A ``ThreadingHTTPServer`` replaces Crow's multithreaded loop: each
-request handled on its own thread, matching ``app.multithreaded()``
-(``dbps_api_server.cpp:284``).
+connection is handled on its own thread, matching ``app.multithreaded()``
+(``dbps_api_server.cpp:284``). Connections are persistent HTTP/1.1: a
+client sends request after request on one socket, so the per-connection
+thread start is paid once per client, not per request. Every reply
+carries ``Content-Length`` and goes out with Nagle's algorithm off
+(``TCP_NODELAY``), so a reply never waits on the client's delayed ACK.
+A connection idle for ``IDLE_TIMEOUT_S`` (60 s, the reference client
+pool's idle timeout, ``httplib_pool_registry.h:36-45``) is closed, and
+so is one whose reply is an error: its body may be unread or its
+framing broken. HTTP/1.0 clients get one request per connection, as
+before. ``stop()`` also closes the connections still open.
 """
 
 from __future__ import annotations
 
 import json
+import socket
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -31,6 +41,9 @@ from .json_model import (
 
 DEFAULT_ENCRYPTOR = "keystream_xor"
 
+#: seconds a keep-alive connection may sit idle before the server closes it
+IDLE_TIMEOUT_S = 60
+
 
 def _protector_from_request(req, encryptor: str) -> PageProtector:
     return PageProtector(
@@ -46,6 +59,9 @@ def _protector_from_request(req, encryptor: str) -> PageProtector:
 
 class _Handler(BaseHTTPRequestHandler):
     server_version = "dbps-spark/0.1"
+    protocol_version = "HTTP/1.1"
+    disable_nagle_algorithm = True
+    timeout = IDLE_TIMEOUT_S
 
     # injected by ProtectionApiServer
     credential_store: ClientCredentialStore
@@ -55,23 +71,24 @@ class _Handler(BaseHTTPRequestHandler):
         pass
 
     # -- helpers -------------------------------------------------------
-    def _reply(self, status: int, payload) -> None:
-        body = (
-            payload.encode()
-            if isinstance(payload, str)
-            else json.dumps(payload).encode()
-        )
+    def _reply(
+        self, status: int, body: bytes, content_type: str = "application/json"
+    ) -> None:
         self.send_response(status)
-        self.send_header(
-            "Content-Type",
-            "text/plain" if isinstance(payload, str) else "application/json",
-        )
+        self.send_header("Content-Type", content_type)
         self.send_header("Content-Length", str(len(body)))
+        # an error may leave the request body unread (rejected before it
+        # was read) or its framing broken: end the connection after it
+        if status >= 400 or self.close_connection:
+            self.send_header("Connection", "close")
         self.end_headers()
         self.wfile.write(body)
 
+    def _reply_json(self, status: int, doc: dict) -> None:
+        self._reply(status, json.dumps(doc).encode())
+
     def _error(self, message: str, status: int = 400) -> None:
-        self._reply(status, build_error_response(message))
+        self._reply_json(status, build_error_response(message))
 
     #: request-body ceiling; far above any real page batch, far below a
     #: Content-Length that could pin a handler thread or its memory
@@ -102,11 +119,11 @@ class _Handler(BaseHTTPRequestHandler):
     # -- routes --------------------------------------------------------
     def do_GET(self):
         if self.path == "/healthz":
-            self._reply(200, "OK")
+            self._reply(200, b"OK", "text/plain")
         elif self.path == "/statusz":
             if not self._authorized():
                 return
-            self._reply(
+            self._reply_json(
                 200,
                 {
                     "enable_credential_check": self.credential_store.enable_credential_check
@@ -126,7 +143,7 @@ class _Handler(BaseHTTPRequestHandler):
     def _route_post(self):
         if self.path == "/token":
             resp = self.credential_store.process_token_request(self._read_body())
-            self._reply(resp.error_status_code, resp.to_json())
+            self._reply_json(resp.error_status_code, resp.to_json())
         elif self.path == "/encrypt":
             if not self._authorized():
                 return
@@ -165,6 +182,35 @@ class _Handler(BaseHTTPRequestHandler):
         self._reply(200, build_decrypt_response(req, plaintext))
 
 
+class _Server(ThreadingHTTPServer):
+    """Keeps the open connections, so that closing the server closes them
+    too instead of leaving their threads serving."""
+
+    def __init__(self, *args):
+        self._open: set[socket.socket] = set()
+        self._open_lock = threading.Lock()
+        super().__init__(*args)
+
+    def process_request(self, request, client_address):
+        with self._open_lock:
+            self._open.add(request)
+        super().process_request(request, client_address)
+
+    def shutdown_request(self, request):
+        with self._open_lock:
+            self._open.discard(request)
+        super().shutdown_request(request)
+
+    def server_close(self):
+        super().server_close()
+        with self._open_lock:
+            for sock in self._open:
+                try:
+                    sock.shutdown(socket.SHUT_RDWR)
+                except OSError:
+                    pass
+
+
 class ProtectionApiServer:
     """Embeddable server: ``with ProtectionApiServer(store) as url: ...``."""
 
@@ -180,7 +226,7 @@ class ProtectionApiServer:
             (_Handler,),
             {"credential_store": credential_store, "encryptor": encryptor},
         )
-        self._httpd = ThreadingHTTPServer((host, port), handler)
+        self._httpd = _Server((host, port), handler)
         self._thread: threading.Thread | None = None
 
     @property

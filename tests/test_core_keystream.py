@@ -56,10 +56,13 @@ def test_keystream_restarts_per_element():
     # the same on a ragged batch, which takes the C per-element XOR
     elems = [b"hello", b"", b"x" * 300, b"ab", bytes(range(40))]
     flat, offsets = bytes_list_to_arrow(elems)
+    before = flat.copy()
     ct, _ = enc.encrypt_elements(flat, offsets)
     assert [
         ct[offsets[i] : offsets[i + 1]].tobytes() for i in range(len(elems))
     ] == [enc.encrypt_block(e) for e in elems]
+    # the XOR writes a new array and leaves its input as it was
+    assert np.array_equal(flat, before)
 
 
 @pytest.mark.parametrize("name", ["keystream_xor", "aes_siv"])

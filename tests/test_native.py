@@ -158,3 +158,92 @@ def test_passes_refuse_short_bitmaps_and_offsets():
     assert _native.gather(DATA, 9, valid, 1, width=1)[0] == -1
     assert _native.gather(DATA, 3, None, 3, np.array([0, 4, 7], np.int64))[0] == -1
     assert _native.scatter(DATA, np.array([0, 9], np.int64), 9, valid)[0] == -1
+
+
+def test_xor_elements_copies_the_bytes_outside_the_elements():
+    flat = np.frombuffer(b"..abcdefg..", np.uint8)
+    ks = np.array([1, 2, 3, 4, 5], np.uint8)
+    out = _native.xor_elements(flat, np.array([2, 4, 9], np.int64), ks)
+    want = b".." + bytes(c ^ k for c, k in zip(b"ab", ks)) + bytes(
+        c ^ k for c, k in zip(b"cdefg", ks)
+    ) + b".."
+    assert out.tobytes() == want and flat.tobytes() == b"..abcdefg.."
+
+
+# -- strict base64 ------------------------------------------------------------
+# The page service's decoder takes canonical RFC 4648 section 4 base64 only.
+# It must accept a subset of what binascii's strict mode accepts, with equal
+# bytes wherever both accept, and never touch memory outside its buffers.
+
+import base64  # noqa: E402
+import binascii  # noqa: E402
+import random  # noqa: E402
+
+_ALPHABET = b"ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789+/"
+
+
+def _strict(text: bytes) -> bytes | None:
+    try:
+        return binascii.a2b_base64(text, strict_mode=True)
+    except binascii.Error:
+        return None
+
+
+def _b64_cases(rng: random.Random):
+    noise = _ALPHABET + b"= -_\n\r\t.\x00\x80\xff"
+    for _ in range(2000):
+        raw = rng.randbytes(rng.randrange(0, 48))
+        text = base64.b64encode(raw)
+        yield "valid", text
+        if text:
+            mutated = bytearray(text)
+            for _ in range(rng.randrange(1, 3)):
+                mutated[rng.randrange(len(mutated))] = rng.choice(noise)
+            yield "mutated", bytes(mutated)
+            yield "truncated", text[: rng.randrange(len(text))]
+        yield "random", bytes(rng.choice(_ALPHABET + b"=") for _ in range(rng.randrange(9)))
+
+
+def test_b64decode_accepts_a_subset_of_binascii_strict():
+    rng = random.Random(20261019)
+    accepted = {"valid": 0, "mutated": 0, "truncated": 0, "random": 0}
+    for kind, text in _b64_cases(rng):
+        got = _native.b64decode(text)
+        if kind == "valid":
+            assert got == base64.b64decode(text), text
+        if got is not None:
+            assert _strict(text) == got, (kind, text)
+            accepted[kind] += 1
+    # every family exercised both verdicts
+    assert accepted["valid"] == 2000
+    assert 0 < accepted["mutated"] < 2000 and 0 < accepted["truncated"] < 2000
+
+
+def test_b64decode_rejects_excess_padding_that_binascii_accepts():
+    """CPython 3.11's strict mode takes padding past a complete group."""
+    for text in (b"I4CV=", b"QUJD====", b"QUJD="):
+        assert _strict(text) is not None
+        assert _native.b64decode(text) is None
+
+
+@pytest.mark.parametrize(
+    "text",
+    [b"QUJ", b"QUJDR", b"QU=D", b"Q=JD", b"=UJD", b"QUJD=QUJ", b"Q===",
+     b"QUJD\nQUJD", b"QU D", b"QUJ\x80", b"QUJ-", b"====", b"QUJDQU=\x00"],
+)
+def test_b64decode_refuses_hostile_input(text):
+    out = np.full(len(text) + 8, 0xAA, np.uint8)
+    assert _native.LIB.dbps_b64decode(text, len(text), _native._u8(out), len(text)) == -1
+    assert _native.b64decode(text) is None
+
+
+def test_b64decode_empty_and_bounded():
+    out = np.full(8, 0xAA, np.uint8)
+    assert _native.LIB.dbps_b64decode(b"", 0, _native._u8(out), 0) == 0
+    assert _native.b64decode(b"") == b""
+    # the output of "QUJD" (3 bytes) does not fit in 2: refused, nothing written
+    assert _native.LIB.dbps_b64decode(b"QUJD", 4, _native._u8(out), 2) == -1
+    assert out.tolist() == [0xAA] * 8
+    assert _native.LIB.dbps_b64decode(b"QUI=", 4, _native._u8(out), 2) == 2
+    assert out[:2].tobytes() == b"AB" and out[2:].tolist() == [0xAA] * 6
+    assert _native.LIB.dbps_b64decode(b"QUJD", -4, _native._u8(out), 8) == -1

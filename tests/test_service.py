@@ -411,3 +411,209 @@ def test_remote_agent_empty_payload_rejected(server):
     agent = _remote_agent_for(server, PhysicalType.BYTE_ARRAY)
     res = agent.encrypt(b"", {"page_encoding": "PLAIN"})
     assert not res.success
+
+
+# -- the value envelope ---------------------------------------------------
+
+
+@pytest.mark.parametrize("path", [("data_batch", "value"), ("value",)], ids=["nested", "top"])
+@pytest.mark.parametrize(
+    "value", [b"", b"\x00\xff" * 100, bytes(range(256))], ids=["empty", "pairs", "all_bytes"]
+)
+def test_spliced_envelope_is_the_dumped_document(path, value):
+    import base64
+
+    from databatchprotectionservice_spark.service.json_model import dumps_with_value
+
+    doc = {
+        'a"quote': "nul\x00 and \\ and \"",
+        "data_batch": {"k\x01": "碧 é", "value_format": {"x": [1, "\x7f"]}},
+        "z": {"value": "not this one"},
+    }
+    body = dumps_with_value(doc, path, value)
+    full = json.loads(json.dumps(doc))
+    node = full
+    for key in path[:-1]:
+        node = node[key]
+    node[path[-1]] = base64.b64encode(value).decode()
+    assert isinstance(body, bytes) and json.loads(body) == full
+    assert json.loads(json.dumps(doc)) != full  # doc itself is left as it was
+
+
+def test_response_builders_return_the_envelope_bytes():
+    from databatchprotectionservice_spark.service import (
+        build_decrypt_response,
+        build_encrypt_response,
+    )
+
+    body = _encrypt_request_body("QUJD", {"page_type": 'DATA_PAGE"\x00'})
+    body["debug"]["reference_id"] = "réf\x00"
+    enc = build_encrypt_response(
+        EncryptJsonRequest.parse(json.dumps(body)), b"\x00ct", {"m": 'é"'}
+    )
+    assert json.loads(enc) == {
+        "data_batch_encrypted": {
+            "value_format": {"compression": "UNCOMPRESSED"},
+            "value": "AGN0",
+        },
+        "access": {"user_id": "user123", "role": "granted", "access_control": "granted"},
+        "encryption_metadata": {"m": 'é"'},
+        "debug": {"reference_id": "réf\x00"},
+    }
+    body["data_batch_encrypted"]["value"] = "AGN0"
+    dec = build_decrypt_response(DecryptJsonRequest.parse(json.dumps(body)), b"ABC")
+    assert json.loads(dec)["data_batch"] == {
+        "datatype_info": {"datatype": "BYTE_ARRAY"},
+        "value_format": {"compression": "UNCOMPRESSED", "encoding": "PLAIN"},
+        "value": "QUJD",
+    }
+
+
+def test_excess_base64_padding_is_refused():
+    """Only canonical base64 is a value; Python's lenient decoders take
+    padding past a complete group."""
+    req = EncryptJsonRequest.parse(json.dumps(_encrypt_request_body("QUJD=", {})))
+    assert "data_batch.value" in req.get_validation_error()
+
+
+# -- keep-alive and hostile framing -----------------------------------------
+
+
+def _raw_exchange(server, request: bytes) -> tuple[bytes, bytes]:
+    """Send raw bytes, read until the server closes the connection (a
+    server that keeps it open fails the read with a timeout), return
+    (status line and headers, body)."""
+    import socket
+
+    host, port = server.url.rsplit("/", 1)[1].split(":")
+    with socket.create_connection((host, int(port)), timeout=10) as sock:
+        sock.sendall(request)
+        data = b""
+        while chunk := sock.recv(65536):
+            data += chunk
+    head, _, body = data.partition(b"\r\n\r\n")
+    return head, body
+
+
+@pytest.mark.parametrize(
+    "length", ["-5", "abc", str((256 << 20) + 1)], ids=["negative", "non_numeric", "over_cap"]
+)
+def test_hostile_content_length_gets_400_and_closes(server, length):
+    head, body = _raw_exchange(
+        server,
+        f"POST /token HTTP/1.1\r\nHost: x\r\nContent-Length: {length}\r\n\r\n{{}}".encode(),
+    )
+    assert head.startswith(b"HTTP/1.1 400 ")
+    assert b"\r\nConnection: close" in head
+    assert "invalid Content-Length" in json.loads(body)["error_string"]
+
+
+def test_non_utf8_body_gets_400(server):
+    raw = b'{"client_id": "\xff\xfe"}'
+    head, body = _raw_exchange(
+        server,
+        b"POST /token HTTP/1.1\r\nHost: x\r\nConnection: close\r\n"
+        + f"Content-Length: {len(raw)}\r\n\r\n".encode()
+        + raw,
+    )
+    assert head.startswith(b"HTTP/1.1 400 ")
+    assert "utf-8" in json.loads(body)["error_string"]
+
+
+def test_http10_request_gets_one_reply_and_a_close(server):
+    head, body = _raw_exchange(server, b"GET /healthz HTTP/1.0\r\n\r\n")
+    assert head.startswith(b"HTTP/1.1 200 ") and body == b"OK"
+
+
+def test_two_requests_share_one_http11_connection(server):
+    import http.client
+
+    conn = http.client.HTTPConnection(server.url.split("//")[1], timeout=10)
+    try:
+        conn.request("GET", "/healthz")
+        resp = conn.getresponse()
+        assert (resp.version, resp.status, resp.read()) == (11, 200, b"OK")
+        sock = conn.sock
+        conn.request(
+            "POST",
+            "/token",
+            json.dumps({"client_id": "client1", "api_key": "key1"}).encode(),
+            {"Content-Type": "application/json"},
+        )
+        resp = conn.getresponse()
+        assert resp.status == 200 and "token" in json.loads(resp.read())
+        assert conn.sock is sock  # no reconnect in between
+    finally:
+        conn.close()
+
+
+@pytest.fixture()
+def count_connects(monkeypatch):
+    import http.client
+
+    opened = []
+    orig = http.client.HTTPConnection.connect
+
+    def connect(self):
+        opened.append(self)
+        return orig(self)
+
+    monkeypatch.setattr(http.client.HTTPConnection, "connect", connect)
+    return opened
+
+
+def _own_server_agent(store):
+    srv = ProtectionApiServer(store).start()
+    agent = _remote_agent_for(srv, PhysicalType.BYTE_ARRAY)
+    page, attrs = _page_and_attrs()
+    attrs = dict(attrs, page_encoding="PLAIN")
+    assert agent.encrypt(page, attrs).success
+    return srv, agent, page, attrs
+
+
+def test_stale_connection_reconnects_once(store, monkeypatch, count_connects):
+    from databatchprotectionservice_spark.service import server as server_mod
+
+    # the reference pool's idle timeout, a constant rather than an option
+    assert server_mod._Handler.timeout == server_mod.IDLE_TIMEOUT_S == 60
+    monkeypatch.setattr(server_mod._Handler, "timeout", 0.2)
+    srv, agent, page, attrs = _own_server_agent(store)
+    try:
+        assert len(count_connects) == 1  # health check, token and encrypt
+        time.sleep(1.0)  # the server closes the idle connection
+        enc = agent.encrypt(page, attrs)
+        assert enc.success, enc.error_message
+        assert len(count_connects) == 2
+    finally:
+        srv.stop()
+
+
+def test_server_down_gives_an_error_result_without_retry(store, count_connects):
+    srv, agent, page, attrs = _own_server_agent(store)
+    srv.stop()  # also closes the agent's open connection
+    opened = len(count_connects)
+    # the reused connection is found closed: one reconnect, refused
+    res = agent.encrypt(page, attrs)
+    assert not res.success and len(count_connects) == opened + 1
+    # a fresh connection that fails is not retried
+    res = agent.encrypt(page, attrs)
+    assert not res.success and len(count_connects) == opened + 2
+
+
+def test_malformed_base64_response_is_an_error_result(server):
+    """The agent decodes response values strictly, and reports a bad one
+    instead of raising or decoding it leniently."""
+    agent = _remote_agent_for(server, PhysicalType.BYTE_ARRAY)
+    agent.column_encryption_metadata = {}
+    agent._ensure_token()
+    page, attrs = _page_and_attrs()
+    attrs = dict(attrs, page_encoding="PLAIN")
+    for value in ("QUJD=", "QU JD", "QUJ"):
+        enc_doc = {"access": {"user_id": "u1"}, "data_batch_encrypted": {"value": value}}
+        agent._request = lambda *a, doc=enc_doc: (200, json.dumps(doc).encode())
+        res = agent.encrypt(page, attrs)
+        assert not res.success and "not valid base64" in res.error_message
+        dec_doc = {"data_batch": {"datatype_info": {"datatype": "BYTE_ARRAY"}, "value": value}}
+        agent._request = lambda *a, doc=dec_doc: (200, json.dumps(doc).encode())
+        res = agent.decrypt(b"ct", attrs)
+        assert not res.success and "not valid base64" in res.error_message
