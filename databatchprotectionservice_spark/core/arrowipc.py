@@ -1,2493 +1,43 @@
-"""Arrow IPC (Feather V2) file reader, from scratch — including the
-flatbuffers wire format itself.
+"""Arrow IPC readers: pyarrow's own reader behind one validated entry.
 
-Public-spec provenance (no Arrow or FlatBuffers library code is used
-for the DECODE direction; ``pyarrow`` appears only as the independent
-*producer* in tests and operators):
+Both readers parse in-memory bytes with ``pyarrow.ipc``, then run
+``Table.validate(full=True)``, so offsets, dictionary indices, decimal
+precision and UTF-8 are checked before a table is returned.  Any
+``pa.ArrowException`` or ``OSError`` becomes :class:`ArrowIpcFormatError`;
+the input is a ``BufferReader``, so an ``OSError`` can only come from
+parsing.  Writers are ``pyarrow.ipc.new_file`` / ``new_stream``.
 
-* File layout + encapsulated-message framing: Apache Arrow Columnar
-  Format specification, "IPC File Format" / "Encapsulated message
-  format" sections (arrow.apache.org/docs/format/Columnar.html):
-  ``ARROW1\\0\\0`` magic, a stream of ``[0xFFFFFFFF][i32 metadata
-  size][Message flatbuffer][padded body]`` messages, an end-of-stream
-  marker, the Footer flatbuffer, ``i32 footer length``, ``ARROW1``.
-* FlatBuffers wire format: Google's public "FlatBuffers internals"
-  documentation: root = ``uoffset32``; every table starts with a
-  signed ``soffset32`` pointing BACK to its vtable; the vtable is
-  ``[u16 vtable_bytes][u16 table_bytes][u16 slot per field]`` where a
-  slot holds the field's byte offset inside the table (0 = absent);
-  scalars are inline, strings/vectors/tables sit behind a
-  ``uoffset32`` relative to the field position; strings and vectors
-  carry a ``u32`` length prefix; structs are inline with C layout;
-  a union occupies two slots (``u8`` type tag, then the value table).
-* Table/field slot numbering: the public ``Message.fbs`` /
-  ``File.fbs`` / ``Schema.fbs`` in apache/arrow (field id N lives in
-  vtable slot ``4 + 2*N``; union members are tagged in declaration
-  order starting at 1).
-
-Reference scope: the reference service ships opaque byte payloads
-(``src/data_batch_protection_service.cpp``); Arrow IPC is the
-interchange format an ML feature pipeline actually hands around, so
-the walk lives beside the other from-scratch container codecs
-(``tfrecordcodec.py``, ``avrocodec.py``, ``orcmeta.py``).
-
-Scope (asserted, never guessed): little-endian files, uncompressed
-bodies, flat (non-nested) columns of types Int(8/16/32/64, signed or
-unsigned), FloatingPoint(SINGLE/DOUBLE), Bool, Utf8 and Binary —
-plain OR dictionary-encoded (since r11): ``DictionaryEncoding``
-fields decode through the footer's dictionary-batch blocks,
-including delta dictionaries (``isDelta`` appends to the id's value
-list, a replacement batch resets it), with index columns in any
-supported Int width and every index bounds-checked against the
-resolved dictionary.  Compressed bodies decode too (also r11):
-``BodyCompression`` BUFFER-method framing — each non-empty buffer
-``[i64 uncompressed length][frame]``, -1 meaning stored raw — with
-LZ4 frames decoded by liblz4 through ``core/lz4codec.py`` and ZSTD
-frames through ``core/zstdmeta.py`` (frame walk, libzstd block
-decode), every inflated length checked against the declaration.  Nested columns decode too
-(also r11): List and Struct fields recurse depth-first through the
-node/buffer flattening order the columnar spec defines — List =
-``[validity][i32 offsets]`` then the child's buffers, Struct =
-``[validity]`` then each child — covering list<struct>, list<list>
-and their null/empty shapes.  Temporal and decimal columns decode
-and encode too (r12, closing the r11 verdict's widest named gap):
-Date(DAY/MILLISECOND) -> ``datetime.date``, Time(32/64, all four
-TimeUnits) -> ``datetime.time`` (ns floors to the type's us bound),
-Timestamp(s/ms/us; naive, UTC, fixed-offset or IANA tz) ->
-``datetime.datetime`` with Timestamp(ns) surfacing as exact integer
-epoch-nanos (Python datetime is us-bounded — same convention as the
-engine's parquet ``nanosAsLong``), and Decimal(bitWidth=128) ->
-``decimal.Decimal`` from the 16-byte little-endian two's-complement
-unscaled integers; dictionary-encoded temporal/decimal values keep
-their unit/scale through resolution.  The Large* (64-bit offset)
-family decodes too (r12): LargeUtf8/LargeBinary leaves and
-LargeList nesting read through the same paths with i64 offset
-buffers — HF-datasets exports use large_string pervasively, so this
-was the highest-traffic remaining tag.  FixedSizeList and
-FixedSizeBinary decode too (r12): a fixed_size_list<float32, d> is
-THE Arrow embedding column type, read as [validity] then exactly
-node_len x listSize child values with no offsets buffer, and
-FixedSizeBinary slices byteWidth-sized values off one data buffer.
-Duration (all TimeUnits, exact int64 counts — no timedelta: ns
-would truncate), Interval (YEAR_MONTH int months, DAY_TIME
-(days, ms) tuples, MONTH_DAY_NANO (months, days, nanos) tuples),
-Decimal(bitWidth=256) from 32-byte unscaled ints, float16 (the
-embedding-export dtype), and Union (both Sparse and Dense modes,
-typeIds mapping, no validity buffer per the columnar spec) all
-decode AND encode too (r13) — union slots encode as (type_id,
-value) tuples since nullness lives in the selected child.  The
-footer-less STREAM framing reads and writes as well
-(:func:`read_arrow_stream` / :func:`encode_arrow_stream`).  The
-reader additionally covers Null, Map (as [(key, value), ...] — dup
-keys are legal per the spec), RunEndEncoded (expanded to logical
-rows), Utf8View/BinaryView (16-byte view structs with
-variadicBufferCounts data buffers) and ListView/LargeListView —
-i.e. EVERY type tag the Schema.fbs union defines, so no
-pyarrow-writable table is out of scope.  The view family ENCODES
-too (r14, closing the last named encoder seam): Utf8View/BinaryView
-emit inline-or-spilled 16-byte views plus one variadic data buffer
-per batch (RecordBatch.variadicBufferCounts), ListView/
-LargeListView emit densely-packed offsets+sizes, and RunEndEncoded
-compresses the logical column into (run_ends, values) children —
-and Map encodes through the List<entries-struct> layout with
-[(key, value), ...] rows — all pinned against pyarrow strict
-reads.  No Schema.fbs type tag remains decode-only or encode-only.
-Compressed bodies ENCODE too (r14): ``compression="lz4"|"zstd"``
-on either encoder BodyCompression-frames every record and
-dictionary batch buffer — LZ4 frames written by liblz4, ZSTD
-through the compression layer, with the spec's ``-1`` stored-raw
-escape for incompressible buffers — so the codec matrix is symmetric
-with the reader.  Only non-BUFFER compression
-methods and unknown/corrupt tags raise
-:class:`ArrowIpcFormatError`, in the same style as the other
-codecs' unsupported paths.
+Known hazard: pyarrow 16.1 can abort the process (``std::bad_alloc``)
+on some corrupted record batches.  No product path reads Arrow IPC from
+outside; the registry queries read only bytes their own task wrote.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
-import decimal as _decimal
-import re as _re
-import struct
-from dataclasses import dataclass
-
-import numpy as np
+import pyarrow as pa
+import pyarrow.ipc as ipc
 
 from .errors import DBPSInvalidInputError
 
-#: decimal128 carries up to 38 significant digits, decimal256 up to
-#: 76 — both beyond the default context's 28, which would silently
-#: round on scaleb.  80 covers the widest legal value with margin.
-_DECIMAL_CTX = _decimal.Context(prec=80)
-
-MAGIC = b"ARROW1"
-_CONTINUATION = 0xFFFFFFFF
-
-#: MessageHeader union tags, Message.fbs declaration order
-_MSG_SCHEMA = 1
-_MSG_DICTIONARY_BATCH = 2
-_MSG_RECORD_BATCH = 3
-
-#: Type union tags, Schema.fbs declaration order (subset + names for
-#: the unsupported-seam error message)
-_TYPE_NAMES = {
-    1: "Null", 2: "Int", 3: "FloatingPoint", 4: "Binary", 5: "Utf8",
-    6: "Bool", 7: "Decimal", 8: "Date", 9: "Time", 10: "Timestamp",
-    11: "Interval", 12: "List", 13: "Struct", 14: "Union",
-    15: "FixedSizeBinary", 16: "FixedSizeList", 17: "Map",
-    18: "Duration", 19: "LargeBinary", 20: "LargeUtf8", 21: "LargeList",
-    22: "RunEndEncoded", 23: "BinaryView", 24: "Utf8View",
-    25: "ListView", 26: "LargeListView",
-}
-_T_INT = 2
-_T_FP = 3
-_T_BINARY = 4
-_T_UTF8 = 5
-_T_BOOL = 6
-_T_DECIMAL = 7
-_T_DATE = 8
-_T_TIME = 9
-_T_TIMESTAMP = 10
-_T_INTERVAL = 11
-_T_LIST = 12
-_T_STRUCT = 13
-_T_UNION = 14
-_T_FIXED_BINARY = 15
-_T_FIXED_LIST = 16
-_T_DURATION = 18
-_T_LARGE_BINARY = 19
-_T_LARGE_UTF8 = 20
-_T_LARGE_LIST = 21
-_T_MAP = 17
-_T_RUN_END_ENCODED = 22
-_T_BINARY_VIEW = 23
-_T_UTF8_VIEW = 24
-_T_LIST_VIEW = 25
-_T_LARGE_LIST_VIEW = 26
-
-#: Schema.fbs TimeUnit enum -> suffix
-_TIME_UNITS = {0: "s", 1: "ms", 2: "us", 3: "ns"}
-_UNIT_ENUM = {v: k for k, v in _TIME_UNITS.items()}
-
 
 class ArrowIpcFormatError(DBPSInvalidInputError):
-    """Malformed or out-of-scope Arrow IPC bytes."""
+    """Malformed or inconsistent Arrow IPC input."""
 
 
-def _u16(data: bytes, pos: int) -> int:
-    if pos < 0 or pos + 2 > len(data):
-        raise ArrowIpcFormatError(f"u16 read out of bounds at {pos}")
-    return struct.unpack_from("<H", data, pos)[0]
-
-
-def _i32(data: bytes, pos: int) -> int:
-    if pos < 0 or pos + 4 > len(data):
-        raise ArrowIpcFormatError(f"i32 read out of bounds at {pos}")
-    return struct.unpack_from("<i", data, pos)[0]
-
-
-def _u32(data: bytes, pos: int) -> int:
-    if pos < 0 or pos + 4 > len(data):
-        raise ArrowIpcFormatError(f"u32 read out of bounds at {pos}")
-    return struct.unpack_from("<I", data, pos)[0]
-
-
-def _i64(data: bytes, pos: int) -> int:
-    if pos < 0 or pos + 8 > len(data):
-        raise ArrowIpcFormatError(f"i64 read out of bounds at {pos}")
-    return struct.unpack_from("<q", data, pos)[0]
-
-
-class _Table:
-    """One flatbuffers table: vtable-indirected field access.
-
-    ``pos`` is the table position inside ``data``; the signed soffset
-    stored there points back to the vtable.  Field id N lives in
-    vtable slot ``4 + 2*N``; a zero (or out-of-vtable) slot means the
-    field was omitted and the schema default applies.
-    """
-
-    __slots__ = ("data", "pos", "vt", "vt_bytes")
-
-    def __init__(self, data: bytes, pos: int):
-        self.data = data
-        self.pos = pos
-        soff = _i32(data, pos)
-        self.vt = pos - soff
-        self.vt_bytes = _u16(data, self.vt)
-        if self.vt_bytes < 4:
-            raise ArrowIpcFormatError(f"vtable at {self.vt} too short")
-
-    def _field_pos(self, fid: int) -> int | None:
-        slot = 4 + 2 * fid
-        if slot + 2 > self.vt_bytes:
-            return None
-        rel = _u16(self.data, self.vt + slot)
-        if rel == 0:
-            return None
-        return self.pos + rel
-
-    def scalar(self, fid: int, fmt: str, default):
-        p = self._field_pos(fid)
-        if p is None:
-            return default
-        size = struct.calcsize(fmt)
-        if p + size > len(self.data):
-            raise ArrowIpcFormatError(f"scalar field {fid} out of bounds")
-        return struct.unpack_from(fmt, self.data, p)[0]
-
-    def _indirect(self, fid: int) -> int | None:
-        p = self._field_pos(fid)
-        if p is None:
-            return None
-        return p + _u32(self.data, p)
-
-    def table(self, fid: int) -> "_Table | None":
-        tpos = self._indirect(fid)
-        return None if tpos is None else _Table(self.data, tpos)
-
-    def string(self, fid: int) -> str | None:
-        spos = self._indirect(fid)
-        if spos is None:
-            return None
-        n = _u32(self.data, spos)
-        if spos + 4 + n > len(self.data):
-            raise ArrowIpcFormatError(f"string field {fid} out of bounds")
-        try:
-            return self.data[spos + 4 : spos + 4 + n].decode("utf-8")
-        except UnicodeDecodeError as e:
-            raise ArrowIpcFormatError(
-                f"string field {fid} is not UTF-8"
-            ) from e
-
-    def vector(self, fid: int, stride: int = 1) -> tuple[int, int] | None:
-        """(element start, element count) or None if absent; the
-        declared count must fit the buffer at ``stride`` bytes each."""
-        vpos = self._indirect(fid)
-        if vpos is None:
-            return None
-        n = _u32(self.data, vpos)
-        if vpos + 4 + stride * n > len(self.data):
-            raise ArrowIpcFormatError(
-                f"vector field {fid} declares {n} elements past the end"
-            )
-        return vpos + 4, n
-
-    def table_vector(self, fid: int) -> list["_Table"]:
-        v = self.vector(fid, stride=4)
-        if v is None:
-            return []
-        start, n = v
-        out = []
-        for i in range(n):
-            epos = start + 4 * i
-            out.append(_Table(self.data, epos + _u32(self.data, epos)))
-        return out
-
-
-@dataclass(frozen=True)
-class FieldSpec:
-    """Decoded Schema.fbs Field for the supported flat types."""
-
-    name: str
-    nullable: bool
-    type_name: str  # 'int64' 'uint32' 'float32' 'float64' 'bool'
-    #                 'utf8' 'binary'
-    bit_width: int  # ints/floats; 1 for bool, 0 for varlen
-    #: DictionaryEncoding (Schema.fbs): the field's TYPE above
-    #: describes the dictionary VALUES; the record-batch column
-    #: carries only validity + indices of ``index_type``
-    dict_id: int | None = None
-    index_type: str | None = None
-    #: nested children (List -> (element,), Struct -> fields); empty
-    #: for primitives
-    children: tuple = ()
-    #: temporal types: TimeUnit suffix ('s'/'ms'/'us'/'ns') for
-    #: time32/time64/timestamp; None otherwise
-    unit: str | None = None
-    #: Timestamp timezone string ('' / None = naive)
-    tz: str | None = None
-    #: decimal128 parameters (0 when not a decimal)
-    precision: int = 0
-    scale: int = 0
-    #: FixedSizeBinary byteWidth / FixedSizeList listSize (0 otherwise)
-    fixed_size: int = 0
-    #: Union only: child type ids in child order (Schema.fbs typeIds;
-    #: defaults to 0..n-1 when the schema omits the vector).  The
-    #: union mode rides ``unit`` ('sparse' / 'dense').
-    type_ids: tuple = ()
-
-
-def _decode_dict_encoding(name: str, d: _Table) -> tuple[int, str]:
-    """Field.dictionary -> (id, index type name).  Schema.fbs: id is
-    fid 0 (long), indexType fid 1 (an Int table, default int32
-    signed), isOrdered fid 2 (irrelevant to decode)."""
-    did = d.scalar(0, "<q", 0)
-    it = d.table(1)
-    width, signed = 32, True
-    if it is not None:
-        width = it.scalar(0, "<i", 0)
-        signed = bool(it.scalar(1, "<b", 0))
-    if width not in (8, 16, 32, 64):
-        raise ArrowIpcFormatError(
-            f"field {name!r}: dictionary index bitWidth {width} "
-            "unsupported"
-        )
-    return did, f"{'int' if signed else 'uint'}{width}"
-
-
-def _decode_field(f: _Table) -> FieldSpec:
-    name = f.string(0) or ""
-    nullable = bool(f.scalar(1, "<b", 0))
-    tag = f.scalar(2, "<B", 0)
-    t = f.table(3)
-    if tag not in (
-        _T_INT, _T_FP, _T_BOOL, _T_UTF8, _T_BINARY, _T_LIST, _T_STRUCT,
-        _T_DECIMAL, _T_DATE, _T_TIME, _T_TIMESTAMP,
-        _T_LARGE_BINARY, _T_LARGE_UTF8, _T_LARGE_LIST,
-        _T_FIXED_BINARY, _T_FIXED_LIST,
-        _T_DURATION, _T_INTERVAL, _T_UNION, _T_MAP,
-        _T_RUN_END_ENCODED, _T_BINARY_VIEW, _T_UTF8_VIEW,
-        _T_LIST_VIEW, _T_LARGE_LIST_VIEW, 1,
-    ):
-        raise ArrowIpcFormatError(
-            f"field {name!r}: type {_TYPE_NAMES.get(tag, tag)} "
-            "not supported"
-        )
-    dict_id = index_type = None
-    enc = f.table(4)
-    if enc is not None:
-        dict_id, index_type = _decode_dict_encoding(name, enc)
-    if tag == _T_UNION:
-        # Schema.fbs: Union { mode: UnionMode = Sparse; typeIds: [int] }
-        # — children carry the member types; the record-batch column
-        # is [i8 types] (+ [i32 offsets] when Dense), NO validity
-        if dict_id is not None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: dictionary-encoded union column"
-            )
-        kids = tuple(_decode_field(c) for c in f.table_vector(5))
-        if not kids:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Union with no children"
-            )
-        mode = t.scalar(0, "<h", 0) if t is not None else 0
-        if mode not in (0, 1):
-            raise ArrowIpcFormatError(
-                f"field {name!r}: UnionMode {mode} unsupported"
-            )
-        tid_v = t.vector(1, stride=4) if t is not None else None
-        if tid_v is None:
-            type_ids = tuple(range(len(kids)))
-        else:
-            tstart, tn = tid_v
-            if tn != len(kids):
-                raise ArrowIpcFormatError(
-                    f"field {name!r}: {tn} typeIds for "
-                    f"{len(kids)} union children"
-                )
-            type_ids = tuple(
-                _i32(t.data, tstart + 4 * i) for i in range(tn)
-            )
-            if len(set(type_ids)) != len(type_ids):
-                raise ArrowIpcFormatError(
-                    f"field {name!r}: duplicate union typeIds"
-                )
-        return FieldSpec(
-            name, nullable, "union", 0, None, None, kids,
-            "sparse" if mode == 0 else "dense", None, 0, 0, 0,
-            type_ids,
-        )
-    if tag == _T_RUN_END_ENCODED:
-        # RunEndEncoded { } — two children: run_ends (an int column,
-        # non-null, monotone ABSOLUTE logical end indices) + values.
-        # The parent node carries the LOGICAL length and no buffers.
-        if dict_id is not None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: dictionary-encoded REE column"
-            )
-        kids = tuple(_decode_field(c) for c in f.table_vector(5))
-        if len(kids) != 2:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: RunEndEncoded needs exactly "
-                "(run_ends, values) children"
-            )
-        if not kids[0].type_name.startswith("int"):
-            raise ArrowIpcFormatError(
-                f"field {name!r}: run_ends child must be a signed int"
-            )
-        return FieldSpec(
-            name, nullable, "run_end_encoded", 0, None, None, kids
-        )
-    if tag == _T_MAP:
-        # Map { keysSorted: bool } — single 'entries' struct child
-        # (non-null key + value); layout identical to List<entries>.
-        # Values surface as [(key, value), ...] per slot — dup keys
-        # are legal in the spec, so no dict collapse.
-        if dict_id is not None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: dictionary-encoded map column"
-            )
-        kids = tuple(_decode_field(c) for c in f.table_vector(5))
-        if len(kids) != 1 or kids[0].type_name != "struct" or len(
-            kids[0].children
-        ) != 2:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Map needs one struct(key, value) "
-                "child"
-            )
-        return FieldSpec(name, nullable, "map", 0, None, None, kids)
-    if tag in (_T_LIST_VIEW, _T_LARGE_LIST_VIEW):
-        # ListView / LargeListView { } — [validity][offsets][sizes]
-        # + child; offsets may be unordered/overlapping per the spec
-        if dict_id is not None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: dictionary-encoded list-view column"
-            )
-        kids = tuple(_decode_field(c) for c in f.table_vector(5))
-        if len(kids) != 1:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: ListView needs exactly one child"
-            )
-        tn = "list_view" if tag == _T_LIST_VIEW else "large_list_view"
-        return FieldSpec(name, nullable, tn, 0, None, None, kids)
-    if tag in (_T_LIST, _T_LARGE_LIST, _T_FIXED_LIST, _T_STRUCT):
-        if dict_id is not None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: dictionary-encoded nested column"
-            )
-        kids = tuple(_decode_field(c) for c in f.table_vector(5))
-        if tag in (_T_LIST, _T_LARGE_LIST, _T_FIXED_LIST):
-            if len(kids) != 1:
-                raise ArrowIpcFormatError(
-                    f"field {name!r}: List needs exactly one child"
-                )
-            if tag == _T_FIXED_LIST:
-                # Schema.fbs: FixedSizeList { listSize: int }
-                n = t.scalar(0, "<i", 0) if t is not None else 0
-                if n <= 0:
-                    raise ArrowIpcFormatError(
-                        f"field {name!r}: FixedSizeList listSize {n}"
-                    )
-                return FieldSpec(
-                    name, nullable, "fixed_list", 0, None, None,
-                    kids, None, None, 0, 0, n,
-                )
-            tn = "list" if tag == _T_LIST else "large_list"
-            return FieldSpec(name, nullable, tn, 0, None, None, kids)
-        if not kids:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Struct with no children"
-            )
-        return FieldSpec(name, nullable, "struct", 0, None, None, kids)
-    if f.table_vector(5):
-        raise ArrowIpcFormatError(
-            f"field {name!r}: nested children not supported"
-        )
-    if tag == _T_INT:
-        if t is None:
-            raise ArrowIpcFormatError(f"field {name!r}: Int missing body")
-        width = t.scalar(0, "<i", 0)
-        signed = bool(t.scalar(1, "<b", 0))
-        if width not in (8, 16, 32, 64):
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Int bitWidth {width} unsupported"
-            )
-        return FieldSpec(
-            name, nullable, f"{'int' if signed else 'uint'}{width}",
-            width, dict_id, index_type,
-        )
-    if tag == _T_FP:
-        if t is None:
-            raise ArrowIpcFormatError(f"field {name!r}: FP missing body")
-        precision = t.scalar(0, "<h", 0)
-        if precision == 0:
-            # HALF (r13): fp16 is THE dtype of exported embedding
-            # tables; IEEE 754 binary16 via numpy's native kind
-            return FieldSpec(
-                name, nullable, "float16", 16, dict_id, index_type
-            )
-        if precision == 1:
-            return FieldSpec(
-                name, nullable, "float32", 32, dict_id, index_type
-            )
-        if precision == 2:
-            return FieldSpec(
-                name, nullable, "float64", 64, dict_id, index_type
-            )
-        raise ArrowIpcFormatError(
-            f"field {name!r}: FloatingPoint precision {precision} "
-            "unsupported"
-        )
-    if tag == _T_BOOL:
-        return FieldSpec(name, nullable, "bool", 1, dict_id, index_type)
-    if tag == _T_UTF8:
-        return FieldSpec(name, nullable, "utf8", 0, dict_id, index_type)
-    if tag == _T_LARGE_UTF8:
-        return FieldSpec(
-            name, nullable, "large_utf8", 0, dict_id, index_type
-        )
-    if tag == _T_LARGE_BINARY:
-        return FieldSpec(
-            name, nullable, "large_binary", 0, dict_id, index_type
-        )
-    if tag == 1:
-        # Null { } — every slot is null; the layout has NO buffers
-        return FieldSpec(name, nullable, "null", 0, dict_id, index_type)
-    if tag in (_T_UTF8_VIEW, _T_BINARY_VIEW):
-        # Utf8View / BinaryView { } — 16-byte view structs plus
-        # variadic data buffers (count from the record batch's
-        # variadicBufferCounts)
-        tn = "utf8_view" if tag == _T_UTF8_VIEW else "binary_view"
-        return FieldSpec(name, nullable, tn, 0, dict_id, index_type)
-    if tag == _T_FIXED_BINARY:
-        # Schema.fbs: FixedSizeBinary { byteWidth: int }
-        bw = t.scalar(0, "<i", 0) if t is not None else 0
-        if bw <= 0:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: FixedSizeBinary byteWidth {bw}"
-            )
-        return FieldSpec(
-            name, nullable, "fixed_binary", 0, dict_id, index_type,
-            (), None, None, 0, 0, bw,
-        )
-    if tag == _T_DATE:
-        # Schema.fbs: Date { unit: DateUnit = MILLISECOND } —
-        # DAY(0) -> 32-bit days, MILLISECOND(1) -> 64-bit millis
-        unit = t.scalar(0, "<h", 1) if t is not None else 1
-        if unit == 0:
-            return FieldSpec(
-                name, nullable, "date32", 32, dict_id, index_type
-            )
-        if unit == 1:
-            return FieldSpec(
-                name, nullable, "date64", 64, dict_id, index_type
-            )
-        raise ArrowIpcFormatError(f"field {name!r}: DateUnit {unit}")
-    if tag == _T_TIME:
-        # Schema.fbs: Time { unit: TimeUnit = MILLISECOND;
-        # bitWidth: int = 32 } — s/ms are 32-bit, us/ns 64-bit
-        unit = t.scalar(0, "<h", 1) if t is not None else 1
-        bw = t.scalar(1, "<i", 32) if t is not None else 32
-        su = _TIME_UNITS.get(unit)
-        if su is None or bw not in (32, 64) or (
-            (su in ("s", "ms")) != (bw == 32)
-        ):
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Time unit {unit} / bitWidth {bw}"
-            )
-        return FieldSpec(
-            name, nullable, f"time{bw}", bw, dict_id, index_type,
-            (), su,
-        )
-    if tag == _T_TIMESTAMP:
-        # Schema.fbs: Timestamp { unit: TimeUnit = SECOND;
-        # timezone: string } — always a 64-bit epoch offset
-        unit = t.scalar(0, "<h", 0) if t is not None else 0
-        su = _TIME_UNITS.get(unit)
-        if su is None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: TimeUnit {unit}"
-            )
-        tz = t.string(1) if t is not None else None
-        return FieldSpec(
-            name, nullable, "timestamp", 64, dict_id, index_type,
-            (), su, tz or None,
-        )
-    if tag == _T_DURATION:
-        # Schema.fbs: Duration { unit: TimeUnit = MILLISECOND } —
-        # 64-bit signed counts of the unit.  Values surface as EXACT
-        # integers (no timedelta conversion: a ns duration would
-        # silently truncate past microseconds)
-        unit = t.scalar(0, "<h", 1) if t is not None else 1
-        su = _TIME_UNITS.get(unit)
-        if su is None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Duration TimeUnit {unit}"
-            )
-        return FieldSpec(
-            name, nullable, "duration", 64, dict_id, index_type,
-            (), su,
-        )
-    if tag == _T_INTERVAL:
-        # Schema.fbs: Interval { unit: IntervalUnit = YEAR_MONTH } —
-        # YEAR_MONTH(0): i32 months; DAY_TIME(1): 2 x i32 (days, ms);
-        # MONTH_DAY_NANO(2): i32 months + i32 days + i64 nanos.
-        # Compound units surface as tuples, months as exact ints.
-        unit = t.scalar(0, "<h", 0) if t is not None else 0
-        if unit == 0:
-            return FieldSpec(
-                name, nullable, "interval_ym", 32, dict_id, index_type
-            )
-        if unit == 1:
-            return FieldSpec(
-                name, nullable, "interval_dt", 64, dict_id, index_type
-            )
-        if unit == 2:
-            return FieldSpec(
-                name, nullable, "interval_mdn", 128, dict_id,
-                index_type,
-            )
-        raise ArrowIpcFormatError(
-            f"field {name!r}: IntervalUnit {unit} unsupported"
-        )
-    if tag == _T_DECIMAL:
-        # Schema.fbs: Decimal { precision: int; scale: int;
-        # bitWidth: int = 128 } — 128- and 256-bit layouts (the two
-        # widths the columnar spec defines)
-        if t is None:
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Decimal missing body"
-            )
-        prec = t.scalar(0, "<i", 0)
-        scale = t.scalar(1, "<i", 0)
-        bw = t.scalar(2, "<i", 128)
-        if bw not in (128, 256):
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Decimal bitWidth {bw} unsupported "
-                "(only 128/256)"
-            )
-        if not (1 <= prec <= (38 if bw == 128 else 76)):
-            raise ArrowIpcFormatError(
-                f"field {name!r}: Decimal precision {prec}"
-            )
-        return FieldSpec(
-            name, nullable, f"decimal{bw}", bw, dict_id, index_type,
-            (), None, None, prec, scale,
-        )
-    return FieldSpec(name, nullable, "binary", 0, dict_id, index_type)
-
-
-def _decode_schema(s: _Table) -> list[FieldSpec]:
-    endianness = s.scalar(0, "<h", 0)
-    if endianness != 0:
-        raise ArrowIpcFormatError("big-endian IPC files not supported")
-    fields = [_decode_field(f) for f in s.table_vector(1)]
-    if not fields:
-        raise ArrowIpcFormatError("schema has no fields")
-    return fields
-
-
-def _bit(buf: bytes, i: int) -> int:
-    return (buf[i >> 3] >> (i & 7)) & 1
-
-
-#: numpy little-endian dtype characters per supported fixed type
-_NP_KIND = {
-    "int8": "i1", "int16": "i2", "int32": "i4", "int64": "i8",
-    "uint8": "u1", "uint16": "u2", "uint32": "u4", "uint64": "u8",
-    "float16": "f2", "float32": "f4", "float64": "f8",
-    # temporal kinds decode as their raw integer storage, then
-    # _temporal_value converts per unit
-    "date32": "i4", "date64": "i8",
-    "time32": "i4", "time64": "i8", "timestamp": "i8",
-    # duration / year-month interval are exact integer storage and
-    # surface as-is (no timedelta: ns durations must stay lossless)
-    "duration": "i8", "interval_ym": "i4",
-}
-
-_EPOCH_DATE = _dt.date(1970, 1, 1)
-_EPOCH_UTC = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-_EPOCH_NAIVE = _dt.datetime(1970, 1, 1)
-_US_PER = {"s": 1_000_000, "ms": 1_000, "us": 1}
-
-
-def _tzinfo_for(tz: str) -> _dt.tzinfo:
-    """Timestamp timezone string -> tzinfo: 'UTC', fixed offsets
-    ('+HH:MM'), or IANA names via zoneinfo."""
-    if tz.upper() in ("UTC", "Z", "+00:00", "-00:00"):
-        return _dt.timezone.utc
-    m = _re.fullmatch(r"([+-])(\d{2}):?(\d{2})", tz)
-    if m:
-        delta = _dt.timedelta(
-            hours=int(m.group(2)), minutes=int(m.group(3))
-        )
-        return _dt.timezone(delta if m.group(1) == "+" else -delta)
+def _read(open_reader, data: bytes) -> pa.Table:
     try:
-        from zoneinfo import ZoneInfo
+        table = open_reader(pa.BufferReader(data)).read_all()
+        table.validate(full=True)
+    except (pa.ArrowException, OSError) as e:
+        raise ArrowIpcFormatError(str(e)) from e
+    return table
 
-        return ZoneInfo(tz)
-    except Exception as e:  # noqa: BLE001 - surface as format error
-        raise ArrowIpcFormatError(
-            f"unsupported timestamp timezone {tz!r}"
-        ) from e
 
+def read_arrow_ipc(data: bytes) -> pa.Table:
+    """Read an Arrow IPC FILE (Feather V2); one chunk per record batch."""
+    return _read(ipc.open_file, data)
 
-def _temporal_converter(spec: FieldSpec):
-    """Raw storage int -> Python value for date/time/timestamp kinds;
-    None when the kind needs no conversion."""
-    tn = spec.type_name
-    if tn == "date32":
-        return lambda v: _EPOCH_DATE + _dt.timedelta(days=v)
-    if tn == "date64":
-        # spec: milliseconds since epoch, constrained to midnights;
-        # floor-divide like pyarrow so off-midnight values still map
-        return lambda v: _EPOCH_DATE + _dt.timedelta(days=v // 86_400_000)
-    if tn in ("time32", "time64"):
-        unit = spec.unit
-        per_us = _US_PER.get(unit)
 
-        def to_time(v, per_us=per_us, unit=unit):
-            us = v // 1000 if unit == "ns" else v * per_us
-            if not 0 <= us < 86_400_000_000:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: time value {v} out of day "
-                    "range"
-                )
-            s, us = divmod(us, 1_000_000)
-            h, s = divmod(s, 3600)
-            m, s = divmod(s, 60)
-            return _dt.time(h, m, s, us)
-
-        return to_time
-    if tn == "timestamp":
-        unit, tz = spec.unit, spec.tz
-        if unit == "ns":
-            # Python datetime is microsecond-bounded; nanosecond
-            # timestamps surface as integer epoch-nanos (exact),
-            # matching the engine's nanosAsLong convention for
-            # parquet NANOS
-            return None
-        per = _US_PER[unit]
-        if tz is None:
-            return lambda v: _EPOCH_NAIVE + _dt.timedelta(
-                microseconds=v * per
-            )
-        tzi = _tzinfo_for(tz)
-        return lambda v: (
-            _EPOCH_UTC + _dt.timedelta(microseconds=v * per)
-        ).astimezone(tzi)
-    return None
-
-
-def _temporal_encoder(spec: FieldSpec):
-    """Inverse of :func:`_temporal_converter`: Python value -> raw
-    storage int for the encoder; None when no conversion applies."""
-    tn = spec.type_name
-
-    def day_count(v) -> int:
-        if isinstance(v, _dt.datetime):
-            v = v.date()
-        return (v - _EPOCH_DATE).days
-
-    if tn == "date32":
-        return day_count
-    if tn == "date64":
-        return lambda v: day_count(v) * 86_400_000
-    if tn in ("time32", "time64"):
-        unit = spec.unit
-
-        def from_time(v, unit=unit):
-            us = (
-                (v.hour * 3600 + v.minute * 60 + v.second) * 1_000_000
-                + v.microsecond
-            )
-            if unit == "ns":
-                return us * 1000
-            return us // _US_PER[unit]
-
-        return from_time
-    if tn == "timestamp":
-        unit = spec.unit
-        if unit == "ns":
-            return None  # integer epoch-nanos pass through
-
-        def from_ts(v, unit=unit):
-            epoch = _EPOCH_UTC if v.tzinfo is not None else _EPOCH_NAIVE
-            d = v - epoch
-            us = (d.days * 86_400 + d.seconds) * 1_000_000 + d.microseconds
-            return us // _US_PER[unit]
-
-        return from_ts
-    return None
-
-
-def _decode_column(
-    spec: FieldSpec,
-    length: int,
-    null_count: int,
-    bufs: list[bytes],
-) -> list:
-    """One FieldNode + its buffers -> python values (None for null)."""
-    validity = bufs[0]
-    if null_count and len(validity) * 8 < length:
-        raise ArrowIpcFormatError(
-            f"field {spec.name!r}: validity bitmap too short"
-        )
-
-    def null_at(i: int) -> bool:
-        return bool(null_count) and _bit(validity, i) == 0
-
-    if spec.type_name in (
-        "utf8", "binary", "large_utf8", "large_binary"
-    ):
-        large = spec.type_name.startswith("large_")
-        ow, ofmt = (8, "q") if large else (4, "i")
-        offsets_buf, data_buf = bufs[1], bufs[2]
-        if len(offsets_buf) < ow * (length + 1):
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: offsets buffer too short"
-            )
-        offs = struct.unpack_from(f"<{length + 1}{ofmt}", offsets_buf, 0)
-        out = []
-        for i in range(length):
-            if null_at(i):
-                out.append(None)
-                continue
-            lo, hi = offs[i], offs[i + 1]
-            if lo < 0 or hi < lo or hi > len(data_buf):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: offsets not monotone in-bounds"
-                )
-            raw = data_buf[lo:hi]
-            if spec.type_name in ("utf8", "large_utf8"):
-                try:
-                    out.append(raw.decode("utf-8"))
-                except UnicodeDecodeError as e:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: value {i} is not UTF-8"
-                    ) from e
-            else:
-                out.append(raw)
-        return out
-    data_buf = bufs[1]
-    if spec.type_name == "bool":
-        if len(data_buf) * 8 < length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: bool buffer too short"
-            )
-        bits = np.unpackbits(
-            np.frombuffer(data_buf, dtype=np.uint8),
-            bitorder="little",
-        )[:length]
-        vals = [bool(b) for b in bits]
-    elif spec.type_name == "fixed_binary":
-        bw = spec.fixed_size
-        if len(data_buf := bufs[1]) < bw * length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: fixed binary buffer too short"
-            )
-        vals = [
-            data_buf[bw * i : bw * (i + 1)] for i in range(length)
-        ]
-    elif spec.type_name in ("decimal128", "decimal256"):
-        w = spec.bit_width // 8
-        if len(data_buf) < w * length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: decimal buffer too short"
-            )
-        # little-endian two's-complement unscaled integers (16 or
-        # 32 bytes per the declared bitWidth).  scaleb under an
-        # explicit wide context: the default 28-digit context would
-        # silently ROUND decimal128(>28) / decimal256 values
-        vals = [
-            _decimal.Decimal(
-                int.from_bytes(
-                    data_buf[w * i : w * i + w], "little", signed=True
-                )
-            ).scaleb(-spec.scale, _DECIMAL_CTX)
-            for i in range(length)
-        ]
-    elif spec.type_name == "interval_dt":
-        # DAY_TIME: struct-packed (i32 days, i32 milliseconds)
-        if len(data_buf) < 8 * length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: interval buffer too short"
-            )
-        raw = struct.unpack_from(f"<{2 * length}i", data_buf, 0)
-        vals = [(raw[2 * i], raw[2 * i + 1]) for i in range(length)]
-    elif spec.type_name == "interval_mdn":
-        # MONTH_DAY_NANO: (i32 months, i32 days, i64 nanoseconds),
-        # 16 bytes per slot
-        if len(data_buf) < 16 * length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: interval buffer too short"
-            )
-        vals = [
-            struct.unpack_from("<iiq", data_buf, 16 * i)
-            for i in range(length)
-        ]
-    else:
-        step = spec.bit_width // 8
-        if len(data_buf) < step * length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: value buffer too short"
-            )
-        vals = np.frombuffer(
-            data_buf[: step * length],
-            dtype=f"<{_NP_KIND[spec.type_name]}",
-        ).tolist()
-        conv = _temporal_converter(spec)
-        if conv is not None:
-            vals = [conv(v) for v in vals]
-    if not null_count:
-        return vals
-    return [None if null_at(i) else v for i, v in enumerate(vals)]
-
-
-def _read_message(data: bytes, pos: int) -> tuple[_Table, int, int]:
-    """Encapsulated message at ``pos`` -> (Message table, body start,
-    total metadata length including prefix+padding)."""
-    if _u32(data, pos) != _CONTINUATION:
-        raise ArrowIpcFormatError(
-            f"message at {pos}: missing 0xFFFFFFFF continuation"
-        )
-    meta_len = _i32(data, pos + 4)
-    if meta_len <= 0 or pos + 8 + meta_len > len(data):
-        raise ArrowIpcFormatError(
-            f"message at {pos}: metadata length {meta_len} out of bounds"
-        )
-    region = data[pos + 8 : pos + 8 + meta_len]
-    root = _u32(region, 0)
-    return _Table(region, root), pos + 8 + meta_len, 8 + meta_len
-
-
-def _decode_record_batch(
-    msg: _Table,
-    body: bytes,
-    fields: list[FieldSpec],
-    dictionaries: dict | None = None,
-) -> tuple[int, list[list]]:
-    """RecordBatch message + body -> (length, columns)."""
-    header_tag = msg.scalar(1, "<B", 0)
-    if header_tag != _MSG_RECORD_BATCH:
-        raise ArrowIpcFormatError(
-            f"expected RecordBatch message, got tag {header_tag}"
-        )
-    rb = msg.table(2)
-    if rb is None:
-        raise ArrowIpcFormatError("RecordBatch message missing header")
-    return _decode_rb_table(rb, body, fields, dictionaries or {})
-
-
-def _decode_rb_table(
-    rb: _Table,
-    body: bytes,
-    fields: list[FieldSpec],
-    dictionaries: dict,
-) -> tuple[int, list[list]]:
-    compression = None  # None | "lz4" | "zstd"
-    comp = rb.table(3)
-    if comp is not None:
-        # BodyCompression (Message.fbs): codec i8 (0 = LZ4_FRAME,
-        # 1 = ZSTD), method i8 (0 = BUFFER — each non-empty buffer is
-        # [i64 uncompressed length][compressed frame], -1 length
-        # meaning the buffer is stored raw)
-        codec_id = comp.scalar(0, "<b", 0)
-        method = comp.scalar(1, "<b", 0)
-        if method != 0:
-            raise ArrowIpcFormatError(
-                f"BodyCompression method {method} not supported"
-            )
-        if codec_id == 0:
-            compression = "lz4"
-        elif codec_id == 1:
-            compression = "zstd"
-        else:
-            raise ArrowIpcFormatError(
-                f"BodyCompression codec {codec_id} not supported"
-            )
-    length = rb.scalar(0, "<q", 0)
-    if length < 0:
-        raise ArrowIpcFormatError(f"RecordBatch length {length} negative")
-    nv = rb.vector(1, stride=16)
-    bv = rb.vector(2, stride=16)
-    if nv is None or bv is None:
-        raise ArrowIpcFormatError("RecordBatch missing nodes or buffers")
-    nstart, nlen = nv
-    bstart, blen = bv
-
-    def _node_count(sp: FieldSpec) -> int:
-        return 1 + sum(_node_count(c) for c in sp.children)
-
-    want_nodes = sum(_node_count(f) for f in fields)
-    if nlen != want_nodes:
-        raise ArrowIpcFormatError(
-            f"RecordBatch has {nlen} nodes for a schema needing "
-            f"{want_nodes}"
-        )
-    # struct FieldNode { long length; long null_count; } stride 16
-    nodes = [
-        (_i64(rb.data, nstart + 16 * i), _i64(rb.data, nstart + 16 * i + 8))
-        for i in range(nlen)
-    ]
-    # struct Buffer { long offset; long length; } stride 16
-    buffers = [
-        (_i64(rb.data, bstart + 16 * i), _i64(rb.data, bstart + 16 * i + 8))
-        for i in range(blen)
-    ]
-    for off, ln in buffers:
-        if off < 0 or ln < 0 or off + ln > len(body):
-            raise ArrowIpcFormatError(
-                f"buffer ({off},{ln}) escapes body of {len(body)} bytes"
-            )
-    bix = 0
-
-    def take() -> bytes:
-        nonlocal bix
-        if bix >= len(buffers):
-            raise ArrowIpcFormatError("RecordBatch ran out of buffers")
-        off, ln = buffers[bix]
-        bix += 1
-        raw = body[off : off + ln]
-        if compression is None or ln == 0:
-            return raw
-        if ln < 8:
-            raise ArrowIpcFormatError(
-                "compressed buffer shorter than its length prefix"
-            )
-        (want,) = struct.unpack_from("<q", raw, 0)
-        payload = raw[8:]
-        if want == -1:  # stored raw (writer skipped compression)
-            return payload
-        if want < 0:
-            raise ArrowIpcFormatError(
-                f"compressed buffer declares length {want}"
-            )
-        if compression == "lz4":
-            # one LZ4 FRAME, decoded by liblz4 to exactly ``want``
-            from .lz4codec import Lz4FormatError, read_lz4_frame
-
-            try:
-                out = read_lz4_frame(payload, want)
-            except Lz4FormatError as e:
-                raise ArrowIpcFormatError(f"lz4 buffer: {e}") from None
-        else:  # zstd frame: our frame walk, libzstd block decode
-            from .zstdmeta import ZstdFormatError, parse_zstd_frames
-
-            try:
-                frames = parse_zstd_frames(payload)
-            except ZstdFormatError as e:
-                raise ArrowIpcFormatError(f"zstd buffer: {e}") from None
-            out = b"".join(
-                f["content"] if f.get("content") is not None else b""
-                for f in frames
-            )
-        if len(out) != want:
-            raise ArrowIpcFormatError(
-                f"buffer inflated to {len(out)}, declared {want}"
-            )
-        return out
-
-    # variadicBufferCounts (RecordBatch fid 4, [long]): one entry per
-    # view-typed column in depth-first field order — how many data
-    # buffers follow that column's views buffer
-    vv = rb.vector(4, stride=8)
-    variadic_counts = (
-        [_i64(rb.data, vv[0] + 8 * i) for i in range(vv[1])]
-        if vv is not None
-        else []
-    )
-    vix = 0
-
-    def next_variadic() -> int:
-        nonlocal vix
-        if vix >= len(variadic_counts):
-            raise ArrowIpcFormatError(
-                "RecordBatch ran out of variadicBufferCounts"
-            )
-        n = variadic_counts[vix]
-        vix += 1
-        return n
-
-    nix = 0
-
-    def next_node() -> tuple:
-        nonlocal nix
-        if nix >= len(nodes):
-            raise ArrowIpcFormatError("RecordBatch ran out of nodes")
-        n = nodes[nix]
-        nix += 1
-        return n
-
-    def decode_nested(spec: FieldSpec) -> list:
-        """Depth-first node/buffer consumption (the Arrow columnar
-        spec's flattening order): List = [validity][i32 offsets] then
-        the child's buffers; Struct = [validity] then each child."""
-        node_len, null_count = next_node()
-        if spec.type_name == "fixed_list":
-            # FixedSizeList: [validity] then the child with exactly
-            # node_len * listSize values — no offsets buffer
-            n = spec.fixed_size
-            validity = take()
-            child = decode_nested(spec.children[0])
-            if len(child) != node_len * n:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: fixed list child has "
-                    f"{len(child)} values for {node_len} x {n} slots"
-                )
-            return [
-                None
-                if null_count and _bit(validity, i) == 0
-                else child[i * n : (i + 1) * n]
-                for i in range(node_len)
-            ]
-        if spec.type_name == "map":
-            # identical buffer layout to List over the entries
-            # struct; each slot surfaces as [(key, value), ...]
-            validity = take()
-            offsets_buf = take()
-            if node_len and len(offsets_buf) < 4 * (node_len + 1):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: map offsets too short"
-                )
-            offs = (
-                struct.unpack_from(f"<{node_len + 1}i", offsets_buf, 0)
-                if node_len
-                else (0,)
-            )
-            entries = decode_nested(spec.children[0])
-            out: list = []
-            kname = spec.children[0].children[0].name
-            vname = spec.children[0].children[1].name
-            for i in range(node_len):
-                if null_count and _bit(validity, i) == 0:
-                    out.append(None)
-                    continue
-                lo, hi = offs[i], offs[i + 1]
-                if lo < 0 or hi < lo or hi > len(entries):
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: map offsets not "
-                        "monotone in-bounds"
-                    )
-                out.append(
-                    [(e[kname], e[vname]) for e in entries[lo:hi]]
-                )
-            return out
-        if spec.type_name in ("list_view", "large_list_view"):
-            large = spec.type_name == "large_list_view"
-            ow, ofmt = (8, "q") if large else (4, "i")
-            validity = take()
-            offsets_buf = take()
-            sizes_buf = take()
-            if len(offsets_buf) < ow * node_len or len(
-                sizes_buf
-            ) < ow * node_len:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: list-view buffers too short"
-                )
-            offs = struct.unpack_from(
-                f"<{node_len}{ofmt}", offsets_buf, 0
-            )
-            sizes = struct.unpack_from(
-                f"<{node_len}{ofmt}", sizes_buf, 0
-            )
-            child = decode_nested(spec.children[0])
-            out = []
-            for i in range(node_len):
-                if null_count and _bit(validity, i) == 0:
-                    out.append(None)
-                    continue
-                lo, n = offs[i], sizes[i]
-                if lo < 0 or n < 0 or lo + n > len(child):
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: list-view {i} escapes "
-                        "its child"
-                    )
-                out.append(child[lo : lo + n])
-            return out
-        if spec.type_name in ("list", "large_list"):
-            large = spec.type_name == "large_list"
-            ow, ofmt = (8, "q") if large else (4, "i")
-            validity = take()
-            offsets_buf = take()
-            if node_len and len(offsets_buf) < ow * (node_len + 1):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: list offsets too short"
-                )
-            offs = (
-                struct.unpack_from(
-                    f"<{node_len + 1}{ofmt}", offsets_buf, 0
-                )
-                if node_len
-                else (0,)
-            )
-            child = decode_nested(spec.children[0])
-            out: list = []
-            for i in range(node_len):
-                if null_count and _bit(validity, i) == 0:
-                    out.append(None)
-                    continue
-                lo, hi = offs[i], offs[i + 1]
-                if lo < 0 or hi < lo or hi > len(child):
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: list offsets not "
-                        "monotone in-bounds"
-                    )
-                out.append(child[lo:hi])
-            return out
-        if spec.type_name == "null":
-            return [None] * node_len  # Null layout has no buffers
-        if spec.type_name == "run_end_encoded":
-            # REE parent: logical length, NO buffers of its own; the
-            # run_ends child holds ABSOLUTE logical end indices
-            run_ends = decode_nested(spec.children[0])
-            values = decode_nested(spec.children[1])
-            if len(run_ends) != len(values):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: {len(run_ends)} run ends "
-                    f"for {len(values)} values"
-                )
-            out = []
-            prev = 0
-            for end, v in zip(run_ends, values):
-                if end is None or end <= prev:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: run ends not strictly "
-                        "increasing"
-                    )
-                out.extend([v] * (min(end, node_len) - prev))
-                prev = min(end, node_len)
-            if len(out) != node_len:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: runs cover {len(out)} of "
-                    f"{node_len} logical slots"
-                )
-            return out
-        if spec.type_name in ("utf8_view", "binary_view"):
-            # [validity][16-byte views] + N variadic data buffers.
-            # View struct: i32 length; <= 12 -> bytes inline, else
-            # [4-byte prefix][i32 buffer index][i32 offset]
-            validity = take()
-            views = take()
-            if len(views) < 16 * node_len:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: views buffer too short"
-                )
-            data_bufs = [take() for _ in range(next_variadic())]
-            out = []
-            for i in range(node_len):
-                if null_count and _bit(validity, i) == 0:
-                    out.append(None)
-                    continue
-                ln = _i32(views, 16 * i)
-                if ln < 0:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: negative view length"
-                    )
-                if ln <= 12:
-                    raw = views[16 * i + 4 : 16 * i + 4 + ln]
-                else:
-                    bi = _i32(views, 16 * i + 8)
-                    off = _i32(views, 16 * i + 12)
-                    if not 0 <= bi < len(data_bufs) or off < 0 or (
-                        off + ln > len(data_bufs[bi])
-                    ):
-                        raise ArrowIpcFormatError(
-                            f"field {spec.name!r}: view {i} escapes "
-                            "its data buffer"
-                        )
-                    raw = data_bufs[bi][off : off + ln]
-                    if raw[:4] != views[16 * i + 4 : 16 * i + 8]:
-                        raise ArrowIpcFormatError(
-                            f"field {spec.name!r}: view {i} prefix "
-                            "mismatch"
-                        )
-                if spec.type_name == "utf8_view":
-                    try:
-                        out.append(raw.decode("utf-8"))
-                    except UnicodeDecodeError as e:
-                        raise ArrowIpcFormatError(
-                            f"field {spec.name!r}: view {i} is not "
-                            "UTF-8"
-                        ) from e
-                else:
-                    out.append(bytes(raw))
-            return out
-        if spec.type_name == "union":
-            # columnar spec: unions carry NO validity buffer — a
-            # slot's nullness comes from the selected child.  Sparse:
-            # [i8 types], every child batch-length-long.  Dense:
-            # [i8 types][i32 offsets] into compact children.
-            dense = spec.unit == "dense"
-            types_buf = take()
-            if len(types_buf) < node_len:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: union types buffer too short"
-                )
-            offs = None
-            if dense:
-                offsets_buf = take()
-                if len(offsets_buf) < 4 * node_len:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: union offsets too short"
-                    )
-                offs = struct.unpack_from(
-                    f"<{node_len}i", offsets_buf, 0
-                )
-            kids = [decode_nested(c) for c in spec.children]
-            by_tid = {
-                tid: ci for ci, tid in enumerate(spec.type_ids)
-            }
-            out = []
-            for i in range(node_len):
-                tid = types_buf[i]
-                ci = by_tid.get(tid)
-                if ci is None:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: slot {i} carries type "
-                        f"id {tid} absent from typeIds"
-                    )
-                j = offs[i] if dense else i
-                child = kids[ci]
-                if not 0 <= j < len(child):
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: union offset {j} "
-                        f"outside child {ci} of {len(child)}"
-                    )
-                out.append(child[j])
-            return out
-        if spec.type_name == "struct":
-            validity = take()
-            kids = [decode_nested(c) for c in spec.children]
-            for c, kv in zip(spec.children, kids):
-                if len(kv) != node_len:
-                    raise ArrowIpcFormatError(
-                        f"struct child {c.name!r} has {len(kv)} values "
-                        f"for {node_len} slots"
-                    )
-            names = [c.name for c in spec.children]
-            return [
-                None
-                if null_count and _bit(validity, i) == 0
-                else dict(zip(names, (kv[i] for kv in kids)))
-                for i in range(node_len)
-            ]
-        # primitive / dictionary leaf
-        if spec.dict_id is not None:
-            bufs = [take(), take()]
-            idx_spec = FieldSpec(
-                spec.name, spec.nullable, spec.index_type,
-                int(spec.index_type.lstrip("uint")),
-            )
-            idx = _decode_column(idx_spec, node_len, null_count, bufs)
-            values = dictionaries.get(spec.dict_id)
-            if values is None:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: no dictionary batch for "
-                    f"id {spec.dict_id}"
-                )
-            out = []
-            for i, v in enumerate(idx):
-                if v is None:
-                    out.append(None)
-                elif 0 <= v < len(values):
-                    out.append(values[v])
-                else:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: index {v} at row {i} "
-                        f"outside dictionary of {len(values)}"
-                    )
-            return out
-        nbufs = (
-            3
-            if spec.type_name
-            in ("utf8", "binary", "large_utf8", "large_binary")
-            else 2
-        )
-        bufs = [take() for _ in range(nbufs)]
-        col = _decode_column(spec, node_len, null_count, bufs)
-        nc = sum(1 for v in col if v is None)
-        if nc != null_count:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: decoded {nc} nulls, "
-                f"node declared {null_count}"
-            )
-        return col
-
-    columns = []
-    for spec in fields:
-        top_len = nodes[nix][0]
-        if top_len != length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: node length {top_len} != "
-                f"batch length {length}"
-            )
-        columns.append(decode_nested(spec))
-    if nix != len(nodes):
-        raise ArrowIpcFormatError(
-            f"RecordBatch declared {len(nodes)} nodes, consumed {nix}"
-        )
-    if bix != len(buffers):
-        raise ArrowIpcFormatError(
-            f"RecordBatch declared {len(buffers)} buffers, "
-            f"consumed {bix}"
-        )
-    return length, columns
-
-
-def _decode_dictionary_batch(
-    msg: _Table,
-    body: bytes,
-    fields: list[FieldSpec],
-    dictionaries: dict,
-) -> None:
-    """DictionaryBatch message -> mutate ``dictionaries[id]``.
-
-    Message.fbs: header union tag 2; DictionaryBatch has id (fid 0),
-    data (fid 1, a RecordBatch whose single column is typed as the
-    dictionary VALUES), isDelta (fid 2 — append to the id's values;
-    a non-delta batch REPLACES them, per the IPC spec's replacement
-    semantics)."""
-    db = msg.table(2)
-    if db is None:
-        raise ArrowIpcFormatError("DictionaryBatch message missing header")
-    did = db.scalar(0, "<q", 0)
-    is_delta = bool(db.scalar(2, "<b", 0))
-    rb = db.table(1)
-    if rb is None:
-        raise ArrowIpcFormatError(f"dictionary {did}: missing data batch")
-    # dict ids can belong to primitives nested inside Struct/List
-    # children (the decode path already accepts them), so the owner
-    # scan must recurse the whole field tree, not just the top level
-    def _walk(fs):
-        for f in fs:
-            yield f
-            yield from _walk(f.children)
-
-    owners = [f for f in _walk(fields) if f.dict_id == did]
-    if not owners:
-        raise ArrowIpcFormatError(
-            f"dictionary batch id {did} matches no schema field"
-        )
-    spec = owners[0]
-    value_spec = FieldSpec(
-        spec.name, True, spec.type_name, spec.bit_width,
-        None, None, (), spec.unit, spec.tz, spec.precision, spec.scale,
-        spec.fixed_size,
-    )
-    _, cols = _decode_rb_table(rb, body, [value_spec], {})
-    if is_delta and did in dictionaries:
-        dictionaries[did] = dictionaries[did] + cols[0]
-    else:
-        dictionaries[did] = cols[0]
-
-
-def read_arrow_ipc(data: bytes) -> dict:
-    """Walk a complete Arrow IPC FILE (Feather V2) from bytes.
-
-    Returns ``{"fields": [FieldSpec...], "batches": [{"length": n,
-    "columns": [[values...]...]}...], "body_bytes": total}`` after
-    asserting the full framing: leading+trailing magic, footer
-    flatbuffer, footer schema == leading stream Schema message (field
-    names, order and types), every record-batch Block, and per-batch
-    buffer accounting.  Values come back as Python scalars with
-    ``None`` for nulls.
-    """
-    if len(data) < 8 + 4 + 6 or data[: len(MAGIC)] != MAGIC:
-        raise ArrowIpcFormatError("missing leading ARROW1 magic")
-    if data[-6:] != MAGIC:
-        raise ArrowIpcFormatError("missing trailing ARROW1 magic")
-    footer_len = _i32(data, len(data) - 10)
-    footer_start = len(data) - 10 - footer_len
-    if footer_len <= 0 or footer_start < 8:
-        raise ArrowIpcFormatError(f"footer length {footer_len} out of bounds")
-    fregion = data[footer_start : footer_start + footer_len]
-    footer = _Table(fregion, _u32(fregion, 0))
-    schema_t = footer.table(1)
-    if schema_t is None:
-        raise ArrowIpcFormatError("footer has no schema")
-    fields = _decode_schema(schema_t)
-
-    def _blocks(fid: int) -> list:
-        v = footer.vector(fid, stride=24)
-        out = []
-        if v is not None:
-            start, n = v
-            # struct Block { long offset; int metaDataLength; long
-            # bodyLength; } — C layout pads the int to 8, stride 24
-            for i in range(n):
-                p = start + 24 * i
-                out.append(
-                    (
-                        _i64(fregion, p),
-                        _i32(fregion, p + 8),
-                        _i64(fregion, p + 16),
-                    )
-                )
-        return out
-
-    dict_blocks = _blocks(2)
-    blocks = _blocks(3)
-
-    # cross-check: the stream section opens with a Schema message that
-    # must agree with the footer's copy
-    smsg, _, _ = _read_message(data, 8)
-    if smsg.scalar(1, "<B", 0) != _MSG_SCHEMA:
-        raise ArrowIpcFormatError("stream does not open with a Schema")
-    stream_schema = smsg.table(2)
-    if stream_schema is None:
-        raise ArrowIpcFormatError("Schema message missing body")
-    stream_fields = _decode_schema(stream_schema)
-    if stream_fields != fields:
-        raise ArrowIpcFormatError(
-            "stream Schema disagrees with footer schema"
-        )
-
-    def _block_message(offset, meta_len, body_len, kind):
-        if offset < 8 or offset + meta_len + body_len > footer_start:
-            raise ArrowIpcFormatError(
-                f"{kind} block ({offset},{meta_len},{body_len}) "
-                "escapes the stream section"
-            )
-        msg, body_start, consumed = _read_message(data, offset)
-        if consumed != meta_len:
-            raise ArrowIpcFormatError(
-                f"block metaDataLength {meta_len} != framed {consumed}"
-            )
-        declared = msg.scalar(3, "<q", 0)
-        if declared != body_len:
-            raise ArrowIpcFormatError(
-                f"message bodyLength {declared} != block bodyLength "
-                f"{body_len}"
-            )
-        return msg, data[body_start : body_start + body_len]
-
-    # dictionary batches resolve first, in block order (the spec puts
-    # them before their consumers; deltas append in stream order)
-    dictionaries: dict = {}
-    body_bytes = 0
-    for offset, meta_len, body_len in dict_blocks:
-        msg, body = _block_message(
-            offset, meta_len, body_len, "dictionary-batch"
-        )
-        if msg.scalar(1, "<B", 0) != _MSG_DICTIONARY_BATCH:
-            raise ArrowIpcFormatError(
-                "dictionary block does not hold a DictionaryBatch"
-            )
-        _decode_dictionary_batch(msg, body, fields, dictionaries)
-        body_bytes += body_len
-
-    batches = []
-    for offset, meta_len, body_len in blocks:
-        msg, body = _block_message(
-            offset, meta_len, body_len, "record-batch"
-        )
-        length, columns = _decode_record_batch(
-            msg, body, fields, dictionaries
-        )
-        body_bytes += body_len
-        batches.append({"length": length, "columns": columns})
-    return {"fields": fields, "batches": batches, "body_bytes": body_bytes}
-
-
-def read_arrow_stream(data: bytes) -> dict:
-    """Walk an Arrow IPC STREAM from bytes — the footer-less wire
-    format (Flight payloads, socket/pipe interchange, Spark's own
-    Arrow exchange), as opposed to the random-access FILE format
-    :func:`read_arrow_ipc` handles.
-
-    Framing per the columnar spec's streaming section: a Schema
-    message, then DictionaryBatch / RecordBatch messages in stream
-    order, terminated by the end-of-stream marker (continuation
-    0xFFFFFFFF + zero length).  A stream that simply ends cleanly at
-    a message boundary without the marker is accepted (the spec
-    allows readers to tolerate EOF); anything else — truncation
-    mid-message, bytes after EOS, the pre-0.15 continuation-less
-    framing — is a named domain error.  Returns the same shape as
-    :func:`read_arrow_ipc`.
-    """
-    if len(data) < 8:
-        raise ArrowIpcFormatError("stream shorter than one message")
-    if _u32(data, 0) != _CONTINUATION:
-        raise ArrowIpcFormatError(
-            "stream does not open with the 0xFFFFFFFF continuation "
-            "(pre-0.15 legacy framing is not supported)"
-        )
-    msg, pos, _ = _read_message(data, 0)
-    if msg.scalar(1, "<B", 0) != _MSG_SCHEMA:
-        raise ArrowIpcFormatError("stream does not open with a Schema")
-    schema_t = msg.table(2)
-    if schema_t is None:
-        raise ArrowIpcFormatError("Schema message missing body")
-    fields = _decode_schema(schema_t)
-
-    dictionaries: dict = {}
-    batches = []
-    body_bytes = 0
-    while True:
-        if pos == len(data):
-            break  # clean EOF at a message boundary (no EOS marker)
-        if pos + 8 > len(data):
-            raise ArrowIpcFormatError(
-                f"stream truncated mid-frame at {pos}"
-            )
-        if _u32(data, pos) == _CONTINUATION and _i32(data, pos + 4) == 0:
-            if pos + 8 != len(data):
-                raise ArrowIpcFormatError(
-                    f"{len(data) - pos - 8} bytes after the "
-                    "end-of-stream marker"
-                )
-            break
-        msg, body_start, _ = _read_message(data, pos)
-        body_len = msg.scalar(3, "<q", 0)
-        if body_len < 0 or body_start + body_len > len(data):
-            raise ArrowIpcFormatError(
-                f"message bodyLength {body_len} escapes the stream"
-            )
-        body = data[body_start : body_start + body_len]
-        tag = msg.scalar(1, "<B", 0)
-        if tag == _MSG_DICTIONARY_BATCH:
-            _decode_dictionary_batch(msg, body, fields, dictionaries)
-        elif tag == _MSG_RECORD_BATCH:
-            length, columns = _decode_record_batch(
-                msg, body, fields, dictionaries
-            )
-            batches.append({"length": length, "columns": columns})
-        else:
-            raise ArrowIpcFormatError(
-                f"unexpected message tag {tag} in stream"
-            )
-        body_bytes += body_len
-        pos = body_start + body_len
-    return {
-        "fields": fields, "batches": batches, "body_bytes": body_bytes,
-    }
-
-
-# ---------------------------------------------------------------------------
-# Write direction: a minimal flatbuffers BUILDER + IPC file encoder.
-# The independent referee is pyarrow's own reader (tests assert
-# pa.ipc.open_file() recovers the exact values), plus this module's
-# reader for the self-twin.
-# ---------------------------------------------------------------------------
-
-#: MetadataVersion enum, Schema.fbs declaration order (V1=0 .. V5=4)
-_METADATA_V5 = 4
-
-
-class _Builder:
-    """Back-to-front flatbuffers builder (the canonical algorithm from
-    the public FlatBuffers internals doc): bytes are PREPENDED, every
-    position is measured from the END of the final buffer, uoffsets
-    become ``field_pos - target_pos`` and the table soffset becomes
-    ``vtable_pos - table_pos`` (both positive here because referenced
-    data is always built first).  No vtable dedup — layout-optimal
-    output is not a goal, spec-valid output is."""
-
-    def __init__(self):
-        self.buf = bytearray()
-        self._vtable: list[tuple[int, int]] | None = None
-        self._table_mark = 0
-        self._minalign = 4
-
-    def _off(self) -> int:
-        return len(self.buf)
-
-    def _prepend(self, raw: bytes) -> int:
-        self.buf[:0] = raw
-        return self._off()
-
-    def _pad(self, align: int, tail: int = 0):
-        """Prepend zeros so that (len + tail) % align == 0.  All
-        interior alignment is end-relative; ``finish`` pads the HEAD
-        to the max alignment seen so the same positions are aligned
-        start-relative too (what strict verifiers check)."""
-        self._minalign = max(self._minalign, align)
-        while (len(self.buf) + tail) % align:
-            self.buf[:0] = b"\x00"
-
-    def push_scalar(self, fmt: str, value) -> int:
-        size = struct.calcsize(fmt)
-        self._pad(size, tail=size)
-        return self._prepend(struct.pack(fmt, value))
-
-    def create_string(self, s: str) -> int:
-        raw = s.encode("utf-8")
-        # pad FIRST so the u32 length lands 4-aligned with the
-        # nul-terminated payload immediately after it (padding must
-        # never separate a length prefix from its data)
-        self._pad(4, tail=len(raw) + 1 + 4)
-        self._prepend(raw + b"\x00")
-        return self._prepend(struct.pack("<I", len(raw)))
-
-    def create_offset_vector(self, offsets: list[int]) -> int:
-        """Vector of uoffsets to already-built tables/strings."""
-        self._pad(4, tail=4 * (len(offsets) + 1))
-        # elements front-to-back: element i sits at higher end-offset
-        raw = bytearray()
-        n = len(offsets)
-        base = self._off() + 4 * n  # end-offset of element 0 once placed
-        for i, target in enumerate(offsets):
-            elem_pos = base - 4 * i
-            raw += struct.pack("<I", elem_pos - target)
-        self._prepend(bytes(raw))
-        return self._prepend(struct.pack("<I", n))
-
-    def create_struct_vector(self, raw: bytes, count: int, align: int) -> int:
-        # both pads run BEFORE the payload: element region align-ed,
-        # u32 count 4-aligned and contiguous with the elements
-        self._pad(4, tail=len(raw) + 4)
-        self._pad(align, tail=len(raw))
-        self._prepend(raw)
-        return self._prepend(struct.pack("<I", count))
-
-    # -- tables ---------------------------------------------------------
-    def start_table(self):
-        assert self._vtable is None, "nested start_table"
-        self._vtable = []
-        self._table_mark = self._off()
-
-    def add_scalar(self, fid: int, fmt: str, value, default):
-        if value == default:
-            return
-        pos = self.push_scalar(fmt, value)
-        self._vtable.append((fid, pos))
-
-    def add_offset(self, fid: int, target: int | None):
-        if target is None:
-            return
-        self._pad(4, tail=4)
-        pos = self._prepend(b"\x00\x00\x00\x00")
-        # patch once position is known: value = pos - target
-        struct.pack_into("<I", self.buf, len(self.buf) - pos, pos - target)
-        self._vtable.append((fid, pos))
-
-    def end_table(self) -> int:
-        assert self._vtable is not None
-        fields = self._vtable
-        self._vtable = None
-        self._pad(4, tail=4)
-        table_pos = self._prepend(b"\x00\x00\x00\x00")  # soffset slot
-        max_fid = max((fid for fid, _ in fields), default=-1)
-        vt_bytes = 4 + 2 * (max_fid + 1)
-        table_bytes = table_pos - self._table_mark
-        vt = bytearray(struct.pack("<HH", vt_bytes, table_bytes))
-        slots = {fid: table_pos - fpos for fid, fpos in fields}
-        for fid in range(max_fid + 1):
-            vt += struct.pack("<H", slots.get(fid, 0))
-        self._pad(2, tail=len(vt))
-        vt_pos = self._prepend(bytes(vt))
-        struct.pack_into(
-            "<i", self.buf, len(self.buf) - table_pos, vt_pos - table_pos
-        )
-        return table_pos
-
-    def finish(self, root: int) -> bytes:
-        self._pad(self._minalign, tail=4)
-        pos = self._prepend(b"\x00\x00\x00\x00")
-        struct.pack_into("<I", self.buf, 0, pos - root)
-        return bytes(self.buf)
-
-
-def _fb_field(b: _Builder, spec: FieldSpec) -> int:
-    """Build one Schema.fbs Field table (flat or nested)."""
-    kids_vec = None
-    if spec.type_name in (
-        "list", "struct", "union", "map",
-        "list_view", "large_list_view", "run_end_encoded",
-    ):
-        kid_offs = [_fb_field(b, c) for c in spec.children]
-        kids_vec = b.create_offset_vector(kid_offs)
-        if spec.type_name == "union":
-            # Union { mode: UnionMode; typeIds: [int] } — always
-            # write typeIds explicitly so child identity is pinned
-            tids = spec.type_ids or tuple(range(len(spec.children)))
-            traw = b"".join(struct.pack("<i", t) for t in tids)
-            tvec = b.create_struct_vector(traw, len(tids), 4)
-            b.start_table()
-            b.add_scalar(0, "<h", 0 if spec.unit == "sparse" else 1, -1)
-            b.add_offset(1, tvec)
-            type_t, tag = b.end_table(), _T_UNION
-        else:
-            b.start_table()
-            # List/Struct_/ListView/LargeListView/RunEndEncoded type
-            # tables carry no fields (Schema.fbs)
-            type_t = b.end_table()
-            tag = {
-                "list": _T_LIST,
-                "struct": _T_STRUCT,
-                "map": _T_MAP,  # keysSorted stays the default false
-                "list_view": _T_LIST_VIEW,
-                "large_list_view": _T_LARGE_LIST_VIEW,
-                "run_end_encoded": _T_RUN_END_ENCODED,
-            }[spec.type_name]
-        name = b.create_string(spec.name)
-        b.start_table()
-        b.add_offset(0, name)
-        b.add_scalar(1, "<b", 1 if spec.nullable else 0, 0)
-        b.add_scalar(2, "<B", tag, 0)
-        b.add_offset(3, type_t)
-        b.add_offset(5, kids_vec)
-        return b.end_table()
-    # duration / interval BEFORE the integer branch: 'interval_*'
-    # would otherwise match startswith('int') and emit an Int table
-    if spec.type_name == "duration":
-        # Duration { unit: TimeUnit = MILLISECOND }
-        b.start_table()
-        b.add_scalar(0, "<h", _UNIT_ENUM[spec.unit], 1)
-        type_t, tag = b.end_table(), _T_DURATION
-    elif spec.type_name in ("interval_ym", "interval_dt",
-                            "interval_mdn"):
-        # Interval { unit: IntervalUnit = YEAR_MONTH }
-        iu = {"interval_ym": 0, "interval_dt": 1,
-              "interval_mdn": 2}[spec.type_name]
-        b.start_table()
-        b.add_scalar(0, "<h", iu, 0)
-        type_t, tag = b.end_table(), _T_INTERVAL
-    elif spec.type_name.startswith(("int", "uint")):
-        b.start_table()
-        b.add_scalar(0, "<i", spec.bit_width, 0)
-        b.add_scalar(1, "<b", 0 if spec.type_name.startswith("u") else 1, 0)
-        type_t, tag = b.end_table(), _T_INT
-    elif spec.type_name.startswith("float"):
-        b.start_table()
-        # FloatingPoint precision: HALF(0) / SINGLE(1) / DOUBLE(2)
-        b.add_scalar(
-            0, "<h", {16: 0, 32: 1, 64: 2}[spec.bit_width], -1
-        )
-        type_t, tag = b.end_table(), _T_FP
-    elif spec.type_name in ("date32", "date64"):
-        b.start_table()
-        # DateUnit: DAY(0) / MILLISECOND(1); fbs default MILLISECOND
-        b.add_scalar(0, "<h", 0 if spec.type_name == "date32" else 1, 1)
-        type_t, tag = b.end_table(), _T_DATE
-    elif spec.type_name in ("time32", "time64"):
-        b.start_table()
-        b.add_scalar(0, "<h", _UNIT_ENUM[spec.unit], 1)
-        b.add_scalar(1, "<i", spec.bit_width, 32)
-        type_t, tag = b.end_table(), _T_TIME
-    elif spec.type_name == "timestamp":
-        tz_off = b.create_string(spec.tz) if spec.tz else None
-        b.start_table()
-        b.add_scalar(0, "<h", _UNIT_ENUM[spec.unit], 0)
-        b.add_offset(1, tz_off)
-        type_t, tag = b.end_table(), _T_TIMESTAMP
-    elif spec.type_name == "fixed_binary":
-        # FixedSizeBinary type table: byteWidth int at slot 0
-        # (Schema.fbs; 0 is the fbs default, so force-write the slot)
-        b.start_table()
-        b.add_scalar(0, "<i", spec.fixed_size, -1)
-        type_t, tag = b.end_table(), _T_FIXED_BINARY
-    elif spec.type_name in ("decimal128", "decimal256"):
-        b.start_table()
-        b.add_scalar(0, "<i", spec.precision, 0)
-        b.add_scalar(1, "<i", spec.scale, 0)
-        b.add_scalar(2, "<i", spec.bit_width or 128, 128)
-        type_t, tag = b.end_table(), _T_DECIMAL
-    else:
-        b.start_table()
-        type_t = b.end_table()  # Utf8/Bool/Binary/views carry no fields
-        tag = {
-            "utf8": _T_UTF8,
-            "bool": _T_BOOL,
-            "binary": _T_BINARY,
-            "utf8_view": _T_UTF8_VIEW,
-            "binary_view": _T_BINARY_VIEW,
-        }[spec.type_name]
-    dict_t = None
-    if spec.dict_id is not None:
-        # DictionaryEncoding { id: long; indexType: Int } — the
-        # field's TYPE above stays the VALUE type per the spec
-        it = spec.index_type or "int32"
-        b.start_table()
-        b.add_scalar(0, "<i", int(it.lstrip("uint")), 0)
-        b.add_scalar(1, "<b", 0 if it.startswith("u") else 1, 0)
-        it_t = b.end_table()
-        b.start_table()
-        b.add_scalar(0, "<q", spec.dict_id, -1)
-        b.add_offset(1, it_t)
-        dict_t = b.end_table()
-    name = b.create_string(spec.name)
-    b.start_table()
-    b.add_offset(0, name)
-    b.add_scalar(1, "<b", 1 if spec.nullable else 0, 0)
-    b.add_scalar(2, "<B", tag, 0)
-    b.add_offset(3, type_t)
-    b.add_offset(4, dict_t)
-    return b.end_table()
-
-
-def _fb_schema(b: _Builder, fields: list[FieldSpec]) -> int:
-    fvec = b.create_offset_vector([_fb_field(b, f) for f in fields])
-    b.start_table()
-    b.add_scalar(0, "<h", 0, 1)  # endianness Little (non-default-proof)
-    b.add_offset(1, fvec)
-    return b.end_table()
-
-
-def _encapsulate(meta: bytes, body: bytes = b"") -> bytes:
-    pad = (-len(meta)) % 8
-    return (
-        struct.pack("<Ii", _CONTINUATION, len(meta) + pad)
-        + meta
-        + b"\x00" * pad
-        + body
-    )
-
-
-def _schema_message(fields: list[FieldSpec]) -> bytes:
-    b = _Builder()
-    schema = _fb_schema(b, fields)
-    b.start_table()
-    b.add_scalar(0, "<h", _METADATA_V5, 0)
-    b.add_scalar(1, "<B", _MSG_SCHEMA, 0)
-    b.add_offset(2, schema)
-    return _encapsulate(b.finish(b.end_table()))
-
-
-def _validity(col: list) -> tuple[bytes, int]:
-    nulls = sum(1 for v in col if v is None)
-    if not nulls:
-        return b"", 0
-    bits = bytearray((len(col) + 7) // 8)
-    for i, v in enumerate(col):
-        if v is not None:
-            bits[i >> 3] |= 1 << (i & 7)
-    return bytes(bits), nulls
-
-
-def _column_buffers(spec: FieldSpec, col: list) -> list[bytes]:
-    validity, _ = _validity(col)
-    if spec.type_name in ("utf8", "binary"):
-        offs = [0]
-        payload = bytearray()
-        for v in col:
-            if v is not None:
-                payload += v.encode("utf-8") if spec.type_name == "utf8" else v
-            offs.append(len(payload))
-        return [
-            validity,
-            struct.pack(f"<{len(offs)}i", *offs),
-            bytes(payload),
-        ]
-    if spec.type_name == "bool":
-        bits = bytearray((len(col) + 7) // 8)
-        for i, v in enumerate(col):
-            if v:
-                bits[i >> 3] |= 1 << (i & 7)
-        return [validity, bytes(bits)]
-    if spec.type_name == "fixed_binary":
-        bw = spec.fixed_size
-        payload = bytearray()
-        for v in col:
-            if v is None:
-                payload += b"\x00" * bw
-                continue
-            if len(v) != bw:
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: value of {len(v)} bytes in a "
-                    f"FixedSizeBinary({bw}) column"
-                )
-            payload += v
-        return [validity, bytes(payload)]
-    if spec.type_name in ("decimal128", "decimal256"):
-        w = (spec.bit_width or 128) // 8
-        bits = w * 8
-        payload = bytearray()
-        for v in col:
-            if v is None:
-                u = 0
-            else:
-                scaled = _decimal.Decimal(v).scaleb(
-                    spec.scale, _DECIMAL_CTX
-                )
-                u = int(scaled)
-                if u != scaled:
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: {v!r} does not fit "
-                        f"scale {spec.scale}"
-                    )
-                # decimals store a two's-complement unscaled int of
-                # the declared width; bound-check so an oversized
-                # value is a named domain error, not OverflowError
-                if not -(1 << (bits - 1)) <= u < (1 << (bits - 1)):
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: unscaled {u} exceeds "
-                        f"{bits} bits for {spec.type_name}"
-                        f"({spec.precision},{spec.scale})"
-                    )
-            payload += u.to_bytes(w, "little", signed=True)
-        return [validity, bytes(payload)]
-    if spec.type_name == "interval_dt":
-        payload = bytearray()
-        for v in col:
-            d, ms = (0, 0) if v is None else v
-            payload += struct.pack("<ii", d, ms)
-        return [validity, bytes(payload)]
-    if spec.type_name == "interval_mdn":
-        payload = bytearray()
-        for v in col:
-            m, d, ns = (0, 0, 0) if v is None else v
-            payload += struct.pack("<iiq", m, d, ns)
-        return [validity, bytes(payload)]
-    enc = _temporal_encoder(spec)
-    arr = np.array(
-        [0 if v is None else (enc(v) if enc else v) for v in col],
-        dtype=f"<{_NP_KIND[spec.type_name]}",
-    )
-    return [validity, arr.tobytes()]
-
-
-def _emit_column(spec: FieldSpec, col: list, nodes: list, emit_buf,
-                 variadic: list | None = None):
-    """Depth-first node/buffer emission per the columnar spec's
-    flattening order — the exact inverse of ``decode_nested``.
-    List = [validity][i32 offsets] then the flattened child; Struct =
-    [validity] then each child column (null struct slots propagate
-    None into every child); Union = [i8 types] (+ [i32 offsets] when
-    dense) then the children — NO validity buffer per the columnar
-    spec, so slots are (type_id, value) tuples and nullness lives in
-    the selected child.  View types (r14): Utf8View/BinaryView emit
-    [validity][16-byte views] + ONE variadic data buffer (entry
-    appended to ``variadic`` — RecordBatch.variadicBufferCounts);
-    ListView/LargeListView emit [validity][offsets][sizes] with
-    densely-packed sequential offsets; RunEndEncoded emits no buffers
-    of its own — the column compresses into (run_ends, values)
-    children."""
-    tn = spec.type_name
-    if tn == "run_end_encoded":
-        # REE parent: logical length, no validity, no buffers
-        nodes.append((len(col), 0))
-        run_ends: list = []
-        run_vals: list = []
-        for v in col:
-            same = run_vals and (
-                (v is None and run_vals[-1] is None)
-                or (
-                    v is not None
-                    and run_vals[-1] is not None
-                    and v == run_vals[-1]
-                )
-            )
-            if same:
-                run_ends[-1] += 1
-            else:
-                run_ends.append((run_ends[-1] if run_ends else 0) + 1)
-                run_vals.append(v)
-        _emit_column(spec.children[0], run_ends, nodes, emit_buf,
-                     variadic)
-        _emit_column(spec.children[1], run_vals, nodes, emit_buf,
-                     variadic)
-        return
-    if tn in ("utf8_view", "binary_view"):
-        validity, nulls = _validity(col)
-        nodes.append((len(col), nulls))
-        views = bytearray()
-        data = bytearray()
-        for v in col:
-            if v is None:
-                views += bytes(16)
-                continue
-            raw = v.encode("utf-8") if tn == "utf8_view" else v
-            if len(raw) <= 12:
-                views += struct.pack("<i", len(raw))
-                views += raw + bytes(12 - len(raw))
-            else:
-                views += struct.pack("<i", len(raw)) + raw[:4]
-                views += struct.pack("<ii", 0, len(data))
-                data += raw
-        emit_buf(validity)
-        emit_buf(bytes(views))
-        emit_buf(bytes(data))
-        if variadic is None:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: view column outside a record "
-                "batch context"
-            )
-        variadic.append(1)
-        return
-    if tn in ("list_view", "large_list_view"):
-        fmt = "q" if tn == "large_list_view" else "i"
-        validity, nulls = _validity(col)
-        nodes.append((len(col), nulls))
-        offs: list[int] = []
-        sizes: list[int] = []
-        child_vals: list = []
-        for v in col:
-            if v is None:
-                offs.append(0)
-                sizes.append(0)
-                continue
-            if not isinstance(v, (list, tuple)):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: list-view row is "
-                    f"{type(v).__name__}"
-                )
-            offs.append(len(child_vals))
-            sizes.append(len(v))
-            child_vals.extend(v)
-        emit_buf(validity)
-        emit_buf(struct.pack(f"<{len(offs)}{fmt}", *offs))
-        emit_buf(struct.pack(f"<{len(sizes)}{fmt}", *sizes))
-        _emit_column(spec.children[0], child_vals, nodes, emit_buf,
-                     variadic)
-        return
-    if tn == "union":
-        by_tid = {
-            tid: ci
-            for ci, tid in enumerate(
-                spec.type_ids or tuple(range(len(spec.children)))
-            )
-        }
-        dense = spec.unit != "sparse"
-        types = bytearray()
-        offs: list[int] = []
-        child_cols: list[list] = [[] for _ in spec.children]
-        for v in col:
-            if (
-                not isinstance(v, tuple)
-                or len(v) != 2
-                or v[0] not in by_tid
-            ):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: union slot must be a "
-                    "(type_id, value) tuple with a declared type id"
-                )
-            tid, val = v
-            ci = by_tid[tid]
-            types.append(tid)
-            if dense:
-                offs.append(len(child_cols[ci]))
-                child_cols[ci].append(val)
-            else:
-                for cj in range(len(spec.children)):
-                    child_cols[cj].append(val if cj == ci else None)
-        nodes.append((len(col), 0))  # unions carry no validity
-        emit_buf(bytes(types))
-        if dense:
-            emit_buf(struct.pack(f"<{len(offs)}i", *offs))
-        for c, cvals in zip(spec.children, child_cols):
-            _emit_column(c, cvals, nodes, emit_buf, variadic)
-        return
-    validity, nulls = _validity(col)
-    nodes.append((len(col), nulls))
-    if tn == "list":
-        offs = [0]
-        child_vals: list = []
-        for v in col:
-            if v is not None:
-                if not isinstance(v, (list, tuple)):
-                    raise ArrowIpcFormatError(
-                        f"field {spec.name!r}: list row is "
-                        f"{type(v).__name__}"
-                    )
-                child_vals.extend(v)
-            offs.append(len(child_vals))
-        emit_buf(validity)
-        emit_buf(struct.pack(f"<{len(offs)}i", *offs))
-        _emit_column(spec.children[0], child_vals, nodes, emit_buf,
-                     variadic)
-        return
-    if tn == "map":
-        # identical buffer layout to List over the entries struct;
-        # rows are [(key, value), ...] (dup keys legal) or None
-        entries_spec = spec.children[0]
-        kname = entries_spec.children[0].name
-        vname = entries_spec.children[1].name
-        offs = [0]
-        entry_rows: list = []
-        for v in col:
-            if v is not None:
-                for kv in v:
-                    if not isinstance(kv, tuple) or len(kv) != 2:
-                        raise ArrowIpcFormatError(
-                            f"field {spec.name!r}: map entry must be "
-                            "a (key, value) tuple"
-                        )
-                    if kv[0] is None:
-                        raise ArrowIpcFormatError(
-                            f"field {spec.name!r}: map key is null"
-                        )
-                    entry_rows.append({kname: kv[0], vname: kv[1]})
-            offs.append(len(entry_rows))
-        emit_buf(validity)
-        emit_buf(struct.pack(f"<{len(offs)}i", *offs))
-        _emit_column(entries_spec, entry_rows, nodes, emit_buf,
-                     variadic)
-        return
-    if tn == "struct":
-        for v in col:
-            if v is not None and not isinstance(v, dict):
-                raise ArrowIpcFormatError(
-                    f"field {spec.name!r}: struct row is "
-                    f"{type(v).__name__}, not a dict"
-                )
-        emit_buf(validity)
-        for c in spec.children:
-            child_col = [
-                None if v is None else v.get(c.name) for v in col
-            ]
-            _emit_column(c, child_col, nodes, emit_buf, variadic)
-        return
-    for raw in _column_buffers(spec, col):
-        emit_buf(raw)
-
-
-#: BodyCompression codec ids (Message.fbs CompressionType)
-_BODY_CODECS = {"lz4": 0, "zstd": 1}
-
-
-def _compress_body_buffer(raw: bytes, compression: str) -> bytes:
-    """One buffer's stored region under BUFFER-method BodyCompression:
-    ``[i64 uncompressed length][frame]``, or ``[-1][raw]`` when the
-    frame would not shrink it (the spec's stored-raw escape, which
-    :func:`_decode_rb_table` and pyarrow both honor)."""
-    if compression == "lz4":  # an LZ4 FRAME, written by liblz4
-        import pyarrow as pa
-
-        frame = pa.compress(raw, codec="lz4", asbytes=True)
-    else:  # zstd frame via the compression layer (pyarrow's libzstd)
-        from .compression import compress
-        from .types import CompressionCodec
-
-        frame = compress(raw, CompressionCodec.ZSTD)
-    if len(frame) >= len(raw):
-        return struct.pack("<q", -1) + raw
-    return struct.pack("<q", len(raw)) + frame
-
-
-def _rb_table(b: "_Builder", fields: list[FieldSpec],
-              columns: list[list],
-              compression: str | None = None) -> tuple[int, bytes]:
-    """Build a RecordBatch flatbuffers TABLE in ``b`` for the given
-    columns; returns (table offset, body bytes).  Shared by record
-    batch and dictionary batch messages.  With ``compression`` set
-    ("lz4" | "zstd"), every non-empty buffer body is stored in the
-    BUFFER-method framing and the table carries a BodyCompression
-    child (slot 3)."""
-    length = len(columns[0]) if columns else 0
-    node_list: list[tuple[int, int]] = []
-    buf_meta = []
-    variadic: list[int] = []
-    body = bytearray()
-
-    def emit_buf(raw: bytes) -> None:
-        if compression is not None and len(raw) > 0:
-            raw = _compress_body_buffer(raw, compression)
-        off = len(body)
-        body.extend(raw)
-        body.extend(b"\x00" * ((-len(body)) % 8))
-        buf_meta.append((off, len(raw)))
-
-    for spec, col in zip(fields, columns):
-        if len(col) != length:
-            raise ArrowIpcFormatError(
-                f"field {spec.name!r}: ragged column in batch"
-            )
-        _emit_column(spec, col, node_list, emit_buf, variadic)
-    nodes = bytearray()
-    for nl, nn in node_list:
-        nodes += struct.pack("<qq", nl, nn)
-    bufs_raw = b"".join(struct.pack("<qq", o, n) for o, n in buf_meta)
-    bvec = b.create_struct_vector(bufs_raw, len(buf_meta), 8)
-    nvec = b.create_struct_vector(bytes(nodes), len(node_list), 8)
-    vvec = None
-    if variadic:
-        vraw = b"".join(struct.pack("<q", n) for n in variadic)
-        vvec = b.create_struct_vector(vraw, len(variadic), 8)
-    comp = None
-    if compression is not None:
-        # BodyCompression { codec: CompressionType; method:
-        # BodyCompressionMethod } — method BUFFER (0) stays default;
-        # codec is force-written (default sentinel -1) so the table is
-        # self-describing even for LZ4_FRAME (= 0)
-        b.start_table()
-        b.add_scalar(0, "<b", _BODY_CODECS[compression], -1)
-        comp = b.end_table()
-    b.start_table()
-    b.add_scalar(0, "<q", length, 0)
-    b.add_offset(1, nvec)
-    b.add_offset(2, bvec)
-    b.add_offset(3, comp)
-    b.add_offset(4, vvec)
-    return b.end_table(), bytes(body)
-
-
-def _index_spec(spec: FieldSpec) -> FieldSpec:
-    """The record-batch-side layout of a dictionary-encoded field:
-    validity + indices of the declared index type."""
-    return FieldSpec(
-        spec.name, spec.nullable, spec.index_type,
-        int(spec.index_type.lstrip("uint")),
-    )
-
-
-def _batch_message(fields: list[FieldSpec], columns: list[list],
-                   compression: str | None = None) -> bytes:
-    # dictionary-encoded fields carry indices in record batches; the
-    # caller (encode_arrow_ipc / encode_arrow_stream) has already
-    # mapped values -> indices and passes index columns here
-    layout = [
-        _index_spec(f) if f.dict_id is not None else f for f in fields
-    ]
-    b = _Builder()
-    rb, body = _rb_table(b, layout, columns, compression)
-    b.start_table()
-    b.add_scalar(0, "<h", _METADATA_V5, 0)
-    b.add_scalar(1, "<B", _MSG_RECORD_BATCH, 0)
-    b.add_offset(2, rb)
-    b.add_scalar(3, "<q", len(body), 0)
-    return _encapsulate(b.finish(b.end_table()), bytes(body))
-
-
-def _dictionary_message(
-    value_spec: FieldSpec, values: list, dict_id: int,
-    compression: str | None = None,
-) -> bytes:
-    """One DictionaryBatch message: the dictionary VALUES as a
-    single-column record batch wrapped with the id."""
-    b = _Builder()
-    rb, body = _rb_table(b, [value_spec], [values], compression)
-    b.start_table()
-    b.add_scalar(0, "<q", dict_id, 0)
-    b.add_offset(1, rb)
-    db = b.end_table()
-    b.start_table()
-    b.add_scalar(0, "<h", _METADATA_V5, 0)
-    b.add_scalar(1, "<B", _MSG_DICTIONARY_BATCH, 0)
-    b.add_offset(2, db)
-    b.add_scalar(3, "<q", len(body), 0)
-    return _encapsulate(b.finish(b.end_table()), bytes(body))
-
-
-def _dictionary_plan(
-    fields: list[FieldSpec], batches: list[list[list]]
-) -> tuple[list[tuple[int, FieldSpec, list]], list[list[list]]]:
-    """For every dictionary-encoded field, build its value dictionary
-    (first-seen order across ALL batches) and rewrite the batches to
-    carry indices (None stays None).  Returns ([(dict_id, value_spec,
-    values)...], index_batches)."""
-    dicts = []
-    maps: dict[int, dict] = {}
-    for fi, f in enumerate(fields):
-        if f.dict_id is None:
-            continue
-        if f.children:
-            raise ArrowIpcFormatError(
-                f"field {f.name!r}: dictionary-encoded nested encode "
-                "not supported"
-            )
-        index_of: dict = {}
-        vals: list = []
-        for columns in batches:
-            for v in columns[fi]:
-                if v is not None and v not in index_of:
-                    index_of[v] = len(vals)
-                    vals.append(v)
-        value_spec = FieldSpec(
-            f.name, True, f.type_name, f.bit_width, None, None, (),
-            f.unit, f.tz, f.precision, f.scale, f.fixed_size,
-        )
-        dicts.append((f.dict_id, value_spec, vals))
-        maps[fi] = index_of
-    if not maps:
-        return [], batches
-    out_batches = []
-    for columns in batches:
-        cols = list(columns)
-        for fi, index_of in maps.items():
-            cols[fi] = [
-                None if v is None else index_of[v] for v in columns[fi]
-            ]
-        out_batches.append(cols)
-    return dicts, out_batches
-
-
-def _check_compression(compression: str | None) -> None:
-    if compression is not None and compression not in _BODY_CODECS:
-        raise ArrowIpcFormatError(
-            f"unsupported body compression {compression!r} "
-            "(None, 'lz4' or 'zstd')"
-        )
-
-
-def encode_arrow_ipc(
-    fields: list[FieldSpec], batches: list[list[list]],
-    compression: str | None = None,
-) -> bytes:
-    """Encode columns as a complete Arrow IPC FILE (Feather V2).
-
-    ``batches`` is a list of batches, each a list of per-field value
-    lists (``None`` marks nulls).  A FieldSpec with ``dict_id`` /
-    ``index_type`` set dictionary-encodes (r13): the encoder builds
-    the value dictionary across all batches (first-seen order), emits
-    one DictionaryBatch per id before the record batches, and record
-    batches carry indices.  With ``compression`` ("lz4" | "zstd",
-    r14) every record AND dictionary batch body is BodyCompression
-    BUFFER-framed — LZ4 frames by liblz4, ZSTD through the
-    compression layer.  Output is readable
-    by pyarrow's ``ipc.open_file`` (the referee the tests drive) and
-    by :func:`read_arrow_ipc`.
-    """
-    _check_compression(compression)
-    for columns in batches:
-        if len(columns) != len(fields):
-            raise ArrowIpcFormatError(
-                f"batch has {len(columns)} columns for {len(fields)} fields"
-            )
-    dicts, batches = _dictionary_plan(fields, batches)
-    out = bytearray(MAGIC + b"\x00\x00")
-    schema_msg = _schema_message(fields)
-    out += schema_msg
-
-    def _block(msg: bytes) -> tuple[int, int, int]:
-        # split the encapsulated message back apart for the Block:
-        # metaDataLength includes the 8-byte prefix and padding
-        declared = struct.unpack_from("<i", msg, 4)[0]
-        return (len(out), 8 + declared, len(msg) - 8 - declared)
-
-    dict_blocks = []
-    for did, value_spec, vals in dicts:
-        msg = _dictionary_message(value_spec, vals, did, compression)
-        dict_blocks.append(_block(msg))
-        out += msg
-    blocks = []
-    for columns in batches:
-        msg = _batch_message(fields, columns, compression)
-        blocks.append(_block(msg))
-        out += msg
-    out += struct.pack("<Ii", _CONTINUATION, 0)  # end-of-stream marker
-
-    b = _Builder()
-    schema = _fb_schema(b, fields)
-
-    # struct Block { long offset; int metaDataLength; long bodyLength; }
-    # — C layout pads the int to 8, stride 24
-    def _braw(bl):
-        return b"".join(
-            struct.pack("<q", off) + struct.pack("<i", mlen)
-            + b"\x00\x00\x00\x00" + struct.pack("<q", blen)
-            for off, mlen, blen in bl
-        )
-
-    bvec = b.create_struct_vector(_braw(blocks), len(blocks), 8)
-    dvec = b.create_struct_vector(_braw(dict_blocks), len(dict_blocks), 8)
-    b.start_table()
-    b.add_scalar(0, "<h", _METADATA_V5, 0)
-    b.add_offset(1, schema)
-    b.add_offset(2, dvec)
-    b.add_offset(3, bvec)
-    footer = b.finish(b.end_table())
-    out += footer
-    out += struct.pack("<i", len(footer))
-    out += MAGIC
-    return bytes(out)
-
-
-def encode_arrow_stream(
-    fields: list[FieldSpec], batches: list[list[list]],
-    compression: str | None = None,
-) -> bytes:
-    """Encode columns as an Arrow IPC STREAM (footer-less wire
-    format): Schema message, DictionaryBatch messages for any
-    dictionary-encoded fields, one RecordBatch message per batch,
-    then the end-of-stream marker.  ``compression`` ("lz4" | "zstd")
-    BodyCompression-frames every batch body, as in
-    :func:`encode_arrow_ipc`.  Readable by pyarrow's
-    ``ipc.open_stream`` and by :func:`read_arrow_stream`."""
-    _check_compression(compression)
-    for columns in batches:
-        if len(columns) != len(fields):
-            raise ArrowIpcFormatError(
-                f"batch has {len(columns)} columns for "
-                f"{len(fields)} fields"
-            )
-    dicts, batches = _dictionary_plan(fields, batches)
-    out = bytearray(_schema_message(fields))
-    for did, value_spec, vals in dicts:
-        out += _dictionary_message(value_spec, vals, did, compression)
-    for columns in batches:
-        out += _batch_message(fields, columns, compression)
-    out += struct.pack("<Ii", _CONTINUATION, 0)  # end-of-stream
-    return bytes(out)
+def read_arrow_stream(data: bytes) -> pa.Table:
+    """Read an Arrow IPC STREAM; one chunk per record batch."""
+    return _read(ipc.open_stream, data)

@@ -497,7 +497,12 @@ def read_stripe_column(
             if ln < 0 or at + ln > len(blob):
                 raise OrcReadError("string data under-runs its lengths")
             piece = blob[at : at + ln]
-            out.append(piece.decode("utf-8") if as_text else piece)
+            if as_text:
+                try:
+                    piece = piece.decode("utf-8")
+                except UnicodeDecodeError:
+                    raise OrcReadError("string data is not UTF-8") from None
+            out.append(piece)
             at += ln
         return out
 

@@ -1401,33 +1401,27 @@ def ingest_arrow_stream(spark, sf_dir) -> DataFrame:
     """Events through the Arrow IPC STREAM format (r13) — the
     footer-less wire framing of Flight payloads and socket
     interchange, as opposed to the FILE format the other Arrow
-    queries exercise (``core/arrowipc.py`` read_arrow_stream /
-    encode_arrow_stream).
+    queries exercise.
 
-    Each executor Arrow batch becomes one multi-record-batch stream;
-    the codec DIRECTION alternates by a batch counter: even batches
-    are written by pyarrow (dictionary-encoded event_type, tz-aware
-    us timestamps) and decoded by OUR reader, odd batches are written
-    by OUR encoder and decoded by pyarrow — both directions earn the
-    verdict.  Every decoded value is asserted equal to its source
-    before aggregation; the oracle restates the aggregates from the
-    table (``epoch_us`` pins the timestamp roundtrip).
+    Each executor Arrow batch becomes one multi-record-batch stream
+    written by ``pyarrow.ipc.new_stream`` (tz-aware us timestamps;
+    even batches dictionary-encode event_type, odd batches write it
+    plain) and read back through ``core/arrowipc.read_arrow_stream``.
+    The decoded table must equal its source, schema included, with
+    one record batch per ASTREAM_CHUNK rows; the oracle restates the
+    aggregates from the table (``epoch_us`` pins the timestamp
+    roundtrip).
 
     100 TB: narrow mapInPandas, no shuffle before the tiny per-type
     aggregate — the event-bus consumer shape of the msgpack/CBOR
     twins.
     """
-    import datetime as _dt_mod
     import io
 
     import pyarrow as pa_
     import pyarrow.ipc as pa_ipc
 
-    from ..core.arrowipc import (
-        FieldSpec,
-        encode_arrow_stream,
-        read_arrow_stream,
-    )
+    from ..core.arrowipc import read_arrow_stream
 
     prep(spark)
     d = load_spread(spark, sf_dir, "events").select(
@@ -1437,90 +1431,35 @@ def ingest_arrow_stream(spark, sf_dir) -> DataFrame:
     def _roundtrip(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        utc = _dt_mod.timezone.utc
-        epoch_utc = _dt_mod.datetime(1970, 1, 1, tzinfo=utc)
-        fs = [
-            FieldSpec("event_id", True, "int64", 64),
-            FieldSpec("user_id", True, "int64", 64),
-            FieldSpec("event_type", True, "utf8", 0),
-            FieldSpec(
-                "ts", True, "timestamp", 64, unit="us", tz="UTC"
-            ),
-        ]
         for bi, pdf in enumerate(batches):
             eids = [int(v) for v in pdf["event_id"]]
             uids = [int(v) for v in pdf["user_id"]]
             types = [str(v) for v in pdf["event_type"]]
             ts_us = [int(v.value) // 1000 for v in pdf["ts"]]
-            aware = [
-                epoch_utc + _dt_mod.timedelta(microseconds=u)
-                for u in ts_us
-            ]
+            type_arr = pa_.array(types, pa_.string())
             if bi % 2 == 0:
-                # pyarrow writes (dict-encoded type column), we read
-                t = pa_.table(
-                    {
-                        "event_id": pa_.array(eids, pa_.int64()),
-                        "user_id": pa_.array(uids, pa_.int64()),
-                        "event_type": pa_.array(
-                            types
-                        ).dictionary_encode(),
-                        "ts": pa_.array(
-                            ts_us, pa_.timestamp("us", tz="UTC")
-                        ),
-                    }
-                )
-                buf = io.BytesIO()
-                with pa_ipc.new_stream(buf, t.schema) as w:
-                    for b in t.to_batches(max_chunksize=ASTREAM_CHUNK):
-                        w.write_batch(b)
-                got = read_arrow_stream(buf.getvalue())
-                if len(got["batches"]) != max(
-                    1, -(-len(eids) // ASTREAM_CHUNK)
-                ) and eids:
-                    raise ValueError("stream batch framing drifted")
-                col = {
-                    name: [
-                        v
-                        for b in got["batches"]
-                        for v in b["columns"][ci]
-                    ]
-                    for ci, name in enumerate(
-                        ("event_id", "user_id", "event_type", "ts")
-                    )
+                type_arr = type_arr.dictionary_encode()
+            t = pa_.table(
+                {
+                    "event_id": pa_.array(eids, pa_.int64()),
+                    "user_id": pa_.array(uids, pa_.int64()),
+                    "event_type": type_arr,
+                    "ts": pa_.array(
+                        ts_us, pa_.timestamp("us", tz="UTC")
+                    ),
                 }
-                if (
-                    col["event_id"] != eids
-                    or col["user_id"] != uids
-                    or col["event_type"] != types
-                    or col["ts"] != aware
-                ):
-                    raise ValueError(
-                        f"batch {bi}: own stream decode drifted"
-                    )
-            else:
-                # we write, pyarrow reads
-                chunks = [
-                    [
-                        eids[a : a + ASTREAM_CHUNK],
-                        uids[a : a + ASTREAM_CHUNK],
-                        types[a : a + ASTREAM_CHUNK],
-                        ts_us[a : a + ASTREAM_CHUNK],
-                    ]
-                    for a in range(0, max(len(eids), 1), ASTREAM_CHUNK)
-                ]
-                data = encode_arrow_stream(fs, chunks)
-                rt = pa_ipc.open_stream(io.BytesIO(data)).read_all()
-                if (
-                    rt.column("event_id").to_pylist() != eids
-                    or rt.column("user_id").to_pylist() != uids
-                    or rt.column("event_type").to_pylist() != types
-                    or rt.column("ts").to_pylist() != aware
-                ):
-                    raise ValueError(
-                        f"batch {bi}: pyarrow decode of own stream "
-                        "drifted"
-                    )
+            )
+            buf = io.BytesIO()
+            with pa_ipc.new_stream(buf, t.schema) as w:
+                for b in t.to_batches(max_chunksize=ASTREAM_CHUNK):
+                    w.write_batch(b)
+            got = read_arrow_stream(buf.getvalue())
+            if eids and got.column(0).num_chunks != -(
+                -len(eids) // ASTREAM_CHUNK
+            ):
+                raise ValueError("stream batch framing drifted")
+            if not got.equals(t):
+                raise ValueError(f"batch {bi}: stream decode drifted")
             yield pd.DataFrame(
                 {
                     "event_type": pd.Series(types, dtype="object"),
@@ -3596,7 +3535,7 @@ def ingest_mkv_tracks(spark, sf_dir) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Arrow IPC (Feather V2) shards — the interchange-format walk
+# Arrow IPC (Feather V2) shards — the interchange-format roundtrip
 # ---------------------------------------------------------------------------
 
 #: rows per record batch inside each IPC shard file; deliberately odd
@@ -3604,14 +3543,14 @@ def ingest_mkv_tracks(spark, sf_dir) -> DataFrame:
 #: framing with a ragged tail batch
 IPC_CHUNK = 7
 #: docs per IPC shard — larger than SHARD_DOCS because the IPC gate
-#: decodes EVERY value through two referees per shard; per the
+#: writes and reads back EVERY value per shard; per the
 #: applyInPandas group-count lesson (SCALE.md) the group count, not
 #: the codec, dominates at gate scale, so the IPC pair uses the
 #: few-larger-files shape (each shard still spans ~37 record batches)
 IPC_SHARD_DOCS = 256
 
-#: facts the from-scratch flatbuffers walk recovers from REAL
-#: pyarrow-written IPC files, restated arithmetically: batch count is
+#: facts the validated reader recovers from pyarrow-written IPC
+#: files, restated arithmetically: batch count is
 #: ceil(rows/chunk) by the writer's max_chunksize contract, text bytes
 #: are the decoded utf8 payload (NULL contributes nothing).
 ARROW_IPC_ORACLE = f"""
@@ -3652,29 +3591,51 @@ _ARROW_IPC_ROW_SCHEMA = T.StructType(
 
 @register("ingest_arrow_ipc", oracle=ARROW_IPC_ORACLE)
 def ingest_arrow_ipc(spark, sf_dir) -> DataFrame:
-    """Arrow IPC (Feather V2) shard build + full-data walk.
+    """Arrow IPC (Feather V2) shard build + full-data read.
 
-    The interchange-format sibling of the ORC/Avro shard queries, and
-    the deepest of the walks: each shard group is written as a REAL
-    Arrow IPC file by pyarrow (the independent producer), and the
-    from-scratch reader (`core/arrowipc.py` — including a hand-rolled
-    flatbuffers decoder for the Footer/Message/Schema/RecordBatch
-    tables) reads EVERY VALUE back out of the raw bytes.  Executors
-    assert: leading/trailing magic + footer framing, stream-schema ==
-    footer-schema, schema is exactly (doc_id int64 NOT NULL-free,
-    text utf8), batch sizes honor the writer's max_chunksize contract
-    (ceil(rows/{IPC_CHUNK}) batches), and the decoded columns —
-    nulls included — equal the shard's own rows byte-for-byte.  The
-    oracle restates the surviving aggregates from ``documents``.
+    The interchange-format sibling of the ORC/Avro shard queries: each
+    shard group is written as an Arrow IPC file by ``pyarrow.ipc``
+    and read back through ``core/arrowipc.read_arrow_ipc`` (parse +
+    full validation).  Odd shards dictionary-encode the text column,
+    so the dictionary-batch path runs beside the plain one.  See
+    :func:`_arrow_ipc_shards` for the executor checks; the oracle
+    restates the surviving aggregates from ``documents``.
 
     100 TB: one shuffle on the shard key (the same repartition a real
-    shard writer pays); the walk is Arrow-batched Python with zero
-    per-row JVM crossings, and a real deployment walks the footer +
+    shard writer pays); the codec work is Arrow-batched with zero
+    per-row JVM crossings, and a real deployment reads the footer +
     per-block regions without materializing more than one batch.
+    """
+    return _arrow_ipc_shards(spark, sf_dir, dictionary_odd_shards=True)
+
+
+@register("export_arrow_ipc_shards", oracle=ARROW_IPC_ORACLE)
+def export_arrow_ipc_shards(spark, sf_dir) -> DataFrame:
+    """Arrow IPC delivery, the write twin of :func:`ingest_arrow_ipc`:
+    every shard is written with a plain (not dictionary-encoded) text
+    column and must read back equal through the same validated
+    reader.  Same facts and oracle as the ingest direction.
+
+    100 TB: identical plan shape to the ingest twin — one shuffle on
+    the shard key, Arrow-batched Python, no driver materialization.
+    """
+    return _arrow_ipc_shards(spark, sf_dir, dictionary_odd_shards=False)
+
+
+def _arrow_ipc_shards(spark, sf_dir, dictionary_odd_shards: bool):
+    """Write each (source, shard) group of ``documents`` as an Arrow
+    IPC file in IPC_CHUNK-row record batches, read it back through
+    ``read_arrow_ipc`` and emit the shard's accounting row.
+
+    Executors assert that the decoded table equals the shard's own
+    table (schema, dictionary encoding and nulls included) and that
+    the batch sizes honor the writer's max_chunksize contract
+    (ceil(rows/IPC_CHUNK) batches, only the last one short).
     """
     import io
 
     import pyarrow as pa_
+    import pyarrow.compute as pc_
     import pyarrow.ipc as pa_ipc
 
     from ..core.arrowipc import read_arrow_ipc
@@ -3696,191 +3657,51 @@ def ingest_arrow_ipc(spark, sf_dir) -> DataFrame:
     def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id")
         shard_id = int(pdf["shard_id"].iloc[0])
-        doc_ids = [int(i) for i in pdf["doc_id"]]
-        texts = [None if v is None else str(v) for v in pdf["text"]]
-        text_arr = pa_.array(texts, pa_.string())
-        # odd shards DICTIONARY-ENCODE the text column (r11): the
-        # decoded values are identical either way — the oracle is
-        # unchanged — but the gate now drives the dictionary-batch
-        # read path (footer dictionary blocks, index resolution) on
-        # every run, beside the plain path on even shards
-        dict_shard = shard_id % 2 == 1
-        if dict_shard:
-            text_arr = text_arr.dictionary_encode()
+        text = pa_.array(
+            [None if v is None else str(v) for v in pdf["text"]],
+            pa_.string(),
+        )
+        if dictionary_odd_shards and shard_id % 2 == 1:
+            text = text.dictionary_encode()
         t = pa_.table(
             {
-                "doc_id": pa_.array(doc_ids, pa_.int64()),
-                "text": text_arr,
+                "doc_id": pa_.array(
+                    [int(i) for i in pdf["doc_id"]], pa_.int64()
+                ),
+                "text": text,
             }
         )
         buf = io.BytesIO()
         with pa_ipc.new_file(buf, t.schema) as w:
             for batch in t.to_batches(max_chunksize=IPC_CHUNK):
                 w.write_batch(batch)
-        data = buf.getvalue()
 
-        got = read_arrow_ipc(data)
-        names = [f.name for f in got["fields"]]
-        types = [f.type_name for f in got["fields"]]
-        if names != ["doc_id", "text"] or types != ["int64", "utf8"]:
-            raise ValueError(f"IPC schema drifted: {names}/{types}")
-        if (got["fields"][1].dict_id is not None) != dict_shard:
-            raise ValueError(
-                f"shard {shard_id}: dictionary encoding flag drifted"
-            )
-        want_batches = (len(doc_ids) + IPC_CHUNK - 1) // IPC_CHUNK
-        sizes = [b["length"] for b in got["batches"]]
-        if len(sizes) != want_batches or sum(sizes) != len(doc_ids):
-            raise ValueError(
-                f"batch accounting drifted: {sizes} for {len(doc_ids)}"
-            )
-        if any(s != IPC_CHUNK for s in sizes[:-1]) or (
-            sizes and not 1 <= sizes[-1] <= IPC_CHUNK
+        got = read_arrow_ipc(buf.getvalue())
+        if not got.equals(t):
+            raise ValueError(f"shard {shard_id}: decoded IPC table drifted")
+        sizes = [len(c) for c in got.column("doc_id").chunks]
+        if len(sizes) != -(-t.num_rows // IPC_CHUNK) or any(
+            s != IPC_CHUNK for s in sizes[:-1]
         ):
             raise ValueError(f"max_chunksize contract broken: {sizes}")
-        got_ids = [v for b in got["batches"] for v in b["columns"][0]]
-        got_texts = [v for b in got["batches"] for v in b["columns"][1]]
-        if got_ids != doc_ids or got_texts != texts:
-            raise ValueError("decoded IPC values drifted from the shard")
+        text_out = got.column("text").cast(pa_.string())
         return pd.DataFrame(
             {
                 "source": pd.Series(
                     [pdf["source"].iloc[0]], dtype="object"
                 ),
-                "n_rows": pd.Series([len(doc_ids)], dtype="int64"),
+                "n_rows": pd.Series([got.num_rows], dtype="int64"),
                 "n_batches": pd.Series([len(sizes)], dtype="int64"),
-                "sum_doc_id": pd.Series([sum(doc_ids)], dtype="int64"),
+                "sum_doc_id": pd.Series(
+                    [pc_.sum(got.column("doc_id")).as_py()],
+                    dtype="int64",
+                ),
                 "text_bytes": pd.Series(
-                    [
-                        sum(
-                            len(v.encode("utf-8"))
-                            for v in got_texts
-                            if v is not None
-                        )
-                    ],
+                    [pc_.sum(pc_.binary_length(text_out)).as_py() or 0],
                     dtype="int64",
                 ),
                 "n_null_text": pd.Series(
-                    [sum(1 for v in got_texts if v is None)],
-                    dtype="int64",
-                ),
-            }
-        )
-
-    shards = d.groupBy("source", "shard_id").applyInPandas(
-        _shard, _ARROW_IPC_ROW_SCHEMA
-    )
-    return (
-        shards.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_shards"),
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            F.sum("n_batches").cast("bigint").alias("n_batches"),
-            F.sum("sum_doc_id").cast("bigint").alias("sum_doc_id"),
-            F.sum("text_bytes").cast("bigint").alias("text_bytes"),
-            F.sum("n_null_text").cast("bigint").alias("n_null_text"),
-        )
-        .orderBy("source")
-    )
-
-
-@register("export_arrow_ipc_shards", oracle=ARROW_IPC_ORACLE)
-def export_arrow_ipc_shards(spark, sf_dir) -> DataFrame:
-    """Arrow IPC delivery with the FROM-SCRATCH encoder — the write
-    twin of :func:`ingest_arrow_ipc`.
-
-    Per shard the executors build Arrow IPC files with
-    ``core/arrowipc.py``'s encoder — including its hand-rolled
-    flatbuffers BUILDER (back-to-front construction, vtables, unions,
-    struct vectors) — and then hand the bytes to TWO readers: pyarrow
-    (the independent referee: schema names/types, batch count and
-    every value must match) and this module's own reader (the
-    self-twin).  Same facts and oracle as the ingest direction, so a
-    framing bug in either direction breaks the oracle gate.
-
-    100 TB: identical plan shape to the ingest twin — one shuffle on
-    the shard key, Arrow-batched Python, no driver materialization.
-    """
-    import io
-
-    import pyarrow as pa_
-    import pyarrow.ipc as pa_ipc
-
-    from ..core.arrowipc import FieldSpec, encode_arrow_ipc, read_arrow_ipc
-
-    prep(spark)
-    d = (
-        load_spread(spark, sf_dir, "documents")
-        .select("doc_id", "source", "text")
-        .withColumn("shard_id", F.expr(f"doc_id div {IPC_SHARD_DOCS}"))
-        # explicit exchange width: per-shard Python codec work
-        # dominates at gate scale, and AQE's size-based coalescing
-        # would fold this tiny shuffle onto one task (SCALE.md:
-        # 'AQE coalescing vs Python-heavy applyInPandas')
-        .repartition(
-            spark.sparkContext.defaultParallelism, "source", "shard_id"
-        )
-    )
-    fields = [
-        FieldSpec("doc_id", True, "int64", 64),
-        FieldSpec("text", True, "utf8", 0),
-    ]
-
-    def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("doc_id")
-        doc_ids = [int(i) for i in pdf["doc_id"]]
-        texts = [None if v is None else str(v) for v in pdf["text"]]
-        batches = [
-            [doc_ids[i : i + IPC_CHUNK], texts[i : i + IPC_CHUNK]]
-            for i in range(0, len(doc_ids), IPC_CHUNK)
-        ]
-        data = encode_arrow_ipc(fields, batches)
-
-        # referee 1: the real library must read our bytes exactly
-        r = pa_ipc.open_file(io.BytesIO(data))
-        if r.num_record_batches != len(batches):
-            raise ValueError(
-                f"pyarrow sees {r.num_record_batches} batches, "
-                f"wrote {len(batches)}"
-            )
-        t = r.read_all()
-        if (
-            t.schema.names != ["doc_id", "text"]
-            or str(t.schema.types[0]) != "int64"
-            or str(t.schema.types[1]) != "string"
-        ):
-            raise ValueError(f"pyarrow sees schema {t.schema}")
-        if (
-            t.column(0).to_pylist() != doc_ids
-            or t.column(1).to_pylist() != texts
-        ):
-            raise ValueError("pyarrow decoded different values")
-        # referee 2: self-twin
-        got = read_arrow_ipc(data)
-        got_ids = [v for b in got["batches"] for v in b["columns"][0]]
-        got_texts = [v for b in got["batches"] for v in b["columns"][1]]
-        if got_ids != doc_ids or got_texts != texts:
-            raise ValueError("self-twin decoded different values")
-        return pd.DataFrame(
-            {
-                "source": pd.Series(
-                    [pdf["source"].iloc[0]], dtype="object"
-                ),
-                "n_rows": pd.Series([len(doc_ids)], dtype="int64"),
-                "n_batches": pd.Series([len(batches)], dtype="int64"),
-                "sum_doc_id": pd.Series([sum(doc_ids)], dtype="int64"),
-                "text_bytes": pd.Series(
-                    [
-                        sum(
-                            len(v.encode("utf-8"))
-                            for v in texts
-                            if v is not None
-                        )
-                    ],
-                    dtype="int64",
-                ),
-                "n_null_text": pd.Series(
-                    [sum(1 for v in texts if v is None)], dtype="int64"
+                    [text_out.null_count], dtype="int64"
                 ),
             }
         )
@@ -3917,8 +3738,8 @@ ATEMP_SHARD = 2048
 ATEMP_MIX = 7919
 _US_DAY = 86_400_000_000
 
-#: facts the from-scratch reader must recover from REAL
-#: pyarrow-written temporal/decimal columns, restated in integer
+#: facts the validated reader must recover from pyarrow-written
+#: temporal/decimal columns, restated in integer
 #: arithmetic on ``orders``.  Every value is a pure function of
 #: (o_orderkey, epoch-days of o_orderdate), so both engines derive
 #: identical expectations: days floor-divides the epoch micros
@@ -3975,30 +3796,25 @@ _ATEMP_ROW_SCHEMA = T.StructType(
 
 @register("ingest_arrow_temporal", oracle=ARROW_TEMPORAL_ORACLE)
 def ingest_arrow_temporal(spark, sf_dir) -> DataFrame:
-    """Arrow IPC temporal/decimal type tags through the from-scratch
-    reader — the r12 closure of the r11 verdict's widest named Arrow
-    gap (``core/arrowipc.py`` date32/date64, time32/time64,
-    timestamp with unit+tz, decimal128).
+    """Arrow IPC temporal/decimal types (r12): date32/date64,
+    time32/time64, timestamp with unit+tz, decimal128.
 
-    Each (status, shard) group of ``orders`` is written as a REAL
-    pyarrow IPC file carrying SEVEN temporal/decimal columns derived
-    integer-exactly from (o_orderkey, epoch-days): date32 and date64
-    (same day), time32(ms) and time64(us) (the prime-mixed
-    time-of-day), a tz-aware timestamp(us, UTC), a naive
-    timestamp(ms), a timestamp(ns) (surfacing as exact integer
-    epoch-nanos), and a decimal128(12,2) of signed cents; odd shards
-    dictionary-encode the date32 column so the dictionary path keeps
-    its unit through resolution.  Executors decode every value with
-    ``read_arrow_ipc`` and assert EXACT equality against the
-    arithmetic reconstruction (dates, times, aware/naive datetimes,
-    Decimals, integer nanos), then emit per-shard integer aggregates
-    the DuckDB oracle recomputes from ``orders`` directly.
+    Each (status, shard) group of ``orders`` is written as an Arrow
+    IPC file by ``pyarrow.ipc`` carrying SEVEN temporal/decimal
+    columns derived integer-exactly from (o_orderkey, epoch-days):
+    date32 and date64 (same day), time32(ms) and time64(us) (the
+    prime-mixed time-of-day), a tz-aware timestamp(us, UTC), a naive
+    timestamp(ms), a timestamp(ns), and a decimal128(12,2) of signed
+    cents; odd shards dictionary-encode the date32 column.  Executors
+    read it back with ``read_arrow_ipc`` and assert the decoded table
+    equals the written one (types, units, tz, precision/scale and
+    dictionary encoding included), then emit per-shard integer
+    aggregates the DuckDB oracle recomputes from ``orders`` directly.
 
     100 TB: one shuffle on the shard key; the codec work is
     Arrow-batched Python with zero per-row JVM crossings, shard count
     grows with the data, and no task holds more than one shard.
     """
-    import datetime as dt
     import decimal as dec
     import io
 
@@ -4027,11 +3843,6 @@ def ingest_arrow_temporal(spark, sf_dir) -> DataFrame:
         )
     )
 
-    utc = dt.timezone.utc
-    epoch_d = dt.date(1970, 1, 1)
-    epoch_naive = dt.datetime(1970, 1, 1)
-    epoch_utc = dt.datetime(1970, 1, 1, tzinfo=utc)
-
     def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("okey")
         shard_id = int(pdf["shard_id"].iloc[0])
@@ -4041,18 +3852,8 @@ def ingest_arrow_temporal(spark, sf_dir) -> DataFrame:
         cents = [
             (k % 10_000_000) * (-1 if k % 3 == 0 else 1) for k in okeys
         ]
-        dates = [epoch_d + dt.timedelta(days=dv) for dv in days]
-        times = [
-            dt.time(
-                u // 3_600_000_000,
-                u // 60_000_000 % 60,
-                u // 1_000_000 % 60,
-                u % 1_000_000,
-            )
-            for u in us
-        ]
         ep_us = [dv * _US_DAY + u for dv, u in zip(days, us)]
-        date_arr = pa_.array(dates, pa_.date32())
+        date_arr = pa_.array(days, pa_.date32())
         if shard_id % 2 == 1:
             date_arr = date_arr.dictionary_encode()
         t = pa_.table(
@@ -4087,53 +3888,10 @@ def ingest_arrow_temporal(spark, sf_dir) -> DataFrame:
             for batch in t.to_batches(max_chunksize=IPC_CHUNK):
                 w.write_batch(batch)
 
-        got = read_arrow_ipc(buf.getvalue())
-        fs = {f.name: f for f in got["fields"]}
-        if fs["ts_us"].unit != "us" or fs["ts_us"].tz != "UTC":
-            raise ValueError(f"shard {shard_id}: ts_us type drifted")
-        if fs["ts_ms"].unit != "ms" or fs["ts_ms"].tz is not None:
-            raise ValueError(f"shard {shard_id}: ts_ms type drifted")
-        if (fs["price"].precision, fs["price"].scale) != (12, 2):
-            raise ValueError(f"shard {shard_id}: decimal type drifted")
-        if (fs["d32"].dict_id is not None) != (shard_id % 2 == 1):
-            raise ValueError(f"shard {shard_id}: dict flag drifted")
-        col = {
-            name: [
-                v
-                for b in got["batches"]
-                for v in b["columns"][ci]
-            ]
-            for ci, name in enumerate(t.column_names)
-        }
-        if col["okey"] != okeys:
-            raise ValueError("okey column drifted")
-        if col["d32"] != dates or col["d64"] != dates:
-            raise ValueError("decoded dates drifted")
-        want_t32 = [
-            dt.time(
-                u // 1000 // 3_600_000,
-                u // 1000 // 60_000 % 60,
-                u // 1000 // 1000 % 60,
-                (u // 1000 % 1000) * 1000,
+        if not read_arrow_ipc(buf.getvalue()).equals(t):
+            raise ValueError(
+                f"shard {shard_id}: decoded temporal/decimal table drifted"
             )
-            for u in us
-        ]
-        if col["t32"] != want_t32 or col["t64"] != times:
-            raise ValueError("decoded times drifted")
-        want_aware = [
-            epoch_utc + dt.timedelta(microseconds=e) for e in ep_us
-        ]
-        want_naive = [
-            epoch_naive + dt.timedelta(milliseconds=e // 1000)
-            for e in ep_us
-        ]
-        if col["ts_us"] != want_aware or col["ts_ms"] != want_naive:
-            raise ValueError("decoded timestamps drifted")
-        want_ns = [e * 1000 + k % 1000 for e, k in zip(ep_us, okeys)]
-        if col["ts_ns"] != want_ns:
-            raise ValueError("decoded nano timestamps drifted")
-        if col["price"] != [dec.Decimal(c).scaleb(-2) for c in cents]:
-            raise ValueError("decoded decimals drifted")
         return pd.DataFrame(
             {
                 "status": pd.Series(
@@ -4264,24 +4022,19 @@ _ADUR_ROW_SCHEMA = T.StructType(
 @register("ingest_arrow_duration", oracle=ARROW_DURATION_ORACLE)
 def ingest_arrow_duration(spark, sf_dir) -> DataFrame:
     """Arrow IPC Duration / Interval(MONTH_DAY_NANO) / decimal256
-    type tags through the from-scratch codec (r13, VERDICT r12 ask #4
-    — the last named Arrow reader seams beside Union).
+    types (r13).
 
-    Each (returnflag, shard) group of ``lineitem`` is written as a
-    REAL pyarrow IPC file carrying a nullable duration(ns) column
-    (exact int64 counts — a timedelta surface would truncate ns), a
-    sign-alternating duration(s), a MONTH_DAY_NANO interval whose
-    three legs are independent signed mixes, and a decimal256(76,2)
-    whose unscaled value okey*10**35 + ln genuinely needs more than
-    128 bits.  Odd shards dictionary-encode the seconds duration so
-    the dictionary path keeps its unit through resolution; even
-    shards ALSO re-encode every column with our own
-    ``encode_arrow_ipc`` and require pyarrow to read those bytes back
-    value-identical (both codec directions under one verdict).
-    Executors decode with ``read_arrow_ipc`` and assert EXACT
-    equality against the arithmetic reconstruction, then emit
-    per-shard integer aggregates the DuckDB oracle recomputes from
-    ``lineitem`` directly.
+    Each (returnflag, shard) group of ``lineitem`` is written as an
+    Arrow IPC file by ``pyarrow.ipc`` carrying a nullable
+    duration(ns) column, a sign-alternating duration(s), a
+    MONTH_DAY_NANO interval whose three legs are independent signed
+    mixes, and a decimal256(76,2) whose unscaled value okey*10**35 +
+    ln genuinely needs more than 128 bits.  Odd shards
+    dictionary-encode the seconds duration.  Executors read it back
+    with ``read_arrow_ipc`` and assert the decoded table equals the
+    written one (units, precision/scale and dictionary encoding
+    included), then emit per-shard integer aggregates the DuckDB
+    oracle recomputes from ``lineitem`` directly.
 
     100 TB: one shuffle on the shard key; Arrow-batched Python with
     zero per-row JVM crossings; shard count grows with the data and
@@ -4294,7 +4047,7 @@ def ingest_arrow_duration(spark, sf_dir) -> DataFrame:
     import pyarrow as pa_
     import pyarrow.ipc as pa_ipc
 
-    from ..core.arrowipc import FieldSpec, encode_arrow_ipc, read_arrow_ipc
+    from ..core.arrowipc import read_arrow_ipc
 
     prep(spark)
     d = (
@@ -4314,45 +4067,42 @@ def ingest_arrow_duration(spark, sf_dir) -> DataFrame:
         pdf = pdf.sort_values(["okey", "ln"])
         shard_id = int(pdf["shard_id"].iloc[0])
         # the value mixes are vectorized int64 numpy (all intermediates
-        # provably < 2^63: (KMOD-1)*P2 ~ 2.65e18); the EXPECTED lists
-        # the decode asserts compare against come out of the same
-        # arrays, so the verification contract is unchanged
+        # provably < 2^63: (KMOD-1)*P2 ~ 2.65e18); the columns and the
+        # aggregates below come out of the same arrays
         ka = pdf["okey"].to_numpy(dtype=np.int64)
         na = pdf["ln"].to_numpy(dtype=np.int64)
-        okeys = ka.tolist()
-        lns = na.tolist()
         ns_null = (ka + na) % 11 == 0
         dur_ns_a = ((ka % ADUR_KMOD) * ADUR_P1 + na * 7919) % (
             4_000_000_000_000
         )
-        dur_ns = [
-            None if isnull else int(v)
-            for v, isnull in zip(dur_ns_a.tolist(), ns_null.tolist())
-        ]
         dur_s_a = (ka % 100_000) * np.where(na % 2 == 0, -1, 1)
-        dur_s = dur_s_a.tolist()
         mdn_m = ka % 25 - 12
         mdn_d = (ka + na) % 63 - 31
         mdn_ns = ((ka % ADUR_KMOD) * ADUR_P2 + na) % 1_000_000_000_000
-        mdn = list(zip(mdn_m.tolist(), mdn_d.tolist(), mdn_ns.tolist()))
         dctx = dec.Context(prec=80)
-        big = [
-            dec.Decimal(k * 10**35 + n).scaleb(-2, dctx)
-            for k, n in zip(okeys, lns)
-        ]
-        dur_s_arr = pa_.array(dur_s, pa_.duration("s"))
+        dur_s_arr = pa_.array(dur_s_a, pa_.duration("s"))
         if shard_id % 2 == 1:
             dur_s_arr = dur_s_arr.dictionary_encode()
         t = pa_.table(
             {
-                "okey": pa_.array(okeys, pa_.int64()),
-                "dur_ns": pa_.array(dur_ns, pa_.duration("ns")),
+                "okey": pa_.array(ka, pa_.int64()),
+                "dur_ns": pa_.array(
+                    dur_ns_a, pa_.duration("ns"), mask=ns_null
+                ),
                 "dur_s": dur_s_arr,
                 "mdn": pa_.array(
-                    [pa_.MonthDayNano(v) for v in mdn],
+                    list(
+                        zip(mdn_m.tolist(), mdn_d.tolist(), mdn_ns.tolist())
+                    ),
                     pa_.month_day_nano_interval(),
                 ),
-                "big": pa_.array(big, pa_.decimal256(76, 2)),
+                "big": pa_.array(
+                    [
+                        dec.Decimal(k * 10**35 + n).scaleb(-2, dctx)
+                        for k, n in zip(ka.tolist(), na.tolist())
+                    ],
+                    pa_.decimal256(76, 2),
+                ),
             }
         )
         buf = io.BytesIO()
@@ -4360,86 +4110,19 @@ def ingest_arrow_duration(spark, sf_dir) -> DataFrame:
             for batch in t.to_batches(max_chunksize=IPC_CHUNK):
                 w.write_batch(batch)
 
-        got = read_arrow_ipc(buf.getvalue())
-        fs = {f.name: f for f in got["fields"]}
-        if fs["dur_ns"].type_name != "duration" or fs["dur_ns"].unit != "ns":
-            raise ValueError(f"shard {shard_id}: dur_ns type drifted")
-        if fs["dur_s"].unit != "s" or (
-            (fs["dur_s"].dict_id is not None) != (shard_id % 2 == 1)
-        ):
-            raise ValueError(f"shard {shard_id}: dur_s type drifted")
-        if fs["mdn"].type_name != "interval_mdn":
-            raise ValueError(f"shard {shard_id}: mdn type drifted")
-        if (fs["big"].type_name, fs["big"].precision, fs["big"].scale) != (
-            "decimal256", 76, 2,
-        ):
-            raise ValueError(f"shard {shard_id}: decimal256 drifted")
-        col = {
-            name: [
-                v for b in got["batches"] for v in b["columns"][ci]
-            ]
-            for ci, name in enumerate(t.column_names)
-        }
-        if col["okey"] != okeys:
-            raise ValueError("okey column drifted")
-        if col["dur_ns"] != dur_ns:
-            raise ValueError("decoded ns durations drifted")
-        if col["dur_s"] != dur_s:
-            raise ValueError("decoded s durations drifted")
-        if col["mdn"] != mdn:
-            raise ValueError("decoded MDN intervals drifted")
-        if col["big"] != big:
-            raise ValueError("decoded decimal256 drifted")
-        if shard_id % 2 == 0:
-            # even shards: our ENCODER writes the same columns and
-            # pyarrow referees the bytes value-for-value
-            own = encode_arrow_ipc(
-                [
-                    FieldSpec("okey", True, "int64", 64),
-                    FieldSpec("dur_ns", True, "duration", 64, unit="ns"),
-                    FieldSpec("dur_s", True, "duration", 64, unit="s"),
-                    FieldSpec("mdn", True, "interval_mdn", 128),
-                    FieldSpec(
-                        "big", True, "decimal256", 256,
-                        precision=76, scale=2,
-                    ),
-                ],
-                [[okeys, dur_ns, dur_s, mdn, big]],
+        if not read_arrow_ipc(buf.getvalue()).equals(t):
+            raise ValueError(
+                f"shard {shard_id}: decoded duration/interval table drifted"
             )
-            ref = pa_ipc.open_file(io.BytesIO(own)).read_all()
-            if ref.column("okey").to_pylist() != okeys:
-                raise ValueError("own-encoder okey drifted")
-            ref_ns = [
-                None if v is None else v.value
-                for v in ref.column("dur_ns").to_pylist()
-            ]
-            if ref_ns != dur_ns:
-                raise ValueError("own-encoder ns durations drifted")
-            # .value is the raw count in the column's own unit, so a
-            # unit drift in our duration(s) encoder (e.g. emitting ns
-            # counts under a seconds tag) fails here rather than
-            # passing unchecked (ADVICE r13)
-            ref_s = [v.value for v in ref.column("dur_s")]
-            if ref_s != dur_s:
-                raise ValueError("own-encoder s durations drifted")
-            ref_mdn = [
-                (v.months, v.days, v.nanoseconds)
-                for v in ref.column("mdn").to_pylist()
-            ]
-            if ref_mdn != mdn:
-                raise ValueError("own-encoder MDN drifted")
-            if ref.column("big").to_pylist() != big:
-                raise ValueError("own-encoder decimal256 drifted")
-        # numpy aggregates over the same arrays the expected lists came
-        # from; sum_big_mod restates the >128-bit value mod ADUR_MOD via
-        # the precomputed 10**35 power, exactly as the oracle does
+        # sum_big_mod restates the >128-bit value mod ADUR_MOD via the
+        # precomputed 10**35 power, exactly as the oracle does
         # ((MOD-1)*P35_MOD + ln < ~1e18 < 2^63)
         return pd.DataFrame(
             {
                 "flag": pd.Series(
                     [pdf["flag"].iloc[0]], dtype="object"
                 ),
-                "n_rows": pd.Series([len(okeys)], dtype="int64"),
+                "n_rows": pd.Series([len(ka)], dtype="int64"),
                 "n_null_ns": pd.Series(
                     [int(ns_null.sum())], dtype="int64"
                 ),
@@ -5420,24 +5103,18 @@ _ADV_ROW_SCHEMA = T.StructType(
 @register("ingest_arrow_dict_views", oracle=ARROW_DICT_VIEWS_ORACLE)
 def ingest_arrow_dict_views(spark, sf_dir) -> DataFrame:
     """Dictionary, Utf8View and RunEndEncoded columns through the
-    Arrow IPC STREAM framing, both codec directions (r14, VERDICT r13
-    ask #8's named candidate — the r13 dictionary encoder and the r14
-    view/REE encoders under the driver gate).
+    Arrow IPC STREAM framing (r14).
 
     Each (event_type, user-range shard) group of ``events`` derives
     three deterministic columns: ``cat`` — a 13-value dictionary key;
     ``sv`` — a Utf8View string whose lengths cross the 12-byte inline
     bound both ways (with nulls); ``ree`` — a position-derived
-    run-heavy int.  EVEN shards: pyarrow builds the table
-    (``dictionary_encode()``, ``string_view`` cast,
-    ``pc.run_end_encode``) and writes the stream, OUR reader decodes.
-    ODD shards: OUR encoder writes the stream (DictionaryBatch +
-    variadic view buffers + (run_ends, values) children), pyarrow
-    strict-reads it as the referee and our reader closes the loop.
-    Every decoded value is asserted equal to the arithmetic
-    reconstruction; the DuckDB oracle restates the aggregates —
-    including the spilled-view count and per-shard dictionary
-    cardinalities — from ``events`` directly.
+    run-heavy int.  pyarrow builds the table (``dictionary_encode()``,
+    ``string_view``, ``pc.run_end_encode``) and writes the stream;
+    ``read_arrow_stream`` reads it back and the decoded table must
+    equal the written one, types included.  The DuckDB oracle
+    restates the aggregates — including the spilled-view count and
+    per-shard dictionary cardinalities — from ``events`` directly.
 
     100 TB: one shuffle on (type, shard); Arrow-batched Python; shard
     count grows with the data.
@@ -5448,11 +5125,7 @@ def ingest_arrow_dict_views(spark, sf_dir) -> DataFrame:
     import pyarrow.compute as pc_
     import pyarrow.ipc as pa_ipc
 
-    from ..core.arrowipc import (
-        FieldSpec,
-        encode_arrow_stream,
-        read_arrow_stream,
-    )
+    from ..core.arrowipc import read_arrow_stream
 
     prep(spark)
     d = (
@@ -5489,97 +5162,22 @@ def ingest_arrow_dict_views(spark, sf_dir) -> DataFrame:
         ]
         rees = [(i // ADV_RUN) % 5 for i in range(len(eids))]
 
-        if shard_id % 2 == 0:
-            # pyarrow writes dict + view + REE, OUR reader decodes
-            t = pa_.table(
-                {
-                    "eid": pa_.array(eids, pa_.int64()),
-                    "cat": pa_.array(cats).dictionary_encode(),
-                    "sv": pa_.array(svs, pa_.string_view()),
-                    "ree": pc_.run_end_encode(
-                        pa_.array(rees, pa_.int64())
-                    ),
-                }
+        t = pa_.table(
+            {
+                "eid": pa_.array(eids, pa_.int64()),
+                "cat": pa_.array(cats).dictionary_encode(),
+                "sv": pa_.array(svs, pa_.string_view()),
+                "ree": pc_.run_end_encode(pa_.array(rees, pa_.int64())),
+            }
+        )
+        buf = io.BytesIO()
+        with pa_ipc.new_stream(buf, t.schema) as w:
+            for b in t.to_batches(max_chunksize=ASTREAM_CHUNK):
+                w.write_batch(b)
+        if not read_arrow_stream(buf.getvalue()).equals(t):
+            raise ValueError(
+                f"shard {shard_id}: decoded dict/view/REE table drifted"
             )
-            buf = io.BytesIO()
-            with pa_ipc.new_stream(buf, t.schema) as w:
-                for b in t.to_batches(max_chunksize=ASTREAM_CHUNK):
-                    w.write_batch(b)
-            got = read_arrow_stream(buf.getvalue())
-            fs = {f.name: f for f in got["fields"]}
-            if fs["cat"].dict_id is None:
-                raise ValueError(
-                    f"shard {shard_id}: cat lost its dictionary"
-                )
-            if fs["sv"].type_name != "utf8_view" or (
-                fs["ree"].type_name != "run_end_encoded"
-            ):
-                raise ValueError(
-                    f"shard {shard_id}: view/REE type tags drifted"
-                )
-            col = {
-                name: [
-                    v for b in got["batches"] for v in b["columns"][ci]
-                ]
-                for ci, name in enumerate(("eid", "cat", "sv", "ree"))
-            }
-        else:
-            # OUR encoder writes, pyarrow strict-reads as referee
-            fields = [
-                FieldSpec("eid", True, "int64", 64),
-                FieldSpec(
-                    "cat", True, "utf8", 0,
-                    dict_id=1, index_type="int32",
-                ),
-                FieldSpec("sv", True, "utf8_view", 0),
-                FieldSpec("ree", True, "run_end_encoded", 0, children=(
-                    FieldSpec("run_ends", False, "int32", 32),
-                    FieldSpec("values", True, "int64", 64),
-                )),
-            ]
-            chunks = [
-                [
-                    eids[at : at + ASTREAM_CHUNK],
-                    cats[at : at + ASTREAM_CHUNK],
-                    svs[at : at + ASTREAM_CHUNK],
-                    rees[at : at + ASTREAM_CHUNK],
-                ]
-                for at in range(0, len(eids), ASTREAM_CHUNK)
-            ] or [[[], [], [], []]]
-            own = encode_arrow_stream(fields, chunks)
-            ref = pa_ipc.open_stream(io.BytesIO(own)).read_all()
-            if not pa_.types.is_dictionary(ref.schema.field("cat").type):
-                raise ValueError(
-                    f"shard {shard_id}: own dict column lost its "
-                    "encoding"
-                )
-            col = {
-                "eid": ref.column("eid").to_pylist(),
-                "cat": ref.column("cat").to_pylist(),
-                "sv": ref.column("sv").to_pylist(),
-                "ree": ref.column("ree").to_pylist(),
-            }
-            # our reader closes the loop on our own bytes
-            got = read_arrow_stream(own)
-            own_cols = {
-                name: [
-                    v for b in got["batches"] for v in b["columns"][ci]
-                ]
-                for ci, name in enumerate(("eid", "cat", "sv", "ree"))
-            }
-            if own_cols != col:
-                raise ValueError(
-                    f"shard {shard_id}: own-reader disagrees with "
-                    "pyarrow on own bytes"
-                )
-        if col["eid"] != eids:
-            raise ValueError(f"shard {shard_id}: eid drifted")
-        if col["cat"] != cats:
-            raise ValueError(f"shard {shard_id}: dict column drifted")
-        if col["sv"] != svs:
-            raise ValueError(f"shard {shard_id}: view column drifted")
-        if col["ree"] != rees:
-            raise ValueError(f"shard {shard_id}: REE column drifted")
         return pd.DataFrame(
             {
                 "et": pd.Series([pdf["et"].iloc[0]], dtype="object"),
@@ -5633,11 +5231,11 @@ def ingest_arrow_dict_views(spark, sf_dir) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # BodyCompression through the Arrow IPC codec, both
-# framings x both codecs x both writers
+# framings x both codecs
 # ---------------------------------------------------------------------------
 
 #: orderkey-range shard width (>= 8 shards even at sf0.001 so every
-#: (framing, codec, writer) combo is exercised at every scale)
+#: (framing, codec, shrink-check) combo is exercised at every scale)
 ACMP_SHARD = 128
 
 ARROW_COMPRESSED_ORACLE = f"""
@@ -5695,25 +5293,20 @@ _ACMP_ROW_SCHEMA = T.StructType(
 @register("ingest_arrow_compressed", oracle=ARROW_COMPRESSED_ORACLE)
 def ingest_arrow_compressed(spark, sf_dir) -> DataFrame:
     """BodyCompression-framed Arrow IPC bodies through BOTH codecs
-    (LZ4_FRAME, ZSTD), BOTH framings (file, stream) and BOTH writers
-    (ours, pyarrow's) — the r14 encoder-side compression under the
-    driver gate.
+    (LZ4_FRAME, ZSTD) and BOTH framings (file, stream).
 
     Each orderkey-range shard of ``lineitem`` derives four columns
     (unique ``oid``, ``qty``, a dictionary-encoded ``flag``, a
     nullable synthesized ``com`` string whose repetitiveness
     guarantees real compression).  ``shard_id % 8`` picks the combo:
-    codec = lz4/zstd (bit 0), framing = file/stream (bit 1), writer =
-    ours/pyarrow (bit 2).  Ours-writes shards: our compressing
-    encoder emits the blob, the shard ASSERTS it is smaller than our
-    uncompressed encoding (the compression engaged — not the -1
-    stored-raw escape), pyarrow strict-reads it as referee and our
-    reader closes the loop.  Pyarrow-writes shards:
-    ``IpcWriteOptions(compression=...)`` emits the blob and OUR
-    reader decodes it.  Every decoded column is asserted equal to the
-    arithmetic reconstruction; the DuckDB oracle restates the
-    per-combo aggregates from ``lineitem`` directly, so all eight
-    codec paths are hash-gated every round.
+    codec = lz4/zstd (bit 0), framing = file/stream (bit 1), and
+    bit 2 clear additionally writes the uncompressed twin and ASSERTS
+    the compressed blob is smaller (the compression engaged).
+    ``IpcWriteOptions(compression=...)`` writes the blob, the
+    validated reader decodes it, and the decoded table must equal the
+    written one; the DuckDB oracle restates the per-combo aggregates
+    from ``lineitem`` directly, so all eight combos are hash-gated
+    every round.
 
     100 TB: one shuffle on shard_id; Arrow-batched Python; shard
     count grows linearly with the data and each shard's state is a
@@ -5725,13 +5318,7 @@ def ingest_arrow_compressed(spark, sf_dir) -> DataFrame:
     import pyarrow as pa_
     import pyarrow.ipc as pa_ipc
 
-    from ..core.arrowipc import (
-        FieldSpec,
-        encode_arrow_ipc,
-        encode_arrow_stream,
-        read_arrow_ipc,
-        read_arrow_stream,
-    )
+    from ..core.arrowipc import read_arrow_ipc, read_arrow_stream
 
     prep(spark)
     d = (
@@ -5762,109 +5349,48 @@ def ingest_arrow_compressed(spark, sf_dir) -> DataFrame:
             return None
         return f"note-{oid}-" + "y" * (oid % 23)
 
+    def _blob(t, use_file: bool, codec) -> bytes:
+        opts = pa_ipc.IpcWriteOptions(compression=codec)
+        writer_cls = pa_ipc.new_file if use_file else pa_ipc.new_stream
+        buf = io.BytesIO()
+        with writer_cls(buf, t.schema, options=opts) as w:
+            for b in t.to_batches(max_chunksize=ASTREAM_CHUNK):
+                w.write_batch(b)
+        return buf.getvalue()
+
     def _shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("oid")
         shard_id = int(pdf["shard_id"].iloc[0])
         combo = shard_id % 8
         codec = "lz4" if combo % 2 == 0 else "zstd"
         use_file = (combo // 2) % 2 == 0
-        ours_write = combo < 4
         # oids are NOT unique (the synthetic lineitem repeats
         # (orderkey, linenumber)); nothing below depends on it —
-        # every assert compares the decode against the same sorted
-        # order the encode consumed
+        # the decode is compared against the same sorted order the
+        # encode consumed
         oids = [int(v) for v in pdf["oid"]]
         qtys = [float(v) for v in pdf["qty"]]
         flags = [str(v) for v in pdf["flag"]]
         coms = [_com(k) for k in oids]
-
-        if ours_write:
-            fields = [
-                FieldSpec("oid", False, "int64", 64),
-                FieldSpec("qty", False, "float64", 64),
-                FieldSpec(
-                    "flag", True, "utf8", 0,
-                    dict_id=1, index_type="int32",
-                ),
-                FieldSpec("com", True, "utf8", 0),
-            ]
-            chunks = [
-                [
-                    oids[at: at + ASTREAM_CHUNK],
-                    qtys[at: at + ASTREAM_CHUNK],
-                    flags[at: at + ASTREAM_CHUNK],
-                    coms[at: at + ASTREAM_CHUNK],
-                ]
-                for at in range(0, len(oids), ASTREAM_CHUNK)
-            ]
-            enc = encode_arrow_ipc if use_file else encode_arrow_stream
-            own = enc(fields, chunks, compression=codec)
-            plain = enc(fields, chunks)
-            if len(own) >= len(plain):
+        t = pa_.table(
+            {
+                "oid": pa_.array(oids, pa_.int64()),
+                "qty": pa_.array(qtys, pa_.float64()),
+                "flag": pa_.array(flags).dictionary_encode(),
+                "com": pa_.array(coms, pa_.string()),
+            }
+        )
+        blob = _blob(t, use_file, codec)
+        if combo < 4:
+            plain = _blob(t, use_file, None)
+            if len(blob) >= len(plain):
                 raise ValueError(
                     f"shard {shard_id}: {codec} blob did not shrink "
-                    f"({len(own)} >= {len(plain)})"
+                    f"({len(blob)} >= {len(plain)})"
                 )
-            opener = pa_ipc.open_file if use_file else pa_ipc.open_stream
-            ref = opener(io.BytesIO(own)).read_all()
-            ref.validate(full=True)
-            if not pa_.types.is_dictionary(
-                ref.schema.field("flag").type
-            ):
-                raise ValueError(
-                    f"shard {shard_id}: flag lost its dictionary"
-                )
-            col = {
-                name: ref.column(name).to_pylist()
-                for name in ("oid", "qty", "flag", "com")
-            }
-            reader = read_arrow_ipc if use_file else read_arrow_stream
-            got = reader(own)
-            own_cols = {
-                name: [
-                    v for b in got["batches"] for v in b["columns"][ci]
-                ]
-                for ci, name in enumerate(("oid", "qty", "flag", "com"))
-            }
-            if own_cols != col:
-                raise ValueError(
-                    f"shard {shard_id}: own-reader disagrees with "
-                    "pyarrow on own bytes"
-                )
-        else:
-            t = pa_.table(
-                {
-                    "oid": pa_.array(oids, pa_.int64()),
-                    "qty": pa_.array(qtys, pa_.float64()),
-                    "flag": pa_.array(flags).dictionary_encode(),
-                    "com": pa_.array(coms, pa_.string()),
-                }
-            )
-            opts = pa_ipc.IpcWriteOptions(compression=codec)
-            buf = io.BytesIO()
-            writer_cls = (
-                pa_ipc.new_file if use_file else pa_ipc.new_stream
-            )
-            with writer_cls(buf, t.schema, options=opts) as w:
-                for b in t.to_batches(max_chunksize=ASTREAM_CHUNK):
-                    w.write_batch(b)
-            blob = buf.getvalue()
-            reader = read_arrow_ipc if use_file else read_arrow_stream
-            got = reader(blob)
-            col = {
-                name: [
-                    v for b in got["batches"] for v in b["columns"][ci]
-                ]
-                for ci, name in enumerate(("oid", "qty", "flag", "com"))
-            }
-        if col["oid"] != oids:
-            raise ValueError(f"shard {shard_id}: oid drifted")
-        if col["qty"] != qtys:
-            raise ValueError(f"shard {shard_id}: qty drifted")
-        if col["flag"] != flags:
-            raise ValueError(f"shard {shard_id}: flag drifted")
-        if col["com"] != coms:
-            raise ValueError(f"shard {shard_id}: com drifted")
+        reader = read_arrow_ipc if use_file else read_arrow_stream
+        if not reader(blob).equals(t):
+            raise ValueError(f"shard {shard_id}: decoded table drifted")
         return pd.DataFrame(
             {
                 "combo": pd.Series([combo], dtype="int64"),

@@ -186,8 +186,11 @@ class EncryptJsonRequest(JsonRequest):
             req.parse_ok = False
             return req
         req.parse_common(doc)
-        if (v := _get_path(doc, "data_batch", "value")) is not None:
-            decoded = decode_base64_safe(str(v))
+        # only a JSON string carries base64; a number, boolean or object
+        # leaves the value unset, so validation reports it missing
+        v = _get_path(doc, "data_batch", "value")
+        if isinstance(v, str):
+            decoded = decode_base64_safe(v)
             if decoded is not None:
                 req.value = decoded
                 req._value_present = True
@@ -216,8 +219,9 @@ class DecryptJsonRequest(JsonRequest):
             req.parse_ok = False
             return req
         req.parse_common(doc)
-        if (v := _get_path(doc, "data_batch_encrypted", "value")) is not None:
-            decoded = decode_base64_safe(str(v))
+        v = _get_path(doc, "data_batch_encrypted", "value")
+        if isinstance(v, str):
+            decoded = decode_base64_safe(v)
             if decoded is not None:
                 req.encrypted_value = decoded
         meta = doc.get("encryption_metadata") if isinstance(doc, dict) else None

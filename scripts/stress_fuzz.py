@@ -38,8 +38,7 @@ from databatchprotectionservice_spark.core.mp4codec import (
 from databatchprotectionservice_spark.core.avicodec import (
     AviFormatError, decode_avi_mjpeg, encode_avi_mjpeg)
 from databatchprotectionservice_spark.core.arrowipc import (
-    ArrowIpcFormatError, FieldSpec, encode_arrow_ipc, encode_arrow_stream,
-    read_arrow_ipc, read_arrow_stream)
+    ArrowIpcFormatError, read_arrow_ipc, read_arrow_stream)
 from databatchprotectionservice_spark.core.cborcodec import (
     CborFormatError, CborTag)
 from databatchprotectionservice_spark.core.cborcodec import dumps as cbor_dumps
@@ -48,8 +47,10 @@ from databatchprotectionservice_spark.core.robotscodec import (
     is_allowed, parse_robots)
 from databatchprotectionservice_spark.core.inflatecodec import (
     InflateError, inflate_gzip, inflate_zlib)
+from databatchprotectionservice_spark.core.errors import DBPSInvalidInputError
 from databatchprotectionservice_spark.core.orcmeta import (
     OrcFormatError, decompress_region)
+from databatchprotectionservice_spark.core.orcread import read_orc_columns
 from databatchprotectionservice_spark.core.zstdmeta import (
     ZstdFormatError, parse_zstd_frames, xxh64)
 
@@ -75,6 +76,37 @@ def _orc_lz4_region(parts) -> bytes:
         blk = _pa.compress(part, codec="lz4_raw", asbytes=True)
         out += (len(blk) << 1).to_bytes(3, "little") + blk
     return out
+
+def _arrow_int_utf8(ints, strs, chunk, stream=False, compression=None) -> bytes:
+    """int64 + utf8 columns as a pyarrow-written Arrow IPC file (or
+    stream) in `chunk`-row batches."""
+    import io
+    import pyarrow as _pa
+
+    table = _pa.table({"a": _pa.array(ints, _pa.int64()),
+                       "s": _pa.array(strs, _pa.string())})
+    buf = io.BytesIO()
+    opts = _pa.ipc.IpcWriteOptions(compression=compression)
+    new = _pa.ipc.new_stream if stream else _pa.ipc.new_file
+    with new(buf, table.schema, options=opts) as w:
+        for b in table.to_batches(max_chunksize=chunk):
+            w.write_batch(b)
+    return buf.getvalue()
+
+def _orc_file() -> bytes:
+    """Uncompressed pyarrow-written ORC file (int64 + nullable strings)
+    for the full reader: parse_orc_meta + read_orc_columns."""
+    import io
+    import pyarrow as _pa
+    import pyarrow.orc as _orc
+
+    buf = io.BytesIO()
+    _orc.write_table(
+        _pa.table({"a": _pa.array(range(200), _pa.int64()),
+                   "s": _pa.array([None if i % 9 == 0 else f"row {i}"
+                                   for i in range(200)])}),
+        buf, compression="uncompressed")
+    return buf.getvalue()
 
 rng = np.random.RandomState(20260815)
 img = rng.randint(0, 256, size=(9, 11, 3), dtype=np.uint8)
@@ -109,11 +141,7 @@ BASES = {
         AviFormatError,
     ),
     "arrow_ipc": (
-        encode_arrow_ipc(
-            [FieldSpec("a", True, "int64", 64),
-             FieldSpec("s", True, "utf8", 0)],
-            [[[1, None, 3], ["x", "yy", None]], [[4], [""]]],
-        ),
+        _arrow_int_utf8([1, None, 3, 4], ["x", "yy", None, ""], 3),
         read_arrow_ipc,
         ArrowIpcFormatError,
     ),
@@ -143,12 +171,10 @@ BASES = {
         (),
     ),
     "arrow_ipc_lz4": (
-        encode_arrow_stream(
-            [FieldSpec("a", True, "int64", 64),
-             FieldSpec("s", True, "utf8", 0)],
-            [[[i % 7 for i in range(120)],
-              ["lz4 " * (i % 5) for i in range(120)]]],
-            compression="lz4",
+        _arrow_int_utf8(
+            [i % 7 for i in range(120)],
+            ["lz4 " * (i % 5) for i in range(120)],
+            120, stream=True, compression="lz4",
         ),
         read_arrow_stream,
         ArrowIpcFormatError,
@@ -158,6 +184,9 @@ BASES = {
         lambda b: decompress_region(bytes(b), 4),
         OrcFormatError,
     ),
+    # OrcFormatError, OrcReadError and the decompressor's error share
+    # one base
+    "orc_full": (_orc_file(), read_orc_columns, DBPSInvalidInputError),
     "zstd_compressed": (
         _zstd_checksummed_frame(bytes(range(256)) * 6 + b"zstd " * 100),
         parse_zstd_frames,

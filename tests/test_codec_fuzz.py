@@ -12,8 +12,6 @@ import pytest
 
 from databatchprotectionservice_spark.core.arrowipc import (
     ArrowIpcFormatError,
-    FieldSpec,
-    encode_arrow_stream,
     read_arrow_stream,
 )
 from databatchprotectionservice_spark.core.audiocodec import (
@@ -22,6 +20,9 @@ from databatchprotectionservice_spark.core.audiocodec import (
     decode_wav_adpcm,
     encode_wav,
     encode_wav_adpcm,
+)
+from databatchprotectionservice_spark.core.errors import (
+    DBPSInvalidInputError,
 )
 from databatchprotectionservice_spark.core.flaccodec import (
     FlacFormatError,
@@ -47,6 +48,7 @@ from databatchprotectionservice_spark.core.orcmeta import (
     OrcFormatError,
     decompress_region,
 )
+from databatchprotectionservice_spark.core.orcread import read_orc_columns
 from databatchprotectionservice_spark.core.videocodec import (
     VideoFormatError,
     decode_y4m,
@@ -63,6 +65,46 @@ def _orc_lz4_region() -> bytes:
         blk = pa.compress(part, codec="lz4_raw", asbytes=True)
         out += (len(blk) << 1).to_bytes(3, "little") + blk
     return out
+
+
+def _arrow_lz4_stream() -> bytes:
+    """int64 + utf8 in one lz4-compressed Arrow IPC stream batch."""
+    import io
+
+    import pyarrow as pa
+
+    t = pa.table(
+        {
+            "a": pa.array([i % 7 for i in range(60)], pa.int64()),
+            "s": pa.array(["lz4 " * (i % 5) for i in range(60)]),
+        }
+    )
+    buf = io.BytesIO()
+    opts = pa.ipc.IpcWriteOptions(compression="lz4")
+    with pa.ipc.new_stream(buf, t.schema, options=opts) as w:
+        w.write_table(t)
+    return buf.getvalue()
+
+
+def _orc_file() -> bytes:
+    """A whole uncompressed ORC file: 200 rows of int64 + nullable
+    strings, for the full reader (footer, stripes, RLE, strings)."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.orc as orc
+
+    t = pa.table(
+        {
+            "a": pa.array(range(200), pa.int64()),
+            "s": pa.array(
+                [None if i % 9 == 0 else f"row {i}" for i in range(200)]
+            ),
+        }
+    )
+    buf = io.BytesIO()
+    orc.write_table(t, buf, compression="uncompressed")
+    return buf.getvalue()
 
 
 def _bases():
@@ -112,13 +154,7 @@ def _bases():
             VideoFormatError,
         ),
         "arrow_lz4": (
-            encode_arrow_stream(
-                [FieldSpec("a", True, "int64", 64),
-                 FieldSpec("s", True, "utf8", 0)],
-                [[[i % 7 for i in range(60)],
-                  ["lz4 " * (i % 5) for i in range(60)]]],
-                compression="lz4",
-            ),
+            _arrow_lz4_stream(),
             read_arrow_stream,
             ArrowIpcFormatError,
         ),
@@ -127,13 +163,16 @@ def _bases():
             lambda b: decompress_region(b, 4),
             OrcFormatError,
         ),
+        # parse_orc_meta + read_orc_columns raise OrcFormatError,
+        # OrcReadError or the decompressor's error: all share this base
+        "orc_full": (_orc_file(), read_orc_columns, DBPSInvalidInputError),
     }
 
 
 @pytest.mark.parametrize(
     "fmt",
     ["png", "png_adam7", "png_palette", "bmp", "ppm", "gif", "wav",
-     "adpcm", "flac", "y4m", "arrow_lz4", "orc_lz4"],
+     "adpcm", "flac", "y4m", "arrow_lz4", "orc_lz4", "orc_full"],
 )
 def test_mutations_decode_or_raise_domain_error(fmt):
     base, dec, err = _bases()[fmt]
@@ -151,7 +190,7 @@ def test_mutations_decode_or_raise_domain_error(fmt):
 @pytest.mark.parametrize(
     "fmt",
     ["png", "png_adam7", "png_palette", "bmp", "ppm", "gif", "wav",
-     "adpcm", "flac", "y4m", "arrow_lz4", "orc_lz4"],
+     "adpcm", "flac", "y4m", "arrow_lz4", "orc_lz4", "orc_full"],
 )
 def test_truncations_decode_or_raise_domain_error(fmt):
     base, dec, err = _bases()[fmt]

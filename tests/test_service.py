@@ -286,6 +286,33 @@ def test_invalid_base64_value_treated_as_missing():
     assert "data_batch.value" in req.get_validation_error()
 
 
+@pytest.mark.parametrize("value", [12345678, True, {"b64": "QUJD"}])
+def test_non_string_value_treated_as_missing(value):
+    """Only a JSON string carries base64: ``str(12345678)`` would decode
+    to 6 bytes of input."""
+    body = _encrypt_request_body("QUJD", {})
+    body["data_batch"]["value"] = value
+    req = EncryptJsonRequest.parse(json.dumps(body))
+    assert req.value == b""
+    assert req.get_validation_error() == (
+        "Missing required field: data_batch.value"
+    )
+    body["data_batch_encrypted"]["value"] = value
+    req = DecryptJsonRequest.parse(json.dumps(body))
+    assert req.encrypted_value == b""
+    assert req.get_validation_error() == (
+        "Missing required field: data_batch_encrypted.value"
+    )
+
+
+def test_http_non_string_value_is_400(server):
+    _, tok = _post(server.url + "/token", {"client_id": "client1", "api_key": "key1"})
+    body = _encrypt_request_body(12345678, {"page_type": "DATA_PAGE_V1"})
+    status, doc = _post(server.url + "/encrypt", body, tok["token"])
+    assert status == 400
+    assert "Missing required field: data_batch.value" in doc["error_string"]
+
+
 def test_invalid_datatype_length_string():
     body = _encrypt_request_body("QUJD", {})
     body["data_batch"]["datatype_info"]["length"] = "not-an-int"
