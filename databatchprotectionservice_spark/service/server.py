@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import socket
+import sys
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -200,6 +201,11 @@ class _Server(ThreadingHTTPServer):
         with self._open_lock:
             self._open.discard(request)
         super().shutdown_request(request)
+
+    def handle_error(self, request, client_address):
+        # a peer that resets or drops a keep-alive connection just ends it
+        if not isinstance(sys.exc_info()[1], (ConnectionResetError, BrokenPipeError)):
+            super().handle_error(request, client_address)
 
     def server_close(self):
         super().server_close()

@@ -8,6 +8,11 @@ varint = base-128 little-endian groups, msb = continuation) — not by
 self-roundtrips, so a symmetric encode/decode bug cannot hide (the
 same convention as the GIF/JPEG codec suites)."""
 
+import os
+import shutil
+import tempfile
+import zipfile
+
 import pytest
 
 from databatchprotectionservice_spark.vendor import ensure_protobuf
@@ -252,6 +257,51 @@ def test_full_scalar_type_matrix_roundtrip():
 
 def test_ensure_protobuf_reports_runtime():
     assert ensure_protobuf() in ("protobuf", "miniproto")
+
+
+def test_ensure_protobuf_ships_the_zip_once_per_context(spark):
+    sc = spark.sparkContext
+    before = len(sc.listFiles)
+    runtime = ensure_protobuf(spark)
+    shipped = len(sc.listFiles)
+    assert shipped - before <= (1 if runtime == "miniproto" else 0)
+    if runtime == "miniproto":
+        from databatchprotectionservice_spark.vendor import _miniproto_zip
+
+        name = os.path.basename(_miniproto_zip())
+        assert any(f.endswith("/" + name) for f in sc.listFiles)
+    ensure_protobuf(spark)
+    assert len(sc.listFiles) == shipped
+
+
+def test_miniproto_zip_builds_outside_a_read_only_package(tmp_path, monkeypatch):
+    from databatchprotectionservice_spark import vendor
+
+    pkg = tmp_path / "pkg" / "miniproto"
+    shutil.copytree(
+        os.path.join(vendor._MINIPROTO_DIR, "google"),
+        pkg / "google",
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    tree = [pkg, *pkg.rglob("*")]
+    monkeypatch.setattr(vendor, "_MINIPROTO_DIR", str(pkg))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    for p in tree:
+        p.chmod(p.stat().st_mode & ~0o222)
+    try:
+        path = vendor._miniproto_zip()
+        assert vendor._miniproto_zip() == path
+    finally:
+        for p in tree:
+            p.chmod(p.stat().st_mode | 0o200)
+    assert sorted(pkg.rglob("*")) == sorted(tree[1:])
+    assert path.startswith(str(tmp_path / "tmp"))
+    with zipfile.ZipFile(path) as z:
+        assert "google/protobuf/__init__.py" in z.namelist()
+        assert all(name.startswith("google/") for name in z.namelist())
+    # the name follows the content
+    (pkg / "google" / "protobuf" / "__init__.py").write_text("# changed\n")
+    assert vendor._miniproto_zip() != path
 
 
 def test_oneof_parse_side_last_on_wire_wins(sm):

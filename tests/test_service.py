@@ -1,6 +1,7 @@
 """Service layer: JWT auth, JSON model validation, HTTP round-trips."""
 
 import json
+import threading
 import time
 import urllib.request
 
@@ -625,6 +626,47 @@ def test_server_down_gives_an_error_result_without_retry(store, count_connects):
     # a fresh connection that fails is not retried
     res = agent.encrypt(page, attrs)
     assert not res.success and len(count_connects) == opened + 2
+
+
+def test_peer_resets_print_no_traceback(store, monkeypatch, capfd):
+    """The stale-connection and server-down scenarios above: the server
+    sees its keep-alive peers reset, and prints nothing about it."""
+    from databatchprotectionservice_spark.service import server as server_mod
+
+    before = set(threading.enumerate())
+    with monkeypatch.context() as m:
+        m.setattr(server_mod._Handler, "timeout", 0.2)
+        srv, agent, page, attrs = _own_server_agent(store)
+        time.sleep(1.0)  # the server closes the idle connection
+        assert agent.encrypt(page, attrs).success
+        srv.stop()
+    # a reset after stop() is likely but not certain in any one round
+    for _ in range(3):
+        srv, agent, page, attrs = _own_server_agent(store)
+        srv.stop()  # also closes the agent's open connection
+        assert not agent.encrypt(page, attrs).success
+    for t in set(threading.enumerate()) - before:
+        t.join(timeout=5)
+    assert "Exception occurred during processing" not in capfd.readouterr().err
+
+
+def test_server_reports_errors_other_than_peer_resets(capfd):
+    from http.server import BaseHTTPRequestHandler
+
+    from databatchprotectionservice_spark.service.server import _Server
+
+    srv = _Server(("127.0.0.1", 0), BaseHTTPRequestHandler)
+    try:
+        for exc in (ConnectionResetError(), BrokenPipeError(), ValueError("boom")):
+            try:
+                raise exc
+            except Exception:
+                srv.handle_error(None, ("127.0.0.1", 1))
+    finally:
+        srv.server_close()
+    err = capfd.readouterr().err
+    assert err.count("Exception occurred during processing") == 1
+    assert "ValueError: boom" in err
 
 
 def test_malformed_base64_response_is_an_error_result(server):
