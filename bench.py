@@ -1,18 +1,29 @@
 #!/usr/bin/env python
-"""Benchmark harness — the driver's per-round performance gate.
+"""Benchmark harness: wall clock and Spark job count per registry query.
 
-Runs the engine's headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
+Runs the registry queries at ``$SPARK_GRAFT_SF_DIR`` (default
 ``/root/testdata/sf0.1``) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line::
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-``value`` is the total wall-clock seconds over all headline queries (one
-timed run each after a session-warmup query). Each query is driven to
-completion with ``df.collect()`` so the measurement includes the full
-scan → shuffle → Python-UDF → result path, mirroring how the reference's
+    python bench.py              # every registry query
+    python bench.py q1 q2 ...    # only the named queries
+
+Each query gets one discarded warm-up run and then
+``$SPARK_GRAFT_BENCH_RUNS`` (default 3) timed runs; ``value`` is the sum
+over queries of the fastest timed run. Each run is driven to completion
+with ``df.collect()`` so the measurement includes the full scan →
+shuffle → Python-UDF → result path, mirroring how the reference's
 ``performance_test`` (src/scripts/performance_test.cpp:446-489) times
 complete encrypt iterations rather than plan construction.
+
+Every run has its own Spark job group, and the cache is cleared after
+every run, so each run pays for its own work. ``BENCH_DETAIL.json``
+holds every run's seconds and job count; a query whose timed runs
+launched fewer jobs than its warm-up is listed in ``job_flags``, since
+it reused something an earlier run built. Jobs of a streaming query's
+micro-batches run under the stream's own job group and are not counted.
 """
 
 from __future__ import annotations
@@ -26,21 +37,47 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-# The headline set is the ENTIRE registry (VERDICT r1 item 9: a
-# regression in any registered operator must be visible in the bench),
-# in ``all_queries()`` order, which is registration order.
-HEADLINE: list[str] | None = None  # resolved to entrymod.queries() keys
 
-# EVERY query gets ONE discarded warmup run before the timed N
-# (VERDICT r10 item 7, generalizing the r9 cache-builder protocol):
-# the r10 driver bench's six variance flags were all first-sample
-# spikes (codegen, Python-worker pool growth, page-cache faults on a
-# contended rig), and the queries that build session-lifetime
-# artifacts — PQ/IVF codebooks, k-means centroid memos, the staged
-# CDC feed, shingle/df gram caches — need the build paid outside the
-# timed runs anyway.  The discarded duration is recorded per query in
-# BENCH_DETAIL.json ("warmup") so cold-path regressions stay visible
-# without polluting min/median.
+def run_once(spark, fn, sf_dir: str, group: str):
+    """Collect one run of registry query ``fn`` under job group
+    ``group``, then clear the cache. Returns ``(rows, seconds, jobs)``;
+    the clear is not timed."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        t0 = time.time()
+        rows = fn(spark, sf_dir).collect()
+        dt = time.time() - t0
+    finally:
+        sc._jsc.clearJobGroup()
+        spark.catalog.clearCache()
+    # job starts reach the status store through the async listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return rows, dt, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def compact_line(detail: dict, budget: int) -> str:
+    """The stdout JSON line: ``detail`` without its per-run samples,
+    kept under ``budget`` characters by dropping the FASTEST queries
+    first (the slow ones are the informative ones) and counting the
+    dropped ones in ``queries_omitted``. Failed queries (-1.0) sort
+    last, so truncation never hides a failure."""
+    timings = detail["queries"]
+    compact = {
+        k: v
+        for k, v in detail.items()
+        if k not in ("samples", "medians", "warmed_up")
+    }
+    compact["queries"] = {k: round(v, 2) for k, v in timings.items()}
+    by_speed = sorted(timings, key=lambda k: (timings[k] < 0, timings[k]))
+    omitted = 0
+    line = json.dumps(compact, separators=(",", ":"))
+    while len(line) > budget and omitted < len(by_speed):
+        del compact["queries"][by_speed[omitted]]
+        omitted += 1
+        compact["queries_omitted"] = omitted
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
 
 
 def main() -> None:
@@ -53,67 +90,62 @@ def main() -> None:
 
     spark = get_spark(app_name="dbps-bench")
     qs = entrymod.queries()
-    headline = HEADLINE if HEADLINE is not None else list(qs)
+    # by default the ENTIRE registry in registration order (VERDICT r1
+    # item 9: a regression in any registered operator must be visible)
+    headline = sys.argv[1:] or list(qs)
 
-    # warm the JVM / Python-worker pool so the first timed query doesn't
-    # pay one-time session startup costs
+    # warm the JVM / Python-worker pool so the first query doesn't pay
+    # one-time session startup costs
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 
-    # min-of-N per query: the first pass eats codegen/Python-worker
-    # warmup and the min damps background-load noise on the shared rig.
+    # min-of-N per query damps background-load noise on the shared rig;
     # N=3 (VERDICT r3 item 8: n=2 min couldn't separate an 11% rig-noise
-    # delta from a regression); all samples + the median go to
-    # BENCH_DETAIL.json so cross-round comparisons can use a robust
-    # statistic while the stdout `min` stays comparable with r1-r3.
+    # delta from a regression). All samples and the median go to
+    # BENCH_DETAIL.json for cross-round comparison with a robust
+    # statistic.
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     timings: dict[str, float] = {}
-    samples: dict[str, list[float]] = {}
+    samples: dict[str, dict] = {}
     medians: dict[str, float] = {}
+    job_flags: dict[str, dict] = {}
     total = 0.0
     for name in headline:
         fn = qs.get(name)
         if fn is None:
+            print(f"bench: unknown query {name}", file=sys.stderr)
             timings[name] = -1.0
             continue
-        best = -1.0
         obs: list[float] = []
+        jobs: list[int] = []
         warm = -1.0
+        warm_jobs = -1
         try:
-            # discarded warmup: pays codegen / worker-pool growth /
-            # codebook training / memo staging / cache builds so the
-            # timed runs are all steady-state (recorded, not scored)
-            t0 = time.time()
-            fn(spark, sf_dir).collect()
-            warm = round(time.time() - t0, 3)
-            for _ in range(runs):
-                t0 = time.time()
-                fn(spark, sf_dir).collect()
-                dt = time.time() - t0
+            # discarded warm-up (VERDICT r10 item 7: first runs spike on
+            # codegen, Python-worker pool growth and page-cache faults);
+            # recorded, not scored, so cold-path regressions stay visible
+            _, dt, warm_jobs = run_once(spark, fn, sf_dir, f"bench:{name}:warmup")
+            warm = round(dt, 3)
+            for i in range(runs):
+                _, dt, n = run_once(spark, fn, sf_dir, f"bench:{name}:{i}")
                 obs.append(round(dt, 3))
-                best = dt if best < 0 else min(best, dt)
+                jobs.append(n)
         except Exception as e:  # noqa: BLE001 - report, don't die mid-bench
             print(f"bench: {name} FAILED: {e}", file=sys.stderr)
-            best = -1.0
-        timings[name] = round(best, 3)
-        samples[name] = {"runs": obs, "warmup": warm}
-        # a query's internal .cache()s (minhash/ngram gram tables) are
-        # shared across its N runs by design — min-of-N measures the
-        # cache-warm steady state — but must not accumulate across the
-        # 70+-query sweep, so drop them before the next query
-        spark.catalog.clearCache()
+            obs = []
+        timings[name] = min(obs) if obs else -1.0
+        samples[name] = {
+            "runs": obs,
+            "warmup": warm,
+            "jobs": jobs,
+            "warmup_jobs": warm_jobs,
+        }
+        if jobs and min(jobs) < warm_jobs:
+            job_flags[name] = {"warmup": warm_jobs, "runs": jobs}
         if obs:
             mid = sorted(obs)
             medians[name] = mid[len(mid) // 2]
-        if best > 0:
-            total += best
+            total += timings[name]
 
-    # Full per-query detail goes to a side file; stdout carries ONE compact
-    # JSON line.  The driver only retains the last ~2000 characters of
-    # stdout, so a line serializing all 70+ registry timings gets its head
-    # clipped and fails to parse (this happened in round 2).  Keep the
-    # stdout line under a hard budget by dropping the FASTEST queries
-    # first — the slow ones are the informative ones — and note how many
-    # were omitted.  BENCH_DETAIL.json always has the complete dict.
     # variance guardrail (VERDICT r5 item 6): min-of-N hid a regression
     # whose median was 3x its min. Flag any query whose median/min ratio
     # exceeds 1.5 so cross-round comparisons can't be fooled by a lucky
@@ -131,6 +163,7 @@ def main() -> None:
         "samples": samples,
         "medians": medians,
         "variance_flags": variance_flags,
+        "job_flags": job_flags,
         "runs": runs,
         "warmed_up": "all",
         "sf": sf,
@@ -141,24 +174,11 @@ def main() -> None:
     except OSError as e:
         print(f"bench: could not write BENCH_DETAIL.json: {e}", file=sys.stderr)
 
+    # BENCH_DETAIL.json always has the complete dict; the stdout line is
+    # held under a budget because only the last ~2000 characters of
+    # stdout are kept (round 2 lost its line's head that way)
     budget = int(os.environ.get("SPARK_GRAFT_BENCH_LINE_BUDGET", "1800"))
-    compact = {
-        k: v
-        for k, v in detail.items()
-        if k not in ("samples", "medians", "warmed_up")
-    }
-    compact["queries"] = {k: round(v, 2) for k, v in timings.items()}
-    # fastest first, but FAILED queries (-1.0) sort last so truncation can
-    # never hide a failure from the driver-visible line
-    by_speed = sorted(timings, key=lambda k: (timings[k] < 0, timings[k]))
-    omitted = 0
-    line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > budget and omitted < len(by_speed):
-        del compact["queries"][by_speed[omitted]]
-        omitted += 1
-        compact["queries_omitted"] = omitted
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    print(compact_line(detail, budget))
 
 
 if __name__ == "__main__":

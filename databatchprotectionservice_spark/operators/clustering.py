@@ -41,7 +41,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..plans.registry import load_spread, local_frame, prep, register, table_path
+from ..plans.registry import load_spread, local_frame, prep, register
 
 K = 8
 ITERS = 2  # centroid updates (the IVF_ITERS precedent); a final assignment pass follows
@@ -239,31 +239,7 @@ def _cent_df(spark, cents):
     )
 
 
-#: trained-centroid memo: kmeans_embedding_clusters and
-#: semdedup_embeddings train IDENTICAL centroids over the same
-#: quantized table (same _Q_EXPR, same init, same integer-exact
-#: update), so the second trainer in a session can reuse the first's
-#: literal result.  Safe because _fit is DETERMINISTIC integer
-#: arithmetic — the memo changes job count, never values
-#: (tests/test_clustering_units.py pins memoized == fresh) — and the
-#: key carries the embedding file's (path, mtime, size) identity so a
-#: swapped corpus can never serve stale centroids.  Local-FS paths
-#: only; un-stat-able schemes (s3/hdfs) skip the memo.
-_FIT_MEMO: dict[tuple, dict[int, list[int]]] = {}
-
-
-def _emb_memo_key(sf_dir):
-    import os
-
-    p = table_path(sf_dir, "embeddings")
-    try:
-        st = os.stat(p)
-    except OSError:
-        return None
-    return (os.path.abspath(p), st.st_mtime_ns, st.st_size)
-
-
-def _fit(spark, q, memo_key=None):
+def _fit(spark, q):
     """ITERS rounds of assign + integer-mean update; returns the final
     centroid table (cid, c) as LITERAL data.
 
@@ -277,8 +253,6 @@ def _fit(spark, q, memo_key=None):
     distributed). Each round is therefore exactly one Spark job. The
     centroid division is Python ``//`` on non-negative ints — the same
     truncating division as Spark ``div`` / DuckDB ``//``."""
-    if memo_key is not None and memo_key in _FIT_MEMO:
-        return _cent_df(spark, _FIT_MEMO[memo_key])
     init = q.orderBy("vec_id").limit(K).collect()
     cents = {cid: list(r.v) for cid, r in enumerate(init)}
     for _ in range(ITERS):
@@ -291,8 +265,6 @@ def _fit(spark, q, memo_key=None):
             cents[row.cid] = [
                 row[f"s{i}"] // row.cnt for i in range(DIM)
             ]
-    if memo_key is not None:
-        _FIT_MEMO[memo_key] = cents
     return _cent_df(spark, cents)
 
 
@@ -310,7 +282,7 @@ def kmeans_embedding_clusters(spark, sf_dir):
     centroids), and the centroid component sum in unoffset units."""
     prep(spark)
     q = _quantized(spark, sf_dir).cache()  # 3 assignment scans
-    cents = _fit(spark, q, memo_key=_emb_memo_key(sf_dir))
+    cents = _fit(spark, q)
     af = _assign(q, cents)
     stats = af.groupBy("cid").agg(
         F.count(F.lit(1)).alias("n"),
@@ -361,7 +333,7 @@ def semdedup_embeddings(spark, sf_dir):
     prep(spark)
     emb = load_spread(spark, sf_dir, "embeddings")
     q = emb.select("vec_id", F.expr(_Q_EXPR).alias("v")).cache()
-    cents = _fit(spark, q, memo_key=_emb_memo_key(sf_dir))
+    cents = _fit(spark, q)
     af = _assign(q, cents).select("vec_id", "cid")
     wn = emb.select("vec_id", F.expr(_W_EXPR).alias("w")).withColumn(
         "nw", F.expr(_IDOT.format(a="w", b="w"))

@@ -179,6 +179,14 @@ def lsh_candidate_pairs(
     )
 
 
+def _cached_candidates(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) LSH candidate pairs of ``docs``, cached: the set
+    is tiny (band collisions only) but its lineage is the corpus-wide
+    signature pipeline, and every caller reads it more than once, so
+    without the cache the explode + min-aggregate would run per read."""
+    return lsh_candidate_pairs(minhash_signatures(docs)).cache()
+
+
 @register(
     "dedup_exact_stats",
     oracle="""
@@ -267,11 +275,8 @@ def dedup_minhash_lsh(spark, sf_dir):
     candidate set, not the corpus."""
     prep(spark)
     docs = load_spread(spark, sf_dir, "documents")
-    # cache: the candidate set is tiny (LSH collisions only) but its
-    # lineage is the whole signature pipeline — it feeds three consumers
-    # below (two broadcasts + the final join), so without the cache the
-    # corpus-wide explode+min-agg would run three times
-    cand = lsh_candidate_pairs(minhash_signatures(docs)).cache()
+    # three consumers below: two broadcasts and the final join
+    cand = _cached_candidates(docs)
     # distinct gram rows + per-doc shingle count, computed row-local
     # (array_distinct before explode — no shuffle)
     sh = shingled(docs)
@@ -781,11 +786,9 @@ def dedup_connected_clusters(spark, sf_dir):
     Both paths produce identical (node, min-id-of-component) output."""
     prep(spark)
     docs = load_spread(spark, sf_dir, "documents")
-    # cached like in dedup_minhash_lsh: the candidate set is tiny but its
-    # lineage is the corpus-wide signature pipeline, and BOTH union
-    # branches below (plus the distributed fallback's per-round joins)
-    # consume it
-    cand = lsh_candidate_pairs(minhash_signatures(docs)).cache()
+    # both union branches below (and the distributed fallback's
+    # per-round joins) consume it
+    cand = _cached_candidates(docs)
     und = cand.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(

@@ -849,56 +849,6 @@ def _stage_files(stage_dir: str) -> set:
     }
 
 
-#: staged two-batch CDC feed per events corpus: (path, mtime_ns, size)
-#: of the events parquet -> the staged scratch dir.  The staging is
-#: DETERMINISTIC given the corpus (midpoint split, forced mtimes), so a
-#: second scd2_tws invocation in the same session re-reads the same
-#: files instead of paying two repartition(1) parquet writes again —
-#: the same job-count-only memo contract as clustering._FIT_MEMO (the
-#: r9 verdict measured the staging at ~half the query's wall clock).
-#: The corpus identity in the key means a swapped sf_dir can never be
-#: served a stale feed; un-stat-able schemes skip the memo.  The memo
-#: VALUE carries the exact staged file set alongside the dir (ADVICE
-#: r10): a partial scratch cleanup that leaves the dir non-empty
-#: invalidates the hit instead of silently streaming half the feed.
-#: Entries are removed at interpreter exit (atexit below), not
-#: per-invocation.
-_SCD2_FEED_MEMO: dict[tuple, tuple[str, frozenset]] = {}
-
-
-def _scd2_feed_key(sf_dir: str):
-    import os as _os
-
-    p = table_path(sf_dir, "events")
-    try:
-        st = _os.stat(p)
-        if _os.path.isdir(p):
-            # a directory path can be rewritten in place while keeping
-            # its own (mtime, size) — key on the max data-file stamp
-            # over the listing instead (ADVICE r10)
-            parts = []
-            for name in sorted(_os.listdir(p)):
-                sub = _os.stat(_os.path.join(p, name))
-                parts.append((name, sub.st_mtime_ns, sub.st_size))
-            return (p, tuple(parts))
-    except OSError:
-        return None
-    return (p, st.st_mtime_ns, st.st_size)
-
-
-def _cleanup_scd2_feeds() -> None:
-    import shutil as _shutil
-
-    for d, _files in _SCD2_FEED_MEMO.values():
-        _shutil.rmtree(d, ignore_errors=True)
-    _SCD2_FEED_MEMO.clear()
-
-
-import atexit as _atexit  # noqa: E402 - registration next to its target
-
-_atexit.register(_cleanup_scd2_feeds)
-
-
 @register(
     "streaming_scd2_tws",
     # the batch scd2_user_status_history oracle VERBATIM: the streaming
@@ -979,63 +929,39 @@ def streaming_scd2_tws(spark, sf_dir):
 
     prep(spark)
     ensure_protobuf(spark)
-    memo_key = _scd2_feed_key(sf_dir)
-    memo_hit = _SCD2_FEED_MEMO.get(memo_key) if memo_key else None
-    stage_dir = None
-    if memo_hit is not None:
-        stage_dir, want_files = memo_hit
-        if _stage_files(stage_dir) != want_files:
-            # scratch vanished OR was partially cleaned — a non-empty
-            # remnant must invalidate too, or the stream would process
-            # half the feed and return wrong results (ADVICE r10)
-            stage_dir = None
-    if stage_dir is None:
-        e = load_events(spark, sf_dir).select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.unix_micros("ts").alias("us"),
-        )
-        lo, hi = e.agg(F.min("us"), F.max("us")).first()
-        mid = (int(lo) + int(hi)) // 2 + 1  # midpoint of the time range
-        stage_dir = scratch_path("dbps_tws_scd2_")
-        try:
-            # two SEQUENTIAL appends: the file source processes oldest
-            # mtime first, making batch order == time order (equal-us
-            # events can never straddle the strict threshold)
-            e.filter(F.col("us") < mid).repartition(1).write.mode(
-                "append"
-            ).parquet(stage_dir)
-            first_half = _stage_files(stage_dir)
-            e.filter(F.col("us") >= mid).repartition(1).write.mode(
-                "append"
-            ).parquet(stage_dir)
-            # scd2 is ORDER-SENSITIVE (unlike the commutative profile
-            # counters), so don't rely on write-completion mtimes alone —
-            # a coarse-timestamp filesystem could tie them and the source
-            # would tie-break on random part names.  Force the order the
-            # contract needs; best-effort on stores without utime.
-            try:
-                t0 = 1_000_000_000
-                for p in sorted(first_half):
-                    _os.utime(p, (t0, t0))
-                for p in sorted(_stage_files(stage_dir) - first_half):
-                    _os.utime(p, (t0 + 60, t0 + 60))
-            except OSError:
-                pass
-        except BaseException:
-            remove_path(spark, stage_dir)
-            raise
-        if memo_key is not None:
-            # keep the feed for the session (atexit removes it); each
-            # reuse skips two repartition(1) writes + the min/max scan;
-            # the exact file set makes the hit-path guard airtight
-            _SCD2_FEED_MEMO[memo_key] = (
-                stage_dir,
-                frozenset(_stage_files(stage_dir)),
-            )
-    keep = memo_key is not None
+    e = load_events(spark, sf_dir).select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros("ts").alias("us"),
+    )
+    lo, hi = e.agg(F.min("us"), F.max("us")).first()
+    mid = (int(lo) + int(hi)) // 2 + 1  # midpoint of the time range
+    stage_dir = scratch_path("dbps_tws_scd2_")
     try:
+        # two SEQUENTIAL appends: the file source processes oldest
+        # mtime first, making batch order == time order (equal-us
+        # events can never straddle the strict threshold)
+        e.filter(F.col("us") < mid).repartition(1).write.mode(
+            "append"
+        ).parquet(stage_dir)
+        first_half = _stage_files(stage_dir)
+        e.filter(F.col("us") >= mid).repartition(1).write.mode(
+            "append"
+        ).parquet(stage_dir)
+        # scd2 is ORDER-SENSITIVE (unlike the commutative profile
+        # counters), so don't rely on write-completion mtimes alone —
+        # a coarse-timestamp filesystem could tie them and the source
+        # would tie-break on random part names.  Force the order the
+        # contract needs; best-effort on stores without utime.
+        try:
+            t0 = 1_000_000_000
+            for p in sorted(first_half):
+                _os.utime(p, (t0, t0))
+            for p in sorted(_stage_files(stage_dir) - first_half):
+                _os.utime(p, (t0 + 60, t0 + 60))
+        except OSError:
+            pass
         schema = spark.read.parquet(stage_dir).schema
         stream = (
             spark.readStream.schema(schema)
@@ -1080,8 +1006,7 @@ def streaming_scd2_tws(spark, sf_dir):
         # materialize before the scratch dir disappears
         latest = latest.localCheckpoint(eager=True)
     finally:
-        if not keep:
-            remove_path(spark, stage_dir)
+        remove_path(spark, stage_dir)
     return latest
 
 

@@ -85,6 +85,7 @@ def main():
         try:
             sdf = fn(spark, sf_dir)
             spark_pdf = sdf.toPandas()
+            t_spark = time.time() - t0
         except Exception as e:
             print(f"  {name:40s} SPARK ERROR: {str(e).splitlines()[0][:120]}")
             failures.append(name)
@@ -95,7 +96,9 @@ def main():
                 "err": str(e).splitlines()[0][:200],
             }
             continue
-        t_spark = time.time() - t0
+        finally:
+            # no query may reuse another's cached scans or candidates
+            spark.catalog.clearCache()
         sql = oracles.get(name)
         if sql is None:
             print(f"  {name:40s} NO ORACLE")

@@ -5,39 +5,28 @@ the intent)."""
 
 import json
 
+from bench import compact_line
 
-def _truncate(timings: dict[str, float], budget: int):
-    """Mirror bench.py's truncation loop exactly."""
-    detail = {
+
+def _detail(timings: dict[str, float]) -> dict:
+    return {
         "metric": "headline_queries_total_wall_clock",
         "value": round(sum(v for v in timings.values() if v > 0), 3),
         "unit": "sec",
         "queries": timings,
-        "samples": {k: [v] for k, v in timings.items()},
+        "samples": {k: {"runs": [v]} for k, v in timings.items()},
         "medians": dict(timings),
         "runs": 1,
+        "warmed_up": "all",
         "sf": 0.1,
     }
-    compact = {
-        k: v for k, v in detail.items() if k not in ("samples", "medians")
-    }
-    compact["queries"] = {k: round(v, 2) for k, v in timings.items()}
-    by_speed = sorted(timings, key=lambda k: (timings[k] < 0, timings[k]))
-    omitted = 0
-    line = json.dumps(compact, separators=(",", ":"))
-    while len(line) > budget and omitted < len(by_speed):
-        del compact["queries"][by_speed[omitted]]
-        omitted += 1
-        compact["queries_omitted"] = omitted
-        line = json.dumps(compact, separators=(",", ":"))
-    return line
 
 
 def test_failures_survive_truncation():
     timings = {f"q{i:03d}": 0.1 + i * 0.01 for i in range(60)}
     timings["broken_a"] = -1.0
     timings["broken_b"] = -1.0
-    line = _truncate(timings, budget=800)
+    line = compact_line(_detail(timings), budget=800)
     parsed = json.loads(line)
     assert len(line) <= 800
     assert parsed["queries"]["broken_a"] == -1.0
@@ -49,17 +38,8 @@ def test_failures_survive_truncation():
 
 def test_no_truncation_when_under_budget():
     timings = {"q1": 1.0, "q2": -1.0}
-    parsed = json.loads(_truncate(timings, budget=10_000))
+    parsed = json.loads(compact_line(_detail(timings), budget=10_000))
     assert parsed["queries"] == {"q1": 1.0, "q2": -1.0}
     assert "queries_omitted" not in parsed
     assert "samples" not in parsed and "medians" not in parsed
-
-
-def test_real_bench_module_sorts_failures_last():
-    """Pin the actual source: bench.py must sort (is_failure, time)."""
-    import re
-
-    src = open("bench.py").read()
-    m = re.search(r"by_speed = sorted\(timings, key=lambda k: \((.+?)\)\)", src)
-    assert m, "bench.py truncation sort not found"
-    assert "timings[k] < 0" in m.group(1)
+    assert "warmed_up" not in parsed

@@ -664,25 +664,26 @@ def test_scd2_tws_carries_open_interval_across_batches(spark, tmp_path):
     assert len(rows) == 9  # nothing else emitted
 
 
-def test_scd2_feed_memo_is_value_identical_and_key_guarded(spark, sf_dir):
-    """The staged-feed memo (_SCD2_FEED_MEMO) is a job-count change,
-    never a value change: a memo-hit run of streaming_scd2_tws returns
-    the same rows as the cold run (deterministic staging — midpoint
-    split, forced mtimes — so the reused files ARE the fresh files),
-    and the key carries the events parquet's identity so a swapped
-    corpus can never be served a stale feed."""
-    from databatchprotectionservice_spark.operators import streamops
+def test_scd2_tws_leaves_no_stage_dir(spark, sf_dir, monkeypatch):
+    """Every streaming_scd2_tws run stages its own two-batch feed and
+    removes the stage dir before it returns."""
+    import os
 
-    key = streamops._scd2_feed_key(sf_dir)
-    assert key is not None and key[0].startswith(sf_dir)
-    streamops._SCD2_FEED_MEMO.pop(key, None)  # force the cold path
-    cold = streamops.streaming_scd2_tws(spark, sf_dir)
-    cold_rows = sorted(map(tuple, cold.collect()))
-    assert key in streamops._SCD2_FEED_MEMO  # cold run populated it
-    staged = streamops._SCD2_FEED_MEMO[key]
-    warm = streamops.streaming_scd2_tws(spark, sf_dir)
-    assert streamops._SCD2_FEED_MEMO[key] == staged  # hit, not re-staged
-    assert sorted(map(tuple, warm.collect())) == cold_rows
+    from databatchprotectionservice_spark.operators import streamops
+    from databatchprotectionservice_spark.plans import registry
+
+    made = []
+    real = registry.scratch_path
+
+    def recording(prefix):
+        made.append(real(prefix))
+        return made[-1]
+
+    monkeypatch.setattr(registry, "scratch_path", recording)
+    assert streamops.streaming_scd2_tws(spark, sf_dir).count() > 0
+    assert len(made) == 1
+    assert os.path.basename(made[0]).startswith("dbps_tws_scd2_")
+    assert not os.path.exists(made[0])
 
 
 def test_hll_cms_jvm_prereduce_matches_python_hashing(spark):
